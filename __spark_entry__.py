@@ -2628,23 +2628,21 @@ def _q_s_winnow_candidates(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _q_s_winnow_candidates_blob(spark: SparkSession, sf: str) -> DataFrame:
-    """s_winnow_candidates through the r13 whole-bucket BLOB state
-    layout (streaming/dedup_candidates.py:_BucketPairsBlob — 2 state
-    round trips per bucket per micro-batch, the bulk-ingest dial
-    measured 6.3x the MapState form in SCALE.md). Same emitted SET by
-    construction, so the oracle is SHARED verbatim — the driver
-    signature covers the blob state machine end to end."""
+    """DUPLICATE PLAN of s_winnow_candidates: the auto processor
+    (streaming/dedup_candidates.py:_BucketPairsAuto) is the only layout.
+    The documents file replays as ONE micro-batch, so each bucket sees
+    far more distinct fingerprints than the bulk threshold and both
+    entries run auto's whole-bucket BLOB branch (2 state round trips
+    per bucket per micro-batch). The oracle is SHARED verbatim."""
     from kafka_streams_app_spark.streaming import dedup_candidates as DC
     from kafka_streams_app_spark.streaming.replay import tws_available
 
     if tws_available(spark):
         docs = load_stream(spark, sf, "documents")
-        out = DC.winnow_candidates_stream(
-            docs, "text", "doc_id", layout="blob"
-        )
+        out = DC.winnow_candidates_stream(docs, "text", "doc_id")
         return run_available_now(spark, out, _sink(), "update")
     docs = load_table(spark, sf, "documents")
-    return DC.winnow_candidates_batch(docs, "text", "doc_id", layout="blob")
+    return DC.winnow_candidates_batch(docs, "text", "doc_id")
 
 
 def _q_s_pq_assign(spark: SparkSession, sf: str) -> DataFrame:
@@ -3193,27 +3191,26 @@ def _q_s_rolling_avg(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _q_s_ktable_latest_bucketed(spark: SparkSession, sf: str) -> DataFrame:
-    """S2 incremental via the BUCKETED MapState layout
-    (streaming/ktable.py:_LatestPerKeyBucketed, n_buckets=16): the TWS
-    operator groups by a hash bucket of the key and keeps per-key state
-    in a MapState — ~(keys/buckets)x less per-key framework overhead,
-    measured 1.67x on the 1M-event throughput smoke (SCALE.md). Same
-    changelog contract, same oracle as s_ktable_latest."""
+    """S2 incremental. DUPLICATE PLAN: the bucketed processor
+    (streaming/ktable.py:_LatestPerKeyBucketed) at its default 16
+    buckets is the only layout, so this runs exactly what
+    s_ktable_latest runs, TWS and grouped-replay fallback alike. Same
+    oracle as s_ktable_latest."""
     if tws_available(spark):
         ev = load_stream(spark, sf, "events").select(
             "user_id", "event_id", "value", "ts"
         )
         changelog = ktable_changelog_stream(
-            ev, ["user_id"], "ts", ["event_id", "value"], n_buckets=16
+            ev, ["user_id"], "ts", ["event_id", "value"]
         )
         table = run_available_now(spark, changelog, _sink(), "update")
     else:
-        # bucket layout is TWS-internal; the grouped-replay fallback
-        # runs the per-key state machine — identical changelog output.
         ev = load_table(spark, sf, "events").select(
             "user_id", "event_id", "value", "ts"
         )
-        table = ktable_changelog_batch(ev, ["user_id"], "ts", ["event_id", "value"])
+        table = ktable_changelog_batch(
+            ev, ["user_id"], "ts", ["event_id", "value"]
+        )
     snap = ktable.latest_per_key(
         table.filter(F.col("action") == "upsert"), ["user_id"], ["ts"],
         payload=["new_event_id", "new_value"],
@@ -3336,13 +3333,12 @@ def _q_s_pk_join_incremental(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _q_s_pk_join_bucketed(spark: SparkSession, sf: str) -> DataFrame:
-    """J5 INCREMENTAL via the BUCKETED MapState layout
-    (streaming/pk_join.py:_PKJoinProcessorBucketed, n_buckets=16): the
-    TWS operator groups by a hash bucket of the key and keeps per-key
-    (left, right) state in two MapStates — same trade the bucketed
-    ktable measured at 1.67x on the throughput smoke. Identical join
-    changelog, same oracle as s_pk_join_incremental. The grouped-replay
-    fallback runs the SAME bucketed processor through applyInPandas."""
+    """J5 INCREMENTAL, bucket count spelled out as 16. DUPLICATE PLAN:
+    16 is the default and the bucketed processor
+    (streaming/pk_join.py:_PKJoinProcessorBucketed) is the only layout,
+    so this runs exactly what s_pk_join_incremental runs, TWS and
+    grouped-replay fallback alike. Same oracle as
+    s_pk_join_incremental."""
     from kafka_streams_app_spark.streaming.pk_join import pk_join_batch, pk_join_stream
 
     use_tws = tws_available(spark)
@@ -3401,21 +3397,17 @@ def _q_s_fk_join_left_incremental(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _q_s_fk_join_bucketed(spark: SparkSession, sf: str) -> DataFrame:
-    """J7/J8 INCREMENTAL via the BUCKETED MapState layout
-    (streaming/fk_join.py:_FKJoinProcessorBucketed, n_buckets=16): both
-    pipeline stages group by a hash bucket (stage 1: of the pk, stage 2:
-    of the fk) and keep per-key state in MapStates — the production-
-    recommended mode. Identical join changelog, same oracle as
-    s_fk_join_incremental. The grouped-replay fallback runs the SAME
-    bucketed stage-2 processor through applyInPandas (stage 1 falls back
-    to the per-key batch replay — bucket layout is state-internal)."""
-    return _fk_incremental_pipeline(spark, sf, how="inner", n_buckets=16)
+    """J7/J8 INCREMENTAL. DUPLICATE PLAN: the bucketed processors
+    (streaming/ktable.py:_LatestPerKeyBucketed for stage 1,
+    streaming/fk_join.py:_FKJoinProcessorBucketed for stage 2) are the
+    only layout, at their default 16 buckets, so this runs exactly what
+    s_fk_join_incremental runs. Same oracle as s_fk_join_incremental."""
+    return _fk_incremental_pipeline(spark, sf, how="inner")
 
 
 def _fk_incremental_pipeline(
     spark: SparkSession, sf: str, how: str,
     right_types: tuple[str, ...] | None = None,
-    n_buckets: int | None = None,
 ) -> DataFrame:
     import shutil
     import tempfile
@@ -3440,9 +3432,7 @@ def _fk_incremental_pipeline(
         F.unix_micros("ts").alias("seq"),
     )
     if use_tws:
-        changelog = ktable_changelog_stream(
-            left, ["pk"], "seq", ["fk", "value"], n_buckets=n_buckets
-        )
+        changelog = ktable_changelog_stream(left, ["pk"], "seq", ["fk", "value"])
         # both staging dirs are transient: the memory sink returned by
         # run_available_now is fully materialized, so nothing reads
         # them after this block — clean up even on exception
@@ -3474,7 +3464,7 @@ def _fk_incremental_pipeline(
             join = fk_join_changelog_stream(
                 instr, right, right_key="rk", right_payload=["rvalue"],
                 right_seq="seq", right_tombstone=None,
-                left_value_cols=["value"], how=how, n_buckets=n_buckets,
+                left_value_cols=["value"], how=how,
                 compact_rights=True,
             )
             table = run_available_now(spark, join, _sink(), "update")
@@ -3487,7 +3477,7 @@ def _fk_incremental_pipeline(
         table = fk_join_changelog_batch(
             instr, right, right_key="rk", right_payload=["rvalue"],
             right_seq="seq", right_tombstone=None,
-            left_value_cols=["value"], how=how, n_buckets=n_buckets,
+            left_value_cols=["value"], how=how,
             compact_rights=True,  # see the streaming branch's note
         )
     snap = ktable.latest_per_key(

@@ -15,8 +15,8 @@ Shape: a stateless prefix computes each document's distinct winnowing
 fingerprints (default: the Arrow-batched fingerprint-set UDF — same
 md5 values as the batch operator's pure-Column path, which remains
 selectable; equality pinned), explodes to (fp, doc_id) rows, and a
-transformWithState operator holds each fingerprint bucket's member
-list (default layout: bucketed MapState — see _BucketPairsMap). A new
+transformWithState operator grouped by a hash bucket of the fingerprint
+holds each fingerprint's member list (see _BucketPairsAuto). A new
 member emits one (fp, min(a,b), max(a,b)) row per existing member,
 then joins the list.
 
@@ -28,7 +28,7 @@ rows over any micro-batch split of the input is the SAME set: every
 batch posting-list self-join, which is the DuckDB oracle. No
 watermark needed: set-union is commutative and idempotent here.
 
-State & scale: one member list per OCCUPIED fingerprint bucket —
+State & scale: one member list per OCCUPIED fingerprint —
 the same O(corpus fingerprints) footprint as the batch inverted
 index, hash-partitioned across executors by fp (RocksDB-backed under
 TWS). Emission per bucket is O(df^2) pairs, exactly the batch
@@ -64,7 +64,7 @@ def _warn_hot_bucket(fp: int, n_before: int, n_after: int,
                      max_members: int | None) -> None:
     # Warn once per power-of-two growth STEP CROSSING (bit_length
     # increase), not on exact equality: bulk batches — the very
-    # workload the blob layout targets — can jump past every exact
+    # workload the blob store targets — can jump past every exact
     # power of two in one batch (r13 ADVICE).
     if (
         max_members is None
@@ -79,6 +79,10 @@ def _warn_hot_bucket(fp: int, n_before: int, n_after: int,
             "boilerplate buckets", fp, n_after,
         )
 
+# Distinct fingerprints per bucket per micro-batch from which a batch
+# counts as bulk and runs on the whole-bucket blob (see _BucketPairsAuto).
+_BULK_THRESHOLD = 8
+
 _OUT_SCHEMA = StructType(
     [
         StructField("fp", LongType(), True),
@@ -88,203 +92,24 @@ _OUT_SCHEMA = StructType(
 )
 
 
-class _BucketPairs(StatefulProcessor):
-    """Per-fingerprint member list; emits each new×existing pair once.
-
-    Rows within a micro-batch are replayed in doc_id order (stable,
-    deterministic), but the EMITTED SET is invariant to both that
-    order and the batch split — see the module emission contract.
-    """
-
-    def __init__(self, max_members: int | None = None):
-        self.max_members = max_members
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.state = handle.getValueState("members", _STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        pdf = pd.concat(list(rows)).sort_values("doc_id", kind="stable")
-        members: list[int] = (
-            [int(x) for x in self.state.get()[0].split(",") if x]
-            if self.state.exists()
-            else []
-        )
-        fp = int(key[0])
-        seen = set(members)
-        n_before = len(members)
-        out: list[tuple[int, int, int]] = []
-        for doc in pdf["doc_id"].tolist():
-            doc = int(doc)
-            if doc in seen:
-                continue  # idempotence under re-delivery
-            if self.max_members is not None and len(members) >= self.max_members:
-                continue  # frozen hot bucket: no emission, no growth
-            out.extend(
-                (fp, min(m, doc), max(m, doc)) for m in members
-            )
-            members.append(doc)
-            seen.add(doc)
-        _warn_hot_bucket(fp, n_before, len(members), self.max_members)
-        self.state.update((",".join(str(x) for x in members),))
-        if out:
-            yield pd.DataFrame(out, columns=["fp", "doc_a", "doc_b"])
-
-    def close(self) -> None:
-        pass
-
-
-class _BucketPairsMap(StatefulProcessor):
-    """Bucketed-MapState layout of _BucketPairs (the
-    streaming/ktable.py:_LatestPerKeyBucketed pattern): the TWS
-    grouping key is pmod(xxhash64(fp), n_buckets) and each
-    fingerprint's member list lives in a MapState entry keyed by fp.
-
-    Why: TWS pays a fixed framework cost PER GROUPING KEY per
-    micro-batch, and this operator's key space is the fingerprint
-    space — ~18 keys PER DOCUMENT (measured 571 docs/s/box per-fp on
-    the x10 corpus, ~1M bucket keys for 50k docs). Grouping by bucket
-    divides that term by (fingerprints/n_buckets); the per-fp pair
-    logic is identical (rows are (fp, doc_id)-sorted within the
-    bucket, one map lookup per distinct fp), so the emitted set — and
-    the oracle — are unchanged.
-    """
-
-    def __init__(self, max_members: int | None = None):
-        self.max_members = max_members
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.state = handle.getMapState(
-            "members",
-            StructType([StructField("fp", LongType(), True)]),
-            _STATE_SCHEMA,
-        )
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        pdf = pd.concat(list(rows)).sort_values(
-            ["fp", "doc_id"], kind="stable"
-        )
-        fps = pdf["fp"].to_numpy()
-        docs = pdf["doc_id"].to_numpy()
-        out: list[tuple[int, int, int]] = []
-        i, n = 0, len(fps)
-        while i < n:
-            fp = int(fps[i])
-            cur = self.state.getValue((fp,))
-            members: list[int] = (
-                [int(x) for x in cur[0].split(",") if x]
-                if cur is not None
-                else []
-            )
-            seen = set(members)
-            n_before = len(members)
-            changed = False
-            while i < n and fps[i] == fp:
-                doc = int(docs[i])
-                i += 1
-                if doc in seen:
-                    continue  # idempotence under re-delivery
-                if (
-                    self.max_members is not None
-                    and len(members) >= self.max_members
-                ):
-                    continue  # frozen hot bucket
-                out.extend((fp, min(m, doc), max(m, doc)) for m in members)
-                members.append(doc)
-                seen.add(doc)
-                changed = True
-            _warn_hot_bucket(fp, n_before, len(members), self.max_members)
-            if changed:
-                self.state.updateValue(
-                    (fp,), (",".join(str(x) for x in members),)
-                )
-        if out:
-            yield pd.DataFrame(out, columns=["fp", "doc_a", "doc_b"])
-
-    def close(self) -> None:
-        pass
-
-
-class _BucketPairsBlob(StatefulProcessor):
-    """Whole-bucket ValueState layout of _BucketPairs: ONE blob per
-    bucket key holding every resident fingerprint's member list
-    ("fp:d1,d2;fp2:d3"), so a micro-batch costs 2 state-server round
-    trips PER BUCKET instead of 2 per DISTINCT FINGERPRINT — the
-    bulk-ingest dial. r12 attribution showed the RPC term dominating
-    this shape (the batch twin fingerprints the same 50k docs in ~3 s
-    while the MapState stream took ~21 s); with ~720 fps per bucket a
-    single AvailableNow batch drops ~184k getValue/updateValue calls
-    to 256. The trade is honest and documented: each arrival batch
-    rewrites the whole bucket blob, so with MANY tiny micro-batches
-    touching few fingerprints MapState's per-entry updates win — pick
-    the layout to the ingest pattern. Emitted set identical (pinned).
-    """
-
-    def __init__(self, max_members: int | None = None):
-        self.max_members = max_members
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.state = handle.getValueState("buckets", _STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        pdf = pd.concat(list(rows)).sort_values(
-            ["fp", "doc_id"], kind="stable"
-        )
-        table: dict[int, list[int]] = {}
-        if self.state.exists():
-            for ent in self.state.get()[0].split(";"):
-                if ent:
-                    f, _, ms = ent.partition(":")
-                    table[int(f)] = [int(x) for x in ms.split(",") if x]
-        fps = pdf["fp"].to_numpy()
-        docs = pdf["doc_id"].to_numpy()
-        out: list[tuple[int, int, int]] = []
-        changed = False
-        i, n = 0, len(fps)
-        while i < n:
-            fp = int(fps[i])
-            members = table.setdefault(fp, [])
-            seen = set(members)
-            n_before = len(members)
-            while i < n and fps[i] == fp:
-                doc = int(docs[i])
-                i += 1
-                if doc in seen:
-                    continue  # idempotence under re-delivery
-                if (
-                    self.max_members is not None
-                    and len(members) >= self.max_members
-                ):
-                    continue  # frozen hot bucket
-                out.extend((fp, min(m, doc), max(m, doc)) for m in members)
-                members.append(doc)
-                seen.add(doc)
-                changed = True
-            _warn_hot_bucket(fp, n_before, len(members), self.max_members)
-            if not members:
-                del table[fp]
-        if changed:
-            self.state.update((";".join(
-                f"{f}:{','.join(str(x) for x in ms)}"
-                for f, ms in table.items()
-            ),))
-        if out:
-            yield pd.DataFrame(out, columns=["fp", "doc_a", "doc_b"])
-
-    def close(self) -> None:
-        pass
-
-
 class _BucketPairsAuto(StatefulProcessor):
-    """Per-batch AUTO-SELECTED state layout (r13 verdict ask #3): the
-    'map' vs 'blob' dial left a 6.3× throughput gap to a manual
-    setting, so this processor registers BOTH stores and picks per
+    """Per-fingerprint member lists over a BUCKETED fingerprint space:
+    the TWS grouping key is pmod(xxhash64(fp), n_buckets). TWS pays a
+    fixed framework cost PER GROUPING KEY per micro-batch, and this
+    operator's raw key space is ~18 fingerprints PER DOCUMENT, so
+    bucketing spreads that cost over ~fingerprints/n_buckets
+    fingerprints. Rows are (fp, doc_id)-sorted within the bucket, so
+    the emitted set — and the oracle — do not depend on the bucketing.
+
+    Each fingerprint's list lives in one of two stores, picked per
     bucket per micro-batch by measured batch density — the number of
     DISTINCT fingerprints the batch touches in this bucket:
 
-    - density >= bulk_threshold (bulk/backfill): whole-bucket blob
-      economics win (2 state round trips amortize over many
-      fingerprints); touched MapState entries MIGRATE into the blob.
-    - density < bulk_threshold (trickle): per-entry MapState updates
+    - density >= _BULK_THRESHOLD (bulk/backfill): a whole-bucket
+      ValueState blob ("fp:d1,d2;fp2:d3") wins — 2 state round trips
+      amortize over many fingerprints; touched MapState entries
+      MIGRATE into the blob.
+    - density < _BULK_THRESHOLD (trickle): per-entry MapState updates
       win (no whole-bucket rewrite per tiny batch); blob-resident
       fingerprints keep updating in the blob (one rewrite — cheaper
       than a thrash-y migration back).
@@ -293,16 +118,15 @@ class _BucketPairsAuto(StatefulProcessor):
     (blob wins lookups; migration deletes the MapState entry in the
     same batch), so the pair logic — and the emitted set, and the
     oracle — are unchanged across arbitrary trickle/bulk interleaving.
-    State names match the single-layout processors ('buckets' /
-    'members'), so an auto restart on a checkpoint written by either
-    fixed layout resumes seamlessly.
+    The state names ('buckets' / 'members') are those of the earlier
+    single-store blob and map layouts, so their checkpoints resume here.
 
     Threshold: map-mode cost is ~2 state-server RPCs per touched
     fingerprint; blob-mode is 2 RPCs + an O(bucket) blob rewrite. The
     r13 attribution measured the RPC term dominating from tens of
-    fingerprints per bucket per batch (SCALE.md); the default 8 is
-    conservatively below that knee and measured to hold the blob
-    layout's bulk throughput while keeping trickle at MapState rates
+    fingerprints per bucket per batch (SCALE.md); 8 is conservatively
+    below that knee and measured to hold the blob store's bulk
+    throughput while keeping trickle at MapState rates
     (tools/stream_throughput.py fixtures).
 
     Trickle-batch blob cost (r14 ADVICE): the blob is parsed LAZILY —
@@ -314,14 +138,11 @@ class _BucketPairsAuto(StatefulProcessor):
     migrated to the blob, a trickle batch that touches a blob-resident
     (or brand-new) fingerprint pays one O(blob) parse, and one
     O(blob) rewrite if a blob-resident list changed — inherent to the
-    one-blob-per-bucket layout; steady mixed ingest where this
-    dominates should pin layout='map'.
+    one-blob-per-bucket store.
     """
 
-    def __init__(self, max_members: int | None = None,
-                 bulk_threshold: int = 8):
+    def __init__(self, max_members: int | None = None):
         self.max_members = max_members
-        self.bulk_threshold = bulk_threshold
 
     def init(self, handle: StatefulProcessorHandle) -> None:
         self.blob = handle.getValueState("buckets", _STATE_SCHEMA)
@@ -338,7 +159,7 @@ class _BucketPairsAuto(StatefulProcessor):
         fps = pdf["fp"].to_numpy()
         docs = pdf["doc_id"].to_numpy()
         n = len(fps)
-        bulk = len(pdf["fp"].unique()) >= self.bulk_threshold
+        bulk = len(pdf["fp"].unique()) >= _BULK_THRESHOLD
         # The blob is parsed LAZILY (r14 ADVICE): bulk batches need it
         # up front (they migrate into it); trickle batches probe
         # MapState first and only parse on the first map miss, so a
@@ -358,7 +179,7 @@ class _BucketPairsAuto(StatefulProcessor):
         if bulk:
             table = parse_blob()
         # Bulk batches must NOT probe MapState per fingerprint (that is
-        # exactly the 2-RPCs-per-fp cost the blob layout exists to
+        # exactly the 2-RPCs-per-fp cost the blob store exists to
         # avoid — measured 4x slower when they did): ONE streamed
         # iterator() pass yields every map-resident entry, and on a
         # pure-bulk history (nothing ever trickled in) it is empty.
@@ -476,18 +297,6 @@ def winnow_fingerprints(
     )
 
 
-def _pick_layout(layout: str, max_members: int | None) -> StatefulProcessor:
-    if layout == "auto":
-        return _BucketPairsAuto(max_members)
-    if layout == "blob":
-        return _BucketPairsBlob(max_members)
-    if layout == "map":
-        return _BucketPairsMap(max_members)
-    raise ValueError(
-        f"layout must be 'auto', 'map' or 'blob', got {layout!r}"
-    )
-
-
 def _bucketed(fps: DataFrame, n_buckets: int) -> DataFrame:
     return fps.withColumn(
         "_b", F.pmod(F.xxhash64("fp"), F.lit(n_buckets)).cast("int")
@@ -501,36 +310,20 @@ def winnow_candidates_stream(
     k: int = 5,
     window: int = 4,
     max_members: int | None = None,
-    n_buckets: int | None = 128,
-    layout: str = "auto",
+    n_buckets: int = 128,
 ) -> DataFrame:
     """Streaming near-dup candidate pairs over a document stream.
 
-    n_buckets selects the state partitioning (identical emitted set):
-    the bucketed form (default 128 — the production dial, >= 2-4x
-    total cores) amortizes the per-grouping-key TWS framework cost
-    over ~fingerprints/n_buckets fingerprints; None groups by raw
-    fingerprint (one TWS key per bucket — the didactic layout).
-    layout picks the bucketed state store: 'auto' (default — per
-    bucket per micro-batch by measured batch density, bulk batches on
-    blob economics, trickle on MapState; see _BucketPairsAuto), 'map'
-    (MapState entry per fingerprint — steady trickle ingest) or 'blob'
-    (one ValueState blob per bucket, 2 state round trips per bucket
-    per batch — the bulk/backfill dial; see _BucketPairsBlob)."""
+    n_buckets: the stateful operator groups by pmod(xxhash64(fp),
+    n_buckets) (see _BucketPairsAuto); the emitted set does not depend
+    on it. The default 128 is the production dial (>= 2-4x total
+    cores)."""
     from kafka_streams_app_spark.streaming.ktable import _require_rocksdb
 
     _require_rocksdb(df.sparkSession)
     fps = winnow_fingerprints(df, text, id_col, k=k, window=window)
-    if n_buckets is not None:
-        proc = _pick_layout(layout, max_members)
-        return _bucketed(fps, n_buckets).groupBy("_b").transformWithStateInPandas(
-            statefulProcessor=proc,
-            outputStructType=_OUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    return fps.groupBy("fp").transformWithStateInPandas(
-        statefulProcessor=_BucketPairs(max_members),
+    return _bucketed(fps, n_buckets).groupBy("_b").transformWithStateInPandas(
+        statefulProcessor=_BucketPairsAuto(max_members),
         outputStructType=_OUT_SCHEMA,
         outputMode="Update",
         timeMode="None",
@@ -544,19 +337,16 @@ def winnow_candidates_batch(
     k: int = 5,
     window: int = 4,
     max_members: int | None = None,
-    n_buckets: int | None = 128,
-    layout: str = "auto",
+    n_buckets: int = 128,
 ) -> DataFrame:
     """Grouped-replay twin (streaming/replay.py) — the TWS-less path."""
     from kafka_streams_app_spark.streaming.replay import grouped_replay
 
     fps = winnow_fingerprints(df, text, id_col, k=k, window=window)
-    if n_buckets is not None:
-        proc = _pick_layout(layout, max_members)
-        return grouped_replay(
-            _bucketed(fps, n_buckets), ["_b"], proc, _OUT_SCHEMA,
-        )
-    return grouped_replay(fps, ["fp"], _BucketPairs(max_members), _OUT_SCHEMA)
+    return grouped_replay(
+        _bucketed(fps, n_buckets), ["_b"], _BucketPairsAuto(max_members),
+        _OUT_SCHEMA,
+    )
 
 
 def decontam_winnow_stream(

@@ -12,11 +12,11 @@ subscription. This module mirrors that architecture Spark-first:
     -> ktable_changelog_stream (keyed by pk; emits old_fk/new_fk)   [query 1]
     -> fk_instructions (stateless flatMap: sub/unsub per FK change)
     -> union with tagged right changelog
-    -> groupBy(fk) + transformWithStateInPandas                      [query 2]
+    -> groupBy(hash bucket of fk) + transformWithStateInPandas       [query 2]
        state per fk: right value + subscription map {pk -> left payload}
     -> join changelog (pk, action, left payload, right value)
 
-The groupBy(fk) shuffle IS Kafka's subscription topic; the two chained
+The shuffle by fk bucket IS Kafka's subscription topic; the two chained
 stateful queries are connected by an intermediate changelog directory
 (Kafka's response topic) because Spark disallows two update-mode
 stateful operators in one query — see FKJoinReplay.
@@ -157,8 +157,9 @@ def _fk_apply(
 ) -> tuple[list[tuple], bool, tuple]:
     """FK-join state transition for ONE fk's in-order records. Returns
     (output rows, new right state); subscription mutations accumulate
-    in `subs.touched`. Shared by the per-fk and bucketed processors —
-    identical emissions by construction."""
+    in `subs.touched`. The bucketed processor's slow path for batches
+    carrying right-side tombstones, and the reference the vectorized
+    _fk_fast_batch kernel is pinned against."""
     r_nulls = (None,) * len(right_cols)
     l_nulls = (None,) * len(left_cols)
     out: list[tuple] = []
@@ -628,111 +629,6 @@ def _fk_fast_batch(
     return frame, subs_ops, right_writes
 
 
-class _FKJoinProcessor(StatefulProcessor):
-    """Per-FK-group state: current right value + {pk -> left payload}."""
-
-    def __init__(
-        self,
-        left_cols: list[str],
-        right_cols: list[str],
-        sub_schema: StructType,
-        right_schema: StructType,
-        out_schema: StructType,
-        how: str,
-        pk_schema: StructType,
-        compact_rights: bool = False,
-    ) -> None:
-        self.compact_rights = compact_rights
-        self.left_cols = left_cols
-        self.right_cols = right_cols
-        self.sub_schema = sub_schema
-        self.right_schema = right_schema
-        self.out_columns = [f.name for f in out_schema.fields]
-        # per-output-column Spark types drive the dense (native-dtype)
-        # emission path — see _pdnorm.dense_input / _fk_fast_batch
-        self._out_types = {f.name: f.dataType for f in out_schema.fields}
-        self.how = how
-        self.pk_schema = pk_schema
-        # LongType columns are decimal-shielded (arrive object-exact);
-        # pin the remaining integral/bool columns to extension dtypes
-        # right_cols are the r_-prefixed union column names; the state
-        # schema fields are positional twins with the original names
-        self._norm_fields = [
-            (c, dt)
-            for c, dt in [("pk", pk_schema["pk"].dataType)]
-            + [(c, sub_schema[c].dataType) for c in left_cols]
-            + [(c, f.dataType) for c, f in zip(right_cols, right_schema.fields)]
-            if not is_shielded(dt)
-        ]
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.right = handle.getValueState("right", self.right_schema)
-        self.subs = handle.getMapState("subs", self.pk_schema, self.sub_schema)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        # normalize BEFORE touching cells: instruction rows carry nulls
-        # in the r_* columns and right rows in the left columns BY
-        # CONSTRUCTION, so int64 payloads would otherwise arrive float64
-        # and round above 2^53 (see _pdnorm.py)
-        pdf = normalize_nullable(
-            pd.concat(list(rows))
-            .sort_values(["seq", "minor"], kind="stable")
-            .reset_index(drop=True),
-            self._norm_fields,
-        )
-        snap = {pynative(k[0]): tuple(v) for k, v in self.subs.iterator()}
-        if not bool(pdf["right_is_delete"].any()):
-            # vectorized kernel (r16) — one fk is just a 1-group bucket;
-            # the full snapshot above means pre_member is never needed
-            ufk = pynative(key[0])
-            r_val0 = self.right.get()
-            frame, subs_ops, right_writes = _fk_fast_batch(
-                pdf, {ufk: snap},
-                r_state_of=lambda _fk: (
-                    tuple(r_val0) if r_val0 is not None else None
-                ),
-                pre_member=lambda _fk, _pk: False,
-                left_cols=self.left_cols, right_cols=self.right_cols,
-                out_types=self._out_types, out_columns=self.out_columns,
-                left_join=self.how == "left",
-                compact_rights=self.compact_rights,
-            )
-            for _fk, pk, pay in subs_ops:
-                if pay is None:
-                    self.subs.removeKey((pk,))
-                else:
-                    self.subs.updateValue((pk,), pay)
-            for _fk, val in right_writes:
-                self.right.update(val)
-            if frame is not None:
-                yield frame
-            return
-        r_val0 = self.right.get()
-        r_present = r_val0 is not None
-        r_val: tuple = tuple(r_val0) if r_present else ()
-        subs = _SubsView(snap)
-        out, r_present, r_val = _fk_apply(
-            pdf.to_dict("records"), r_present, r_val, subs,
-            self.left_cols, self.right_cols, self.how == "left",
-        )
-        for pk, pay in subs.touched.items():
-            if pay is None:
-                self.subs.removeKey((pk,))
-            else:
-                self.subs.updateValue((pk,), pay)
-        if r_present:
-            self.right.update(r_val)
-        else:
-            self.right.clear()
-        if out:
-            # dtype=object: pandas would infer mixed None/int64 columns
-            # as float64, rounding values above 2^53 (see ktable.py)
-            yield pd.DataFrame(out, columns=self.out_columns, dtype=object)
-
-    def close(self) -> None:
-        pass
-
-
 class _FKJoinProcessorBucketed(StatefulProcessor):
     """FK join over a BUCKETED fk space: the TWS grouping key is
     pmod(xxhash64(fk), n_buckets); per-fk state lives in two MapStates —
@@ -740,19 +636,18 @@ class _FKJoinProcessorBucketed(StatefulProcessor):
 
     Same trade as ktable._LatestPerKeyBucketed: TWS pays a fixed
     framework cost per grouping key per micro-batch, so bucketing
-    divides it by (fks/buckets) while the per-fk transition stays
-    identical (_fk_apply).
+    spreads it over ~fks/buckets fks. Batches without right-side
+    tombstones run the vectorized _fk_fast_batch kernel; the rest run
+    the per-record _fk_apply transition per fk.
 
     Fan-out on a right-side record needs every subscription of that fk;
     MapState has no prefix scan, so the processor takes ONE pass over
     the bucket's subscription map per batch, keeping only fks that have
     right-side records in the batch (sub/unsub-only batches skip the
     scan entirely — membership checks are point lookups). Cost:
-    O(subscriptions in bucket) per batch WITH right traffic, vs the
-    per-fk mode's O(subs of that fk). Size n_buckets so a bucket's
-    subscription state stays scannable (>= 2-4x cores, more under very
-    large left tables); under fan-out-heavy skew the per-fk mode
-    remains the better layout.
+    O(subscriptions in bucket) per batch WITH right traffic. Size
+    n_buckets so a bucket's subscription state stays scannable (>= 2-4x
+    cores, more under very large left tables).
     """
 
     def __init__(
@@ -819,11 +714,6 @@ class _FKJoinProcessorBucketed(StatefulProcessor):
             # vectorized kernel (r16): covers subs, unsub_move,
             # unsub_delete and right upserts; only right tombstones
             # fall back to the per-record transition
-            import os as _os
-            import sys as _sys
-            import time as _time
-            _dbg = _os.environ.get("SPARK_GRAFT_FK_DEBUG") == "1"
-            _t0 = _time.monotonic()
             frame, subs_ops, right_writes = _fk_fast_batch(
                 pdf, snapshots,
                 r_state_of=lambda fk: self.right.getValue((fk,)),
@@ -833,7 +723,6 @@ class _FKJoinProcessorBucketed(StatefulProcessor):
                 left_join=self.how == "left",
                 compact_rights=self.compact_rights,
             )
-            _t1 = _time.monotonic()
             for ufk, pk, pay in subs_ops:
                 if pay is None:
                     self.subs.removeKey((ufk, pk))
@@ -841,14 +730,6 @@ class _FKJoinProcessorBucketed(StatefulProcessor):
                     self.subs.updateValue((ufk, pk), pay)
             for ufk, val in right_writes:
                 self.right.updateValue((ufk,), val)
-            _t2 = _time.monotonic()
-            if _dbg:
-                print(
-                    f"FKDBG kernel={_t1-_t0:.2f}s state_ops={len(subs_ops)}"
-                    f"/{_t2-_t1:.2f}s rows_in={len(pdf)} "
-                    f"rows_out={0 if frame is None else len(frame)}",
-                    file=_sys.stderr, flush=True,
-                )
             if frame is not None:
                 yield frame
             return
@@ -899,13 +780,13 @@ def _fk_join_plan(
     right_tombstone: str | None,
     left_value_cols: list[str],
     how: str,
-    n_buckets: int | None = None,
+    n_buckets: int,
     compact_rights: bool = False,
-) -> tuple[DataFrame, StatefulProcessor, StructType, list[str]]:
+) -> tuple[DataFrame, _FKJoinProcessorBucketed, StructType]:
     """Shared union-tag input + processor + output schema for the
     stream (TWS) and batch (grouped replay) paths. Returns the tagged
-    union, the processor, the output schema, and the grouping columns
-    (fk, or the derived bucket column when n_buckets is set)."""
+    union (with its _fkj_bucket grouping column), the processor and
+    the output schema."""
     r_schema = right_raw.schema
     # instruction rows are null in the r_* columns and right rows in
     # the pk/left columns BY CONSTRUCTION (and unsub/null-FK rows can
@@ -963,13 +844,6 @@ def _fk_join_plan(
     )
     out_columns = [f.name for f in out_schema.fields]
     r_cols = [f"r_{c}" for c in right_payload]
-    if n_buckets is None:
-        proc: StatefulProcessor = _FKJoinProcessor(
-            left_value_cols, r_cols, sub_schema, right_state_schema,
-            out_schema, how, StructType([StructField("pk", pk_type)]),
-            compact_rights=compact_rights,
-        )
-        return unioned, proc, out_schema, ["fk"]
     proc = _FKJoinProcessorBucketed(
         left_value_cols, r_cols, sub_schema, right_state_schema,
         out_schema, how,
@@ -980,7 +854,7 @@ def _fk_join_plan(
     unioned = unioned.withColumn(
         "_fkj_bucket", F.pmod(F.xxhash64("fk"), F.lit(n_buckets)).cast("int")
     )
-    return unioned, proc, out_schema, ["_fkj_bucket"]
+    return unioned, proc, out_schema
 
 
 def fk_join_changelog_stream(
@@ -993,26 +867,25 @@ def fk_join_changelog_stream(
     right_tombstone: str | None,
     left_value_cols: list[str],
     how: str = "inner",
-    n_buckets: int | None = None,
+    n_buckets: int = 16,
     compact_rights: bool = False,
 ) -> DataFrame:
     """Query-2 builder: union(instructions, tagged right changelog)
-    -> groupBy(fk) -> stateful join processor -> join changelog
+    -> groupBy(fk bucket) -> stateful join processor -> join changelog
     (pk, action, left value cols, right payload cols).
 
-    n_buckets: when set, group the stateful operator by
-    pmod(xxhash64(fk), n_buckets) instead of the fk — identical output,
-    ~(fks/buckets)x less per-fk TWS framework overhead
-    (see _FKJoinProcessorBucketed for the fan-out scan trade).
+    n_buckets: the stateful operator groups by
+    pmod(xxhash64(fk), n_buckets) (see _FKJoinProcessorBucketed for the
+    fan-out scan trade). The output does not depend on it.
     """
     _require_rocksdb(instructions.sparkSession)
-    unioned, proc, out_schema, group_cols = _fk_join_plan(
+    unioned, proc, out_schema = _fk_join_plan(
         instructions, right_raw, right_key=right_key,
         right_payload=right_payload, right_seq=right_seq,
         right_tombstone=right_tombstone, left_value_cols=left_value_cols,
         how=how, n_buckets=n_buckets, compact_rights=compact_rights,
     )
-    return unioned.groupBy(*group_cols).transformWithStateInPandas(
+    return unioned.groupBy("_fkj_bucket").transformWithStateInPandas(
         statefulProcessor=proc,
         outputStructType=out_schema,
         outputMode="Update",
@@ -1030,22 +903,22 @@ def fk_join_changelog_batch(
     right_tombstone: str | None,
     left_value_cols: list[str],
     how: str = "inner",
-    n_buckets: int | None = None,
+    n_buckets: int = 16,
     compact_rights: bool = False,
 ) -> DataFrame:
     """Same FK-join state machine over BATCH changelog frames via
     grouped replay (applyInPandas; no TWS/protobuf dependency). The
-    groupBy(fk) shuffle — Kafka's subscription topic — is identical;
+    shuffle by fk bucket — Kafka's subscription topic — is identical;
     only the state backend (in-task memory vs RocksDB) differs."""
     from kafka_streams_app_spark.streaming.replay import grouped_replay
 
-    unioned, proc, out_schema, group_cols = _fk_join_plan(
+    unioned, proc, out_schema = _fk_join_plan(
         instructions, right_raw, right_key=right_key,
         right_payload=right_payload, right_seq=right_seq,
         right_tombstone=right_tombstone, left_value_cols=left_value_cols,
         how=how, n_buckets=n_buckets, compact_rights=compact_rights,
     )
-    return grouped_replay(unioned, group_cols, proc, out_schema)
+    return grouped_replay(unioned, ["_fkj_bucket"], proc, out_schema)
 
 
 class FKJoinReplay:
@@ -1075,7 +948,7 @@ class FKJoinReplay:
         right_payload: list[str],
         right_tombstone: str,
         how: str = "inner",
-        n_buckets: int | None = None,
+        n_buckets: int = 16,
         sink: str = "memory",
     ) -> None:
         self.spark = spark

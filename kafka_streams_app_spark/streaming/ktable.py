@@ -46,6 +46,10 @@ from kafka_streams_app_spark.streaming._pdnorm import (
     shield_long,
 )
 
+# hash buckets of the stateful operator (the TWS grouping key of the
+# stream path; the replay groups of the batch path)
+_N_BUCKETS = 16
+
 
 def _require_rocksdb(spark) -> None:
     spark.conf.set(
@@ -66,8 +70,8 @@ def _changelog_for_key(
     out_columns: list[str],
 ) -> tuple[pd.DataFrame | None, tuple | None]:
     """Latest-per-key state transition for ONE logical key's in-order
-    records: returns (changelog frame or None, new state or None).
-    Shared by the per-key and bucketed processors — identical output."""
+    records: returns (changelog frame or None, new state or None). The
+    bucketed processor's slow path for batches carrying tombstones."""
     if tombs is None or not any(tombs):
         # Fast path (every record an upsert — the overwhelmingly
         # common shape): each row's old payload is the previous
@@ -112,60 +116,6 @@ def _changelog_for_key(
     return frame, cur
 
 
-class _LatestPerKey(StatefulProcessor):
-    def __init__(
-        self,
-        keys: list[str],
-        seq_col: str,
-        payload: list[str],
-        tombstone_col: str | None,
-        state_schema: StructType,
-        out_columns: list[str],
-    ) -> None:
-        self.keys = keys
-        self.seq_col = seq_col
-        self.payload = payload
-        self.tombstone_col = tombstone_col
-        self.state_schema = state_schema
-        self.out_columns = out_columns
-        self._norm_fields = [
-            (c, f.dataType) for c, f in zip(payload, state_schema.fields)
-        ]
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.state = handle.getValueState("latest", self.state_schema)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        # pin nullable integral payloads (raises loudly when an
-        # UNshielded int64 already lost precision — see _pdnorm.py)
-        pdf = normalize_nullable(
-            pd.concat(list(rows)).sort_values(self.seq_col, kind="stable"),
-            self._norm_fields,
-        )
-        cur: tuple | None = tuple(self.state.get()) if self.state.exists() else None
-        seqs = pdf[self.seq_col].tolist()
-        pay = [pdf[c].tolist() for c in self.payload]
-        tombs = (
-            [bool(t) for t in pdf[self.tombstone_col].tolist()]
-            if self.tombstone_col else None
-        )
-        frame, new_cur = _changelog_for_key(
-            key, seqs, pay, tombs, cur,
-            self.keys, self.payload, self.seq_col, self.out_columns,
-        )
-        if new_cur is None:
-            self.state.clear()
-        else:
-            # pykey: shielded payloads surface as Decimal (and extension
-            # dtypes as pd.NA/np scalars) — state wants plain python
-            self.state.update(pykey(new_cur))
-        if frame is not None:
-            yield frame
-
-    def close(self) -> None:
-        pass
-
-
 class _LatestPerKeyBucketed(StatefulProcessor):
     """Latest-per-key over a BUCKETED key space: the TWS grouping key is
     pmod(xxhash64(logical keys), n_buckets), and the per-logical-key
@@ -174,13 +124,14 @@ class _LatestPerKeyBucketed(StatefulProcessor):
     Why: transformWithStateInPandas pays a fixed framework cost PER
     GROUPING KEY per micro-batch (Arrow slice + python-worker dispatch;
     measured ~85% of ktable wall with a no-op processor — SCALE.md).
-    Grouping by bucket divides that per-key term by (keys/buckets) while
-    keeping identical semantics: records are globally seq-sorted within
-    the bucket, then applied per logical key in order via the same
-    _changelog_for_key transition the per-key processor uses. State
-    remains hash-partitioned across executors (by bucket), RocksDB holds
-    one map entry per logical key, and no bucket ever materializes more
-    than its micro-batch slice plus one map lookup per distinct key.
+    Grouping by bucket spreads that cost over ~keys/buckets logical
+    keys. Records are globally seq-sorted within the bucket, then
+    applied per logical key in order: a vectorized per-key shift on
+    all-upsert batches, the per-record _changelog_for_key transition
+    on batches carrying tombstones. State stays hash-partitioned across
+    executors (by bucket), RocksDB holds one map entry per logical key,
+    and no bucket ever materializes more than its micro-batch slice
+    plus one map lookup per distinct key.
 
     Bucket count is a deploy dial: enough buckets to spread across
     executors and bound per-group batch size (>= 2-4x total cores);
@@ -318,13 +269,30 @@ def _ktable_plan(
     seq_col: str,
     payload: list[str],
     tombstone_col: str | None,
-) -> tuple[_LatestPerKey, StructType]:
-    """Shared processor + output schema for the stream and batch paths."""
+    n_buckets: int,
+    exact_longs: bool,
+) -> tuple[DataFrame, _LatestPerKeyBucketed, StructType]:
+    """Shared bucketed input + processor + output schema for the stream
+    (TWS) and batch (grouped replay) paths; both group by _kt_bucket."""
+    from pyspark.sql import functions as F
+
+    # project to exactly the consumed columns BEFORE the keyed shuffle:
+    # every extra column rides the exchange AND the JVM->Arrow->pandas
+    # per-group chunking, the dominant cost of the TWS path (see SCALE.md)
+    needed = list(dict.fromkeys(
+        keys + [seq_col] + payload + ([tombstone_col] if tombstone_col else [])
+    ))
+    # Kafka Streams drops records with a null key for all KTable
+    # operations ("records with null key are ignored") — mirror that.
+    # This also keeps the state keys exact: a single null in an int64
+    # key column would upcast the whole pandas column to float64,
+    # corrupting every key above 2^53 in that batch.
+    df = df.select(*needed).na.drop(subset=keys)
     in_schema = df.schema
+    key_fields = [StructField(k, in_schema[k].dataType, True) for k in keys]
     state_schema = StructType(
         [StructField(c, in_schema[c].dataType, True) for c in payload]
     )
-    key_fields = [StructField(k, in_schema[k].dataType, True) for k in keys]
     out_schema = StructType(
         key_fields
         + [
@@ -335,11 +303,17 @@ def _ktable_plan(
         + [StructField(f"new_{c}", in_schema[c].dataType, True) for c in payload]
         + [StructField(seq_col, in_schema[seq_col].dataType, True)]
     )
-    proc = _LatestPerKey(
-        keys, seq_col, payload, tombstone_col, state_schema,
+    proc = _LatestPerKeyBucketed(
+        keys, seq_col, payload, tombstone_col,
+        StructType(key_fields), state_schema,
         [f.name for f in out_schema.fields],
     )
-    return proc, out_schema
+    if exact_longs:  # AFTER the schemas: state/output keep LongType
+        df = _shield_payload(df, payload)
+    bucketed = df.withColumn(
+        "_kt_bucket", F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).cast("int")
+    )
+    return bucketed, proc, out_schema
 
 
 def _shield_payload(df: DataFrame, payload: list[str]) -> DataFrame:
@@ -365,7 +339,7 @@ def ktable_changelog_stream(
     seq_col: str,
     payload: list[str],
     tombstone_col: str | None = None,
-    n_buckets: int | None = None,
+    n_buckets: int = _N_BUCKETS,
     exact_longs: bool = False,
 ) -> DataFrame:
     """Incremental latest-per-key view over a streaming changelog.
@@ -379,10 +353,10 @@ def ktable_changelog_stream(
     payload happens to be all-null), old_<payload>..., new_<payload>...,
     and the originating seq (for downstream ordering, e.g. the FK join).
 
-    n_buckets: when set, group the stateful operator by
-    pmod(xxhash64(keys), n_buckets) instead of the logical keys —
-    identical output, ~(keys/buckets)x less per-key TWS framework
-    overhead (see _LatestPerKeyBucketed). Pick >= 2-4x total cores.
+    n_buckets: the stateful operator groups by
+    pmod(xxhash64(keys), n_buckets); per-key state lives in a MapState
+    (see _LatestPerKeyBucketed). The output does not depend on it.
+    Pick >= 2-4x total cores.
 
     exact_longs: when True, LongType payload columns ride the Arrow
     crossing as decimal(20,0) so a null-mixed micro-batch cannot round
@@ -391,48 +365,9 @@ def ktable_changelog_stream(
     Off by default — the crossing is cheaper and the normalize step
     RAISES if an unshielded batch would actually have lost precision.
     """
-    from pyspark.sql import functions as F
-
     _require_rocksdb(df.sparkSession)
-    # project to exactly the consumed columns BEFORE the keyed shuffle:
-    # every extra column rides the exchange AND the JVM->Arrow->pandas
-    # per-key chunking, the dominant cost of the TWS path (see SCALE.md)
-    needed = list(dict.fromkeys(
-        keys + [seq_col] + payload + ([tombstone_col] if tombstone_col else [])
-    ))
-    # Kafka Streams drops records with a null key for all KTable
-    # operations ("records with null key are ignored") — mirror that.
-    # This also keeps the TWS grouping exact: pyspark's worker-side
-    # group splitting reads keys from the pandas-converted batch, and a
-    # single null in an int64 key column upcasts the whole column to
-    # float64, corrupting every key above 2^53 in that batch.
-    df = df.select(*needed).na.drop(subset=keys)
-    if n_buckets is None:
-        proc, out_schema = _ktable_plan(df, keys, seq_col, payload, tombstone_col)
-        if exact_longs:  # AFTER the plan: schemas keep LongType
-            df = _shield_payload(df, payload)
-        return df.groupBy(*keys).transformWithStateInPandas(
-            statefulProcessor=proc,
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-    _, out_schema = _ktable_plan(df, keys, seq_col, payload, tombstone_col)
-    in_schema = df.schema
-    key_schema = StructType(
-        [StructField(k, in_schema[k].dataType, True) for k in keys]
-    )
-    state_schema = StructType(
-        [StructField(c, in_schema[c].dataType, True) for c in payload]
-    )
-    proc = _LatestPerKeyBucketed(
-        keys, seq_col, payload, tombstone_col,
-        key_schema, state_schema, [f.name for f in out_schema.fields],
-    )
-    if exact_longs:  # AFTER the schemas: state/output keep LongType
-        df = _shield_payload(df, payload)
-    bucketed = df.withColumn(
-        "_kt_bucket", F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).cast("int")
+    bucketed, proc, out_schema = _ktable_plan(
+        df, keys, seq_col, payload, tombstone_col, n_buckets, exact_longs
     )
     return bucketed.groupBy("_kt_bucket").transformWithStateInPandas(
         statefulProcessor=proc,
@@ -452,14 +387,14 @@ def ktable_changelog_batch(
 ) -> DataFrame:
     """Same state machine over a BATCH changelog frame via grouped
     replay (applyInPandas; no TWS/protobuf dependency) — emits the
-    identical changelog rows. See streaming/replay.py for when/why."""
+    identical changelog rows, one replay group per bucket of the stream
+    path's default count. See streaming/replay.py for when/why."""
     from kafka_streams_app_spark.streaming.replay import grouped_replay
 
-    df = df.na.drop(subset=keys)  # Kafka null-key drop, as in the stream path
-    proc, out_schema = _ktable_plan(df, keys, seq_col, payload, tombstone_col)
-    if exact_longs:  # AFTER the plan: schemas keep LongType
-        df = _shield_payload(df, payload)
-    return grouped_replay(df, keys, proc, out_schema)
+    bucketed, proc, out_schema = _ktable_plan(
+        df, keys, seq_col, payload, tombstone_col, _N_BUCKETS, exact_longs
+    )
+    return grouped_replay(bucketed, ["_kt_bucket"], proc, out_schema)
 
 
 def changelog_to_intervals(

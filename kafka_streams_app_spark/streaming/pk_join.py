@@ -19,15 +19,11 @@ most one join-changelog row:
 
 A delete on an absent side is suppressed (Kafka null->null).
 
-Two physical layouts, identical changelog output:
-- per-key (default): TWS grouping key = the join key; ValueState per
-  side.
-- bucketed (n_buckets): TWS grouping key = pmod(xxhash64(key),
-  n_buckets); per-key state lives in MapStates keyed by the logical
-  key. transformWithStateInPandas pays a fixed framework cost PER
-  GROUPING KEY per micro-batch (~85% of wall with a no-op processor,
-  SCALE.md), so bucketing divides that term by (keys/buckets) —
-  the same trade the bucketed ktable measured at 1.67x.
+Layout: the TWS grouping key is pmod(xxhash64(key), n_buckets), and
+per-key (left, right) state lives in two MapStates keyed by the logical
+key. transformWithStateInPandas pays a fixed framework cost PER
+GROUPING KEY per micro-batch (~85% of wall with a no-op processor,
+SCALE.md), so bucketing spreads that cost over ~keys/buckets keys.
 """
 
 from __future__ import annotations
@@ -63,8 +59,9 @@ def _pk_apply(
 ) -> tuple[list[tuple], bool, tuple, bool, tuple]:
     """PK-join state transition for ONE logical key's in-order records.
 
-    Returns (output rows, new left/right state). Shared by the per-key
-    and bucketed processors — identical emissions by construction.
+    Returns (output rows, new left/right state). The bucketed
+    processor's slow path for batches carrying tombstones, and the
+    reference its vectorized fast path is pinned against.
     """
     l_nulls = (None,) * len(left_cols)
     r_nulls = (None,) * len(right_cols)
@@ -104,78 +101,14 @@ def _pk_apply(
     return out, l_present, l_val, r_present, r_val
 
 
-class _PKJoinProcessor(StatefulProcessor):
-    def __init__(
-        self,
-        left_cols: list[str],
-        right_cols: list[str],
-        left_schema: StructType,
-        right_schema: StructType,
-        out_columns: list[str],
-        how: str,
-    ) -> None:
-        self.left_cols = left_cols
-        self.right_cols = right_cols
-        self.left_schema = left_schema
-        self.right_schema = right_schema
-        self.out_columns = out_columns
-        self.how = how
-        # LongType payloads are decimal-shielded (arrive object-exact);
-        # pin the remaining integral/bool payloads to extension dtypes
-        self._norm_fields = [
-            (c, f.dataType)
-            for c, f in [(c, left_schema[c]) for c in left_cols]
-            + [(c, right_schema[c]) for c in right_cols]
-            if not is_shielded(f.dataType)
-        ]
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.left = handle.getValueState("left", self.left_schema)
-        self.right = handle.getValueState("right", self.right_schema)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        # normalize BEFORE touching cells: each side's rows carry nulls
-        # in the other side's columns by construction, so an int64
-        # payload column always reaches pandas nullable — without the
-        # extension-dtype pin it arrives float64 and values above 2^53
-        # are silently rounded (see _pdnorm.py)
-        pdf = normalize_nullable(
-            pd.concat(list(rows)).sort_values("seq", kind="stable"),
-            self._norm_fields,
-        )
-        l_present = self.left.exists()
-        l_val: tuple = tuple(self.left.get()) if l_present else ()
-        r_present = self.right.exists()
-        r_val: tuple = tuple(self.right.get()) if r_present else ()
-        out, l_present, l_val, r_present, r_val = _pk_apply(
-            pdf.to_dict("records"), tuple(key), l_present, l_val,
-            r_present, r_val, self.left_cols, self.right_cols,
-            self.how == "left",
-        )
-        for state, present, val in (
-            (self.left, l_present, l_val), (self.right, r_present, r_val)
-        ):
-            if present:
-                state.update(val)
-            else:
-                state.clear()
-        if out:
-            # dtype=object: pandas would infer mixed None/int64 columns
-            # as float64, rounding values above 2^53 (see ktable.py)
-            yield pd.DataFrame(out, columns=self.out_columns, dtype=object)
-
-    def close(self) -> None:
-        pass
-
-
 class _PKJoinProcessorBucketed(StatefulProcessor):
     """PK join over a BUCKETED key space: the TWS grouping key is
     pmod(xxhash64(key), n_buckets); per-logical-key (left, right) state
     lives in two MapStates keyed by the logical key. Records are
     globally seq-sorted within the bucket, then applied per logical key
-    in order via the same _pk_apply transition the per-key processor
-    uses — identical changelog output, ~(keys/buckets)x less per-key
-    TWS framework overhead (see ktable._LatestPerKeyBucketed)."""
+    in order: a vectorized pointer forward-fill on all-upsert batches,
+    the per-record _pk_apply transition on batches carrying tombstones
+    (see ktable._LatestPerKeyBucketed for the bucketing trade)."""
 
     def __init__(
         self,
@@ -356,12 +289,12 @@ def _pk_join_plan(
     left_tombstone: str | None,
     right_tombstone: str | None,
     how: str,
-    n_buckets: int | None = None,
-) -> tuple[DataFrame, StatefulProcessor, StructType, list[str]]:
+    n_buckets: int,
+) -> tuple[DataFrame, _PKJoinProcessorBucketed, StructType]:
     """Shared union-tag input + processor + output schema for the
     stream (TWS) and batch (grouped replay) paths. Returns the tagged
-    union, the processor, the output schema, and the grouping columns
-    (the key, or the derived bucket column when n_buckets is set)."""
+    union (with its _pkj_bucket grouping column), the processor and
+    the output schema."""
     l_schema, r_schema = left_raw.schema, right_raw.schema
 
     def tag(df: DataFrame, side: str, payload: list[str], other: list[str],
@@ -404,13 +337,6 @@ def _pk_join_plan(
         + [StructField(c, r_schema[c].dataType, True) for c in right_payload]
         + [StructField("_seq", l_schema[seq].dataType, True)]
     )
-    out_columns = [f.name for f in out_schema.fields]
-    if n_buckets is None:
-        proc: StatefulProcessor = _PKJoinProcessor(
-            left_payload, right_payload, left_state, right_state,
-            out_columns, how,
-        )
-        return unioned, proc, out_schema, [key]
     key_schema = StructType([StructField(key, l_schema[key].dataType, True)])
     proc = _PKJoinProcessorBucketed(
         key, key_schema, left_payload, right_payload, left_state,
@@ -419,7 +345,7 @@ def _pk_join_plan(
     unioned = unioned.withColumn(
         "_pkj_bucket", F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
     )
-    return unioned, proc, out_schema, ["_pkj_bucket"]
+    return unioned, proc, out_schema
 
 
 def pk_join_stream(
@@ -433,7 +359,7 @@ def pk_join_stream(
     left_tombstone: str | None = None,
     right_tombstone: str | None = None,
     how: str = "inner",
-    n_buckets: int | None = None,
+    n_buckets: int = 16,
 ) -> DataFrame:
     """Join two streaming table changelogs on their shared primary key.
 
@@ -442,18 +368,17 @@ def pk_join_stream(
     left payload, right payload) — exactly the rows the reference's
     output-join topic carries.
 
-    n_buckets: when set, group the stateful operator by
-    pmod(xxhash64(key), n_buckets) instead of the key — identical
-    output, ~(keys/buckets)x less per-key TWS framework overhead
-    (see _PKJoinProcessorBucketed). Pick >= 2-4x total cores.
+    n_buckets: the stateful operator groups by
+    pmod(xxhash64(key), n_buckets) (see _PKJoinProcessorBucketed). The
+    output does not depend on it. Pick >= 2-4x total cores.
     """
     _require_rocksdb(left_raw.sparkSession)
-    unioned, proc, out_schema, group_cols = _pk_join_plan(
+    unioned, proc, out_schema = _pk_join_plan(
         left_raw, right_raw, key=key, left_payload=left_payload,
         right_payload=right_payload, seq=seq, left_tombstone=left_tombstone,
         right_tombstone=right_tombstone, how=how, n_buckets=n_buckets,
     )
-    return unioned.groupBy(*group_cols).transformWithStateInPandas(
+    return unioned.groupBy("_pkj_bucket").transformWithStateInPandas(
         statefulProcessor=proc,
         outputStructType=out_schema,
         outputMode="Update",
@@ -472,15 +397,15 @@ def pk_join_batch(
     left_tombstone: str | None = None,
     right_tombstone: str | None = None,
     how: str = "inner",
-    n_buckets: int | None = None,
+    n_buckets: int = 16,
 ) -> DataFrame:
     """Same PK-join state machine over BATCH changelog frames via
     grouped replay (applyInPandas; no TWS/protobuf dependency)."""
     from kafka_streams_app_spark.streaming.replay import grouped_replay
 
-    unioned, proc, out_schema, group_cols = _pk_join_plan(
+    unioned, proc, out_schema = _pk_join_plan(
         left_raw, right_raw, key=key, left_payload=left_payload,
         right_payload=right_payload, seq=seq, left_tombstone=left_tombstone,
         right_tombstone=right_tombstone, how=how, n_buckets=n_buckets,
     )
-    return grouped_replay(unioned, group_cols, proc, out_schema)
+    return grouped_replay(unioned, ["_pkj_bucket"], proc, out_schema)

@@ -9,18 +9,19 @@ by an external owner before that injection leaves TWS workers unable to
 import protobuf — they crash with "TransformWithStateInPySpark driver
 worker exited unexpectedly". Regular Arrow-batched applyInPandas has no
 protobuf dependency, so the SAME StatefulProcessor state machines
-(streaming/ktable.py, pk_join.py, fk_join.py) can be replayed per key
-over a batch frame: groupBy(keys) shuffles each key's full changelog to
-one task, the processor runs once per key from empty state, and the
-emitted changelog is identical to what the incremental TWS run yields
-(the processors are deterministic in seq order).
+(streaming/ktable.py, pk_join.py, fk_join.py, dedup_candidates.py) can
+be replayed per grouping key over a batch frame: groupBy(bucket)
+shuffles each bucket's full changelog to one task, the processor runs
+once per bucket from empty state, and the emitted changelog is
+identical to what the incremental TWS run yields (the processors are
+deterministic in seq order).
 
 This is the fallback path for the driver-gate contract entries only;
 tests pin the genuinely incremental multi-batch behavior through TWS
 via MicroBatchReplay. Scale note: the replay is fully distributed (one
 shuffle on the grouping key, same as TWS's repartition), but it holds a
-key's whole history in one task — fine for snapshot reductions, not a
-replacement for incremental state at unbounded retention.
+bucket's whole history in one task — fine for snapshot reductions, not
+a replacement for incremental state at unbounded retention.
 """
 
 from __future__ import annotations
@@ -102,10 +103,11 @@ def grouped_replay(
 ) -> DataFrame:
     """Run a StatefulProcessor state machine over a BATCH changelog.
 
-    groupBy(group_cols).applyInPandas: each key's rows arrive as one
+    groupBy(group_cols).applyInPandas: each group's rows arrive as one
     pandas frame; processor.init gets fresh in-memory state shims, then
-    handleInputRows replays the key's history in seq order — bit-for-bit
-    the changelog the TWS incremental operator emits for the same input.
+    handleInputRows replays the group's history in seq order —
+    bit-for-bit the changelog the TWS incremental operator emits for the
+    same input.
     """
     out_cols = [f.name for f in out_schema.fields]
 

@@ -84,15 +84,14 @@ def test_windowed_count_survives_restart(spark):
 import pytest
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4])
+@pytest.mark.parametrize("n_buckets", [4])
 def test_tws_ktable_state_survives_restart(spark, n_buckets):
     """The transformWithStateInPandas latest-per-key state machine
     restarted from its checkpoint must remember pre-restart values: an
     update to a key written before the restart emits old_present=True
     with the OLD payload (RocksDB state restored), not a fresh insert.
-    Parametrized over the per-key ValueState and bucketed MapState
-    layouts — the bucketed mode's recovery restores a MapState whose
-    entries span multiple logical keys per grouping key."""
+    Recovery restores a MapState whose entries span multiple logical
+    keys per grouping key (bucket)."""
     from kafka_streams_app_spark.streaming.ktable import ktable_changelog_stream
     from kafka_streams_app_spark.streaming.replay import tws_available
 
@@ -148,7 +147,7 @@ def test_tws_ktable_state_survives_restart(spark, n_buckets):
             shutil.rmtree(d, ignore_errors=True)
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4])
+@pytest.mark.parametrize("n_buckets", [4])
 def test_tws_pk_join_state_survives_restart(spark, n_buckets):
     """PK-join state (both sides) restored across a restart: a right
     row arriving after the restart joins the LEFT value written before
@@ -238,7 +237,7 @@ def test_restart_does_not_recount_processed_files(spark):
             shutil.rmtree(d, ignore_errors=True)
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4])
+@pytest.mark.parametrize("n_buckets", [4])
 def test_fk_pipeline_survives_restart(spark, n_buckets):
     """r11 verdict #6: the FULL 2-stage FK-join pipeline (ktable
     changelog query -> intermediate "subscription response" parquet ->
@@ -293,7 +292,7 @@ def test_fk_pipeline_survives_restart(spark, n_buckets):
         assert p.drain() == []
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4])
+@pytest.mark.parametrize("n_buckets", [4])
 def test_fk_pipeline_mid_handoff_crash(spark, n_buckets):
     """r12 verdict #6: crash BETWEEN the two chained stateful queries —
     query 1 commits intermediate "subscription response" files that

@@ -125,36 +125,6 @@ def test_stream_equals_replay_equals_batch_on_documents(spark):
     assert stream == expected
 
 
-def test_bucketed_mapstate_layout_same_pair_set(spark):
-    """The bucketed-MapState layout (n_buckets) emits the IDENTICAL
-    pair set as the per-fingerprint layout — per-fp grouped replay,
-    bucketed replay (several bucket counts), and bucketed stream all
-    equal the batch posting-list self-join."""
-    docs = [_doc(i, f"m{i} n{i} o{i}") for i in range(1, 7)]
-    expected = _batch_pairs(spark, docs)
-    assert len(expected) > 0
-    df = spark.createDataFrame(docs, SCHEMA)
-    for nb in (None, 1, 4, 128):
-        got = sorted(
-            tuple(r)
-            for r in DC.winnow_candidates_batch(
-                df, "text", "doc_id", n_buckets=nb
-            ).collect()
-        )
-        assert got == expected, f"n_buckets={nb}"
-    with MicroBatchReplay(
-        spark, SCHEMA,
-        lambda src: DC.winnow_candidates_stream(
-            src, "text", "doc_id", n_buckets=4
-        ),
-        "update",
-    ) as r:
-        for d in docs:
-            r.pipe([d])
-        stream = sorted(tuple(x) for x in r.drain())
-    assert stream == expected
-
-
 def test_udf_and_column_fingerprints_identical(spark):
     """The Arrow fingerprint-set UDF (the fast path) and the pure-
     Column winnowing produce the identical (fp, doc_id) set on real
@@ -279,49 +249,6 @@ def test_winnow_candidates_survive_restart(spark):
             shutil.rmtree(d, ignore_errors=True)
 
 
-def test_blob_layout_same_pair_set_and_cap(spark):
-    """The whole-bucket ValueState blob layout (layout='blob' — the
-    bulk-ingest dial, 2 state round trips per bucket per batch) emits
-    the IDENTICAL pair set as the MapState layout: batch replay over
-    several bucket counts, a multi-batch stream (state carried across
-    batches inside the blob), and the member cap all match."""
-    docs = [_doc(i, f"p{i} q{i} r{i}") for i in range(1, 7)]
-    expected = _batch_pairs(spark, docs)
-    assert len(expected) > 0
-    df = spark.createDataFrame(docs, SCHEMA)
-    for nb in (1, 4, 128):
-        got = sorted(
-            tuple(r)
-            for r in DC.winnow_candidates_batch(
-                df, "text", "doc_id", n_buckets=nb, layout="blob"
-            ).collect()
-        )
-        assert got == expected, f"n_buckets={nb}"
-    with MicroBatchReplay(
-        spark, SCHEMA,
-        lambda src: DC.winnow_candidates_stream(
-            src, "text", "doc_id", n_buckets=4, layout="blob"
-        ),
-        "update",
-    ) as r:
-        for d in docs:
-            r.pipe([d])
-        stream = sorted(tuple(x) for x in r.drain())
-    assert stream == expected
-    # cap semantics identical: frozen buckets emit/store nothing more
-    capped_map = sorted(
-        tuple(r) for r in DC.winnow_candidates_batch(
-            df, "text", "doc_id", n_buckets=4, max_members=2
-        ).collect()
-    )
-    capped_blob = sorted(
-        tuple(r) for r in DC.winnow_candidates_batch(
-            df, "text", "doc_id", n_buckets=4, max_members=2, layout="blob"
-        ).collect()
-    )
-    assert capped_blob == capped_map
-
-
 def test_hot_bucket_warn_fires_on_step_crossing(caplog):
     """r13 ADVICE: the hot-bucket warning must fire when a bulk batch
     JUMPS PAST a power-of-two step (exact equality never holds there),
@@ -346,53 +273,73 @@ def test_hot_bucket_warn_fires_on_step_crossing(caplog):
         assert len(caplog.records) == 2
 
 
+def _capped_pairs(spark, docs, max_members):
+    """Single-batch reference for the member cap: per fingerprint, only
+    the first max_members docs (doc_id order) join and pair."""
+    df = spark.createDataFrame(docs, SCHEMA)
+    members: dict[int, list[int]] = {}
+    for r in DC.winnow_fingerprints(df, "text", "doc_id").collect():
+        members.setdefault(r["fp"], []).append(r["doc_id"])
+    out = []
+    for fp, ds in members.items():
+        kept = sorted(set(ds))[:max_members]
+        out.extend(
+            (fp, a, b) for i, a in enumerate(kept) for b in kept[i + 1:]
+        )
+    return sorted(out)
+
+
 def test_auto_layout_same_pair_set_mixed_ingest(spark):
-    """layout='auto' (the r14 default): the per-batch density switch
-    must preserve the exactly-once pair invariant across a MIXED
-    ingest — bulk backfill batch, then per-doc trickle, then bulk
-    again — and across batch replays at several bucket counts; capped
-    semantics equal the fixed layouts'."""
+    """The per-batch density switch (bulk batches on the whole-bucket
+    blob, trickle batches on MapState) must preserve the exactly-once
+    pair invariant: batch replays at several bucket counts (one bucket
+    holding every fingerprint up to ~one per bucket), a MIXED ingest —
+    bulk backfill batch, then per-doc trickle, then bulk again — and a
+    pure per-doc trickle all equal the batch posting-list self-join;
+    capped batch replays equal the single-batch cap reference."""
     docs = [_doc(i, f"g{i} h{i} i{i}") for i in range(1, 10)]
     expected = _batch_pairs(spark, docs)
     assert len(expected) > 0
+    capped = _capped_pairs(spark, docs, 2)
+    assert 0 < len(capped) < len(expected)
     df = spark.createDataFrame(docs, SCHEMA)
     for nb in (1, 4, 128):
         got = sorted(
             tuple(r)
             for r in DC.winnow_candidates_batch(
-                df, "text", "doc_id", n_buckets=nb, layout="auto"
+                df, "text", "doc_id", n_buckets=nb
             ).collect()
         )
         assert got == expected, f"n_buckets={nb}"
-    with MicroBatchReplay(
-        spark, SCHEMA,
-        lambda src: DC.winnow_candidates_stream(
-            src, "text", "doc_id", n_buckets=4, layout="auto"
-        ),
-        "update",
-    ) as r:
-        r.pipe(docs[:5])          # bulk: blob economics
-        r.pipe([docs[5]])         # trickle: MapState
-        r.pipe([docs[6]])
-        r.pipe(docs[7:])          # bulk again: migrates trickle fps
-        stream = sorted(tuple(x) for x in r.drain())
-    assert stream == expected
-    capped_auto = sorted(
-        tuple(r) for r in DC.winnow_candidates_batch(
-            df, "text", "doc_id", n_buckets=4, max_members=2, layout="auto"
-        ).collect()
-    )
-    capped_map = sorted(
-        tuple(r) for r in DC.winnow_candidates_batch(
-            df, "text", "doc_id", n_buckets=4, max_members=2, layout="map"
-        ).collect()
-    )
-    assert capped_auto == capped_map
+        got_capped = sorted(
+            tuple(r)
+            for r in DC.winnow_candidates_batch(
+                df, "text", "doc_id", n_buckets=nb, max_members=2
+            ).collect()
+        )
+        assert got_capped == capped, f"capped, n_buckets={nb}"
+
+    def stream(split):
+        with MicroBatchReplay(
+            spark, SCHEMA,
+            lambda src: DC.winnow_candidates_stream(
+                src, "text", "doc_id", n_buckets=4
+            ),
+            "update",
+        ) as r:
+            for batch in split:
+                r.pipe(batch)
+            return sorted(tuple(x) for x in r.drain())
+
+    # bulk: blob economics; trickle: MapState; bulk again migrates
+    # the trickled fps into the blob
+    assert stream([docs[:5], [docs[5]], [docs[6]], docs[7:]]) == expected
+    assert stream([[d] for d in docs]) == expected
 
 
 def test_auto_layout_store_residency_and_migration():
     """Direct drive of _BucketPairsAuto (shim states, no Spark): a
-    bulk batch (>= bulk_threshold distinct fps) lands in the blob and
+    bulk batch (>= _BULK_THRESHOLD distinct fps) lands in the blob and
     DELETES migrated MapState entries (exactly-one-store invariant);
     a trickle batch lands new fps in MapState but keeps blob-resident
     fps updating in the blob; pairs are emitted exactly once across
@@ -404,7 +351,7 @@ def test_auto_layout_store_residency_and_migration():
     )
     from kafka_streams_app_spark.streaming.replay import _HandleShim
 
-    proc = _BucketPairsAuto(bulk_threshold=8)
+    proc = _BucketPairsAuto()
     proc.init(_HandleShim())
 
     def feed(rows):
@@ -444,7 +391,7 @@ def test_auto_trickle_lazy_blob_parse():
     )
     from kafka_streams_app_spark.streaming.replay import _HandleShim
 
-    proc = _BucketPairsAuto(bulk_threshold=8)
+    proc = _BucketPairsAuto()
     proc.init(_HandleShim())
 
     def feed(rows):
@@ -483,12 +430,17 @@ def test_auto_trickle_lazy_blob_parse():
     assert real_get() == blob_before
 
 
-def _run_restart_phases(spark, phase1_layout, phase1_docs,
-                        phase2_layout, phase2_docs, n_buckets=1):
-    """Drive a REAL TWS checkpoint restart across state layouts:
-    phase 1 ingests under phase1_layout, stops; phase 2 restarts the
-    SAME checkpoint under phase2_layout and ingests more. Returns the
-    sorted emitted pair set (fault-tolerant parquet sink)."""
+def _distinct_fps(spark, docs) -> int:
+    df = spark.createDataFrame(docs, SCHEMA)
+    return DC.winnow_fingerprints(df, "text", "doc_id").select("fp").distinct().count()
+
+
+def _run_restart_phases(spark, phase1_docs, phase2_docs):
+    """Drive a REAL TWS checkpoint restart: phase 1 ingests one
+    micro-batch per chunk, stops; phase 2 restarts the SAME checkpoint
+    and ingests more. n_buckets=1, so a chunk's distinct fingerprint
+    count alone decides trickle vs bulk. Returns the sorted emitted
+    pair set (fault-tolerant parquet sink)."""
     import glob
     import shutil
     import tempfile
@@ -497,11 +449,9 @@ def _run_restart_phases(spark, phase1_layout, phase1_docs,
     checkpoint = tempfile.mkdtemp(prefix="wc_xlay_ckpt_")
     out_dir = tempfile.mkdtemp(prefix="wc_xlay_out_")
 
-    def start(layout):
+    def start():
         src = spark.readStream.schema(SCHEMA).parquet(staging)
-        out = DC.winnow_candidates_stream(
-            src, "text", "doc_id", n_buckets=n_buckets, layout=layout
-        )
+        out = DC.winnow_candidates_stream(src, "text", "doc_id", n_buckets=1)
 
         def write(bdf, _bid):
             bdf.write.mode("append").parquet(out_dir)
@@ -514,21 +464,14 @@ def _run_restart_phases(spark, phase1_layout, phase1_docs,
         )
 
     try:
-        q = start(phase1_layout)
-        for chunk in phase1_docs:
-            spark.createDataFrame(chunk, SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(staging)
-            q.processAllAvailable()
-        q.stop()
-
-        q2 = start(phase2_layout)
-        for chunk in phase2_docs:
-            spark.createDataFrame(chunk, SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(staging)
-            q2.processAllAvailable()
-        q2.stop()
+        for chunks in (phase1_docs, phase2_docs):
+            q = start()
+            for chunk in chunks:
+                spark.createDataFrame(chunk, SCHEMA).coalesce(1).write.mode(
+                    "append"
+                ).parquet(staging)
+                q.processAllAvailable()
+            q.stop()
         if not glob.glob(f"{out_dir}/*.parquet"):
             return []
         return sorted(
@@ -539,31 +482,30 @@ def _run_restart_phases(spark, phase1_layout, phase1_docs,
             shutil.rmtree(d, ignore_errors=True)
 
 
-def test_winnow_restart_map_checkpoint_into_auto(spark):
-    """r14 verdict ask #7 + ADVICE: layout='auto' is the DEFAULT, so a
-    stream restarted from a pre-r14 layout='map' checkpoint silently
-    switches processors — pin that a REAL TWS restart (map trickle ->
-    checkpoint -> auto with a BULK batch that triggers map->blob
-    migration, n_buckets=1 so the batch density crosses
-    bulk_threshold) emits exactly the batch pair set, each pair once."""
+def test_winnow_restart_map_resident_state_then_bulk(spark):
+    """r14 verdict ask #7 + ADVICE: phase 1 trickles single docs, so
+    the checkpoint holds the member lists in MapState; the restarted
+    query then takes a BULK batch that migrates them into the blob.
+    Emits exactly the batch pair set, each pair once."""
     docs = [_doc(i, f"xl{i} ya{i} zb{i}") for i in range(1, 8)]
     expected = _batch_pairs(spark, docs)
     assert len(expected) > 0
-    got = _run_restart_phases(
-        spark, "map", [docs[:1], docs[1:2]], "auto", [docs[2:]],
-    )
-    assert got == expected
+    phase1, phase2 = [docs[:1], docs[1:2]], [docs[2:]]
+    assert all(_distinct_fps(spark, c) < DC._BULK_THRESHOLD for c in phase1)
+    assert _distinct_fps(spark, phase2[0]) >= DC._BULK_THRESHOLD
+    assert _run_restart_phases(spark, phase1, phase2) == expected
 
 
-def test_winnow_restart_blob_checkpoint_into_auto(spark):
-    """The other upgrade path: a layout='blob' checkpoint restarted
-    under layout='auto' with trickle batches (blob-resident
-    fingerprints must keep updating in the blob through the lazy-parse
-    path) emits exactly the batch pair set."""
+def test_winnow_restart_blob_resident_state_then_trickle(spark):
+    """The other direction: phase 1 is one BULK batch, so the
+    checkpoint holds the member lists in the blob; the restarted query
+    then trickles single docs (blob-resident fingerprints must keep
+    updating in the blob through the lazy-parse path). Emits exactly
+    the batch pair set."""
     docs = [_doc(i, f"gb{i} hc{i} jd{i}") for i in range(1, 7)]
     expected = _batch_pairs(spark, docs)
     assert len(expected) > 0
-    got = _run_restart_phases(
-        spark, "blob", [docs[:4]], "auto", [docs[4:5], docs[5:]],
-    )
-    assert got == expected
+    phase1, phase2 = [docs[:4]], [docs[4:5], docs[5:]]
+    assert _distinct_fps(spark, phase1[0]) >= DC._BULK_THRESHOLD
+    assert all(_distinct_fps(spark, c) < DC._BULK_THRESHOLD for c in phase2)
+    assert _run_restart_phases(spark, phase1, phase2) == expected

@@ -4,8 +4,8 @@ _fk_fast_batch (interval-based numpy kernel, handles sub / unsub_move /
 unsub_delete / right upserts) must emit EXACTLY the rows, in EXACTLY
 the order, of the per-record _fk_apply transition, and leave EXACTLY
 the same subscription/right state behind — across random multi-batch
-histories, both join modes, and both state layouts. Pure Python (state
-shims from streaming/replay.py), no Spark session.
+histories and both join modes. Pure Python (state shims from
+streaming/replay.py), no Spark session.
 
 compact_rights=True (the declared s_fk_* entries' opt-in) is pinned
 against an INDEPENDENT reference: the per-record machine's emissions
@@ -35,7 +35,6 @@ from kafka_streams_app_spark.streaming.fk_join import (
     KIND_SUB,
     KIND_UNSUB_DELETE,
     KIND_UNSUB_MOVE,
-    _FKJoinProcessor,
     _FKJoinProcessorBucketed,
     pynative,
 )
@@ -46,7 +45,6 @@ RIGHT_COLS = ["r_rvalue"]
 SUB_SCHEMA = StructType([StructField("value", LongType(), True)])
 RIGHT_SCHEMA = StructType([StructField("rvalue", LongType(), True)])
 FK_SCHEMA = StructType([StructField("fk", StringType(), True)])
-PK_SCHEMA = StructType([StructField("pk", LongType(), True)])
 FKPK_SCHEMA = StructType(
     [StructField("fk", StringType(), True), StructField("pk", LongType(), True)]
 )
@@ -68,15 +66,6 @@ def _mk_bucketed(
     p = _FKJoinProcessorBucketed(
         LEFT_COLS, RIGHT_COLS, SUB_SCHEMA, RIGHT_SCHEMA, OUT_SCHEMA, how,
         FK_SCHEMA, FKPK_SCHEMA, compact_rights=compact_rights,
-    )
-    p.init(_HandleShim())
-    return p
-
-
-def _mk_perfk(how: str) -> _FKJoinProcessor:
-    p = _FKJoinProcessor(
-        LEFT_COLS, RIGHT_COLS, SUB_SCHEMA, RIGHT_SCHEMA, OUT_SCHEMA, how,
-        PK_SCHEMA,
     )
     p.init(_HandleShim())
     return p
@@ -176,33 +165,6 @@ def test_kernel_equals_per_record_bucketed(how: str, seed: int) -> None:
         # state must match exactly between batches (carry-in parity)
         assert dict(fast.subs.iterator()) == dict(slow.subs.iterator())
         assert dict(fast.right.iterator()) == dict(slow.right.iterator())
-
-
-@pytest.mark.parametrize("how", ["inner", "left"])
-def test_kernel_equals_per_record_perfk(how: str) -> None:
-    """Per-fk layout wrapper: single-fk batches through the kernel vs
-    the _fk_apply reference inside the same processor class (forced via
-    a right-delete row in a twin run is NOT used — instead the
-    reference is the bucketed slow path on the same single-fk frame)."""
-    rng = random.Random(814)
-    pks = list(range(1, 7))
-    fast = _mk_perfk(how)
-    ref = _mk_bucketed(how)
-    seq0 = 1
-    for _batch in range(6):
-        rows = _random_batch(rng, seq0, ["onlyfk"], pks, rng.randrange(1, 30))
-        seq0 += len(rows)
-        pdf = _to_pdf(rows)
-        sorted_pdf = (
-            pdf.sort_values(["seq", "minor"], kind="stable")
-            .reset_index(drop=True)
-        )
-        got = _rows_of(fast.handleInputRows(("onlyfk",), iter([pdf]), None))
-        want = _rows_of(_slow_reference(ref, sorted_pdf.copy()))
-        assert got == want
-        fast_subs = {k[0]: tuple(v) for k, v in fast.subs.iterator()}
-        ref_subs = {k[1]: tuple(v) for k, v in ref.subs.iterator()}
-        assert fast_subs == ref_subs
 
 
 def _random_instr_batch(rng: random.Random, seq0: int, fks, pks,

@@ -24,7 +24,7 @@ LEFT = "pk string, fk string, name string, is_delete boolean, seq long"
 RIGHT = "rk string, rank int, is_delete boolean, seq long"
 
 
-def make(spark, how: str, n_buckets: int | None = None) -> FKJoinReplay:
+def make(spark, how: str, n_buckets: int = 16) -> FKJoinReplay:
     return FKJoinReplay(
         spark, LEFT, RIGHT,
         pk="pk", fk="fk", left_payload=["fk", "name"], left_tombstone="is_delete",
@@ -33,9 +33,7 @@ def make(spark, how: str, n_buckets: int | None = None) -> FKJoinReplay:
     )
 
 
-# params: per-fk layout (None) and bucketed MapState layout (4) — the
-# join changelog contract must be identical through both
-@pytest.fixture(scope="module", params=[None, 4], ids=["perfk", "bucketed"])
+@pytest.fixture(scope="module", params=[4], ids=["bucketed"])
 def left_pipeline(request, spark):
     with make(spark, "left", request.param) as p:
         yield p
@@ -67,7 +65,7 @@ def test_left_join_lifecycle(spark, left_pipeline):
     assert p.drain() == []
 
 
-@pytest.fixture(scope="module", params=[None, 4], ids=["perfk", "bucketed"])
+@pytest.fixture(scope="module", params=[4], ids=["bucketed"])
 def inner_pipeline(request, spark):
     with make(spark, "inner", request.param) as p:
         yield p
@@ -117,12 +115,12 @@ def test_inner_join_lifecycle(spark, inner_pipeline):
     assert p.drain() == [("pk4", "upsert", "pk4", 9)]
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4])
+@pytest.mark.parametrize("n_buckets", [4])
 def test_inner_right_delete_retracts_all_subscribers(spark, n_buckets):
     """Right-side tombstone retracts every subscribed pk exactly once;
     re-insert re-emits (N:1 fan-out through the subscription store).
-    In the bucketed layout this exercises the per-batch subscription-
-    map scan (fks with right-side records) AND the same-batch overlay."""
+    This exercises the per-batch subscription-map scan (fks with
+    right-side records) AND the same-batch overlay."""
     with make(spark, "inner", n_buckets) as p:
         p.pipe_right([("m1", 7, False)])
         p.pipe_left([("a", "m1", "a", False)])
@@ -138,7 +136,7 @@ def test_inner_right_delete_retracts_all_subscribers(spark, n_buckets):
         ]
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4])
+@pytest.mark.parametrize("n_buckets", [4])
 def test_right_update_fans_out_left_mode(spark, n_buckets):
     """Left mode: right value update re-emits all subscribers; right
     delete downgrades them to (pk, null) instead of deleting."""
@@ -158,7 +156,7 @@ LEFT_BIG = "pk string, fk string, big long, is_delete boolean, seq long"
 RIGHT_BIG = "rk string, rrank long, is_delete boolean, seq long"
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4])
+@pytest.mark.parametrize("n_buckets", [4])
 def test_fk_join_int64_payload_precision(spark, n_buckets):
     """The query-2 union ALWAYS carries nulls in the other side's
     columns, so int64 payloads reach pandas nullable; without the
@@ -182,13 +180,13 @@ def test_fk_join_int64_payload_precision(spark, n_buckets):
 @pytest.mark.parametrize("how", ["inner", "left"])
 @pytest.mark.parametrize("with_mutations", [False, True])
 def test_fk_bucketed_equals_perfk_random(spark, how, with_mutations, seed):
-    """Randomized instruction/right streams: the bucketed layout (the
-    vectorized matrix fan-out on sub/right-upsert batches, per-fk
-    replay otherwise) must emit EXACTLY the per-fk processor's join
-    changelog. with_mutations adds unsubs and right deletes (slow
-    path); without them every batch takes the fast path. Few fks and
-    many pks make the fan-out dense (every right row re-emits many
-    subscribers) — the matrix kernel's hard case."""
+    """Randomized instruction/right streams: the join changelog must
+    not depend on the bucket count — one bucket holding every fk
+    (n_buckets=1) emits EXACTLY what four buckets emit.
+    with_mutations adds unsubs and right deletes (per-record _fk_apply
+    path); without them every batch takes the vectorized kernel. Few
+    fks and many pks make the fan-out dense (every right row re-emits
+    many subscribers) — the kernel's hard case."""
     import random
 
     from kafka_streams_app_spark.streaming.fk_join import (
@@ -228,7 +226,7 @@ def test_fk_bucketed_equals_perfk_random(spark, how, with_mutations, seed):
         )
         return sorted((tuple(r) for r in out.collect()), key=repr)
 
-    assert run(None) == run(4)
+    assert run(1) == run(4)
 
 
 def test_fk_bucketed_multibatch_state_carry_random(spark):
@@ -236,7 +234,8 @@ def test_fk_bucketed_multibatch_state_carry_random(spark):
     each pipe is its own micro-batch, so the bucketed fast path must
     join against STATE carried from earlier batches (snapshot overlay,
     right-value MapState) — not just within-batch context. The same
-    pipe sequence through the per-fk layout must drain identically."""
+    pipe sequence through one bucket and through four must drain
+    identically."""
     import random
 
     def run(n_buckets):
@@ -258,7 +257,7 @@ def test_fk_bucketed_multibatch_state_carry_random(spark):
                 drained.append(sorted(p.drain(), key=repr))
         return drained
 
-    assert run(None) == run(4)
+    assert run(1) == run(4)
 
 
 def test_intermediate_dir_bounded(spark):

@@ -4,10 +4,9 @@ Replays the reference's table-changelog sequences
 (TopologiesTest.scala:219-239 piping updates and tombstones) through
 ktable_changelog_stream and asserts the emitted changelog rows.
 
-Parametrized over both processor modes: per-logical-key ValueState
-(n_buckets=None) and the bucketed MapState layout (n_buckets=4) — the
-changelog contract is identical; the bucketed mode must preserve it
-across micro-batches (state carry-in/out) and through tombstones.
+Run through the bucketed MapState layout (n_buckets=4): the changelog
+contract must hold across micro-batches (state carry-in/out) and
+through tombstones.
 """
 
 from __future__ import annotations
@@ -31,7 +30,7 @@ def _replay(spark, n_buckets):
     )
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4])
+@pytest.mark.parametrize("n_buckets", [4])
 def test_ktable_changelog_lifecycle(spark, n_buckets):
     with _replay(spark, n_buckets) as r:
         # first insert: upsert with old_present=False
@@ -54,7 +53,7 @@ def test_ktable_changelog_lifecycle(spark, n_buckets):
         assert r.drain() == []
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4])
+@pytest.mark.parametrize("n_buckets", [4])
 def test_ktable_changelog_in_batch_ordering(spark, n_buckets):
     """Two updates to one key inside a single micro-batch emit two
     changelog rows in seq order (commit-interval-0 semantics); an
@@ -73,7 +72,7 @@ def test_ktable_changelog_in_batch_ordering(spark, n_buckets):
         }
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4])
+@pytest.mark.parametrize("n_buckets", [4])
 def test_ktable_upserts_across_batches_mixed_keys(spark, n_buckets):
     """All-upsert batches (the vectorized bucketed fast path) with
     several keys sharing buckets: carry-in state from a prior batch
@@ -102,7 +101,7 @@ def test_ktable_upserts_across_batches_mixed_keys(spark, n_buckets):
 BIG = (1 << 62) + 12345  # above 2^53: corrupted by any float64 round-trip
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4])
+@pytest.mark.parametrize("n_buckets", [4])
 def test_ktable_int64_payload_precision(spark, n_buckets):
     """int64 payloads above 2^53 must round-trip exactly through the
     changelog old/new columns AND through state carry across batches.
@@ -127,7 +126,7 @@ def test_ktable_int64_payload_precision(spark, n_buckets):
         ]
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4])
+@pytest.mark.parametrize("n_buckets", [4])
 def test_ktable_exact_longs_null_mixed_batch(spark, n_buckets):
     """A NULL-MIXED int64 payload batch crosses Arrow as float64 (no
     nullable hook in pyspark's serializer), corrupting values >= 2^53
@@ -171,7 +170,7 @@ def test_ktable_unshielded_null_mixed_batch_raises(spark):
         out.collect()
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4])
+@pytest.mark.parametrize("n_buckets", [4])
 def test_ktable_null_key_records_dropped(spark, n_buckets):
     """Kafka Streams ignores records with a null key for all KTable
     operations — and dropping them is also what keeps TWS group keys

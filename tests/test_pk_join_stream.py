@@ -16,7 +16,7 @@ SCHEMA = ("key string, side string, merchant string, name string, rank int, "
           "is_delete boolean, seq long")
 
 
-def build(how: str, n_buckets: int | None = None):
+def build(how: str, n_buckets: int = 16):
     def _build(src):
         left = src.filter(F.col("side") == "l").select(
             "key", "merchant", "name", "is_delete", "seq"
@@ -41,10 +41,9 @@ def r_row(key, rank, seq, delete=False):
     return (key, "r", None, None, rank, delete, seq)
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4])
+@pytest.mark.parametrize("n_buckets", [4])
 def test_ktable_ktable_left_join_incremental(spark, n_buckets):
-    """TopologiesTest.scala:219-239 piped batch-by-batch; same
-    emissions through the per-key and bucketed MapState layouts."""
+    """TopologiesTest.scala:219-239 piped batch-by-batch."""
     with MicroBatchReplay(spark, SCHEMA, build("left", n_buckets), "update") as p:
         p.pipe([r_row("key1", 3, 0)])
         assert p.drain() == []                       # left absent: nothing
@@ -62,7 +61,7 @@ def test_ktable_ktable_left_join_incremental(spark, n_buckets):
         assert p.drain() == []                       # delete of absent: no-op
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4])
+@pytest.mark.parametrize("n_buckets", [4])
 def test_ktable_ktable_inner_join_incremental(spark, n_buckets):
     with MicroBatchReplay(spark, SCHEMA, build("inner", n_buckets), "update") as p:
         p.pipe([l_row("k", "m", "p", 0)])
@@ -80,13 +79,12 @@ BIG_SCHEMA = "key string, side string, big long, rank long, is_delete boolean, s
 BIG = (1 << 62) + 12345  # corrupted by any float64 round-trip
 
 
-@pytest.mark.parametrize("n_buckets", [None, 4])
+@pytest.mark.parametrize("n_buckets", [4])
 def test_pk_join_int64_payload_precision(spark, n_buckets):
     """The union-tagged input ALWAYS carries nulls in the other side's
     columns, so an int64 payload column reaches pandas nullable; without
     the extension-dtype pin it arrives float64 and values above 2^53
-    silently round (same class as the r5 bucketed-ktable ADVICE bug,
-    latent in the per-key path too)."""
+    silently round (same class as the r5 bucketed-ktable ADVICE bug)."""
     def _build(src):
         left = src.filter(F.col("side") == "l").select(
             "key", "big", "is_delete", "seq")
@@ -115,10 +113,13 @@ def test_pk_join_int64_payload_precision(spark, n_buckets):
 @pytest.mark.parametrize("how", ["inner", "left"])
 @pytest.mark.parametrize("with_deletes", [False, True])
 def test_pk_join_bucketed_equals_perkey_random(spark, how, with_deletes):
-    """Randomized interleavings: the bucketed layout (vectorized
-    pointer-ffill fast path on all-upsert batches, per-key replay
-    otherwise) must emit EXACTLY the per-key processor's changelog.
-    200 records, 12 keys, both sides interleaved, optional deletes."""
+    """Randomized interleavings: the join changelog must not depend on
+    the bucket count — one bucket holding every key (n_buckets=1)
+    emits EXACTLY what four buckets emit, through both the vectorized
+    pointer-ffill path (all-upsert) and the per-record _pk_apply path
+    (with deletes). 200 records, 12 keys, both sides interleaved. The
+    fast path itself is pinned against _pk_apply in
+    tests/test_pk_fast_batch.py."""
     import random
 
     from kafka_streams_app_spark.streaming.pk_join import pk_join_batch
@@ -147,4 +148,4 @@ def test_pk_join_bucketed_equals_perkey_random(spark, how, with_deletes):
         )
         return sorted((tuple(r) for r in out.collect()), key=repr)
 
-    assert run(None) == run(4)
+    assert run(1) == run(4)

@@ -6,7 +6,7 @@ Splits the entry into its sequential parts, timing each:
      (variants: real processor | noop processor)
   3. latest_per_key reduction over the materialized changelog
 
-Usage: python tools/fk_decompose.py [inner|left] [n_buckets|none] [compact]
+Usage: python tools/fk_decompose.py [inner|left] [n_buckets] [compact]
   `compact` runs stage 2 with compact_rights=True — the declared
   s_fk_* entries' mode (only the final right row per fk per
   micro-batch fans out).
@@ -39,8 +39,7 @@ SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def main() -> None:
     how = sys.argv[1] if len(sys.argv) > 1 else "inner"
-    nb = sys.argv[2] if len(sys.argv) > 2 else "16"
-    n_buckets = None if nb == "none" else int(nb)
+    n_buckets = int(sys.argv[2]) if len(sys.argv) > 2 else 16
     compact = len(sys.argv) > 3 and sys.argv[3] == "compact"
     spark = get_spark(app_name="fk-decompose")
     spark.sparkContext.setLogLevel("ERROR")

@@ -12,6 +12,7 @@ subscriptions ramp while right updates fan out (defaults emit ~10M
 join rows from 25k inputs; the full 1M-event smoke would emit ~10^11 —
 exactly why SCALE.md files this shape under skew, not throughput).
 
+Both stages run the bucketed processors at their default 16 buckets.
 For each stage-2 trigger size (maxFilesPerTrigger on BOTH stage-2
 sources), prints wall seconds, stage-2 micro-batch count, and the PEAK
 resident set summed over the pyspark python workers (sampled at 50 ms)

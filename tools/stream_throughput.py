@@ -17,7 +17,7 @@ the topology shapes via Trigger.AvailableNow into a noop sink:
 - ktable_latest_tws : transformWithStateInPandas latest-per-key
                       changelog (S2 incremental — the custom state
                       machine; skipped when TWS workers lack protobuf)
-  + the per-key layout, PK-join, FK-join, rolling/zscore TWS shapes
+  + PK-join, FK-join, rolling/zscore TWS shapes
 
 Prints one JSON line per shape: input rows, wall seconds, rows/sec.
 The reference publishes no throughput numbers (BASELINE.md) — these
@@ -78,7 +78,7 @@ def run_noop(out_df: DataFrame, output_mode: str) -> float:
 
 
 def run_fk_pipeline(
-    spark: SparkSession, events_path: str, n_buckets: int | None = None
+    spark: SparkSession, events_path: str, n_buckets: int = 128
 ) -> float:
     """J7/J8 incremental FK join, FULL two-stage pipeline wall time:
     stage 1 streams the left KTable changelog to an intermediate parquet
@@ -87,9 +87,8 @@ def run_fk_pipeline(
     s_fk_join_incremental contract shape (left = latest event per user,
     FK = event_type; right = latest event per type).
 
-    n_buckets: run BOTH stages in the bucketed MapState layout
-    (ktable._LatestPerKeyBucketed / fk_join._FKJoinProcessorBucketed) —
-    the production-recommended mode."""
+    n_buckets: the bucket count of BOTH stages
+    (ktable._LatestPerKeyBucketed / fk_join._FKJoinProcessorBucketed)."""
     import shutil
     import tempfile
 
@@ -203,8 +202,7 @@ def main() -> None:
         "update",
     ))
     if tws_available(spark):
-        # headline row: bucketed MapState layout (128 buckets = 4x cores
-        # here), the production-recommended mode — see SCALE.md and
+        # 128 buckets = 4x cores on the 32-core host — see SCALE.md and
         # streaming/ktable.py:_LatestPerKeyBucketed.
         ev4 = stream_events(spark, events_path).select(
             "user_id", "event_id", "value", "ts"
@@ -217,20 +215,11 @@ def main() -> None:
             ),
             "append",
         ))
-        ev5 = stream_events(spark, events_path).select(
-            "user_id", "event_id", "value", "ts"
-        )
-        shapes.append((
-            "ktable_latest_tws_perkey",
-            ktable_changelog_stream(
-                ev5, ["user_id"], "event_id", ["event_id", "value"]
-            ),
-            "append",
-        ))
         # J5 incremental: two-sided PK-join state machine (the heavier
         # TWS topology — union-tagged changelogs, per-key (left,right)
-        # state). Same view/click split as the s_pk_join_incremental
-        # contract entry; rows_in counts the full event stream scanned.
+        # state, 128 buckets). Same view/click split as the
+        # s_pk_join_incremental contract entry; rows_in counts the full
+        # event stream scanned.
         ev6 = stream_events(spark, events_path)
         pk_left = ev6.filter(F.col("event_type") == "view").select(
             "user_id", F.col("event_id").alias("v_event_id"),
@@ -240,16 +229,6 @@ def main() -> None:
             "user_id", F.col("event_id").alias("c_event_id"),
             F.unix_micros("ts").alias("seq"),
         )
-        shapes.append((
-            "pk_join_tws",
-            pk_join_stream(
-                pk_left, pk_right, key="user_id",
-                left_payload=["v_event_id"], right_payload=["c_event_id"],
-                how="inner",
-            ),
-            "update",
-        ))
-        # bucketed MapState layout of the same topology (128 = 4x cores)
         shapes.append((
             "pk_join_tws_bucketed",
             pk_join_stream(
@@ -327,44 +306,12 @@ def main() -> None:
             return spark.readStream.schema(schema).parquet(docs_path)
 
         doc_shapes.append((
-            # full pipeline: tokenize + winnow (Column path) + per-
-            # fingerprint TWS state + pair emission (didactic layout:
-            # ONE TWS grouping key per fingerprint, ~18/doc)
-            "winnow_candidates_tws",
-            DC.winnow_candidates_stream(
-                stream_docs(), "text", "doc_id", n_buckets=None
-            ),
-            "update",
-            n_docs,
-        ))
-        doc_shapes.append((
-            # bucketed MapState layout (128 buckets): the per-key TWS
-            # framework cost amortized over ~fps/128 fingerprints
-            "winnow_candidates_tws_bucketed",
-            DC.winnow_candidates_stream(
-                stream_docs(), "text", "doc_id", n_buckets=128
-            ),
-            "update",
-            n_docs,
-        ))
-        doc_shapes.append((
-            # whole-bucket blob layout (r13): 2 state round trips per
-            # bucket per batch — the bulk-ingest dial
-            "winnow_candidates_tws_blob",
-            DC.winnow_candidates_stream(
-                stream_docs(), "text", "doc_id", n_buckets=128,
-                layout="blob",
-            ),
-            "update",
-            n_docs,
-        ))
-        doc_shapes.append((
-            # per-batch density auto-select (r14): bulk batches on blob
-            # economics, trickle on MapState — one default for both
+            # full pipeline: tokenize + winnow + bucketed TWS state
+            # (128 buckets; per-batch density picks the blob or the
+            # MapState store) + pair emission
             "winnow_candidates_tws_auto",
             DC.winnow_candidates_stream(
-                stream_docs(), "text", "doc_id", n_buckets=128,
-                layout="auto",
+                stream_docs(), "text", "doc_id", n_buckets=128
             ),
             "update",
             n_docs,
@@ -394,8 +341,8 @@ def main() -> None:
         # per micro-batch (60 batches via maxFilesPerTrigger=1 over
         # 60 small files) — the steady-ingest pattern where per-entry
         # MapState updates beat whole-bucket blob rewrites. Rates here
-        # are dominated by per-micro-batch framework cost; compare the
-        # three layouts WITHIN this fixture only.
+        # are dominated by per-micro-batch framework cost; compare them
+        # WITHIN this fixture only.
         trickle_dir = SCRATCH / "docs_trickle"
         if not (trickle_dir / "_built").exists():
             shutil.rmtree(trickle_dir, ignore_errors=True)
@@ -424,16 +371,14 @@ def main() -> None:
 
         trickle_best: dict[str, float] = {}
         for _ in range(2):
-            for layout in ("map", "blob", "auto"):
-                name = f"winnow_trickle_{layout}"
-                out_df = DC.winnow_candidates_stream(
-                    stream_docs_trickle(), "text", "doc_id",
-                    n_buckets=128, layout=layout,
-                )
-                wall = run_noop(out_df, "update")
-                trickle_best[name] = min(
-                    trickle_best.get(name, float("inf")), wall
-                )
+            name = "winnow_trickle_auto"
+            out_df = DC.winnow_candidates_stream(
+                stream_docs_trickle(), "text", "doc_id", n_buckets=128,
+            )
+            wall = run_noop(out_df, "update")
+            trickle_best[name] = min(
+                trickle_best.get(name, float("inf")), wall
+            )
         for name, wall in trickle_best.items():
             print(json.dumps({
                 "shape": name, "rows_in": 600, "sec": round(wall, 2),
@@ -461,20 +406,13 @@ def main() -> None:
     if tws_available(spark) and not docs_only:
         # r6 revision: single-shot FK numbers proved +/-50% on this
         # host (16-32 s for the SAME config across a day) — contention
-        # spikes do NOT amortize over the ~20 s pipeline. Interleave
-        # two rounds and report the per-mode minimum, same estimator as
-        # the other shapes; comparisons are only valid within one run.
-        fk_best: dict[str, float] = {}
-        for _ in range(2):
-            for shape, nb in (("fk_join_tws_2stage", None),
-                              ("fk_join_tws_2stage_bucketed", 128)):
-                wall = run_fk_pipeline(spark, events_path, n_buckets=nb)
-                fk_best[shape] = min(fk_best.get(shape, float("inf")), wall)
-        for shape, wall in fk_best.items():
-            print(json.dumps({
-                "shape": shape, "rows_in": n_rows,
-                "sec": round(wall, 2), "rows_per_sec": int(n_rows / wall),
-            }))
+        # spikes do NOT amortize over the ~20 s pipeline. Report the
+        # minimum of two runs, same estimator as the other shapes.
+        wall = min(run_fk_pipeline(spark, events_path) for _ in range(2))
+        print(json.dumps({
+            "shape": "fk_join_tws_2stage_bucketed", "rows_in": n_rows,
+            "sec": round(wall, 2), "rows_per_sec": int(n_rows / wall),
+        }))
 
 
 if __name__ == "__main__":

@@ -6,11 +6,12 @@ the SAME stage-2 input through three processors:
 
 - noop      : consumes input chunks, touches no state, emits nothing
               -> pure framework floor
-- statetouch: mirrors the real state traffic (subs.updateValue per
-              sub row, right.updateValue per right row, full
-              subs.iterator() scan when a batch carries right rows)
-              but emits nothing -> framework + state RPC
-- real      : _FKJoinProcessor (per-fk layout) -> everything
+- statetouch: mirrors the real state traffic (one right read + write
+              per fk with right rows, one subs write per final
+              (fk, pk) subscription, full subs.iterator() scan when a
+              batch carries right rows) but emits nothing
+              -> framework + state RPC
+- real      : _FKJoinProcessorBucketed -> everything
 
 Each variant runs best-of-N interleaved (this host's contention
 spikes swamp single shots). Stage-1 output is built once. Also prints
@@ -65,19 +66,21 @@ class _Noop(StatefulProcessor):
 
 
 class _StateTouch(StatefulProcessor):
-    """Same state API call pattern as the per-fk _FKJoinProcessor on a
-    no-delete batch (right ValueState update per right row, subs
-    MapState update per instruction row, one subs scan when the batch
-    carries right rows), without the emission work."""
+    """Same state API call pattern as _FKJoinProcessorBucketed on a
+    no-delete batch (one right MapState read + write per fk with right
+    rows, one subs MapState write per final (fk, pk) subscription, one
+    subs scan when the batch carries right rows), without the emission
+    work."""
 
-    def __init__(self, sub_schema, right_schema, pk_schema):
+    def __init__(self, sub_schema, right_schema, fk_schema, fkpk_schema):
         self.sub_schema = sub_schema
         self.right_schema = right_schema
-        self.pk_schema = pk_schema
+        self.fk_schema = fk_schema
+        self.fkpk_schema = fkpk_schema
 
     def init(self, handle: StatefulProcessorHandle) -> None:
-        self.right = handle.getValueState("right", self.right_schema)
-        self.subs = handle.getMapState("subs", self.pk_schema, self.sub_schema)
+        self.right = handle.getMapState("right", self.fk_schema, self.right_schema)
+        self.subs = handle.getMapState("subs", self.fkpk_schema, self.sub_schema)
 
     def handleInputRows(self, key, rows, timerValues):
         pdf = pd.concat(list(rows))
@@ -88,15 +91,20 @@ class _StateTouch(StatefulProcessor):
         from kafka_streams_app_spark.streaming._pdnorm import pynative
 
         # mirror the real processor's BATCHED state writes: one
-        # getValue + at most one update for the fk's right state, one
-        # updateValue per FINAL (pk -> latest sub) — not per row
-        self.right.exists()
-        rr = pdf.loc[is_right, "r_rvalue"]
-        if len(rr):
-            self.right.update((pynative(rr.iloc[-1]),))
-        subs = pdf.loc[~is_right, ["pk", "value"]].groupby("pk").tail(1)
+        # getValue + one updateValue per fk with right rows, one
+        # updateValue per FINAL ((fk, pk) -> latest sub) — not per row
+        rr = pdf.loc[is_right, ["fk", "r_rvalue"]].groupby("fk").tail(1)
+        for row in rr.itertuples(index=False):
+            self.right.getValue((pynative(row.fk),))
+            self.right.updateValue(
+                (pynative(row.fk),), (pynative(row.r_rvalue),)
+            )
+        subs = pdf.loc[~is_right, ["fk", "pk", "value"]].groupby(
+            ["fk", "pk"]).tail(1)
         for row in subs.itertuples(index=False):
-            self.subs.updateValue((pynative(row.pk),), (pynative(row.value),))
+            self.subs.updateValue(
+                (pynative(row.fk), pynative(row.pk)), (pynative(row.value),)
+            )
         return iter(())
 
     def close(self) -> None:
@@ -142,18 +150,19 @@ def main() -> None:
             fk_expr.alias("rk"), F.col("value").alias("rvalue"),
             F.unix_micros("ts").alias("seq"),
         )
-        unioned, proc, out_schema, group_cols = _fk_join_plan(
+        unioned, proc, out_schema = _fk_join_plan(
             instr, right, right_key="rk", right_payload=["rvalue"],
             right_seq="seq", right_tombstone=None,
-            left_value_cols=["value"], how="inner", n_buckets=None,
+            left_value_cols=["value"], how="inner", n_buckets=128,
         )
         if proc_kind == "noop":
             proc = _Noop()
         elif proc_kind == "statetouch":
             proc = _StateTouch(
-                proc.sub_schema, proc.right_schema, proc.pk_schema,
+                proc.sub_schema, proc.right_schema, proc.fk_schema,
+                proc.fkpk_schema,
             )
-        return unioned.groupBy(*group_cols).transformWithStateInPandas(
+        return unioned.groupBy("_fkj_bucket").transformWithStateInPandas(
             statefulProcessor=proc,
             outputStructType=out_schema,
             outputMode="Update",
