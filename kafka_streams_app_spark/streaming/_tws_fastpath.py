@@ -43,13 +43,12 @@ the both-scale oracle gates over every streaming entry):
   fresh 0-based ones (processors sort + reset or use positional
   access only).
 
-``install()`` is idempotent, gated to pyspark 4.x, disabled by
-``SPARK_GRAFT_TWS_FASTPATH=0``, and fails open (shipped path stays) on
-any mismatch. It must run in the PYTHON WORKER: importing
-``kafka_streams_app_spark.streaming`` triggers it, and the worker
-imports that package when it unpickles any of this repo's
-StatefulProcessors — before the first ``load_stream`` call of every
-TWS task (the patch is class-level, so the serializer instance the
+``install()`` is idempotent, gated to pyspark 4.x, and fails open
+(shipped path stays) on any mismatch. It must run in the PYTHON
+WORKER: importing ``kafka_streams_app_spark.streaming`` triggers it,
+and the worker imports that package when it unpickles any of this
+repo's StatefulProcessors — before the first ``load_stream`` call of
+every TWS task (the patch is class-level, so the serializer instance the
 worker already constructed picks it up at call time). The subclass
 ``TransformWithStateInPandasInitStateSerializer`` overrides
 ``load_stream`` and is deliberately left on the shipped path (this
@@ -57,8 +56,6 @@ repo never passes initial state).
 """
 
 from __future__ import annotations
-
-import os
 
 _installed = False
 
@@ -143,8 +140,6 @@ def install() -> bool:
     global _installed
     if _installed:
         return True
-    if os.environ.get("SPARK_GRAFT_TWS_FASTPATH", "1") == "0":
-        return False
     try:
         import pyspark
 

@@ -103,106 +103,6 @@ def fk_instructions(
     return left_view.select(F.explode(arr).alias("i")).select("i.*")
 
 
-class _SubsView:
-    """Current subscription view for ONE fk during a batch: a pre-batch
-    snapshot (or a point-lookup fallback when no snapshot was taken)
-    overlaid with this batch's mutations.
-
-    Why an overlay: state writes made earlier in a batch are not
-    guaranteed visible to MapState.iterator()/containsKey() within the
-    same batch, so a same-batch sub followed by a right update would
-    miss the fan-out without it. The caller mirrors `touched` to the
-    real state after the transition.
-    """
-
-    def __init__(self, snapshot: dict | None, contains_fn=None) -> None:
-        self._snap = snapshot        # pre-batch {pk: left payload}
-        self._contains = contains_fn  # pre-batch point membership
-        self.touched: dict = {}       # pk -> payload | None (= removed)
-
-    def set(self, pk, pay: tuple) -> None:
-        self.touched[pk] = pay
-
-    def remove(self, pk) -> None:
-        self.touched[pk] = None
-
-    def contains(self, pk) -> bool:
-        if pk in self.touched:
-            return self.touched[pk] is not None
-        if self._snap is not None:
-            return pk in self._snap
-        return bool(self._contains(pk))
-
-    def items(self):
-        """Full current view — fan-out on right-side records. Only legal
-        when a snapshot was taken (the bucketed processor guarantees one
-        for every fk with right-side records in the batch)."""
-        cur = dict(self._snap)
-        for pk, pay in self.touched.items():
-            if pay is None:
-                cur.pop(pk, None)
-            else:
-                cur[pk] = pay
-        return cur.items()
-
-
-def _fk_apply(
-    records: list[dict],
-    r_present: bool,
-    r_val: tuple,
-    subs: _SubsView,
-    left_cols: list[str],
-    right_cols: list[str],
-    left_join: bool,
-) -> tuple[list[tuple], bool, tuple]:
-    """FK-join state transition for ONE fk's in-order records. Returns
-    (output rows, new right state); subscription mutations accumulate
-    in `subs.touched`. The bucketed processor's slow path for batches
-    carrying right-side tombstones, and the reference the vectorized
-    _fk_fast_batch kernel is pinned against."""
-    r_nulls = (None,) * len(right_cols)
-    l_nulls = (None,) * len(left_cols)
-    out: list[tuple] = []
-
-    for rec in records:
-        kind, pk = rec["kind"], pynative(rec["pk"])
-        om = (pynative(rec["seq"]), pynative(rec["minor"]))  # order tag
-        if kind == KIND_RIGHT:
-            if pynative(rec["right_is_delete"]):
-                if r_present:
-                    r_present, r_val = False, ()
-                    for spk, spay in subs.items():
-                        out.append(
-                            ((spk, "upsert") + spay + r_nulls if left_join
-                             else (spk, "delete") + l_nulls + r_nulls) + om
-                        )
-            else:
-                r_present = True
-                r_val = pykey(rec[c] for c in right_cols)
-                for spk, spay in subs.items():
-                    out.append((spk, "upsert") + spay + r_val + om)
-        elif kind == KIND_SUB:
-            pay = pykey(rec[c] for c in left_cols)
-            subs.set(pk, pay)
-            if left_join:
-                out.append(
-                    (pk, "upsert") + pay + (r_val if r_present else r_nulls) + om
-                )
-            elif r_present:
-                out.append((pk, "upsert") + pay + r_val + om)
-        else:  # unsub_move / unsub_delete
-            if subs.contains(pk):
-                subs.remove(pk)
-                if left_join:
-                    if kind == KIND_UNSUB_DELETE:
-                        out.append((pk, "delete") + l_nulls + r_nulls + om)
-                    # unsub_move: the paired sub's upsert supersedes
-                elif r_present:
-                    # a join row existed for this pk iff right present
-                    out.append((pk, "delete") + l_nulls + r_nulls + om)
-    return out, r_present, r_val
-
-
 def _fk_fast_batch(
     pdf: pd.DataFrame,
     snapshots: dict,
@@ -215,10 +115,10 @@ def _fk_fast_batch(
     left_join: bool,
     compact_rights: bool = False,
 ):
-    """Vectorized FK-join transition for a seq-sorted batch with NO
-    right-side tombstones (sub / unsub_move / unsub_delete / right
-    upserts — the gate and production-common shape; right deletes take
-    the per-record _fk_apply path).
+    """Vectorized FK-join transition for ONE seq-sorted bucket batch of
+    any shape: sub / unsub_move / unsub_delete / right upserts / right
+    deletes. The per-record reference machine it is pinned against
+    lives in tests/keyed_reference.py.
 
     r16: the r15 fast path only covered all-sub batches, so ANY batch
     carrying an FK change (unsub_move) fell back to per-record Python —
@@ -239,9 +139,16 @@ def _fk_fast_batch(
       per fk and one range-expansion; transient memory is O(events +
       live pairs), never rows x pks (the old dense matrix would be
       ~70 GB at the x10 smoke shape).
-    - effective unsubs emit their delete rows (inner: iff the right
-      side is present at that row; left: only unsub_delete), exactly
-      _fk_apply's branches.
+    - right presence at a row: the last right row at or before it is
+      an upsert (the carried state when there is none). A right row is
+      EFFECTIVE iff it is an upsert or deletes a present right value;
+      only effective right rows fan out. A right delete fans out a null
+      right payload: an upsert with the left payload in left mode, an
+      all-null delete in inner mode.
+    - sub emissions read that presence (a sub after a right delete
+      joins nulls in left mode and emits nothing in inner mode);
+      effective unsubs emit their delete rows (inner: iff the right
+      side is present at that row; left: only unsub_delete).
 
     Emission order matches the per-record machine: rows sort by
     (triggering row position, subscription-dict position); the
@@ -256,23 +163,32 @@ def _fk_fast_batch(
     vectorized on both sides.
 
     compact_rights (OPT-IN, default False — emissions then match the
-    per-record machine row for row): within one batch, only the FINAL
-    right row per fk fans out to its subscribers; sub/delete emissions
+    per-record machine row for row): within one batch, a right UPSERT
+    fans out only if it is the fk's last EFFECTIVE right row (R_n);
+    every effective right delete still fans out. Sub/unsub emissions
     and all state writes are untouched, and each sub still joins the
     latest right row AT ITS OWN POSITION (rptr scans every right row).
     This is Kafka Streams' KTable cache / commit-interval semantics
     (R_1..R_n compact to R_n within an interval) and matches Spark's
     update-mode contract (latest state per key per trigger). The
     reduced end state is provably unchanged — every dropped fan-out
-    row (pk, R_i) at position p_i is superseded by a kept emission for
-    the same pk at a strictly later position:
+    row (pk, R_i) at position p_i (R_i an upsert) is superseded by a
+    kept emission for the same pk at a strictly later position:
       * if pk's presence interval covers R_n: the kept fan-out
-        (pk, R_n), p_n > p_i;
-      * else the interval ended at an (effective) unsub at p_u > p_i,
-        which emits a delete (inner mode / unsub_delete in left mode)
-        or — left-mode unsub_move — is immediately followed by its
-        paired sub at the same seq with a higher minor (fk_instructions
-        always emits the pair), which re-emits the pk.
+        (pk, R_n), p_n > p_i (a trailing delete of an absent right
+        value emits nothing, so it is never R_n);
+      * else the interval ended at an (effective) unsub at p_u > p_i.
+        If the last effective right row in (p_i, p_u) is a delete,
+        its kept fan-out supersedes. Otherwise the right side is
+        present at p_u, and the unsub emits a delete (inner mode /
+        unsub_delete in left mode) or — left-mode unsub_move — is
+        immediately followed by its paired sub at the same seq with a
+        higher minor (fk_instructions always emits the pair), which
+        re-emits the pk.
+      Compacting deletes too would break the inner-mode case: sub,
+      R delete, unsub, R upsert leaves the unsub silent (right absent)
+      and R_n outside pk's interval, so the sub's upsert would be the
+      pk's latest row instead of the retraction.
     Positions are (seq, minor)-sorted, so "later position" = ">= order
     tag"; with the engine's unique per-row (seq, minor) tags the
     superseding emission strictly wins any latest-per-key reduction.
@@ -284,7 +200,8 @@ def _fk_fast_batch(
     - subs_ops: [(ufk, pk, payload tuple | None)] — None = removeKey;
       exactly the final touched-set of the per-record machine (a pk
       whose every event was an ineffective unsub gets NO op).
-    - right_writes: [(ufk, right value tuple)] — last right row per fk.
+    - right_writes: [(ufk, right value tuple | None)] — the last right
+      row per fk; None = removeKey (a trailing delete of carried state).
     """
     import numpy as np
 
@@ -305,12 +222,15 @@ def _fk_fast_batch(
     is_right = kinds_arr == KIND_RIGHT
     is_sub = kinds_arr == KIND_SUB
     is_event = ~is_right
+    r_del = pdf["right_is_delete"].to_numpy(dtype=bool, na_value=False)
     codes, uniques = pd.factorize(pdf["fk"], use_na_sentinel=False)
     ufks = [pynative(k) for k in uniques]
     r_states = [r_state_of(k) for k in ufks]
+    r_carried = np.array([s is not None for s in r_states], dtype=bool)
     rptr = pd.Series(np.where(is_right, idx, -1)).groupby(codes).cummax().to_numpy()
-    r_state_present = np.array([s is not None for s in r_states])[codes]
-    r_present = (rptr >= 0) | r_state_present
+    # right presence at a row: the last right row at or before it is an
+    # upsert; with no such row, the carried state
+    r_present = np.where(rptr >= 0, ~r_del[rptr], r_carried[codes])
 
     # object copies for state writes / python dict keys (O(inputs))
     pk_arr = pdf["pk"].to_numpy(dtype=object)
@@ -345,7 +265,7 @@ def _fk_fast_batch(
     if emit_sub.any():
         blk = {
             "pk": take(pk_col, emit_sub),
-            "_act": "upsert",
+            "_del": False,
             **{c: take(l_cols[c], emit_sub) for c in left_cols},
             "_seq": take(seq_col, emit_sub),
             "_minor": take(minor_col, emit_sub),
@@ -372,9 +292,18 @@ def _fk_fast_batch(
         g_ev = g[is_event[g]]
         ufk = ufks[code]
         if len(g_right):
-            right_writes.append(
-                (ufk, pykey(r_arrs[c][g_right[-1]] for c in right_cols))
-            )
+            if not r_del[g_right[-1]]:
+                right_writes.append(
+                    (ufk, pykey(r_arrs[c][g_right[-1]] for c in right_cols))
+                )
+            elif r_carried[code]:
+                right_writes.append((ufk, None))
+            # a right row fans out iff it is EFFECTIVE: an upsert, or a
+            # delete of a present right value (a delete of an absent
+            # one emits nothing)
+            g_rdel = r_del[g_right]
+            r_before = np.r_[r_carried[code], ~g_rdel[:-1]]
+            g_right = g_right[~g_rdel | r_before]
         snap = snapshots.get(ufk)  # None iff this fk has no right rows
         m = len(g_ev)
         if m:
@@ -417,8 +346,8 @@ def _fk_fast_batch(
             presence_before = np.empty(m, dtype=bool)
             presence_before[order] = s_presence_before
             eff_unsub = ~ev_sub & presence_before
-            # --- delete emissions for effective unsubs (_fk_apply's
-            # unsub branches verbatim)
+            # --- delete emissions for effective unsubs (the reference
+            # machine's unsub branches verbatim)
             if left_join:
                 del_mask = eff_unsub & (kinds_arr[g_ev] == KIND_UNSUB_DELETE)
             else:
@@ -498,17 +427,20 @@ def _fk_fast_batch(
             ord_arr = np.concatenate([init_ord, sub_ord])
         else:
             a_arr, b_arr, src_arr, ord_arr = init_a, init_b, init_src, init_ord
-        # per-trigger right compaction (r16): only the FINAL right row
-        # of the fk in this batch fans out — Kafka Streams' KTable
-        # cache compacts R_1..R_n to R_n within a commit interval, and
-        # Spark's update-mode output contract is "the latest state per
-        # key per trigger", so the intermediate fan-outs are emission
-        # work no downstream reduction can ever observe (every dropped
-        # row is superseded by a later kept emission for its pk — see
-        # the proof sketch in this function's docstring). rptr/sub
-        # emissions still
-        # see EVERY right row, so a sub between R_i and R_n joins R_i.
-        g_right_emit = g_right[-1:] if compact_rights else g_right
+        # per-trigger right compaction (r16): of the fk's effective
+        # right rows in this batch, only the LAST one and the deletes
+        # fan out — Kafka Streams' KTable cache compacts R_1..R_n to
+        # R_n within a commit interval, and Spark's update-mode output
+        # contract is "the latest state per key per trigger", so the
+        # intermediate upsert fan-outs are emission work no downstream
+        # reduction can ever observe (every dropped row is superseded
+        # by a later kept emission for its pk — see the proof sketch in
+        # this function's docstring). rptr/sub emissions still see
+        # EVERY right row, so a sub between R_i and R_n joins R_i.
+        g_right_emit = (
+            g_right[(g_right == g_right[-1]) | r_del[g_right]]
+            if compact_rights else g_right
+        )
         lo = np.searchsorted(g_right_emit, a_arr, side="right")
         hi = np.searchsorted(g_right_emit, b_arr, side="left")
         cnt = np.maximum(hi - lo, 0)
@@ -522,9 +454,14 @@ def _fk_fast_batch(
         right_rows_g = g_right_emit[lo[reps] + offs]
         pi = ord_arr[reps]
         srcs = src_arr[reps]
+        # a right delete fans out a null right payload: an upsert that
+        # keeps the left payload in left mode, an all-null delete in
+        # inner mode
+        pair_del = r_del[right_rows_g]
+        has_del = bool(pair_del.any())
         blk = {
             "pk": take(from_list(pk_list, pk_col[0]), pi),
-            "_act": "upsert",
+            "_del": pair_del if has_del and not left_join else False,
             "_seq": take(seq_col, right_rows_g),
             "_minor": take(minor_col, right_rows_g),
             "_pos": right_rows_g,
@@ -537,8 +474,12 @@ def _fk_fast_batch(
             snap_col = take(state_pairs(snap_tuples, j3, l_cols[c][0]), pi)
             own = take(l_cols[c], src_pos)
             blk[c] = where(use_sub, own, snap_col)
+            if has_del and not left_join:
+                blk[c] = nullify(blk[c], pair_del)
         for c in right_cols:
             blk[c] = take(r_cols[c], right_rows_g)
+            if has_del:
+                blk[c] = nullify(blk[c], pair_del)
         blocks.append(blk)
 
     # --- effective-unsub delete emissions (bucket-wide block) ---
@@ -550,7 +491,7 @@ def _fk_fast_batch(
         md = len(drows)
         blk = {
             "pk": take(pk_col, drows),
-            "_act": "delete",
+            "_del": True,
             "_seq": take(seq_col, drows),
             "_minor": take(minor_col, drows),
             "_pos": drows,
@@ -572,23 +513,17 @@ def _fk_fast_batch(
         ordn = np.concatenate([b["_ord"] for b in blocks])
         width = np.int64(int(ordn.max()) + 1) if len(ordn) else np.int64(1)
         order2 = np.argsort(pos * width + ordn, kind="stable")
-        # action: int8 block codes gathered natively, ONE vectorized
+        # action: int8 delete flags gathered natively, ONE vectorized
         # object materialization at the end (a 30M-cell object gather
         # costs seconds; an int8 gather is free)
-        act_names = []
-        act_codes_parts = []
-        for b in blocks:
-            if b["_act"] not in act_names:
-                act_names.append(b["_act"])
-            act_codes_parts.append(
-                np.full(len(b["_pos"]), act_names.index(b["_act"]),
-                        dtype=np.int8)
-            )
-        acts_sorted = np.concatenate(act_codes_parts)[order2]
-        if len(act_names) == 1:
-            acts: object = act_names[0]  # scalar broadcast, zero copies
+        dels = np.concatenate([
+            np.broadcast_to(np.asarray(b["_del"], dtype=np.int8), len(b["_pos"]))
+            for b in blocks
+        ])[order2]
+        if not dels.any():
+            acts: object = "upsert"  # scalar broadcast, zero copies
         else:
-            acts = np.array(act_names, dtype=object)[acts_sorted]
+            acts = np.array(["upsert", "delete"], dtype=object)[dels]
         # scatter-assembly through the INVERSE permutation: one final
         # array + one scatter per column instead of concat + ordered
         # gather (2 fewer 30M-row copies per column — page faults are
@@ -636,9 +571,9 @@ class _FKJoinProcessorBucketed(StatefulProcessor):
 
     Same trade as ktable._LatestPerKeyBucketed: TWS pays a fixed
     framework cost per grouping key per micro-batch, so bucketing
-    spreads it over ~fks/buckets fks. Batches without right-side
-    tombstones run the vectorized _fk_fast_batch kernel; the rest run
-    the per-record _fk_apply transition per fk.
+    spreads it over ~fks/buckets fks. Every batch, right-side
+    tombstones included, runs the one vectorized _fk_fast_batch
+    transition.
 
     Fan-out on a right-side record needs every subscription of that fk;
     MapState has no prefix scan, so the processor takes ONE pass over
@@ -710,61 +645,27 @@ class _FKJoinProcessorBucketed(StatefulProcessor):
                 fk, pk = k[0], k[1]
                 if fk in snapshots:
                     snapshots[fk][pk] = tuple(v)
-        if not bool(pdf["right_is_delete"].any()):
-            # vectorized kernel (r16): covers subs, unsub_move,
-            # unsub_delete and right upserts; only right tombstones
-            # fall back to the per-record transition
-            frame, subs_ops, right_writes = _fk_fast_batch(
-                pdf, snapshots,
-                r_state_of=lambda fk: self.right.getValue((fk,)),
-                pre_member=lambda fk, pk: self.subs.containsKey((fk, pk)),
-                left_cols=self.left_cols, right_cols=self.right_cols,
-                out_types=self._out_types, out_columns=self.out_columns,
-                left_join=self.how == "left",
-                compact_rights=self.compact_rights,
-            )
-            for ufk, pk, pay in subs_ops:
-                if pay is None:
-                    self.subs.removeKey((ufk, pk))
-                else:
-                    self.subs.updateValue((ufk, pk), pay)
-            for ufk, val in right_writes:
-                self.right.updateValue((ufk,), val)
-            if frame is not None:
-                yield frame
-            return
-        yield from self._slow_path(pdf, snapshots)
-
-    def _slow_path(
-        self, pdf: pd.DataFrame, snapshots: dict
-    ) -> Iterator[pd.DataFrame]:
-        out: list[tuple] = []
-        left_join = self.how == "left"
-        # groupby preserves within-group row order: per-fk seq order
-        for ufk, grp in pdf.groupby("fk", sort=False, dropna=False):
-            ufk = pynative(ufk)
-            r_val0 = self.right.getValue((ufk,))
-            subs = _SubsView(
-                snapshots.get(ufk),
-                lambda pk, _fk=ufk: self.subs.containsKey((_fk, pk)),
-            )
-            rows_out, r_present, r_val = _fk_apply(
-                grp.to_dict("records"),
-                r_val0 is not None, tuple(r_val0) if r_val0 is not None else (),
-                subs, self.left_cols, self.right_cols, left_join,
-            )
-            out.extend(rows_out)
-            for pk, pay in subs.touched.items():
-                if pay is None:
-                    self.subs.removeKey((ufk, pk))
-                else:
-                    self.subs.updateValue((ufk, pk), pay)
-            if r_present:
-                self.right.updateValue((ufk,), pykey(r_val))
-            elif r_val0 is not None:
+        frame, subs_ops, right_writes = _fk_fast_batch(
+            pdf, snapshots,
+            r_state_of=lambda fk: self.right.getValue((fk,)),
+            pre_member=lambda fk, pk: self.subs.containsKey((fk, pk)),
+            left_cols=self.left_cols, right_cols=self.right_cols,
+            out_types=self._out_types, out_columns=self.out_columns,
+            left_join=self.how == "left",
+            compact_rights=self.compact_rights,
+        )
+        for ufk, pk, pay in subs_ops:
+            if pay is None:
+                self.subs.removeKey((ufk, pk))
+            else:
+                self.subs.updateValue((ufk, pk), pay)
+        for ufk, val in right_writes:
+            if val is None:
                 self.right.removeKey((ufk,))
-        if out:
-            yield pd.DataFrame(out, columns=self.out_columns, dtype=object)
+            else:
+                self.right.updateValue((ufk,), val)
+        if frame is not None:
+            yield frame
 
     def close(self) -> None:
         pass

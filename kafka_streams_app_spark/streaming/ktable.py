@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
@@ -58,64 +59,6 @@ def _require_rocksdb(spark) -> None:
     )
 
 
-def _changelog_for_key(
-    key: tuple,
-    seqs: list,
-    pay: list[list],
-    tombs: list[bool] | None,
-    cur: tuple | None,
-    keys: list[str],
-    payload: list[str],
-    seq_col: str,
-    out_columns: list[str],
-) -> tuple[pd.DataFrame | None, tuple | None]:
-    """Latest-per-key state transition for ONE logical key's in-order
-    records: returns (changelog frame or None, new state or None). The
-    bucketed processor's slow path for batches carrying tombstones."""
-    if tombs is None or not any(tombs):
-        # Fast path (every record an upsert — the overwhelmingly
-        # common shape): each row's old payload is the previous
-        # row's new payload, i.e. a shift-by-one with the carried
-        # state in slot 0. Column-wise list slicing instead of a
-        # per-row Python loop — measured ~3x on the throughput
-        # smoke (tools/stream_throughput.py, ktable_latest_tws).
-        n = len(seqs)
-        cols: dict[str, list] = {}
-        for i, k in enumerate(keys):
-            cols[k] = [key[i]] * n
-        cols["action"] = ["upsert"] * n
-        cols["old_present"] = [cur is not None] + [True] * (n - 1)
-        for j, c in enumerate(payload):
-            # dtype=object: pandas would infer a [None, int...] list as
-            # float64 (NaN-fill), silently rounding int64 payloads above
-            # 2^53; object columns reach Arrow losslessly
-            cols[f"old_{c}"] = pd.Series(
-                [cur[j] if cur is not None else None] + pay[j][:-1], dtype=object
-            )
-            cols[f"new_{c}"] = pay[j]
-        cols[seq_col] = seqs
-        return pd.DataFrame(cols, columns=out_columns), tuple(p[-1] for p in pay)
-    nulls = (None,) * len(payload)
-    out: list[tuple] = []
-    for i, seq in enumerate(seqs):
-        old_present = cur is not None
-        old = cur if old_present else nulls
-        if tombs[i]:
-            if old_present:  # delete of absent key: suppressed
-                out.append(key + ("delete", True) + old + nulls + (seq,))
-                cur = None
-        else:
-            new = tuple(p[i] for p in pay)
-            out.append(key + ("upsert", old_present) + old + new + (seq,))
-            cur = new
-    # dtype=object: see fast path — mixed None/int64 columns must not
-    # pass through float64 inference
-    frame = (
-        pd.DataFrame(out, columns=out_columns, dtype=object) if out else None
-    )
-    return frame, cur
-
-
 class _LatestPerKeyBucketed(StatefulProcessor):
     """Latest-per-key over a BUCKETED key space: the TWS grouping key is
     pmod(xxhash64(logical keys), n_buckets), and the per-logical-key
@@ -126,9 +69,10 @@ class _LatestPerKeyBucketed(StatefulProcessor):
     measured ~85% of ktable wall with a no-op processor — SCALE.md).
     Grouping by bucket spreads that cost over ~keys/buckets logical
     keys. Records are globally seq-sorted within the bucket, then
-    applied per logical key in order: a vectorized per-key shift on
-    all-upsert batches, the per-record _changelog_for_key transition
-    on batches carrying tombstones. State stays hash-partitioned across
+    applied per logical key in order by ONE vectorized transition for
+    every batch, tombstones included (see handleInputRows; the
+    per-record reference it is pinned against lives in
+    tests/keyed_reference.py). State stays hash-partitioned across
     executors (by bucket), RocksDB holds one map entry per logical key,
     and no bucket ever materializes more than its micro-batch slice
     plus one map lookup per distinct key.
@@ -159,10 +103,6 @@ class _LatestPerKeyBucketed(StatefulProcessor):
     def init(self, handle: StatefulProcessorHandle) -> None:
         self.state = handle.getMapState("latest", self.key_schema, self.state_schema)
 
-    @staticmethod
-    def _pykey(row_vals) -> tuple:
-        return pykey(row_vals)
-
     def _normalize_pdf(self, pdf: pd.DataFrame) -> pd.DataFrame:
         """Pin integral/bool key+payload columns to pandas NULLABLE
         extension dtypes before any shift/groupby/state access — closes
@@ -182,31 +122,37 @@ class _LatestPerKeyBucketed(StatefulProcessor):
             .sort_values(self.seq_col, kind="stable")
             .reset_index(drop=True)
         )
-        if self.tombstone_col is not None and bool(pdf[self.tombstone_col].any()):
-            yield from self._slow_path(pdf)
-            return
-        # Vectorized all-upsert path: within the seq-sorted bucket frame,
-        # each row's old payload is the PREVIOUS row of the same logical
-        # key — a per-key shift(1) — and only each key's first row needs
-        # a state lookup (its carry-in), only each key's last row a state
-        # write. All per-row work is pandas C; Python touches only the
-        # ~distinct-keys-per-bucket boundary rows.
+        # One vectorized transition, tombstones included: within the
+        # seq-sorted bucket frame each row's old payload is the PREVIOUS
+        # row of the same logical key — a per-key shift(1) — and every
+        # delete leaves its key absent, so a row's old_present is "the
+        # key's previous row is an upsert". Only each key's first row
+        # needs a state lookup (its carry-in), only each key's last row
+        # a state write. All per-row work is pandas/numpy C; Python
+        # touches only the ~distinct-keys-per-bucket boundary rows.
         n = len(pdf)
-        first_mask = ~pdf.duplicated(self.keys)
-        last_mask = ~pdf.duplicated(self.keys, keep="last")
-        first_pos = first_mask.to_numpy().nonzero()[0]
+        tomb = (
+            pdf[self.tombstone_col].to_numpy(dtype=bool, na_value=False)
+            if self.tombstone_col is not None else np.zeros(n, dtype=bool)
+        )
+        first_mask = ~pdf.duplicated(self.keys).to_numpy()
+        first_pos = first_mask.nonzero()[0]
+        last_pos = (~pdf.duplicated(self.keys, keep="last")).to_numpy().nonzero()[0]
         gb = pdf.groupby(self.keys, sort=False, dropna=False)
+        # sort=False: group numbers follow first appearance, i.e. first_pos
+        codes = gb.ngroup().to_numpy()
         # per-column extraction (NOT a .to_numpy() block: numeric
         # mixed-dtype frames upcast to float64, corrupting long keys)
         key_cols = [pdf[k] for k in self.keys]
         curs = [
-            self.state.getValue(self._pykey([c.iat[i] for c in key_cols]))
+            self.state.getValue(pykey([c.iat[i] for c in key_cols]))
             for i in first_pos
         ]
+        carried = np.array([c is not None for c in curs], dtype=bool)
+        prev_del = pd.Series(tomb).groupby(codes).shift(1, fill_value=False)
+        old_present = np.where(first_mask, carried[codes], ~prev_del.to_numpy())
         cols: dict[str, object] = {k: pdf[k] for k in self.keys}
-        cols["action"] = ["upsert"] * n
-        old_present = pd.Series(True, index=pdf.index)
-        old_present.iloc[first_pos] = [c is not None for c in curs]
+        cols["action"] = np.where(tomb, "delete", "upsert")
         cols["old_present"] = old_present
         for j, c in enumerate(self.payload):
             # _normalize_pdf pinned integral/bool payloads to extension
@@ -219,45 +165,22 @@ class _LatestPerKeyBucketed(StatefulProcessor):
                 # object fills into float blocks)
                 fill = [float("nan") if v is None else v for v in fill]
             old.iloc[first_pos] = fill
-            cols[f"old_{c}"] = old
-            cols[f"new_{c}"] = pdf[c]
+            # after a delete the old payload is null, and a delete's
+            # new payload is null
+            cols[f"old_{c}"] = old.where(old_present, None)
+            cols[f"new_{c}"] = pdf[c].where(~tomb, None)
         cols[self.seq_col] = pdf[self.seq_col]
         pay_cols = [pdf[c] for c in self.payload]
-        for i in last_mask.to_numpy().nonzero()[0]:
-            self.state.updateValue(
-                self._pykey([c.iat[i] for c in key_cols]),
-                self._pykey([c.iat[i] for c in pay_cols]),
-            )
-        yield pd.DataFrame(cols, columns=self.out_columns)
-
-    def _slow_path(self, pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
-        frames: list[pd.DataFrame] = []
-        # groupby preserves within-group row order, so each logical key
-        # still sees its records in global seq order.
-        for ukey, grp in pdf.groupby(self.keys, sort=False, dropna=False):
-            if not isinstance(ukey, tuple):
-                ukey = (ukey,)
-            ukey = self._pykey(ukey)
-            cur = self.state.getValue(ukey)
-            cur = tuple(cur) if cur is not None else None
-            seqs = grp[self.seq_col].tolist()
-            pay = [grp[c].tolist() for c in self.payload]
-            tombs = [bool(t) for t in grp[self.tombstone_col].tolist()]
-            frame, new_cur = _changelog_for_key(
-                ukey, seqs, pay, tombs, cur,
-                self.keys, self.payload, self.seq_col, self.out_columns,
-            )
-            if new_cur is None:
-                if cur is not None:
-                    self.state.removeKey(ukey)
-            else:
-                # _pykey also for the VALUE tuple: normalized Int64
-                # payload cells surface as pd.NA / np scalars here
-                self.state.updateValue(ukey, self._pykey(new_cur))
-            if frame is not None:
-                frames.append(frame)
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
+        for i in last_pos:
+            k = pykey([c.iat[i] for c in key_cols])
+            if not tomb[i]:
+                self.state.updateValue(k, pykey([c.iat[i] for c in pay_cols]))
+            elif carried[codes[i]]:
+                self.state.removeKey(k)
+        frame = pd.DataFrame(cols, columns=self.out_columns)
+        # a delete of an absent key emits nothing (Kafka null->null)
+        emit = old_present | ~tomb
+        yield frame if emit.all() else frame[emit]
 
     def close(self) -> None:
         pass

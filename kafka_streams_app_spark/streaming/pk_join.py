@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -37,68 +38,18 @@ from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.types import StringType, StructField, StructType
 
 from kafka_streams_app_spark.streaming._pdnorm import (
+    dcol_finalize,
+    dcol_in,
+    dcol_nullify,
+    dcol_state,
+    dcol_take,
+    dcol_where,
     is_shielded,
     normalize_nullable,
     pykey,
-    pynative,
     shield_long,
 )
 from kafka_streams_app_spark.streaming.ktable import _require_rocksdb
-
-
-def _pk_apply(
-    records: list[dict],
-    key: tuple,
-    l_present: bool,
-    l_val: tuple,
-    r_present: bool,
-    r_val: tuple,
-    left_cols: list[str],
-    right_cols: list[str],
-    left_join: bool,
-) -> tuple[list[tuple], bool, tuple, bool, tuple]:
-    """PK-join state transition for ONE logical key's in-order records.
-
-    Returns (output rows, new left/right state). The bucketed
-    processor's slow path for batches carrying tombstones, and the
-    reference its vectorized fast path is pinned against.
-    """
-    l_nulls = (None,) * len(left_cols)
-    r_nulls = (None,) * len(right_cols)
-    out: list[tuple] = []
-
-    for rec in records:
-        om = (pynative(rec["seq"]),)  # emission order tag
-        if rec["side"] == "l":
-            if pynative(rec["is_delete"]):
-                if l_present:
-                    had = l_present and (left_join or r_present)
-                    l_present, l_val = False, ()
-                    if had:
-                        out.append(key + ("delete",) + l_nulls + r_nulls + om)
-            else:
-                l_present = True
-                l_val = pykey(rec[c] for c in left_cols)
-                if left_join or r_present:
-                    out.append(
-                        key + ("upsert",) + l_val
-                        + (r_val if r_present else r_nulls) + om
-                    )
-        else:  # right side
-            if pynative(rec["is_delete"]):
-                if r_present:
-                    r_present, r_val = False, ()
-                    if l_present:
-                        out.append(
-                            (key + ("upsert",) + l_val + r_nulls if left_join
-                             else key + ("delete",) + l_nulls + r_nulls) + om
-                        )
-            else:
-                r_present = True
-                r_val = pykey(rec[c] for c in right_cols)
-                if l_present:
-                    out.append(key + ("upsert",) + l_val + r_val + om)
-    return out, l_present, l_val, r_present, r_val
 
 
 class _PKJoinProcessorBucketed(StatefulProcessor):
@@ -106,9 +57,10 @@ class _PKJoinProcessorBucketed(StatefulProcessor):
     pmod(xxhash64(key), n_buckets); per-logical-key (left, right) state
     lives in two MapStates keyed by the logical key. Records are
     globally seq-sorted within the bucket, then applied per logical key
-    in order: a vectorized pointer forward-fill on all-upsert batches,
-    the per-record _pk_apply transition on batches carrying tombstones
-    (see ktable._LatestPerKeyBucketed for the bucketing trade)."""
+    in order by ONE vectorized pointer forward-fill for every batch,
+    tombstones included (see handleInputRows; the per-record reference
+    it is pinned against lives in tests/keyed_reference.py, and
+    ktable._LatestPerKeyBucketed explains the bucketing trade)."""
 
     def __init__(
         self,
@@ -129,7 +81,7 @@ class _PKJoinProcessorBucketed(StatefulProcessor):
         self.right_schema = right_schema
         self.out_columns = [f.name for f in out_schema.fields]
         # per-output-column Spark types drive the dense (native-dtype)
-        # emission path — see _pdnorm.dense_input and fk_join._fast_path
+        # emission path — see _pdnorm.dense_input and fk_join._fk_fast_batch
         self._out_types = {f.name: f.dataType for f in out_schema.fields}
         self.how = how
         # the key column is na.drop'd (never null-mixed, arrives exact);
@@ -148,63 +100,63 @@ class _PKJoinProcessorBucketed(StatefulProcessor):
         self.right = handle.getMapState("right", self.key_schema, self.right_schema)
 
     def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
+        """One vectorized transition for every batch, tombstones
+        included: within the seq-sorted bucket frame, the join partner
+        of each record is the MOST RECENT row of the OTHER side for the
+        same logical key — a per-key forward-fill. Because the two
+        sides interleave, the fill runs on row POINTERS (per-key cummax
+        of each side's row index), then one numpy take per payload
+        column resolves values. Every delete leaves its side absent, so
+        a side is present after a row iff its latest row so far is an
+        upsert (the carried state when it has none), and a partner
+        pointer that lands on a delete resolves to nulls. Python touches
+        only per-distinct-key state lookups/writes, never per record.
+
+        Output columns are NATIVE-dtype (r7, same treatment as
+        fk_join._fk_fast_batch): object/Decimal cells made the
+        python->JVM Arrow crossing pay per-cell conversion — see
+        _pdnorm.dense_input. Inputs convert once (O(inputs)); emissions
+        are numpy takes; columns finalize as float64 / Integer /
+        Boolean extension arrays with exact null parity."""
         pdf = normalize_nullable(
             pd.concat(list(rows))
             .sort_values("seq", kind="stable")
             .reset_index(drop=True),
             self._norm_fields,
         )
-        if not bool(pdf["is_delete"].any()):
-            yield from self._fast_path(pdf)
-            return
-        yield from self._slow_path(pdf)
-
-    def _fast_path(self, pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
-        """Vectorized all-upsert path (the overwhelmingly common batch
-        shape): within the seq-sorted bucket frame, the join partner of
-        each record is the MOST RECENT row of the OTHER side for the
-        same logical key — a per-key forward-fill. Because the two
-        sides interleave, the fill runs on row POINTERS (per-key cummax
-        of each side's row index), then one numpy take per payload
-        column resolves values; Python touches only per-distinct-key
-        state lookups/writes, never per record.
-
-        Output columns are NATIVE-dtype (r7, same treatment as
-        fk_join._fast_path): object/Decimal cells made the python->JVM
-        Arrow crossing pay per-cell conversion — see
-        _pdnorm.dense_input. Inputs convert once (O(inputs)); emissions
-        are numpy takes; columns finalize as float64 / Integer /
-        Boolean extension arrays with exact null parity."""
-        import numpy as np
-
-        from kafka_streams_app_spark.streaming._pdnorm import (
-            dcol_finalize,
-            dcol_in,
-            dcol_nullify,
-            dcol_state,
-            dcol_take,
-            dcol_where,
-        )
-
         n = len(pdf)
         left_join = self.how == "left"
         codes, uniques = pd.factorize(pdf[self.key_col], use_na_sentinel=False)
         ukeys = [pykey((k,)) for k in uniques]
         l_states = [self.left.getValue(k) for k in ukeys]
         r_states = [self.right.getValue(k) for k in ukeys]
+        l_carried = np.array([s is not None for s in l_states], dtype=bool)
+        r_carried = np.array([s is not None for s in r_states], dtype=bool)
         side_l = (pdf["side"] == "l").to_numpy()
+        dele = pdf["is_delete"].to_numpy(dtype=bool, na_value=False)
         idx = np.arange(n)
         # per-row pointer to the latest row of each side for this key
         # (cummax at an own-side row points at itself)
         lptr = pd.Series(np.where(side_l, idx, -1)).groupby(codes).cummax().to_numpy()
         rptr = pd.Series(np.where(~side_l, idx, -1)).groupby(codes).cummax().to_numpy()
-        l_state_present = np.array([s is not None for s in l_states])[codes]
-        r_state_present = np.array([s is not None for s in r_states])[codes]
-        l_present = (lptr >= 0) | l_state_present
-        r_present = (rptr >= 0) | r_state_present
-        # l upsert emits iff left join or right present; r upsert iff
-        # left present (exactly _pk_apply's all-upsert branches)
-        emit = np.where(side_l, left_join | r_present, l_present)
+        # presence AFTER each row, then BEFORE it (= after the key's
+        # previous row; the carried state on the key's first row)
+        l_after = np.where(lptr >= 0, ~dele[lptr], l_carried[codes])
+        r_after = np.where(rptr >= 0, ~dele[rptr], r_carried[codes])
+        prev = pd.Series(idx).groupby(codes).shift(1, fill_value=-1).to_numpy()
+        l_before = np.where(prev >= 0, l_after[prev], l_carried[codes])
+        r_before = np.where(prev >= 0, r_after[prev], r_carried[codes])
+        # l upsert emits iff left join or right present; l delete iff
+        # left was present and it had a join row. r upsert emits iff
+        # left present; r delete iff right was present and left present
+        emit = np.where(
+            side_l,
+            (left_join | r_after) & (~dele | l_before),
+            l_after & (~dele | r_before),
+        )
+        # a right delete in a left join downgrades to an upsert with a
+        # null right payload; every other delete emits all-null payloads
+        out_del = dele & (side_l | (not left_join))
 
         def resolve(cols_names, states, ptr, j_present):
             ptr_pos = np.maximum(ptr, 0)
@@ -214,65 +166,40 @@ class _PKJoinProcessorBucketed(StatefulProcessor):
                 sk, sv, sm = dcol_state(states, j, own[0])
                 sv_codes = (sk, sv[codes], sm[codes] if sm is not None else None)
                 vals = dcol_where(ptr >= 0, dcol_take(own, ptr_pos), sv_codes)
-                resolved[c] = dcol_nullify(vals, ~j_present)
+                resolved[c] = dcol_finalize(
+                    dcol_take(dcol_nullify(vals, ~j_present | out_del), emit))
             return resolved
 
-        res_l = resolve(self.left_cols, l_states, lptr, l_present)
-        res_r = resolve(self.right_cols, r_states, rptr, r_present)
         if emit.any():
             key_out = self.out_columns[0]
             cols: dict[str, object] = {
                 key_out: dcol_finalize(
                     dcol_take(dcol_in(pdf, self.key_col, self._out_types[key_out]),
                               emit)),
-                "action": "upsert",
+                "action": np.array(["upsert", "delete"], dtype=object)[
+                    out_del[emit].astype(np.int8)],
             }
-            for c in self.left_cols:
-                cols[c] = dcol_finalize(dcol_take(res_l[c], emit))
-            for c in self.right_cols:
-                cols[c] = dcol_finalize(dcol_take(res_r[c], emit))
+            cols.update(resolve(self.left_cols, l_states, lptr, l_after))
+            cols.update(resolve(self.right_cols, r_states, rptr, r_after))
             cols["_seq"] = dcol_finalize(
                 dcol_take(dcol_in(pdf, "seq", self._out_types["_seq"]), emit))
             yield pd.DataFrame(cols, columns=self.out_columns)
-        # state: each key's LAST row per side wins (Python per distinct
-        # key only)
+        # state: each key's LAST row per side wins — an upsert writes,
+        # a delete removes carried state (Python per distinct key only)
         lmax = pd.Series(np.where(side_l, idx, -1)).groupby(codes).max()
         rmax = pd.Series(np.where(~side_l, idx, -1)).groupby(codes).max()
-        l_cols = [pdf[c] for c in self.left_cols]
-        r_cols = [pdf[c] for c in self.right_cols]
-        for code, ukey in enumerate(ukeys):
-            li, ri = int(lmax[code]), int(rmax[code])
-            if li >= 0:
-                self.left.updateValue(ukey, pykey(c.iat[li] for c in l_cols))
-            if ri >= 0:
-                self.right.updateValue(ukey, pykey(c.iat[ri] for c in r_cols))
-
-    def _slow_path(self, pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
-        out: list[tuple] = []
-        left_join = self.how == "left"
-        # groupby preserves within-group row order, so each logical key
-        # still sees its records in global seq order
-        for ukey, grp in pdf.groupby(self.key_col, sort=False, dropna=False):
-            ukey = pykey((ukey,))
-            l_val0 = self.left.getValue(ukey)
-            r_val0 = self.right.getValue(ukey)
-            rows_out, l_present, l_val, r_present, r_val = _pk_apply(
-                grp.to_dict("records"), ukey,
-                l_val0 is not None, tuple(l_val0) if l_val0 is not None else (),
-                r_val0 is not None, tuple(r_val0) if r_val0 is not None else (),
-                self.left_cols, self.right_cols, left_join,
-            )
-            out.extend(rows_out)
-            for state, present, val, was in (
-                (self.left, l_present, l_val, l_val0),
-                (self.right, r_present, r_val, r_val0),
-            ):
-                if present:
-                    state.updateValue(ukey, pykey(val))
-                elif was is not None:
+        for state, last, carried, side_cols in (
+            (self.left, lmax, l_carried, [pdf[c] for c in self.left_cols]),
+            (self.right, rmax, r_carried, [pdf[c] for c in self.right_cols]),
+        ):
+            for code, ukey in enumerate(ukeys):
+                i = int(last[code])
+                if i < 0:
+                    continue
+                if not dele[i]:
+                    state.updateValue(ukey, pykey(c.iat[i] for c in side_cols))
+                elif carried[code]:
                     state.removeKey(ukey)
-        if out:
-            yield pd.DataFrame(out, columns=self.out_columns, dtype=object)
 
     def close(self) -> None:
         pass

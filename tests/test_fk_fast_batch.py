@@ -1,16 +1,19 @@
-"""Randomized equivalence pin for the r16 vectorized FK-join kernel.
+"""Randomized equivalence pin for the vectorized FK-join kernel.
 
-_fk_fast_batch (interval-based numpy kernel, handles sub / unsub_move /
-unsub_delete / right upserts) must emit EXACTLY the rows, in EXACTLY
-the order, of the per-record _fk_apply transition, and leave EXACTLY
-the same subscription/right state behind — across random multi-batch
-histories and both join modes. Pure Python (state shims from
+_fk_fast_batch (interval-based numpy kernel: sub / unsub_move /
+unsub_delete / right upserts and right deletes) must emit EXACTLY the
+rows of the per-record _fk_apply machine (tests/keyed_reference.py),
+and leave EXACTLY the same subscription/right state behind — across
+random multi-batch histories with right deletes (back-to-back ones
+included) and both join modes. Pure Python (state shims from
 streaming/replay.py), no Spark session.
 
 compact_rights=True (the declared s_fk_* entries' opt-in) is pinned
 against an INDEPENDENT reference: the per-record machine's emissions
-minus the fan-outs of non-final right rows (identified by the input
-rows alone — the kernel's code is not consulted), plus the two
+minus the fan-outs of right upserts that are not their fk's last
+EFFECTIVE right row (identified by the input rows and the carried
+right presence alone — the kernel's code is not consulted; right
+deletes are never compacted away), plus the two
 properties the entry contract rests on: every dropped row is
 superseded by a kept later emission for its pk, and the
 latest-per-(pk) reduction of the full multi-batch changelog is
@@ -23,6 +26,7 @@ import random
 
 import pandas as pd
 import pytest
+from keyed_reference import fk_reference
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -71,17 +75,31 @@ def _mk_bucketed(
     return p
 
 
+def _right_rows(rng: random.Random, fk, seq: int) -> list[tuple]:
+    """One right upsert, or one right delete, or two back-to-back right
+    deletes of the same fk. A delete row carries a stale right payload
+    now and then: the kernel must null it, never emit it."""
+    r = rng.random()
+    if r < 0.6:
+        return [(fk, KIND_RIGHT, None, None, seq, 2, rng.randrange(1000), False)]
+    stale = rng.randrange(1000) if rng.random() < 0.5 else None
+    dele = (fk, KIND_RIGHT, None, None, seq, 2, stale, True)
+    if r < 0.85:
+        return [dele]
+    return [dele, (fk, KIND_RIGHT, None, None, seq + 1, 2, None, True)]
+
+
 def _random_batch(rng: random.Random, seq0: int, fks, pks, n: int):
     """One batch of (fk, kind, pk, value, seq, minor, r_rvalue,
-    right_is_delete) rows — NO right deletes (the kernel's domain)."""
+    right_is_delete) rows: subs, both unsub kinds, right upserts and
+    right deletes."""
     rows = []
-    for i in range(n):
-        seq = seq0 + i
+    for _ in range(n):
+        seq = seq0 + len(rows)  # one seq per row
         fk = rng.choice(fks)
         r = rng.random()
         if r < 0.35:
-            rows.append((fk, KIND_RIGHT, None, None, seq, 2,
-                         rng.randrange(1000), False))
+            rows.extend(_right_rows(rng, fk, seq))
         elif r < 0.7:
             rows.append((fk, KIND_SUB, rng.choice(pks),
                          rng.randrange(1000), seq, 1, None, False))
@@ -111,7 +129,7 @@ def _to_pdf(rows) -> pd.DataFrame:
 
 
 def _rows_of(frames) -> list[tuple]:
-    """Canonically SORTED emission rows: the per-record _slow_path
+    """Canonically SORTED emission rows: the per-record reference
     emits per-fk blocks (groupby order) while the kernel emits global
     (row position, dict position) order — the row MULTISET is the
     contract (downstream reductions key on (_seq, _minor); the frame
@@ -124,22 +142,6 @@ def _rows_of(frames) -> list[tuple]:
         for t in f.itertuples(index=False):
             out.append(tuple(pynative(v) for v in t))
     return sorted(out, key=lambda r: [(v is None, v) for v in r])
-
-
-def _slow_reference(proc: _FKJoinProcessorBucketed, pdf: pd.DataFrame):
-    """handleInputRows' snapshot step + the per-record _slow_path."""
-    from kafka_streams_app_spark.streaming.fk_join import pynative as pn
-
-    fks_right = {
-        pn(v) for v in pdf.loc[pdf["kind"] == KIND_RIGHT, "fk"].unique()
-    }
-    snapshots: dict = {fk: {} for fk in fks_right}
-    if fks_right:
-        for k, v in proc.subs.iterator():
-            fk, pk = k[0], k[1]
-            if fk in snapshots:
-                snapshots[fk][pk] = tuple(v)
-    return list(proc._slow_path(pdf, snapshots))
 
 
 @pytest.mark.parametrize("how", ["inner", "left"])
@@ -155,12 +157,8 @@ def test_kernel_equals_per_record_bucketed(how: str, seed: int) -> None:
         rows = _random_batch(rng, seq0, fks, pks, rng.randrange(1, 40))
         seq0 += len(rows)
         pdf = _to_pdf(rows)
-        sorted_pdf = (
-            pdf.sort_values(["seq", "minor"], kind="stable")
-            .reset_index(drop=True)
-        )
-        got = _rows_of(fast.handleInputRows(("bkt",), iter([pdf]), None))
-        want = _rows_of(_slow_reference(slow, sorted_pdf.copy()))
+        got = _rows_of(fast.handleInputRows(("bkt",), iter([pdf.copy()]), None))
+        want = _rows_of(fk_reference(slow, pdf))
         assert got == want, f"batch {_batch}: emission mismatch"
         # state must match exactly between batches (carry-in parity)
         assert dict(fast.subs.iterator()) == dict(slow.subs.iterator())
@@ -181,8 +179,9 @@ def _random_instr_batch(rng: random.Random, seq0: int, fks, pks,
     for _ in range(n):
         r = rng.random()
         if r < 0.35:
-            rows.append((rng.choice(fks), KIND_RIGHT, None, None, seq, 2,
-                         rng.randrange(1000), False))
+            rights = _right_rows(rng, rng.choice(fks), seq)
+            rows.extend(rights)
+            seq += len(rights) - 1
         else:
             pk = rng.choice(pks)
             cur = subscribed.get(pk)
@@ -202,20 +201,25 @@ def _random_instr_batch(rng: random.Random, seq0: int, fks, pks,
     return rows, seq
 
 
-def _nonfinal_right_tags(rows) -> set[tuple]:
-    """(seq, minor) tags of every right row that is NOT its fk's last
-    right row in the batch — computed from the INPUT rows alone. Tags
-    are unique per input row (the generator's seq strictly increases),
-    and sub(minor 1)/unsub(minor 0) emissions can never collide with a
+def _nonfinal_right_tags(rows, r_present: dict) -> set[tuple]:
+    """(seq, minor) tags of every right UPSERT that is NOT its fk's
+    last EFFECTIVE right row in the batch — computed from the INPUT
+    rows and the right presence carried into the batch (`r_present`:
+    fk -> bool, updated here), never from the kernel. A right row is
+    effective iff it is an upsert or deletes a present right value;
+    right deletes are never compacted away. Tags are unique
+    per input row (the generator's seq strictly increases), and
+    sub(minor 1)/unsub(minor 0) emissions can never collide with a
     right row's (seq, 2) tag."""
-    last_right: dict = {}
-    for r in rows:
-        if r[1] == KIND_RIGHT:
-            last_right[r[0]] = r[4]
+    last_eff: dict = {}
+    rights = [r for r in rows if r[1] == KIND_RIGHT]
+    for r in rights:
+        fk, dele = r[0], r[7]
+        if not dele or r_present.get(fk, False):
+            last_eff[fk] = r[4]
+        r_present[fk] = not dele
     return {
-        (r[4], r[5])
-        for r in rows
-        if r[1] == KIND_RIGHT and last_right[r[0]] != r[4]
+        (r[4], r[5]) for r in rights if not r[7] and last_eff[r[0]] != r[4]
     }
 
 
@@ -223,7 +227,8 @@ def _nonfinal_right_tags(rows) -> set[tuple]:
 @pytest.mark.parametrize("seed", [0, 1, 2, 3])
 def test_compact_rights_contract(how: str, seed: int) -> None:
     """compact_rights=True vs the independent compaction of the
-    per-record reference (drop non-final right rows' fan-outs), plus
+    per-record reference (drop the fan-outs of right upserts that are
+    not their fk's last effective right row), plus
     the supersession property and latest-per-pk invariance that make
     compaction invisible to the declared s_fk_* entries' reduction."""
     rng = random.Random(2026_08_18 + 77 * seed)
@@ -233,19 +238,16 @@ def test_compact_rights_contract(how: str, seed: int) -> None:
     slow = _mk_bucketed(how)
     seq0 = 1
     subscribed: dict = {}
+    r_present: dict = {}
     all_got: list[tuple] = []
     all_want_full: list[tuple] = []
     for _batch in range(6):
         rows, seq0 = _random_instr_batch(
             rng, seq0, fks, pks, subscribed, rng.randrange(1, 40))
         pdf = _to_pdf(rows)
-        sorted_pdf = (
-            pdf.sort_values(["seq", "minor"], kind="stable")
-            .reset_index(drop=True)
-        )
-        got = _rows_of(fast.handleInputRows(("bkt",), iter([pdf]), None))
-        want_full = _rows_of(_slow_reference(slow, sorted_pdf.copy()))
-        dropped_tags = _nonfinal_right_tags(rows)
+        got = _rows_of(fast.handleInputRows(("bkt",), iter([pdf.copy()]), None))
+        want_full = _rows_of(fk_reference(slow, pdf))
+        dropped_tags = _nonfinal_right_tags(rows, r_present)
         # OUT_SCHEMA: (pk, action, value, r_rvalue, _seq, _minor)
         want = [r for r in want_full if (r[4], r[5]) not in dropped_tags]
         assert got == want, f"batch {_batch}: compacted emission mismatch"
@@ -298,3 +300,77 @@ def test_kernel_emits_unsub_deletes_inner() -> None:
         key=lambda r: [(v is None, v) for v in r],
     )
     assert dict(proc.subs.iterator()) == {}
+
+
+def _run(how: str, batches, compact_rights: bool = True) -> list[list[tuple]]:
+    """Per-batch sorted emissions of a compact_rights processor, each
+    batch also checked against the per-record reference's state."""
+    proc = _mk_bucketed(how, compact_rights=compact_rights)
+    ref = _mk_bucketed(how)
+    out = []
+    for rows in batches:
+        out.append(_rows_of(
+            proc.handleInputRows(("b",), iter([_to_pdf(rows)]), None)))
+        fk_reference(ref, _to_pdf(rows))
+        assert dict(proc.subs.iterator()) == dict(ref.subs.iterator())
+        assert dict(proc.right.iterator()) == dict(ref.right.iterator())
+    return out
+
+
+@pytest.mark.parametrize("how", ["inner", "left"])
+def test_compact_keeps_retraction_of_upsert_delete_delete(how: str) -> None:
+    """R upsert -> R delete -> R delete in one batch: the first delete
+    is the fk's last EFFECTIVE right row, so its fan-out survives
+    compaction (the trailing delete of an absent value emits nothing
+    and must not supersede it)."""
+    sub = [("a", KIND_SUB, 1, 10, 1, 1, None, False)]
+    rights = [
+        ("a", KIND_RIGHT, None, None, 2, 2, 77, False),
+        ("a", KIND_RIGHT, None, None, 3, 2, 77, True),
+        ("a", KIND_RIGHT, None, None, 4, 2, None, True),
+    ]
+    _, got = _run(how, [sub, rights])
+    if how == "inner":
+        assert got == [(1, "delete", None, None, 3, 2)]
+    else:
+        assert got == [(1, "upsert", 10, None, 3, 2)]
+
+
+@pytest.mark.parametrize("how", ["inner", "left"])
+def test_compact_sub_after_right_delete(how: str) -> None:
+    """A sub that lands after a right delete joins nulls in left mode
+    and emits nothing in inner mode — within one batch, and when the
+    deleted right value was carried in from an earlier batch."""
+    same_batch = [
+        ("a", KIND_RIGHT, None, None, 1, 2, 77, False),
+        ("a", KIND_RIGHT, None, None, 2, 2, None, True),
+        ("a", KIND_SUB, 1, 10, 3, 1, None, False),
+    ]
+    carried = [
+        [("b", KIND_RIGHT, None, None, 4, 2, 88, False)],
+        [("b", KIND_RIGHT, None, None, 5, 2, 88, True),
+         ("b", KIND_SUB, 2, 20, 6, 1, None, False)],
+    ]
+    want = {"inner": [], "left": [(1, "upsert", 10, None, 3, 1)]}[how]
+    assert _run(how, [same_batch]) == [want]
+    want = {"inner": [], "left": [(2, "upsert", 20, None, 6, 1)]}[how]
+    assert _run(how, carried)[1] == want
+
+
+def test_compact_keeps_delete_fanout_of_unsubscribed_pk() -> None:
+    """sub -> R delete -> unsub -> R upsert, inner mode: the unsub is
+    silent (right absent) and the final upsert no longer reaches the
+    pk, so the delete's fan-out is the pk's only retraction — it must
+    survive compaction although the delete is not the fk's last
+    effective right row."""
+    batches = [
+        [("a", KIND_RIGHT, None, None, 1, 2, 77, False)],
+        [("a", KIND_SUB, 1, 10, 2, 1, None, False),
+         ("a", KIND_RIGHT, None, None, 3, 2, None, True),
+         ("a", KIND_UNSUB_DELETE, 1, None, 4, 0, None, False),
+         ("a", KIND_RIGHT, None, None, 5, 2, 78, False)],
+    ]
+    assert _run("inner", batches)[1] == sorted(
+        [(1, "upsert", 10, 77, 2, 1), (1, "delete", None, None, 3, 2)],
+        key=lambda r: [(v is None, v) for v in r],
+    )

@@ -183,10 +183,11 @@ def test_fk_bucketed_equals_perfk_random(spark, how, with_mutations, seed):
     """Randomized instruction/right streams: the join changelog must
     not depend on the bucket count — one bucket holding every fk
     (n_buckets=1) emits EXACTLY what four buckets emit.
-    with_mutations adds unsubs and right deletes (per-record _fk_apply
-    path); without them every batch takes the vectorized kernel. Few
-    fks and many pks make the fan-out dense (every right row re-emits
-    many subscribers) — the kernel's hard case."""
+    with_mutations adds unsubs and right deletes; every batch takes
+    the one vectorized kernel (pinned against the per-record reference
+    machine in tests/test_fk_fast_batch.py). Few fks and many pks make
+    the fan-out dense (every right row re-emits many subscribers) —
+    the kernel's hard case."""
     import random
 
     from kafka_streams_app_spark.streaming.fk_join import (
@@ -231,7 +232,7 @@ def test_fk_bucketed_equals_perfk_random(spark, how, with_mutations, seed):
 
 def test_fk_bucketed_multibatch_state_carry_random(spark):
     """Randomized MULTI-BATCH run through the full two-query pipeline:
-    each pipe is its own micro-batch, so the bucketed fast path must
+    each pipe is its own micro-batch, so the bucketed kernel must
     join against STATE carried from earlier batches (snapshot overlay,
     right-value MapState) — not just within-batch context. The same
     pipe sequence through one bucket and through four must drain

@@ -74,7 +74,7 @@ def test_ktable_changelog_in_batch_ordering(spark, n_buckets):
 
 @pytest.mark.parametrize("n_buckets", [4])
 def test_ktable_upserts_across_batches_mixed_keys(spark, n_buckets):
-    """All-upsert batches (the vectorized bucketed fast path) with
+    """All-upsert batches through the vectorized bucketed transition with
     several keys sharing buckets: carry-in state from a prior batch
     must populate old_* on each key's first row of the next batch."""
     with _replay(spark, n_buckets) as r:

@@ -1,11 +1,11 @@
-"""Randomized equivalence pin for the vectorized PK-join fast path.
+"""Randomized equivalence pin for the vectorized PK-join transition.
 
-_PKJoinProcessorBucketed._fast_path (per-key pointer forward-fill over
-an all-upsert bucket frame) must emit EXACTLY the rows of the
-per-record _pk_apply transition (run by _slow_path), and leave EXACTLY
-the same left/right MapState behind — across random multi-batch
-histories, both join modes, and state carried in from batches with
-tombstones (which both processors run through _slow_path). Pure Python
+_PKJoinProcessorBucketed.handleInputRows (per-key pointer forward-fill
+over the seq-sorted bucket frame, tombstones included) must emit
+EXACTLY the rows of the per-record _pk_apply machine
+(tests/keyed_reference.py), and leave EXACTLY the same left/right
+MapState behind — across random multi-batch histories in which every
+batch may carry left and right deletes, in both join modes. Pure Python
 (state shims from streaming/replay.py), no Spark session.
 """
 
@@ -14,9 +14,9 @@ from __future__ import annotations
 import decimal
 import random
 
-import pandas as pd
 import pyarrow as pa
 import pytest
+from keyed_reference import pk_reference
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -25,7 +25,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from kafka_streams_app_spark.streaming._pdnorm import normalize_nullable, pynative
+from kafka_streams_app_spark.streaming._pdnorm import pynative
 from kafka_streams_app_spark.streaming.pk_join import _PKJoinProcessorBucketed
 from kafka_streams_app_spark.streaming.replay import _HandleShim
 
@@ -88,9 +88,9 @@ def _random_batch(rng: random.Random, seq0: int, n: int, p_delete: float):
 
 
 def _rows_of(frames) -> list[tuple]:
-    """Canonically SORTED emission rows: _slow_path emits per-key blocks
-    while _fast_path emits seq order; the row multiset is the contract
-    (each row carries its _seq order tag)."""
+    """Canonically SORTED emission rows: the reference emits per-key
+    blocks while the kernel emits seq order; the row multiset is the
+    contract (each row carries its _seq order tag)."""
     out = [
         tuple(pynative(v) for v in t)
         for f in frames
@@ -99,13 +99,20 @@ def _rows_of(frames) -> list[tuple]:
     return sorted(out, key=lambda r: [(v is None, v) for v in r])
 
 
-def _slow_reference(proc: _PKJoinProcessorBucketed, pdf: pd.DataFrame):
-    """handleInputRows' sort + normalize step, then always _slow_path."""
-    pdf = normalize_nullable(
-        pdf.sort_values("seq", kind="stable").reset_index(drop=True),
-        proc._norm_fields,
-    )
-    return list(proc._slow_path(pdf))
+def _delete_shapes(pdf, present: dict) -> set[str]:
+    """Which delete shapes one batch exercises, from the INPUT rows and
+    the per-side presence carried into the batch (updates `present`):
+    a delete of a present side, and a SUPPRESSED delete of an absent
+    one (Kafka null->null)."""
+    shapes: set[str] = set()
+    for r in pdf.sort_values("seq").itertuples(index=False):
+        side = present.setdefault(r.side, set())
+        if r.is_delete:
+            shapes.add("delete" if r.key in side else "suppressed_delete")
+            side.discard(r.key)
+        else:
+            side.add(r.key)
+    return shapes
 
 
 @pytest.mark.parametrize("how", ["inner", "left"])
@@ -114,21 +121,21 @@ def test_fast_path_equals_per_record(how: str, seed: int) -> None:
     rng = random.Random(2026_10_17 + seed)
     fast, slow = _mk(how), _mk(how)
     seq0 = 1
-    n_fast = 0
+    present: dict = {}
+    shapes: set[str] = set()
     for batch in range(8):
-        # every third batch carries tombstones: both processors take the
-        # per-record path there, and the next fast batch starts from the
-        # state (including removed keys) it left behind
-        p_delete = 0.2 if batch % 3 == 2 else 0.0
+        # every batch may carry tombstones on both sides; the next
+        # batch starts from the state (including removed keys) it left
         n = rng.randrange(1, 60)
-        pdf = _random_batch(rng, seq0, n, p_delete)
+        pdf = _random_batch(rng, seq0, n, p_delete=0.25)
         seq0 += n
-        n_fast += not pdf["is_delete"].any()
+        shapes |= _delete_shapes(pdf, present)
         got = _rows_of(fast.handleInputRows(("bkt",), iter([pdf.copy()]), None))
-        want = _rows_of(_slow_reference(slow, pdf.copy()))
+        want = _rows_of(pk_reference(slow, pdf.copy()))
         assert got == want, f"batch {batch}: emission mismatch"
         assert dict(fast.left.iterator()) == dict(slow.left.iterator())
         assert dict(fast.right.iterator()) == dict(slow.right.iterator())
-    assert n_fast >= 5  # the fast path was actually exercised
+    # deletes were exercised, including at least one suppressed delete
+    assert shapes == {"delete", "suppressed_delete"}
     # the shielded long survives both paths exactly
     assert all(v[1] > 2**53 for v in dict(fast.right.iterator()).values())

@@ -115,10 +115,10 @@ def test_pk_join_int64_payload_precision(spark, n_buckets):
 def test_pk_join_bucketed_equals_perkey_random(spark, how, with_deletes):
     """Randomized interleavings: the join changelog must not depend on
     the bucket count — one bucket holding every key (n_buckets=1)
-    emits EXACTLY what four buckets emit, through both the vectorized
-    pointer-ffill path (all-upsert) and the per-record _pk_apply path
-    (with deletes). 200 records, 12 keys, both sides interleaved. The
-    fast path itself is pinned against _pk_apply in
+    emits EXACTLY what four buckets emit, through the one vectorized
+    pointer-ffill transition, with and without tombstones. 200
+    records, 12 keys, both sides interleaved. The transition itself is
+    pinned against the per-record reference machine in
     tests/test_pk_fast_batch.py."""
     import random
 

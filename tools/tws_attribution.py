@@ -14,9 +14,7 @@ the SAME stage-2 input through three processors:
 - real      : _FKJoinProcessorBucketed -> everything
 
 Each variant runs best-of-N interleaved (this host's contention
-spikes swamp single shots). Stage-1 output is built once. Also prints
-the serializer grouping dial (SPARK_GRAFT_TWS_FASTPATH) in effect so
-off/on attributions are comparable.
+spikes swamp single shots). Stage-1 output is built once.
 
 Usage: python tools/tws_attribution.py [multiplier] [passes]
 """
@@ -24,7 +22,6 @@ Usage: python tools/tws_attribution.py [multiplier] [passes]
 from __future__ import annotations
 
 import json
-import os
 import shutil
 import sys
 import tempfile
@@ -194,7 +191,6 @@ def main() -> None:
     n_right = spark.read.parquet(events_path).count()
     rows_in = n_inter + n_right
     print(json.dumps({
-        "fastpath": os.environ.get("SPARK_GRAFT_TWS_FASTPATH", "1"),
         "mult": mult, "stage2_input_rows": rows_in,
         "noop_s": round(best["noop"], 2),
         "statetouch_s": round(best["statetouch"], 2),
