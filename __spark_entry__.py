@@ -43,10 +43,7 @@ from kafka_streams_app_spark.sources.catalog import load_stream, load_table
 from kafka_streams_app_spark.streaming import windows as SW
 from kafka_streams_app_spark.streaming.harness import run_available_now
 from kafka_streams_app_spark.streaming import ktable as SK
-from kafka_streams_app_spark.streaming.ktable import (
-    ktable_changelog_batch,
-    ktable_changelog_stream,
-)
+from kafka_streams_app_spark.streaming.ktable import ktable_changelog
 from kafka_streams_app_spark.streaming.replay import tws_available
 
 SF0001 = "/root/testdata/sf0.001"
@@ -2518,6 +2515,25 @@ def _sink() -> str:
     return f"s_{uuid.uuid4().hex[:10]}"
 
 
+def _stateful_source(spark: SparkSession, sf: str, name: str) -> DataFrame:
+    """Input of a stateful-operator entry: a stream when TWS workers can
+    import protobuf (the operator then runs incrementally), else the
+    batch table (the same processor then runs as grouped replay —
+    streaming/replay.py:run_stateful)."""
+    load = load_stream if tws_available(spark) else load_table
+    return load(spark, sf, name)
+
+
+def _drain(
+    spark: SparkSession, df: DataFrame, output_mode: str = "update"
+) -> DataFrame:
+    """Run a streaming result to completion (Trigger.AvailableNow); a
+    batch result is returned unchanged."""
+    if df.isStreaming:
+        return run_available_now(spark, df, _sink(), output_mode)
+    return df
+
+
 def _q_s_windowed_count_closed(spark: SparkSession, sf: str) -> DataFrame:
     """W1/W5 through the REAL streaming runtime: watermarked tumbling
     count in append mode over the events stream (Trigger.AvailableNow).
@@ -2617,32 +2633,9 @@ def _q_s_winnow_candidates(spark: SparkSession, sf: str) -> DataFrame:
     member arrives. The emitted SET is invariant to the micro-batch
     split, so the oracle is the batch posting-list self-join."""
     from kafka_streams_app_spark.streaming import dedup_candidates as DC
-    from kafka_streams_app_spark.streaming.replay import tws_available
 
-    if tws_available(spark):
-        docs = load_stream(spark, sf, "documents")
-        out = DC.winnow_candidates_stream(docs, "text", "doc_id")
-        return run_available_now(spark, out, _sink(), "update")
-    docs = load_table(spark, sf, "documents")
-    return DC.winnow_candidates_batch(docs, "text", "doc_id")
-
-
-def _q_s_winnow_candidates_blob(spark: SparkSession, sf: str) -> DataFrame:
-    """DUPLICATE PLAN of s_winnow_candidates: the auto processor
-    (streaming/dedup_candidates.py:_BucketPairsAuto) is the only layout.
-    The documents file replays as ONE micro-batch, so each bucket sees
-    far more distinct fingerprints than the bulk threshold and both
-    entries run auto's whole-bucket BLOB branch (2 state round trips
-    per bucket per micro-batch). The oracle is SHARED verbatim."""
-    from kafka_streams_app_spark.streaming import dedup_candidates as DC
-    from kafka_streams_app_spark.streaming.replay import tws_available
-
-    if tws_available(spark):
-        docs = load_stream(spark, sf, "documents")
-        out = DC.winnow_candidates_stream(docs, "text", "doc_id")
-        return run_available_now(spark, out, _sink(), "update")
-    docs = load_table(spark, sf, "documents")
-    return DC.winnow_candidates_batch(docs, "text", "doc_id")
+    docs = _stateful_source(spark, sf, "documents")
+    return _drain(spark, DC.winnow_candidates(docs, "text", "doc_id"))
 
 
 def _q_s_pq_assign(spark: SparkSession, sf: str) -> DataFrame:
@@ -2789,7 +2782,7 @@ def _q_s_decontam_winnow(spark: SparkSession, sf: str) -> DataFrame:
 
 def _q_s_time_rolling(spark: SparkSession, sf: str) -> DataFrame:
     """Incremental trailing-5-minute rolling aggregate per user
-    (streaming/rolling.py:rolling_time_avg_stream) — the wall-clock
+    (streaming/rolling.py:rolling_time_avg) — the wall-clock
     twin of s_rolling_avg: per-key ring of (ts_s, micro-unit) pairs,
     front-evicted at the horizon; each record's frame cuts at its own
     (ts_s, event_id) position (an incremental operator cannot see
@@ -2799,30 +2792,25 @@ def _q_s_time_rolling(spark: SparkSession, sf: str) -> DataFrame:
     comparisons, and the ring sum replays the oracle's
     CAST(SUM(DECIMAL) AS DOUBLE) / count operation order."""
     from kafka_streams_app_spark.streaming import rolling as SR
+
+    ev = _time_rolling_prep(_stateful_source(spark, sf, "events"))
+    out = SR.rolling_time_avg(
+        ev, ["user_id"], "event_id", "ts_s", "value", horizon_s=300
+    )
+    return _drain(spark, out).select(
+        "user_id", "ts_s", "event_id", "value", "win_n", "win_sum", "win_avg"
+    )
+
+
+def _time_rolling_prep(df: DataFrame) -> DataFrame:
     from kafka_streams_app_spark.streaming import zscore as SZ
 
-    def prep(df):
-        return SZ.with_micro_units(
-            df.select(
-                "user_id", "event_id", "value",
-                F.unix_seconds(F.col("ts").cast("timestamp")).alias("ts_s"),
-            ),
-            "value",
-        )
-
-    if tws_available(spark):
-        ev = prep(load_stream(spark, sf, "events"))
-        out = SR.rolling_time_avg_stream(
-            ev, ["user_id"], "event_id", "ts_s", "value", horizon_s=300
-        )
-        res = run_available_now(spark, out, _sink(), "update")
-    else:
-        ev = prep(load_table(spark, sf, "events"))
-        res = SR.rolling_time_avg_batch(
-            ev, ["user_id"], "event_id", "ts_s", "value", horizon_s=300
-        )
-    return res.select(
-        "user_id", "ts_s", "event_id", "value", "win_n", "win_sum", "win_avg"
+    return SZ.with_micro_units(
+        df.select(
+            "user_id", "event_id", "value",
+            F.unix_seconds(F.col("ts").cast("timestamp")).alias("ts_s"),
+        ),
+        "value",
     )
 
 
@@ -2831,7 +2819,7 @@ def _q_s_time_rolling_late(spark: SparkSession, sf: str) -> DataFrame:
     driver-signed end to end (r12 ADVICE fix): every 5th event is held
     back into a SECOND micro-batch (two parquet files streamed in
     order with maxFilesPerTrigger=1), so ~20% of rows arrive with
-    event time far behind per-key stream time. rolling_time_avg_stream
+    event time far behind per-key stream time. rolling_time_avg
     bisect-inserts them at their event-time ring position, emits their
     true frame, and RE-EMITS corrected frames for the already-emitted
     rows they retro-affect; the update-mode changelog is then reduced
@@ -2841,22 +2829,15 @@ def _q_s_time_rolling_late(spark: SparkSession, sf: str) -> DataFrame:
     import tempfile as _tf
 
     from kafka_streams_app_spark.streaming import rolling as SR
-    from kafka_streams_app_spark.streaming import zscore as SZ
 
-    def prep(df):
-        return SZ.with_micro_units(
-            df.select(
-                "user_id", "event_id", "value",
-                F.unix_seconds(F.col("ts").cast("timestamp")).alias("ts_s"),
-            ),
-            "value",
-        )
-
-    ev = prep(load_table(spark, sf, "events"))
+    ev = _time_rolling_prep(load_table(spark, sf, "events"))
+    kwargs = dict(horizon_s=3600, lateness_s=1 << 40)
+    # This entry keeps its own fork: the late-arrival staging needs two
+    # micro-batches, which only the streaming path has. Without TWS the
+    # batch replay sees every row at once (no row is late).
     if not tws_available(spark):
-        res = SR.rolling_time_avg_batch(
-            ev, ["user_id"], "event_id", "ts_s", "value",
-            horizon_s=3600, lateness_s=1 << 40,
+        res = SR.rolling_time_avg(
+            ev, ["user_id"], "event_id", "ts_s", "value", **kwargs
         )
         return res.select(
             "user_id", "ts_s", "event_id", "value",
@@ -2873,11 +2854,10 @@ def _q_s_time_rolling_late(spark: SparkSession, sf: str) -> DataFrame:
         .option("latestFirst", "false")
         .parquet(staging)
     )
-    out = SR.rolling_time_avg_stream(
-        src, ["user_id"], "event_id", "ts_s", "value",
-        horizon_s=3600, lateness_s=1 << 40,
+    out = SR.rolling_time_avg(
+        src, ["user_id"], "event_id", "ts_s", "value", **kwargs
     )
-    changelog = run_available_now(spark, out, _sink(), "update")
+    changelog = _drain(spark, out)
     best = F.max(F.struct("win_n", "win_sum", "win_avg")).alias("_b")
     return (
         changelog.groupBy("user_id", "ts_s", "event_id", "value")
@@ -2903,15 +2883,11 @@ def _q_s_sample_topk(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window
 
     from kafka_streams_app_spark.streaming import sample as SSample
-    from kafka_streams_app_spark.streaming.replay import tws_available
 
-    if tws_available(spark):
-        docs = load_stream(spark, sf, "documents")
-        out = SSample.sample_topk_stream(docs, "source", "doc_id", k=20, seed=3)
-        ch = run_available_now(spark, out, _sink(), "update")
-    else:
-        docs = load_table(spark, sf, "documents")
-        ch = SSample.sample_topk_batch(docs, "source", "doc_id", k=20, seed=3)
+    docs = _stateful_source(spark, sf, "documents")
+    ch = _drain(
+        spark, SSample.sample_topk(docs, "source", "doc_id", k=20, seed=3)
+    )
     final = (
         ch.groupBy("source", "doc_id")
         .agg(F.sum("op").alias("_net"))
@@ -2987,16 +2963,10 @@ def _q_s_stream_table_join(spark: SparkSession, sf: str) -> DataFrame:
     """J4 INCREMENTAL: KStream⋈KTable enrichment-at-arrival as a
     stateful streaming operator (TopologiesTest.scala:421-435) — clicks
     enriched with the latest purchase AT CLICK TIME, which is exactly
-    the as-of semantics, so the oracle is j4's ASOF LEFT JOIN. Dual
-    path: TWS when workers have protobuf, grouped replay otherwise."""
-    from kafka_streams_app_spark.streaming.stream_table import (
-        stream_table_join_batch,
-        stream_table_join_stream,
-    )
+    the as-of semantics, so the oracle is j4's ASOF LEFT JOIN."""
+    from kafka_streams_app_spark.streaming.stream_table import stream_table_join
 
-    use_tws = tws_available(spark)
-    load = load_stream if use_tws else load_table
-    ev = load(spark, sf, "events")
+    ev = _stateful_source(spark, sf, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "user_id", "event_id", "value", F.unix_micros("ts").alias("seq")
     )
@@ -3006,16 +2976,13 @@ def _q_s_stream_table_join(spark: SparkSession, sf: str) -> DataFrame:
         F.col("value").alias("purchase_value"),
         F.unix_micros("ts").alias("seq"),
     )
-    kwargs = dict(
-        key="user_id", stream_payload=["event_id", "value"],
+    j = stream_table_join(
+        clicks, purchases, key="user_id", stream_payload=["event_id", "value"],
         table_payload=["purchase_event_id", "purchase_value"], how="left",
     )
-    if use_tws:
-        j = stream_table_join_stream(clicks, purchases, **kwargs)
-        j = run_available_now(spark, j, _sink(), "append")
-    else:
-        j = stream_table_join_batch(clicks, purchases, **kwargs)
-    return j.select("event_id", "value", "purchase_event_id", "purchase_value")
+    return _drain(spark, j, "append").select(
+        "event_id", "value", "purchase_event_id", "purchase_value"
+    )
 
 
 def _q_s_windowed_sum_closed(spark: SparkSession, sf: str) -> DataFrame:
@@ -3076,19 +3043,12 @@ def _q_s_ktable_latest(spark: SparkSession, sf: str) -> DataFrame:
     When the session owner's workers lack protobuf (externally-created
     session, see streaming/replay.py) the SAME state machine replays
     via applyInPandas grouped replay — identical changelog output."""
-    if tws_available(spark):
-        ev = load_stream(spark, sf, "events").select(
-            "user_id", "event_id", "value", "ts"
-        )
-        changelog = ktable_changelog_stream(
-            ev, ["user_id"], "ts", ["event_id", "value"]
-        )
-        table = run_available_now(spark, changelog, _sink(), "update")
-    else:
-        ev = load_table(spark, sf, "events").select(
-            "user_id", "event_id", "value", "ts"
-        )
-        table = ktable_changelog_batch(ev, ["user_id"], "ts", ["event_id", "value"])
+    ev = _stateful_source(spark, sf, "events").select(
+        "user_id", "event_id", "value", "ts"
+    )
+    table = _drain(
+        spark, ktable_changelog(ev, ["user_id"], "ts", ["event_id", "value"])
+    )
     snap = ktable.latest_per_key(
         table.filter(F.col("action") == "upsert"), ["user_id"], ["ts"],
         payload=["new_event_id", "new_value"],
@@ -3108,29 +3068,16 @@ def _q_s_table_history(spark: SparkSession, sf: str) -> DataFrame:
     by keeping the non-null valid_to. Must equal the batch
     table_history lead-window bit-for-bit; 'error' events are the
     tombstones, value floor-quantized like the batch twin."""
-    cols = ["user_id", "event_id", "event_type", "value_e6", "is_del"]
-
-    def prep(df):
-        return df.select(
-            "user_id", "event_id", "event_type",
-            F.floor(F.col("value") * 1e6).cast("long").alias("value_e6"),
-            (F.col("event_type") == "error").alias("is_del"),
-        )
-
+    ev = _stateful_source(spark, sf, "events").select(
+        "user_id", "event_id", "event_type",
+        F.floor(F.col("value") * 1e6).cast("long").alias("value_e6"),
+        (F.col("event_type") == "error").alias("is_del"),
+    )
     payload = ["event_id", "event_type", "value_e6"]
-    if tws_available(spark):
-        ev = prep(load_stream(spark, sf, "events")).select(*cols)
-        ch = ktable_changelog_stream(
-            ev, ["user_id"], "event_id", payload, "is_del"
-        )
-        iv = SK.changelog_to_intervals(ch, ["user_id"], "event_id", payload)
-        events = run_available_now(spark, iv, _sink(), "update")
-    else:
-        ev = prep(load_table(spark, sf, "events")).select(*cols)
-        ch = ktable_changelog_batch(
-            ev, ["user_id"], "event_id", payload, "is_del"
-        )
-        events = SK.changelog_to_intervals(ch, ["user_id"], "event_id", payload)
+    ch = ktable_changelog(ev, ["user_id"], "event_id", payload, "is_del")
+    events = _drain(
+        spark, SK.changelog_to_intervals(ch, ["user_id"], "event_id", payload)
+    )
     return (
         events.groupBy(
             "user_id", "event_type", "value_e6", "valid_from"
@@ -3147,23 +3094,16 @@ def _q_s_zscore_running(spark: SparkSession, sf: str) -> DataFrame:
     the oracle replays the cumulative moments in HUGEINT."""
     from kafka_streams_app_spark.streaming import zscore as SZ
 
-    cols = ["event_type", "event_id", "value"]
-    if tws_available(spark):
-        ev = SZ.with_micro_units(
-            load_stream(spark, sf, "events").select(*cols), "value"
-        )
-        out = SZ.zscore_running_stream(
-            ev, ["event_type"], "event_id", "value", z=(5, 2)
-        )
-        res = run_available_now(spark, out, _sink(), "update")
-    else:
-        ev = SZ.with_micro_units(
-            load_table(spark, sf, "events").select(*cols), "value"
-        )
-        res = SZ.zscore_running_batch(
-            ev, ["event_type"], "event_id", "value", z=(5, 2)
-        )
-    return res.select("event_type", "event_id", "value", "n", "zsq_e6")
+    ev = SZ.with_micro_units(
+        _stateful_source(spark, sf, "events").select(
+            "event_type", "event_id", "value"
+        ),
+        "value",
+    )
+    out = SZ.zscore_running(ev, ["event_type"], "event_id", "value", z=(5, 2))
+    return _drain(spark, out).select(
+        "event_type", "event_id", "value", "n", "zsq_e6"
+    )
 
 
 def _q_s_rolling_avg(spark: SparkSession, sf: str) -> DataFrame:
@@ -3175,50 +3115,15 @@ def _q_s_rolling_avg(spark: SparkSession, sf: str) -> DataFrame:
     from kafka_streams_app_spark.streaming import rolling as SR
     from kafka_streams_app_spark.streaming import zscore as SZ
 
-    cols = ["user_id", "event_id", "value"]
-    if tws_available(spark):
-        ev = SZ.with_micro_units(
-            load_stream(spark, sf, "events").select(*cols), "value"
-        )
-        out = SR.rolling_avg_stream(ev, ["user_id"], "event_id", "value", n=10)
-        res = run_available_now(spark, out, _sink(), "update")
-    else:
-        ev = SZ.with_micro_units(
-            load_table(spark, sf, "events").select(*cols), "value"
-        )
-        res = SR.rolling_avg_batch(ev, ["user_id"], "event_id", "value", n=10)
-    return res.select("user_id", "event_id", "value", "roll_n", "roll_avg")
-
-
-def _q_s_ktable_latest_bucketed(spark: SparkSession, sf: str) -> DataFrame:
-    """S2 incremental. DUPLICATE PLAN: the bucketed processor
-    (streaming/ktable.py:_LatestPerKeyBucketed) at its default 16
-    buckets is the only layout, so this runs exactly what
-    s_ktable_latest runs, TWS and grouped-replay fallback alike. Same
-    oracle as s_ktable_latest."""
-    if tws_available(spark):
-        ev = load_stream(spark, sf, "events").select(
-            "user_id", "event_id", "value", "ts"
-        )
-        changelog = ktable_changelog_stream(
-            ev, ["user_id"], "ts", ["event_id", "value"]
-        )
-        table = run_available_now(spark, changelog, _sink(), "update")
-    else:
-        ev = load_table(spark, sf, "events").select(
-            "user_id", "event_id", "value", "ts"
-        )
-        table = ktable_changelog_batch(
-            ev, ["user_id"], "ts", ["event_id", "value"]
-        )
-    snap = ktable.latest_per_key(
-        table.filter(F.col("action") == "upsert"), ["user_id"], ["ts"],
-        payload=["new_event_id", "new_value"],
+    ev = SZ.with_micro_units(
+        _stateful_source(spark, sf, "events").select(
+            "user_id", "event_id", "value"
+        ),
+        "value",
     )
-    return snap.select(
-        "user_id",
-        F.col("new_event_id").alias("event_id"),
-        F.col("new_value").alias("value"),
+    out = SR.rolling_avg(ev, ["user_id"], "event_id", "value", n=10)
+    return _drain(spark, out).select(
+        "user_id", "event_id", "value", "roll_n", "roll_avg"
     )
 
 
@@ -3242,12 +3147,10 @@ def _q_s_windowed_join_ktime(spark: SparkSession, sf: str) -> DataFrame:
 def _run_wjk(spark: SparkSession, sf: str, n_buckets: int,
              bucket_fn=None) -> DataFrame:
     from kafka_streams_app_spark.streaming.windowed_join_ktime import (
-        windowed_join_per_topic_time_batch,
-        windowed_join_per_topic_time_stream,
+        windowed_join_per_topic_time,
     )
 
-    use_tws = tws_available(spark)
-    ev = (load_stream if use_tws else load_table)(spark, sf, "events")
+    ev = _stateful_source(spark, sf, "events")
     delay = (
         (F.col("event_id") * F.lit(2654435761)) % F.lit(4294967296) % 8 * 900
     )
@@ -3264,16 +3167,13 @@ def _run_wjk(spark: SparkSession, sf: str, n_buckets: int,
     right = base.filter(F.col("event_type") == "click").select(
         "key", "ts_s", "seq", "value"
     )
-    kwargs = dict(
-        key="key", ts="ts_s", seq="seq",
+    join = windowed_join_per_topic_time(
+        left, right, key="key", ts="ts_s", seq="seq",
         left_payload=["value"], right_payload=["value"],
         before_s=3600, after_s=3600, n_buckets=n_buckets,
         bucket_fn=bucket_fn,
     )
-    if use_tws:
-        join = windowed_join_per_topic_time_stream(left, right, **kwargs)
-        return run_available_now(spark, join, _sink(), "update")
-    return windowed_join_per_topic_time_batch(left, right, **kwargs)
+    return _drain(spark, join)
 
 
 def _q_s_windowed_join_ktime_multibucket(
@@ -3302,10 +3202,9 @@ def _q_s_pk_join_incremental(spark: SparkSession, sf: str) -> DataFrame:
     (same oracle as j5_table_join_inner). Falls back to the same state
     machine via applyInPandas grouped replay when TWS workers lack
     protobuf (streaming/replay.py)."""
-    from kafka_streams_app_spark.streaming.pk_join import pk_join_batch, pk_join_stream
+    from kafka_streams_app_spark.streaming.pk_join import pk_join
 
-    use_tws = tws_available(spark)
-    ev = (load_stream if use_tws else load_table)(spark, sf, "events")
+    ev = _stateful_source(spark, sf, "events")
     left = ev.filter(F.col("event_type") == "view").select(
         "user_id", F.col("event_id").alias("v_event_id"),
         F.unix_micros("ts").alias("seq"),
@@ -3314,55 +3213,13 @@ def _q_s_pk_join_incremental(spark: SparkSession, sf: str) -> DataFrame:
         "user_id", F.col("event_id").alias("c_event_id"),
         F.unix_micros("ts").alias("seq"),
     )
-    if use_tws:
-        join = pk_join_stream(
-            left, right, key="user_id",
-            left_payload=["v_event_id"], right_payload=["c_event_id"], how="inner",
-        )
-        table = run_available_now(spark, join, _sink(), "update")
-    else:
-        table = pk_join_batch(
-            left, right, key="user_id",
-            left_payload=["v_event_id"], right_payload=["c_event_id"], how="inner",
-        )
+    join = pk_join(
+        left, right, key="user_id",
+        left_payload=["v_event_id"], right_payload=["c_event_id"], how="inner",
+    )
     snap = ktable.latest_per_key(
-        table.filter(F.col("action") == "upsert"), ["user_id"], ["_seq"],
-        payload=["v_event_id", "c_event_id"],
-    )
-    return snap.select("user_id", "v_event_id", "c_event_id")
-
-
-def _q_s_pk_join_bucketed(spark: SparkSession, sf: str) -> DataFrame:
-    """J5 INCREMENTAL, bucket count spelled out as 16. DUPLICATE PLAN:
-    16 is the default and the bucketed processor
-    (streaming/pk_join.py:_PKJoinProcessorBucketed) is the only layout,
-    so this runs exactly what s_pk_join_incremental runs, TWS and
-    grouped-replay fallback alike. Same oracle as
-    s_pk_join_incremental."""
-    from kafka_streams_app_spark.streaming.pk_join import pk_join_batch, pk_join_stream
-
-    use_tws = tws_available(spark)
-    ev = (load_stream if use_tws else load_table)(spark, sf, "events")
-    left = ev.filter(F.col("event_type") == "view").select(
-        "user_id", F.col("event_id").alias("v_event_id"),
-        F.unix_micros("ts").alias("seq"),
-    )
-    right = ev.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("event_id").alias("c_event_id"),
-        F.unix_micros("ts").alias("seq"),
-    )
-    kwargs = dict(
-        key="user_id", left_payload=["v_event_id"],
-        right_payload=["c_event_id"], how="inner", n_buckets=16,
-    )
-    if use_tws:
-        join = pk_join_stream(left, right, **kwargs)
-        table = run_available_now(spark, join, _sink(), "update")
-    else:
-        table = pk_join_batch(left, right, **kwargs)
-    snap = ktable.latest_per_key(
-        table.filter(F.col("action") == "upsert"), ["user_id"], ["_seq"],
-        payload=["v_event_id", "c_event_id"],
+        _drain(spark, join).filter(F.col("action") == "upsert"),
+        ["user_id"], ["_seq"], payload=["v_event_id", "c_event_id"],
     )
     return snap.select("user_id", "v_event_id", "c_event_id")
 
@@ -3396,15 +3253,6 @@ def _q_s_fk_join_left_incremental(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _q_s_fk_join_bucketed(spark: SparkSession, sf: str) -> DataFrame:
-    """J7/J8 INCREMENTAL. DUPLICATE PLAN: the bucketed processors
-    (streaming/ktable.py:_LatestPerKeyBucketed for stage 1,
-    streaming/fk_join.py:_FKJoinProcessorBucketed for stage 2) are the
-    only layout, at their default 16 buckets, so this runs exactly what
-    s_fk_join_incremental runs. Same oracle as s_fk_join_incremental."""
-    return _fk_incremental_pipeline(spark, sf, how="inner")
-
-
 def _fk_incremental_pipeline(
     spark: SparkSession, sf: str, how: str,
     right_types: tuple[str, ...] | None = None,
@@ -3414,25 +3262,47 @@ def _fk_incremental_pipeline(
 
     from kafka_streams_app_spark.streaming.fk_join import (
         fk_instructions,
-        fk_join_changelog_batch,
-        fk_join_changelog_stream,
+        fk_join_changelog,
     )
 
-    use_tws = tws_available(spark)
-    load = load_stream if use_tws else load_table
-    left = load(spark, sf, "events").select(
+    left = _stateful_source(spark, sf, "events").select(
         F.col("user_id").alias("pk"), F.col("event_type").alias("fk"),
         F.col("value"), F.unix_micros("ts").alias("seq"),
     )
-    right = load(spark, sf, "events")
+    right = _stateful_source(spark, sf, "events")
     if right_types is not None:
         right = right.filter(F.col("event_type").isin(*right_types))
     right = right.select(
         F.col("event_type").alias("rk"), F.col("value").alias("rvalue"),
         F.unix_micros("ts").alias("seq"),
     )
-    if use_tws:
-        changelog = ktable_changelog_stream(left, ["pk"], "seq", ["fk", "value"])
+    changelog = ktable_changelog(left, ["pk"], "seq", ["fk", "value"])
+
+    def join(instr_src: DataFrame) -> DataFrame:
+        instr = fk_instructions(instr_src, "pk", "fk", ["fk", "value"], "seq")
+        # compact_rights=True (r16): only the FINAL right row per fk
+        # per micro-batch fans out — Kafka Streams' KTable cache
+        # compacts R_1..R_n to R_n within a commit interval, and this
+        # query reduces the changelog with latest_per_key(pk,
+        # (_seq,_minor)) below, where every compacted-away fan-out is
+        # superseded by a later kept emission for its pk (proof +
+        # randomized pin: tests/test_fk_fast_batch.py; oracle-identical
+        # at sf0.01/sf0.1). Cuts the fan-out volume ~40x at the sf0.1
+        # gate shape (5 fks x 1500 pks x 4 right rows/fk/batch).
+        return fk_join_changelog(
+            instr, right, right_key="rk", right_payload=["rvalue"],
+            right_seq="seq", right_tombstone=None,
+            left_value_cols=["value"], how=how,
+            compact_rights=True,
+        )
+
+    # This entry keeps its own fork: two Update-mode TWS operators
+    # cannot chain in one streaming query, so the streaming path hands
+    # stage 1's changelog to stage 2 through a parquet directory (Kafka's
+    # subscription-response topic); the batch replays chain directly.
+    if not tws_available(spark):
+        table = join(changelog)
+    else:
         # both staging dirs are transient: the memory sink returned by
         # run_available_now is fully materialized, so nothing reads
         # them after this block — clean up even on exception
@@ -3451,35 +3321,10 @@ def _fk_incremental_pipeline(
                 )
                 q1.awaitTermination()
             inter_src = spark.readStream.schema(changelog.schema).parquet(inter)
-            instr = fk_instructions(inter_src, "pk", "fk", ["fk", "value"], "seq")
-            # compact_rights=True (r16): only the FINAL right row per fk
-            # per micro-batch fans out — Kafka Streams' KTable cache
-            # compacts R_1..R_n to R_n within a commit interval, and this
-            # query reduces the changelog with latest_per_key(pk,
-            # (_seq,_minor)) below, where every compacted-away fan-out is
-            # superseded by a later kept emission for its pk (proof +
-            # randomized pin: tests/test_fk_fast_batch.py; oracle-identical
-            # at sf0.01/sf0.1). Cuts the fan-out volume ~40x at the sf0.1
-            # gate shape (5 fks x 1500 pks x 4 right rows/fk/batch).
-            join = fk_join_changelog_stream(
-                instr, right, right_key="rk", right_payload=["rvalue"],
-                right_seq="seq", right_tombstone=None,
-                left_value_cols=["value"], how=how,
-                compact_rights=True,
-            )
-            table = run_available_now(spark, join, _sink(), "update")
+            table = _drain(spark, join(inter_src))
         finally:
             shutil.rmtree(ckpt, ignore_errors=True)
             shutil.rmtree(inter, ignore_errors=True)
-    else:
-        changelog = ktable_changelog_batch(left, ["pk"], "seq", ["fk", "value"])
-        instr = fk_instructions(changelog, "pk", "fk", ["fk", "value"], "seq")
-        table = fk_join_changelog_batch(
-            instr, right, right_key="rk", right_payload=["rvalue"],
-            right_seq="seq", right_tombstone=None,
-            left_value_cols=["value"], how=how,
-            compact_rights=True,  # see the streaming branch's note
-        )
     snap = ktable.latest_per_key(
         table, ["pk"], ["_seq", "_minor"],
         payload=["action", "value", "r_rvalue"],
@@ -5886,8 +5731,9 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     # the batch winnowing posting-list self-join (exactly-once emission
     # contract, streaming/dedup_candidates.py)
     "s_winnow_candidates": (_q_s_winnow_candidates, _winnow_candidates_md5_sql()),
+    # DUPLICATE PLAN of s_winnow_candidates (_BucketPairsAuto is the only layout)
     "s_winnow_candidates_blob": (
-        _q_s_winnow_candidates_blob, _winnow_candidates_md5_sql()),
+        _q_s_winnow_candidates, _winnow_candidates_md5_sql()),
     "s_pq_assign": (_q_s_pq_assign, _pq_assign_sql()),
     "s_ivfpq_assign": (_q_s_ivfpq_assign, _ivfpq_assign_sql()),
     "s_ivfpq_search": (_q_s_ivfpq_search, _ivfpq_topk_sql(k=5)),
@@ -6160,7 +6006,8 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
             PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
           FROM events) WHERE rn = 1
     """),
-    "s_ktable_latest_bucketed": (_q_s_ktable_latest_bucketed, """
+    # DUPLICATE PLAN of s_ktable_latest (16 buckets is the only layout)
+    "s_ktable_latest_bucketed": (_q_s_ktable_latest, """
         SELECT user_id, event_id, value FROM (
           SELECT user_id, event_id, value, row_number() OVER (
             PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
@@ -6274,7 +6121,8 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
         )
         SELECT v.user_id, v_event_id, c_event_id FROM v JOIN c ON v.user_id = c.user_id
     """),
-    "s_pk_join_bucketed": (_q_s_pk_join_bucketed, """
+    # DUPLICATE PLAN of s_pk_join_incremental (16 buckets is the only layout)
+    "s_pk_join_bucketed": (_q_s_pk_join_incremental, """
         WITH v AS (
           SELECT user_id, event_id AS v_event_id FROM (
             SELECT user_id, event_id, row_number() OVER (
@@ -6288,7 +6136,8 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
         )
         SELECT v.user_id, v_event_id, c_event_id FROM v JOIN c ON v.user_id = c.user_id
     """),
-    "s_fk_join_bucketed": (_q_s_fk_join_bucketed, """
+    # DUPLICATE PLAN of s_fk_join_incremental (16 buckets is the only layout)
+    "s_fk_join_bucketed": (_q_s_fk_join_incremental, """
         WITH l AS (
           SELECT user_id, event_type, value FROM (
             SELECT user_id, event_type, value, row_number() OVER (

@@ -1139,13 +1139,13 @@ def embedding_dedup_candidates_stream(
     n_tables: int = 8,
 ) -> DataFrame:
     """Embedding near-dup pairs AT INGEST (r15) — the embedding-space
-    face of the at-ingest dedup family (winnow_candidates_stream is
+    face of the at-ingest dedup family (winnow_candidates is
     the text face; s_ivfpq_search the ANN-search face): each arriving
     vector probes a FROZEN sign-LSH index of the static corpus and
     its verified near-dup pairs land the moment it arrives, instead
     of in a nightly batch self-join.
 
-    Emission contract (the winnow_candidates_stream pattern): a pair
+    Emission contract (the winnow_candidates pattern): a pair
     (id_a < id_b) is emitted EXACTLY ONCE — when its LARGER member
     arrives (candidates are restricted to static ids < the arriving
     id, and cross-table duplicates collapse in the per-query set) —

@@ -52,6 +52,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from kafka_streams_app_spark.streaming.replay import run_stateful
+
 _STATE_SCHEMA = StructType([StructField("members", StringType(), True)])
 
 # Uncapped member lists are O(df^2) pair emission + full-rewrite state
@@ -303,7 +305,7 @@ def _bucketed(fps: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def winnow_candidates_stream(
+def winnow_candidates(
     df: DataFrame,
     text: str,
     id_col: str,
@@ -312,38 +314,15 @@ def winnow_candidates_stream(
     max_members: int | None = None,
     n_buckets: int = 128,
 ) -> DataFrame:
-    """Streaming near-dup candidate pairs over a document stream.
+    """Near-dup candidate pairs over a streaming or batch document
+    frame (streaming/replay.py:run_stateful).
 
     n_buckets: the stateful operator groups by pmod(xxhash64(fp),
     n_buckets) (see _BucketPairsAuto); the emitted set does not depend
     on it. The default 128 is the production dial (>= 2-4x total
     cores)."""
-    from kafka_streams_app_spark.streaming.ktable import _require_rocksdb
-
-    _require_rocksdb(df.sparkSession)
     fps = winnow_fingerprints(df, text, id_col, k=k, window=window)
-    return _bucketed(fps, n_buckets).groupBy("_b").transformWithStateInPandas(
-        statefulProcessor=_BucketPairsAuto(max_members),
-        outputStructType=_OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def winnow_candidates_batch(
-    df: DataFrame,
-    text: str,
-    id_col: str,
-    k: int = 5,
-    window: int = 4,
-    max_members: int | None = None,
-    n_buckets: int = 128,
-) -> DataFrame:
-    """Grouped-replay twin (streaming/replay.py) — the TWS-less path."""
-    from kafka_streams_app_spark.streaming.replay import grouped_replay
-
-    fps = winnow_fingerprints(df, text, id_col, k=k, window=window)
-    return grouped_replay(
+    return run_stateful(
         _bucketed(fps, n_buckets), ["_b"], _BucketPairsAuto(max_members),
         _OUT_SCHEMA,
     )

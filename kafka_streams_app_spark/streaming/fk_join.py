@@ -9,7 +9,7 @@ right-side task can answer lookups locally; an FK change re-routes the
 subscription. This module mirrors that architecture Spark-first:
 
   left raw changelog
-    -> ktable_changelog_stream (keyed by pk; emits old_fk/new_fk)   [query 1]
+    -> ktable_changelog (keyed by pk; emits old_fk/new_fk)   [query 1]
     -> fk_instructions (stateless flatMap: sub/unsub per FK change)
     -> union with tagged right changelog
     -> groupBy(hash bucket of fk) + transformWithStateInPandas       [query 2]
@@ -50,10 +50,8 @@ from kafka_streams_app_spark.streaming._pdnorm import (
     shield_long,
 )
 from kafka_streams_app_spark.streaming.harness import MicroBatchReplay
-from kafka_streams_app_spark.streaming.ktable import (
-    _require_rocksdb,
-    ktable_changelog_stream,
-)
+from kafka_streams_app_spark.streaming.ktable import ktable_changelog
+from kafka_streams_app_spark.streaming.replay import run_stateful
 
 KIND_SUB = "sub"
 KIND_UNSUB_MOVE = "unsub_move"      # FK changed: leave the old FK group
@@ -758,7 +756,7 @@ def _fk_join_plan(
     return unioned, proc, out_schema
 
 
-def fk_join_changelog_stream(
+def fk_join_changelog(
     instructions: DataFrame,
     right_raw: DataFrame,
     *,
@@ -778,54 +776,25 @@ def fk_join_changelog_stream(
     n_buckets: the stateful operator groups by
     pmod(xxhash64(fk), n_buckets) (see _FKJoinProcessorBucketed for the
     fan-out scan trade). The output does not depend on it.
+
+    Streaming inputs run TWS; batch inputs run grouped replay with the
+    same shuffle by fk bucket — Kafka's subscription topic — and only
+    the state backend (in-task memory vs RocksDB) differs
+    (streaming/replay.py:run_stateful).
     """
-    _require_rocksdb(instructions.sparkSession)
     unioned, proc, out_schema = _fk_join_plan(
         instructions, right_raw, right_key=right_key,
         right_payload=right_payload, right_seq=right_seq,
         right_tombstone=right_tombstone, left_value_cols=left_value_cols,
         how=how, n_buckets=n_buckets, compact_rights=compact_rights,
     )
-    return unioned.groupBy("_fkj_bucket").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def fk_join_changelog_batch(
-    instructions: DataFrame,
-    right_raw: DataFrame,
-    *,
-    right_key: str,
-    right_payload: list[str],
-    right_seq: str,
-    right_tombstone: str | None,
-    left_value_cols: list[str],
-    how: str = "inner",
-    n_buckets: int = 16,
-    compact_rights: bool = False,
-) -> DataFrame:
-    """Same FK-join state machine over BATCH changelog frames via
-    grouped replay (applyInPandas; no TWS/protobuf dependency). The
-    shuffle by fk bucket — Kafka's subscription topic — is identical;
-    only the state backend (in-task memory vs RocksDB) differs."""
-    from kafka_streams_app_spark.streaming.replay import grouped_replay
-
-    unioned, proc, out_schema = _fk_join_plan(
-        instructions, right_raw, right_key=right_key,
-        right_payload=right_payload, right_seq=right_seq,
-        right_tombstone=right_tombstone, left_value_cols=left_value_cols,
-        how=how, n_buckets=n_buckets, compact_rights=compact_rights,
-    )
-    return grouped_replay(unioned, ["_fkj_bucket"], proc, out_schema)
+    return run_stateful(unioned, ["_fkj_bucket"], proc, out_schema)
 
 
 class FKJoinReplay:
     """Two-query FK-join pipeline with TopologyTestDriver-style piping.
 
-    Query 1 (left KTable): left staging dir -> ktable_changelog_stream
+    Query 1 (left KTable): left staging dir -> ktable_changelog
     -> parquet intermediate (the "subscription response topic").
     Query 2 (join): intermediate + right staging dir -> fk instructions
     union right -> stateful FK join -> memory sink.
@@ -869,7 +838,7 @@ class FKJoinReplay:
                 .option("maxFilesPerTrigger", 1)
                 .parquet(self._left_staging)
             )
-            return ktable_changelog_stream(
+            return ktable_changelog(
                 left_src, [pk], "seq", left_payload, left_tombstone,
                 n_buckets=n_buckets,
             )
@@ -897,7 +866,7 @@ class FKJoinReplay:
                 .parquet(inter_dir)
             )
             instr = fk_instructions(inter, pk, fk, left_payload, "seq")
-            return fk_join_changelog_stream(
+            return fk_join_changelog(
                 instr,
                 right_src,
                 right_key=right_key,

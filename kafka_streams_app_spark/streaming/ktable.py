@@ -46,17 +46,11 @@ from kafka_streams_app_spark.streaming._pdnorm import (
     pykey,
     shield_long,
 )
+from kafka_streams_app_spark.streaming.replay import run_stateful
 
 # hash buckets of the stateful operator (the TWS grouping key of the
 # stream path; the replay groups of the batch path)
 _N_BUCKETS = 16
-
-
-def _require_rocksdb(spark) -> None:
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
 
 
 class _LatestPerKeyBucketed(StatefulProcessor):
@@ -256,7 +250,7 @@ def _shield_payload(df: DataFrame, payload: list[str]) -> DataFrame:
     )
 
 
-def ktable_changelog_stream(
+def ktable_changelog(
     df: DataFrame,
     keys: list[str],
     seq_col: str,
@@ -265,10 +259,12 @@ def ktable_changelog_stream(
     n_buckets: int = _N_BUCKETS,
     exact_longs: bool = False,
 ) -> DataFrame:
-    """Incremental latest-per-key view over a streaming changelog.
+    """Incremental latest-per-key view over a changelog.
 
-    df: streaming DataFrame of raw changelog records (key cols, payload
-    cols, a monotonic seq col, optionally a boolean tombstone col).
+    df: streaming or batch DataFrame of raw changelog records (key
+    cols, payload cols, a monotonic seq col, optionally a boolean
+    tombstone col); streaming runs TWS, batch runs grouped replay
+    (streaming/replay.py:run_stateful).
     Returns the derived changelog (KTable.toStream): one row per input
     update with columns keys..., action ('upsert'|'delete'),
     old_present (did the key hold a value before this update — lets
@@ -288,36 +284,10 @@ def ktable_changelog_stream(
     Off by default — the crossing is cheaper and the normalize step
     RAISES if an unshielded batch would actually have lost precision.
     """
-    _require_rocksdb(df.sparkSession)
     bucketed, proc, out_schema = _ktable_plan(
         df, keys, seq_col, payload, tombstone_col, n_buckets, exact_longs
     )
-    return bucketed.groupBy("_kt_bucket").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def ktable_changelog_batch(
-    df: DataFrame,
-    keys: list[str],
-    seq_col: str,
-    payload: list[str],
-    tombstone_col: str | None = None,
-    exact_longs: bool = False,
-) -> DataFrame:
-    """Same state machine over a BATCH changelog frame via grouped
-    replay (applyInPandas; no TWS/protobuf dependency) — emits the
-    identical changelog rows, one replay group per bucket of the stream
-    path's default count. See streaming/replay.py for when/why."""
-    from kafka_streams_app_spark.streaming.replay import grouped_replay
-
-    bucketed, proc, out_schema = _ktable_plan(
-        df, keys, seq_col, payload, tombstone_col, _N_BUCKETS, exact_longs
-    )
-    return grouped_replay(bucketed, ["_kt_bucket"], proc, out_schema)
+    return run_stateful(bucketed, ["_kt_bucket"], proc, out_schema)
 
 
 def changelog_to_intervals(
@@ -327,9 +297,9 @@ def changelog_to_intervals(
     payload: list[str],
 ) -> DataFrame:
     """Project a latest-per-key changelog (the output of
-    ktable_changelog_stream/_batch, with seq_col INCLUDED in its
-    payload so old_<seq_col> is available) into SCD2 interval EVENTS —
-    the incremental maintenance stream of operators/ktable.py:
+    ktable_changelog, with seq_col INCLUDED in its payload so
+    old_<seq_col> is available) into SCD2 interval EVENTS — the
+    incremental maintenance stream of operators/ktable.py:
     table_history:
 
     - every update with a prior value emits a CLOSE for the previous

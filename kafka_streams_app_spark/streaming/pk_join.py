@@ -49,7 +49,7 @@ from kafka_streams_app_spark.streaming._pdnorm import (
     pykey,
     shield_long,
 )
-from kafka_streams_app_spark.streaming.ktable import _require_rocksdb
+from kafka_streams_app_spark.streaming.replay import run_stateful
 
 
 class _PKJoinProcessorBucketed(StatefulProcessor):
@@ -275,7 +275,7 @@ def _pk_join_plan(
     return unioned, proc, out_schema
 
 
-def pk_join_stream(
+def pk_join(
     left_raw: DataFrame,
     right_raw: DataFrame,
     *,
@@ -288,10 +288,11 @@ def pk_join_stream(
     how: str = "inner",
     n_buckets: int = 16,
 ) -> DataFrame:
-    """Join two streaming table changelogs on their shared primary key.
+    """Join two table changelogs on their shared primary key.
 
-    Inputs are RAW changelog streams (key, payload cols, seq, optional
-    boolean tombstone col). Output: join changelog (key, action,
+    Inputs are RAW changelogs (key, payload cols, seq, optional boolean
+    tombstone col), both streaming (TWS) or both batch (grouped replay;
+    streaming/replay.py:run_stateful). Output: join changelog (key, action,
     left payload, right payload) — exactly the rows the reference's
     output-join topic carries.
 
@@ -299,40 +300,10 @@ def pk_join_stream(
     pmod(xxhash64(key), n_buckets) (see _PKJoinProcessorBucketed). The
     output does not depend on it. Pick >= 2-4x total cores.
     """
-    _require_rocksdb(left_raw.sparkSession)
     unioned, proc, out_schema = _pk_join_plan(
         left_raw, right_raw, key=key, left_payload=left_payload,
         right_payload=right_payload, seq=seq, left_tombstone=left_tombstone,
         right_tombstone=right_tombstone, how=how, n_buckets=n_buckets,
     )
-    return unioned.groupBy("_pkj_bucket").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
+    return run_stateful(unioned, ["_pkj_bucket"], proc, out_schema)
 
-
-def pk_join_batch(
-    left_raw: DataFrame,
-    right_raw: DataFrame,
-    *,
-    key: str,
-    left_payload: list[str],
-    right_payload: list[str],
-    seq: str = "seq",
-    left_tombstone: str | None = None,
-    right_tombstone: str | None = None,
-    how: str = "inner",
-    n_buckets: int = 16,
-) -> DataFrame:
-    """Same PK-join state machine over BATCH changelog frames via
-    grouped replay (applyInPandas; no TWS/protobuf dependency)."""
-    from kafka_streams_app_spark.streaming.replay import grouped_replay
-
-    unioned, proc, out_schema = _pk_join_plan(
-        left_raw, right_raw, key=key, left_payload=left_payload,
-        right_payload=right_payload, seq=seq, left_tombstone=left_tombstone,
-        right_tombstone=right_tombstone, how=how, n_buckets=n_buckets,
-    )
-    return grouped_replay(unioned, ["_pkj_bucket"], proc, out_schema)

@@ -1,23 +1,30 @@
-"""Grouped-replay execution of the streaming state machines WITHOUT
-transformWithStateInPandas (TWS).
+"""One dispatch for every stateful streaming operator: run_stateful
+picks transformWithStateInPandas (TWS) for a streaming input and
+grouped replay for a batch input.
 
-Why this exists: TWS spawns an extra protobuf-dependent Python worker
-(the state-server client). In this container google.protobuf only
-reaches workers through the _vendor PYTHONPATH shim injected BEFORE the
-JVM launches (engine._ensure_vendor_pythonpath). A SparkSession created
-by an external owner before that injection leaves TWS workers unable to
+Each operator module (streaming/ktable.py, pk_join.py, fk_join.py,
+dedup_candidates.py, rolling.py (trailing-n and trailing-horizon),
+zscore.py, sample.py, stream_table.py, windowed_join_ktime.py) builds its
+grouping columns, StatefulProcessor and output schema, then ends in
+run_stateful. The processors are deterministic in seq order, so the
+same state machine serves both inputs unchanged.
+
+Why the batch path exists: TWS spawns an extra protobuf-dependent
+Python worker (the state-server client). In this container
+google.protobuf only reaches workers through the _vendor PYTHONPATH
+shim injected BEFORE the JVM launches
+(engine._ensure_vendor_pythonpath). A SparkSession created by an
+external owner before that injection leaves TWS workers unable to
 import protobuf — they crash with "TransformWithStateInPySpark driver
-worker exited unexpectedly". Regular Arrow-batched applyInPandas has no
-protobuf dependency, so the SAME StatefulProcessor state machines
-(streaming/ktable.py, pk_join.py, fk_join.py, dedup_candidates.py) can
-be replayed per grouping key over a batch frame: groupBy(bucket)
+worker exited unexpectedly". tws_available probes for that; callers
+then load batch frames instead of streams. Regular Arrow-batched
+applyInPandas has no protobuf dependency, so grouped_replay runs the
+processor per grouping key over the batch frame: groupBy(bucket)
 shuffles each bucket's full changelog to one task, the processor runs
 once per bucket from empty state, and the emitted changelog is
-identical to what the incremental TWS run yields (the processors are
-deterministic in seq order).
+identical to what the incremental TWS run yields.
 
-This is the fallback path for the driver-gate contract entries only;
-tests pin the genuinely incremental multi-batch behavior through TWS
+Tests pin the genuinely incremental multi-batch behavior through TWS
 via MicroBatchReplay. Scale note: the replay is fully distributed (one
 shuffle on the grouping key, same as TWS's repartition), but it holds a
 bucket's whole history in one task — fine for snapshot reductions, not
@@ -119,6 +126,37 @@ def grouped_replay(
         return pd.concat(outs, ignore_index=True)
 
     return df.groupBy(*group_cols).applyInPandas(run, schema=out_schema)
+
+
+def _require_rocksdb(spark) -> None:
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
+
+
+def run_stateful(
+    df: DataFrame,
+    group_cols: list[str],
+    processor,
+    out_schema: StructType,
+    output_mode: str = "Update",
+) -> DataFrame:
+    """Run a StatefulProcessor over df grouped by group_cols.
+
+    A streaming df runs incrementally through transformWithStateInPandas
+    on the RocksDB state store (output_mode is its TWS output mode); a
+    batch df runs through grouped_replay, which emits the same rows.
+    """
+    if not df.isStreaming:
+        return grouped_replay(df, group_cols, processor, out_schema)
+    _require_rocksdb(df.sparkSession)
+    return df.groupBy(*group_cols).transformWithStateInPandas(
+        statefulProcessor=processor,
+        outputStructType=out_schema,
+        outputMode=output_mode,
+        timeMode="None",
+    )
 
 
 _TWS_PROBE_CACHE: dict[str, bool] = {}

@@ -43,6 +43,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from kafka_streams_app_spark.streaming.replay import run_stateful
+
 _U = 1_000_000
 
 _LOG = logging.getLogger(__name__)
@@ -109,41 +111,19 @@ def _prepared(df, keys, seq_col, value_col):
     return df.select(*needed).na.drop(subset=keys)
 
 
-def rolling_avg_stream(
+def rolling_avg(
     df: DataFrame,
     keys: list[str],
     seq_col: str,
     value_col: str,
     n: int = 10,
 ) -> DataFrame:
-    """Incremental trailing-n rolling average over a streaming
-    DataFrame carrying zscore.with_micro_units' `zu` column."""
-    from kafka_streams_app_spark.streaming.ktable import _require_rocksdb
-
-    _require_rocksdb(df.sparkSession)
+    """Incremental trailing-n rolling average over a streaming or batch
+    DataFrame carrying zscore.with_micro_units' `zu` column
+    (streaming/replay.py:run_stateful)."""
     df = _prepared(df, keys, seq_col, value_col)
     proc, out_schema = _plan(df, keys, seq_col, value_col, n)
-    return df.groupBy(*keys).transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def rolling_avg_batch(
-    df: DataFrame,
-    keys: list[str],
-    seq_col: str,
-    value_col: str,
-    n: int = 10,
-) -> DataFrame:
-    """Grouped-replay twin (streaming/replay.py) — the TWS-less path."""
-    from kafka_streams_app_spark.streaming.replay import grouped_replay
-
-    df = _prepared(df, keys, seq_col, value_col)
-    proc, out_schema = _plan(df, keys, seq_col, value_col, n)
-    return grouped_replay(df, keys, proc, out_schema)
+    return run_stateful(df, keys, proc, out_schema)
 
 
 _TIME_STATE_SCHEMA = StructType([StructField("ring", StringType(), True)])
@@ -252,7 +232,7 @@ class _TimeRollingAvg(StatefulProcessor):
                 # no 'maxts|' head; int(blob) would crash opaquely, so
                 # name the incompatibility instead (r13 ADVICE)
                 raise ValueError(
-                    "rolling_time_avg_stream: incompatible state format "
+                    "rolling_time_avg: incompatible state format "
                     f"(legacy ring blob {blob[:40]!r}... without the "
                     "'maxts|' head, written by a pre-out-of-order "
                     "version); restart from a fresh checkpoint"
@@ -263,7 +243,7 @@ class _TimeRollingAvg(StatefulProcessor):
                     parts = x.split(":", 3)
                     if len(parts) != 4:
                         raise ValueError(
-                            "rolling_time_avg_stream: incompatible state "
+                            "rolling_time_avg: incompatible state "
                             f"format (ring entry {x!r} is not "
                             "'t:q:u:vhex'; written by a pre-out-of-order "
                             "version); restart from a fresh checkpoint"
@@ -282,7 +262,7 @@ class _TimeRollingAvg(StatefulProcessor):
             if max_ts is not None and ts_s < max_ts - self.lateness_s:
                 if self.on_late == "fail":
                     raise ValueError(
-                        f"rolling_time_avg_stream: record (ts_s={ts_s}, "
+                        f"rolling_time_avg: record (ts_s={ts_s}, "
                         f"{self.seq_col}={seq}) arrived {max_ts - ts_s}s "
                         f"behind per-key stream time {max_ts}, beyond "
                         f"lateness_s={self.lateness_s}; its frame may "
@@ -355,7 +335,7 @@ def _time_prepared(df, keys, seq_col, ts_col, value_col):
     return df.select(*needed).na.drop(subset=keys)
 
 
-def rolling_time_avg_stream(
+def rolling_time_avg(
     df: DataFrame,
     keys: list[str],
     seq_col: str,
@@ -366,8 +346,9 @@ def rolling_time_avg_stream(
     on_late: str = "dead_letter",
 ) -> DataFrame:
     """Incremental trailing-horizon rolling aggregate over a streaming
-    DataFrame carrying zscore.with_micro_units' `zu` column and an
-    integer epoch-seconds `ts_col`.
+    or batch DataFrame (streaming/replay.py:run_stateful) carrying
+    zscore.with_micro_units' `zu` column and an integer epoch-seconds
+    `ts_col`.
 
     lateness_s bounds tolerated cross-batch event-time disorder: late
     rows within it are bisect-inserted and already-emitted frames they
@@ -376,36 +357,9 @@ def rolling_time_avg_stream(
     are dead-lettered (win_n = -1 marker rows, countable downstream,
     plus an executor-side WARNING log per affected key-batch)
     by default, or fail fast with on_late='fail'."""
-    from kafka_streams_app_spark.streaming.ktable import _require_rocksdb
-
-    _require_rocksdb(df.sparkSession)
     df = _time_prepared(df, keys, seq_col, ts_col, value_col)
     proc, out_schema = _time_plan(
         df, keys, seq_col, ts_col, value_col, horizon_s, lateness_s, on_late
     )
-    return df.groupBy(*keys).transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
+    return run_stateful(df, keys, proc, out_schema)
 
-
-def rolling_time_avg_batch(
-    df: DataFrame,
-    keys: list[str],
-    seq_col: str,
-    ts_col: str,
-    value_col: str,
-    horizon_s: int = 300,
-    lateness_s: int = 0,
-    on_late: str = "dead_letter",
-) -> DataFrame:
-    """Grouped-replay twin (streaming/replay.py) — the TWS-less path."""
-    from kafka_streams_app_spark.streaming.replay import grouped_replay
-
-    df = _time_prepared(df, keys, seq_col, ts_col, value_col)
-    proc, out_schema = _time_plan(
-        df, keys, seq_col, ts_col, value_col, horizon_s, lateness_s, on_late
-    )
-    return grouped_replay(df, keys, proc, out_schema)

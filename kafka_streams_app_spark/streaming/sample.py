@@ -48,6 +48,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from kafka_streams_app_spark.streaming.replay import run_stateful
+
 _STATE_SCHEMA = StructType([StructField("members", StringType(), True)])
 
 
@@ -127,38 +129,17 @@ def _out_schema(df: DataFrame, strata_col: str, id_col: str) -> StructType:
     )
 
 
-def sample_topk_stream(
+def sample_topk(
     df: DataFrame,
     strata_col: str,
     id_col: str,
     k: int = 20,
     seed: int = 0,
 ) -> DataFrame:
-    """Changelog of the per-stratum bottom-k md5-rank sample."""
-    from kafka_streams_app_spark.streaming.ktable import _require_rocksdb
-
-    _require_rocksdb(df.sparkSession)
+    """Changelog of the per-stratum bottom-k md5-rank sample, over a
+    streaming or batch frame (streaming/replay.py:run_stateful)."""
     df = _prepared(df, strata_col, id_col, seed)
-    return df.groupBy(strata_col).transformWithStateInPandas(
-        statefulProcessor=_BottomK(strata_col, id_col, k),
-        outputStructType=_out_schema(df, strata_col, id_col),
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def sample_topk_batch(
-    df: DataFrame,
-    strata_col: str,
-    id_col: str,
-    k: int = 20,
-    seed: int = 0,
-) -> DataFrame:
-    """Grouped-replay twin (streaming/replay.py) — the TWS-less path."""
-    from kafka_streams_app_spark.streaming.replay import grouped_replay
-
-    df = _prepared(df, strata_col, id_col, seed)
-    return grouped_replay(
+    return run_stateful(
         df, [strata_col], _BottomK(strata_col, id_col, k),
         _out_schema(df, strata_col, id_col),
     )

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.types import StructField, StructType
 
-from kafka_streams_app_spark.streaming.ktable import _require_rocksdb
+from kafka_streams_app_spark.streaming.replay import run_stateful
 
 
 class _StreamTableJoinProcessor(StatefulProcessor):
@@ -129,7 +129,7 @@ def _stream_table_plan(
     return unioned, proc, out_schema
 
 
-def stream_table_join_stream(
+def stream_table_join(
     stream: DataFrame,
     table_raw: DataFrame,
     *,
@@ -140,39 +140,13 @@ def stream_table_join_stream(
     table_tombstone: str | None = None,
     how: str = "inner",
 ) -> DataFrame:
-    """Incremental J4 over STREAMING inputs (transformWithStateInPandas)."""
-    _require_rocksdb(stream.sparkSession)
+    """Incremental J4: both inputs streaming (TWS, Append mode — only
+    stream rows emit, and never retract) or both batch (grouped replay;
+    streaming/replay.py:run_stateful)."""
     unioned, proc, out_schema = _stream_table_plan(
         stream, table_raw, key=key, stream_payload=stream_payload,
         table_payload=table_payload, seq=seq,
         table_tombstone=table_tombstone, how=how,
     )
-    return unioned.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="None",
-    )
+    return run_stateful(unioned, [key], proc, out_schema, output_mode="Append")
 
-
-def stream_table_join_batch(
-    stream: DataFrame,
-    table_raw: DataFrame,
-    *,
-    key: str,
-    stream_payload: list[str],
-    table_payload: list[str],
-    seq: str = "seq",
-    table_tombstone: str | None = None,
-    how: str = "inner",
-) -> DataFrame:
-    """Same state machine over BATCH frames via grouped replay
-    (applyInPandas; no TWS/protobuf dependency — streaming/replay.py)."""
-    from kafka_streams_app_spark.streaming.replay import grouped_replay
-
-    unioned, proc, out_schema = _stream_table_plan(
-        stream, table_raw, key=key, stream_payload=stream_payload,
-        table_payload=table_payload, seq=seq,
-        table_tombstone=table_tombstone, how=how,
-    )
-    return grouped_replay(unioned, [key], proc, out_schema)

@@ -59,7 +59,7 @@ from kafka_streams_app_spark.streaming._pdnorm import (
     pynative,
     shield_long,
 )
-from kafka_streams_app_spark.streaming.ktable import _require_rocksdb
+from kafka_streams_app_spark.streaming.replay import run_stateful
 
 SIDE_L, SIDE_R = "l", "r"
 
@@ -272,7 +272,7 @@ def _plan(
     return unioned, proc, out_schema
 
 
-def windowed_join_per_topic_time_batch(
+def windowed_join_per_topic_time(
     left: DataFrame,
     right: DataFrame,
     *,
@@ -286,45 +286,13 @@ def windowed_join_per_topic_time_batch(
     n_buckets: int = 1,
     bucket_fn=None,
 ) -> DataFrame:
-    """Batch replay of the per-topic-stream-time windowed inner join
-    over arrival order `seq` (grouped replay; same processor as the
-    streaming path)."""
-    from kafka_streams_app_spark.streaming.replay import grouped_replay
-
+    """Per-topic-stream-time windowed inner join over arrival order
+    `seq`; state = two window stores + per-side stream time per bucket.
+    Streaming inputs carry that state across micro-batches (TWS); batch
+    inputs replay it per bucket (streaming/replay.py:run_stateful)."""
     unioned, proc, out_schema = _plan(
         left, right, key=key, ts=ts, seq=seq, left_payload=left_payload,
         right_payload=right_payload, before_s=before_s, after_s=after_s,
         n_buckets=n_buckets, bucket_fn=bucket_fn,
     )
-    return grouped_replay(unioned, ["_wjk_bucket"], proc, out_schema)
-
-
-def windowed_join_per_topic_time_stream(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    key: str,
-    ts: str,
-    seq: str,
-    left_payload: list[str],
-    right_payload: list[str],
-    before_s: int,
-    after_s: int,
-    n_buckets: int = 1,
-    bucket_fn=None,
-) -> DataFrame:
-    """Streaming (transformWithStateInPandas) per-topic-stream-time
-    windowed inner join; state = two window stores + per-side stream
-    time per bucket, carried across micro-batches."""
-    _require_rocksdb(left.sparkSession)
-    unioned, proc, out_schema = _plan(
-        left, right, key=key, ts=ts, seq=seq, left_payload=left_payload,
-        right_payload=right_payload, before_s=before_s, after_s=after_s,
-        n_buckets=n_buckets, bucket_fn=bucket_fn,
-    )
-    return unioned.groupBy("_wjk_bucket").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
+    return run_stateful(unioned, ["_wjk_bucket"], proc, out_schema)

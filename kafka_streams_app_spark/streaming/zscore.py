@@ -56,6 +56,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from kafka_streams_app_spark.streaming.replay import run_stateful
+
 _U = 1_000_000
 
 
@@ -152,41 +154,18 @@ def _prepared(df, keys, seq_col, value_col):
     return df.select(*needed).na.drop(subset=keys)
 
 
-def zscore_running_stream(
+def zscore_running(
     df: DataFrame,
     keys: list[str],
     seq_col: str,
     value_col: str,
     z: tuple[int, int] = (3, 1),
 ) -> DataFrame:
-    """Incremental per-key running z-score over a streaming DataFrame
-    that already carries the `with_micro_units` columns. Emits one row
-    per record whose |z| vs the inclusive running moments is >=
-    z[0]/z[1], with the exact integer score zsq_e6 = floor(z² · 10⁶)."""
-    from kafka_streams_app_spark.streaming.ktable import _require_rocksdb
-
-    _require_rocksdb(df.sparkSession)
+    """Incremental per-key running z-score over a streaming or batch
+    DataFrame (streaming/replay.py:run_stateful) that already carries
+    the `with_micro_units` columns. Emits one row per record whose |z|
+    vs the inclusive running moments is >= z[0]/z[1], with the exact
+    integer score zsq_e6 = floor(z² · 10⁶)."""
     df = _prepared(df, keys, seq_col, value_col)
     proc, out_schema = _plan(df, keys, seq_col, value_col, *z)
-    return df.groupBy(*keys).transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def zscore_running_batch(
-    df: DataFrame,
-    keys: list[str],
-    seq_col: str,
-    value_col: str,
-    z: tuple[int, int] = (3, 1),
-) -> DataFrame:
-    """Grouped-replay twin (streaming/replay.py): the SAME state
-    machine over a batch frame — the TWS-less fallback path."""
-    from kafka_streams_app_spark.streaming.replay import grouped_replay
-
-    df = _prepared(df, keys, seq_col, value_col)
-    proc, out_schema = _plan(df, keys, seq_col, value_col, *z)
-    return grouped_replay(df, keys, proc, out_schema)
+    return run_stateful(df, keys, proc, out_schema)

@@ -92,7 +92,7 @@ def test_tws_ktable_state_survives_restart(spark, n_buckets):
     with the OLD payload (RocksDB state restored), not a fresh insert.
     Recovery restores a MapState whose entries span multiple logical
     keys per grouping key (bucket)."""
-    from kafka_streams_app_spark.streaming.ktable import ktable_changelog_stream
+    from kafka_streams_app_spark.streaming.ktable import ktable_changelog
     from kafka_streams_app_spark.streaming.replay import tws_available
 
     if not tws_available(spark):
@@ -105,7 +105,7 @@ def test_tws_ktable_state_survives_restart(spark, n_buckets):
 
     def start():
         src = spark.readStream.schema(schema).parquet(staging)
-        changelog = ktable_changelog_stream(
+        changelog = ktable_changelog(
             src, ["user_id"], "event_id", ["event_id", "value"],
             n_buckets=n_buckets,
         )
@@ -152,7 +152,7 @@ def test_tws_pk_join_state_survives_restart(spark, n_buckets):
     """PK-join state (both sides) restored across a restart: a right
     row arriving after the restart joins the LEFT value written before
     it. Covers the bucketed layout's two recovered MapStates."""
-    from kafka_streams_app_spark.streaming.pk_join import pk_join_stream
+    from kafka_streams_app_spark.streaming.pk_join import pk_join
     from kafka_streams_app_spark.streaming.replay import tws_available
     from pyspark.sql import functions as F
 
@@ -168,7 +168,7 @@ def test_tws_pk_join_state_survives_restart(spark, n_buckets):
         src = spark.readStream.schema(schema).parquet(staging)
         left = src.filter(F.col("side") == "l").select("key", "lval", "seq")
         right = src.filter(F.col("side") == "r").select("key", "rval", "seq")
-        join = pk_join_stream(
+        join = pk_join(
             left, right, key="key", left_payload=["lval"],
             right_payload=["rval"], how="inner", n_buckets=n_buckets,
         )

@@ -26,7 +26,7 @@ def _doc(i: int, extra: str) -> tuple[int, str]:
 
 
 def _build(max_members=None):
-    return lambda src: DC.winnow_candidates_stream(
+    return lambda src: DC.winnow_candidates(
         src, "text", "doc_id", max_members=max_members
     )
 
@@ -112,7 +112,7 @@ def test_stream_equals_replay_equals_batch_on_documents(spark):
     assert len(expected) > 0
     replay = sorted(
         tuple(r)
-        for r in DC.winnow_candidates_batch(
+        for r in DC.winnow_candidates(
             spark.createDataFrame(rows, SCHEMA), "text", "doc_id"
         ).collect()
     )
@@ -201,7 +201,7 @@ def test_winnow_candidates_survive_restart(spark):
 
     def start():
         src = spark.readStream.schema(SCHEMA).parquet(staging)
-        out = DC.winnow_candidates_stream(src, "text", "doc_id", n_buckets=4)
+        out = DC.winnow_candidates(src, "text", "doc_id", n_buckets=4)
 
         # parquet refuses update mode; foreachBatch-append is the
         # fault-tolerant sink (same pattern as run_available_now)
@@ -306,14 +306,14 @@ def test_auto_layout_same_pair_set_mixed_ingest(spark):
     for nb in (1, 4, 128):
         got = sorted(
             tuple(r)
-            for r in DC.winnow_candidates_batch(
+            for r in DC.winnow_candidates(
                 df, "text", "doc_id", n_buckets=nb
             ).collect()
         )
         assert got == expected, f"n_buckets={nb}"
         got_capped = sorted(
             tuple(r)
-            for r in DC.winnow_candidates_batch(
+            for r in DC.winnow_candidates(
                 df, "text", "doc_id", n_buckets=nb, max_members=2
             ).collect()
         )
@@ -322,7 +322,7 @@ def test_auto_layout_same_pair_set_mixed_ingest(spark):
     def stream(split):
         with MicroBatchReplay(
             spark, SCHEMA,
-            lambda src: DC.winnow_candidates_stream(
+            lambda src: DC.winnow_candidates(
                 src, "text", "doc_id", n_buckets=4
             ),
             "update",
@@ -451,7 +451,7 @@ def _run_restart_phases(spark, phase1_docs, phase2_docs):
 
     def start():
         src = spark.readStream.schema(SCHEMA).parquet(staging)
-        out = DC.winnow_candidates_stream(src, "text", "doc_id", n_buckets=1)
+        out = DC.winnow_candidates(src, "text", "doc_id", n_buckets=1)
 
         def write(bdf, _bid):
             bdf.write.mode("append").parquet(out_dir)

@@ -121,7 +121,7 @@ def test_chunk_and_ktime_join_on_empty(spark, empty_docs):
     columns; the per-topic-time join handles an empty side and two
     empty sides without error."""
     from kafka_streams_app_spark.streaming.windowed_join_ktime import (
-        windowed_join_per_topic_time_batch,
+        windowed_join_per_topic_time,
     )
 
     chunks = pipeline.chunk_documents(empty_docs)
@@ -136,9 +136,9 @@ def test_chunk_and_ktime_join_on_empty(spark, empty_docs):
     kwargs = dict(key="key", ts="ts_s", seq="seq",
                   left_payload=["v"], right_payload=["v"],
                   before_s=10, after_s=10)
-    assert windowed_join_per_topic_time_batch(one, empty, **kwargs).count() == 0
-    assert windowed_join_per_topic_time_batch(empty, one, **kwargs).count() == 0
-    assert windowed_join_per_topic_time_batch(empty, empty, **kwargs).count() == 0
+    assert windowed_join_per_topic_time(one, empty, **kwargs).count() == 0
+    assert windowed_join_per_topic_time(empty, one, **kwargs).count() == 0
+    assert windowed_join_per_topic_time(empty, empty, **kwargs).count() == 0
 
 
 def test_pq_family_empty_queries_and_hard_negatives(spark, empty_emb, sf_dir):

@@ -191,7 +191,7 @@ def test_fk_bucketed_equals_perfk_random(spark, how, with_mutations, seed):
     import random
 
     from kafka_streams_app_spark.streaming.fk_join import (
-        fk_join_changelog_batch,
+        fk_join_changelog,
     )
 
     rng = random.Random(814 + seed * 7 + (1 if with_mutations else 0))
@@ -220,7 +220,7 @@ def test_fk_bucketed_equals_perfk_random(spark, how, with_mutations, seed):
         right, "rk string, rank int, is_delete boolean, seq long")
 
     def run(n_buckets):
-        out = fk_join_changelog_batch(
+        out = fk_join_changelog(
             instr_df, right_df, right_key="rk", right_payload=["rank"],
             right_seq="seq", right_tombstone="is_delete",
             left_value_cols=["name"], how=how, n_buckets=n_buckets,

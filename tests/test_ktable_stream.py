@@ -2,7 +2,7 @@
 
 Replays the reference's table-changelog sequences
 (TopologiesTest.scala:219-239 piping updates and tombstones) through
-ktable_changelog_stream and asserts the emitted changelog rows.
+ktable_changelog and asserts the emitted changelog rows.
 
 Run through the bucketed MapState layout (n_buckets=4): the changelog
 contract must hold across micro-batches (state carry-in/out) and
@@ -14,7 +14,7 @@ from __future__ import annotations
 import pytest
 
 from kafka_streams_app_spark.streaming.harness import MicroBatchReplay
-from kafka_streams_app_spark.streaming.ktable import ktable_changelog_stream
+from kafka_streams_app_spark.streaming.ktable import ktable_changelog
 
 SCHEMA = "key string, merchant string, name string, is_delete boolean, seq long"
 
@@ -22,7 +22,7 @@ SCHEMA = "key string, merchant string, name string, is_delete boolean, seq long"
 def _replay(spark, n_buckets):
     return MicroBatchReplay(
         spark, SCHEMA,
-        lambda src: ktable_changelog_stream(
+        lambda src: ktable_changelog(
             src, ["key"], "seq", ["merchant", "name"], "is_delete",
             n_buckets=n_buckets,
         ),
@@ -109,7 +109,7 @@ def test_ktable_int64_payload_precision(spark, n_buckets):
     through float64 (ADVICE r5), silently corrupting such values."""
     with MicroBatchReplay(
         spark, "key bigint, big bigint, is_delete boolean, seq bigint",
-        lambda src: ktable_changelog_stream(
+        lambda src: ktable_changelog(
             src, ["key"], "seq", ["big"], "is_delete", n_buckets=n_buckets,
         ),
         "update",
@@ -135,7 +135,7 @@ def test_ktable_exact_longs_null_mixed_batch(spark, n_buckets):
     normalize step raises rather than emit silently-wrong rows."""
     with MicroBatchReplay(
         spark, "key bigint, big bigint, is_delete boolean, seq bigint",
-        lambda src: ktable_changelog_stream(
+        lambda src: ktable_changelog(
             src, ["key"], "seq", ["big"], "is_delete", n_buckets=n_buckets,
             exact_longs=True,
         ),
@@ -159,13 +159,13 @@ def test_ktable_unshielded_null_mixed_batch_raises(spark):
     """Without exact_longs, a null-mixed batch whose int64 values sit
     above 2^53 must FAIL LOUDLY (the values were already rounded by the
     Arrow crossing) instead of emitting corrupted rows."""
-    from kafka_streams_app_spark.streaming.ktable import ktable_changelog_batch
+    from kafka_streams_app_spark.streaming.ktable import ktable_changelog
 
     df = spark.createDataFrame(
         [(1, BIG, False, 0), (1, None, False, 1)],
         "key bigint, big bigint, is_delete boolean, seq bigint",
     )
-    out = ktable_changelog_batch(df, ["key"], "seq", ["big"], "is_delete")
+    out = ktable_changelog(df, ["key"], "seq", ["big"], "is_delete")
     with pytest.raises(Exception, match="2\\^53|corrupted"):
         out.collect()
 
@@ -181,7 +181,7 @@ def test_ktable_null_key_records_dropped(spark, n_buckets):
     modes must drop the null-key row and keep BIG exact."""
     with MicroBatchReplay(
         spark, "key bigint, v string, is_delete boolean, seq bigint",
-        lambda src: ktable_changelog_stream(
+        lambda src: ktable_changelog(
             src, ["key"], "seq", ["v"], "is_delete", n_buckets=n_buckets,
         ),
         "update",
@@ -209,14 +209,14 @@ def test_changelog_to_intervals_cross_batch_and_tombstone(spark):
     from kafka_streams_app_spark.operators.ktable import table_history
     from kafka_streams_app_spark.streaming.ktable import (
         changelog_to_intervals,
-        ktable_changelog_stream,
+        ktable_changelog,
     )
 
     schema = "key string, name string, is_delete boolean, seq long"
     payload = ["name", "seq"]
 
     def build(src):
-        ch = ktable_changelog_stream(src, ["key"], "seq", payload, "is_delete")
+        ch = ktable_changelog(src, ["key"], "seq", payload, "is_delete")
         return changelog_to_intervals(ch, ["key"], "seq", payload)
 
     with MicroBatchReplay(spark, schema, build, "update") as r:

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka_streams_app_spark.streaming.harness import MicroBatchReplay
-from kafka_streams_app_spark.streaming.pk_join import pk_join_stream
+from kafka_streams_app_spark.streaming.pk_join import pk_join
 
 # one physical source carrying both changelogs, split by `side`
 SCHEMA = ("key string, side string, merchant string, name string, rank int, "
@@ -24,7 +24,7 @@ def build(how: str, n_buckets: int = 16):
         right = src.filter(F.col("side") == "r").select(
             "key", "rank", "is_delete", "seq"
         )
-        return pk_join_stream(
+        return pk_join(
             left, right,
             key="key", left_payload=["merchant", "name"], right_payload=["rank"],
             left_tombstone="is_delete", right_tombstone="is_delete", how=how,
@@ -90,7 +90,7 @@ def test_pk_join_int64_payload_precision(spark, n_buckets):
             "key", "big", "is_delete", "seq")
         right = src.filter(F.col("side") == "r").select(
             "key", "rank", "is_delete", "seq")
-        return pk_join_stream(
+        return pk_join(
             left, right, key="key", left_payload=["big"],
             right_payload=["rank"], left_tombstone="is_delete",
             right_tombstone="is_delete", how="inner", n_buckets=n_buckets,
@@ -122,7 +122,7 @@ def test_pk_join_bucketed_equals_perkey_random(spark, how, with_deletes):
     tests/test_pk_fast_batch.py."""
     import random
 
-    from kafka_streams_app_spark.streaming.pk_join import pk_join_batch
+    from kafka_streams_app_spark.streaming.pk_join import pk_join
 
     rng = random.Random(20260814 + (1 if with_deletes else 0))
     rows = []
@@ -141,7 +141,7 @@ def test_pk_join_bucketed_equals_perkey_random(spark, how, with_deletes):
         "key", "rank", "is_delete", "seq")
 
     def run(n_buckets):
-        out = pk_join_batch(
+        out = pk_join(
             left, right, key="key", left_payload=["merchant", "name"],
             right_payload=["rank"], left_tombstone="is_delete",
             right_tombstone="is_delete", how=how, n_buckets=n_buckets,

@@ -12,7 +12,7 @@ SCHEMA = "k string, seq long, v double"
 
 
 def _build(n):
-    return lambda src: SR.rolling_avg_stream(
+    return lambda src: SR.rolling_avg(
         SZ.with_micro_units(src, "v"), ["k"], "seq", "v", n=n
     )
 
@@ -48,7 +48,7 @@ def test_stream_equals_grouped_replay_and_batch_window(spark):
     ev = SZ.with_micro_units(base, "value")
     replay = sorted(
         tuple(r)
-        for r in SR.rolling_avg_batch(
+        for r in SR.rolling_avg(
             ev, ["user_id"], "event_id", "value", n=10
         ).collect()
     )
@@ -71,7 +71,7 @@ def test_stream_equals_grouped_replay_and_batch_window(spark):
     with MicroBatchReplay(
         spark,
         "user_id long, event_id long, value double",
-        lambda src: SR.rolling_avg_stream(
+        lambda src: SR.rolling_avg(
             SZ.with_micro_units(src, "value"),
             ["user_id"], "event_id", "value", n=10,
         ),
@@ -93,7 +93,7 @@ def test_time_ring_carries_and_evicts_across_micro_batches(spark):
     schema = "k string, seq long, ts_s long, v double"
 
     def build(src):
-        return SR.rolling_time_avg_stream(
+        return SR.rolling_time_avg(
             SZ.with_micro_units(src, "v"), ["k"], "seq", "ts_s", "v",
             horizon_s=100,
         )
@@ -125,7 +125,7 @@ def test_time_stream_equals_grouped_replay_on_events(spark):
     ev = SZ.with_micro_units(base, "value")
     replay = sorted(
         tuple(r)
-        for r in SR.rolling_time_avg_batch(
+        for r in SR.rolling_time_avg(
             ev, ["user_id"], "event_id", "ts_s", "value", horizon_s=300
         ).collect()
     )
@@ -137,7 +137,7 @@ def test_time_stream_equals_grouped_replay_on_events(spark):
     with MicroBatchReplay(
         spark,
         "user_id long, event_id long, ts_s long, value double",
-        lambda src: SR.rolling_time_avg_stream(
+        lambda src: SR.rolling_time_avg(
             SZ.with_micro_units(src, "value"),
             ["user_id"], "event_id", "ts_s", "value", horizon_s=300,
         ),
@@ -160,7 +160,7 @@ def test_time_late_row_corrects_already_emitted_frames(spark):
     schema = "k string, seq long, ts_s long, v double"
 
     def build(src):
-        return SR.rolling_time_avg_stream(
+        return SR.rolling_time_avg(
             SZ.with_micro_units(src, "v"), ["k"], "seq", "ts_s", "v",
             horizon_s=100, lateness_s=100,
         )
@@ -194,14 +194,14 @@ def test_time_out_of_order_stream_converges_to_batch(spark):
     )
     expected = {
         r["seq"]: (r["win_n"], r["win_sum"], r["win_avg"])
-        for r in SR.rolling_time_avg_batch(
+        for r in SR.rolling_time_avg(
             SZ.with_micro_units(batch_src, "v"), ["k"], "seq", "ts_s", "v",
             horizon_s=50, lateness_s=200,
         ).collect()
     }
 
     def build(src):
-        return SR.rolling_time_avg_stream(
+        return SR.rolling_time_avg(
             SZ.with_micro_units(src, "v"), ["k"], "seq", "ts_s", "v",
             horizon_s=50, lateness_s=200,
         )
@@ -229,7 +229,7 @@ def test_time_beyond_lateness_fails_fast(spark):
     schema = "k string, seq long, ts_s long, v double"
 
     def build(src):
-        return SR.rolling_time_avg_stream(
+        return SR.rolling_time_avg(
             SZ.with_micro_units(src, "v"), ["k"], "seq", "ts_s", "v",
             horizon_s=10, lateness_s=0, on_late="fail",
         )
@@ -248,7 +248,7 @@ def test_time_beyond_lateness_dead_letters_by_default(spark):
     schema = "k string, seq long, ts_s long, v double"
 
     def build(src):
-        return SR.rolling_time_avg_stream(
+        return SR.rolling_time_avg(
             SZ.with_micro_units(src, "v"), ["k"], "seq", "ts_s", "v",
             horizon_s=10, lateness_s=0,
         )
@@ -277,7 +277,7 @@ def test_time_ring_state_survives_restart(spark):
     schema = "k string, seq long, ts_s long, v double"
 
     def build(src):
-        return SR.rolling_time_avg_stream(
+        return SR.rolling_time_avg(
             SZ.with_micro_units(src, "v"), ["k"], "seq", "ts_s", "v",
             horizon_s=100, lateness_s=50, on_late="fail",
         )

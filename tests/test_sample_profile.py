@@ -15,7 +15,7 @@ SCHEMA = "source string, doc_id long"
 
 
 def _build(k=3, seed=3):
-    return lambda src: SSample.sample_topk_stream(
+    return lambda src: SSample.sample_topk(
         src, "source", "doc_id", k=k, seed=seed
     )
 
@@ -49,6 +49,21 @@ def test_changelog_evicts_and_matches_batch(spark):
     additions = [x for x in ch if x["op"] == 1]
     assert len(additions) - len(evictions) == 3  # final |sample| = k
     assert len(evictions) > 0  # churn actually happened
+
+
+def test_replay_net_positive_equals_micro_batches(spark):
+    """The grouped-replay path (a batch frame into sample_topk) leaves
+    the same net-positive set as the same rows piped through TWS in
+    several micro-batches."""
+    rows = [("a", i) for i in range(12)] + [("b", i) for i in range(9)]
+    with MicroBatchReplay(spark, SCHEMA, _build(), "update") as r:
+        for i in range(0, len(rows), 7):
+            r.pipe(rows[i : i + 7])
+        streamed = _net_positive(r.drain())
+    replayed = _net_positive(
+        _build()(spark.createDataFrame(rows, SCHEMA)).collect()
+    )
+    assert replayed == streamed == _batch_sample(spark, rows)
 
 
 def test_final_set_invariant_to_batch_split_and_order(spark):

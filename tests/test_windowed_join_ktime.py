@@ -16,7 +16,7 @@ import random
 import pytest
 
 from kafka_streams_app_spark.streaming.windowed_join_ktime import (
-    windowed_join_per_topic_time_batch,
+    windowed_join_per_topic_time,
 )
 
 L_SCHEMA = "key string, ts_s long, seq long, v long"
@@ -26,7 +26,7 @@ R_SCHEMA = "key string, ts_s long, seq long, v long"
 def run_batch(spark, l_rows, r_rows, before=10, after=10, n_buckets=1):
     left = spark.createDataFrame(l_rows, L_SCHEMA)
     right = spark.createDataFrame(r_rows, R_SCHEMA)
-    out = windowed_join_per_topic_time_batch(
+    out = windowed_join_per_topic_time(
         left, right, key="key", ts="ts_s", seq="seq",
         left_payload=["v"], right_payload=["v"],
         before_s=before, after_s=after, n_buckets=n_buckets,
@@ -125,7 +125,7 @@ def test_streaming_multibatch_state_carry(spark):
     from kafka_streams_app_spark.streaming.harness import MicroBatchReplay
     from kafka_streams_app_spark.streaming.replay import tws_available
     from kafka_streams_app_spark.streaming.windowed_join_ktime import (
-        windowed_join_per_topic_time_stream,
+        windowed_join_per_topic_time,
     )
 
     if not tws_available(spark):
@@ -138,7 +138,7 @@ def test_streaming_multibatch_state_carry(spark):
 
         left = src.filter(F.col("side") == "l").select("key", "ts_s", "seq", "v")
         right = src.filter(F.col("side") == "r").select("key", "ts_s", "seq", "v")
-        return windowed_join_per_topic_time_stream(
+        return windowed_join_per_topic_time(
             left, right, key="key", ts="ts_s", seq="seq",
             left_payload=["v"], right_payload=["v"],
             before_s=10, after_s=10, n_buckets=1,

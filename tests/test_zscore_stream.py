@@ -12,7 +12,7 @@ SCHEMA = "k string, seq long, v double"
 
 
 def _build(z):
-    return lambda src: SZ.zscore_running_stream(
+    return lambda src: SZ.zscore_running(
         SZ.with_micro_units(src, "v"), ["k"], "seq", "v", z=z
     )
 
@@ -52,7 +52,7 @@ def test_stream_equals_grouped_replay_on_events(spark):
     )
     batch = sorted(
         tuple(r)
-        for r in SZ.zscore_running_batch(
+        for r in SZ.zscore_running(
             ev, ["event_type"], "event_id", "value", z=(5, 2)
         ).collect()
     )
@@ -65,7 +65,7 @@ def test_stream_equals_grouped_replay_on_events(spark):
     with MicroBatchReplay(
         spark,
         "event_type string, event_id long, value double",
-        lambda src: SZ.zscore_running_stream(
+        lambda src: SZ.zscore_running(
             SZ.with_micro_units(src, "value"),
             ["event_type"], "event_id", "value", z=(5, 2),
         ),

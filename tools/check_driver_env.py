@@ -2,11 +2,13 @@
 created by an external owner BEFORE __spark_entry__ is imported (so the
 JVM never saw the _vendor protobuf PYTHONPATH shim, and TWS workers
 cannot import protobuf). Round 2's three streaming contract entries
-crashed exactly here; this script proves the grouped-replay fallback
-keeps them green under ANY session owner.
+crashed exactly here; this script proves the grouped-replay path
+(streaming/replay.py:run_stateful on batch inputs) keeps every
+stateful-operator entry green under ANY session owner.
 
 Usage: env -u PYTHONPATH python tools/check_driver_env.py [name ...]
-(defaults to the three TWS entries)
+(defaults to the 18 entries whose operators run TWS on a stream and
+grouped replay on a batch table)
 """
 
 from __future__ import annotations
@@ -25,11 +27,23 @@ TABLES = [
     "lineitem", "events", "documents", "embeddings",
 ]
 DEFAULT = [
+    "s_winnow_candidates",
+    "s_winnow_candidates_blob",
+    "s_time_rolling",
+    "s_time_rolling_late",
+    "s_rolling_avg",
+    "s_zscore_running",
+    "s_sample_topk",
+    "s_stream_table_join",
     "s_ktable_latest",
     "s_ktable_latest_bucketed",
+    "s_table_history",
+    "s_windowed_join_ktime",
+    "s_windowed_join_ktime_multibucket",
     "s_pk_join_incremental",
     "s_pk_join_bucketed",
     "s_fk_join_incremental",
+    "s_fk_join_left_incremental",
     "s_fk_join_bucketed",
 ]
 

@@ -29,10 +29,10 @@ from kafka_streams_app_spark.operators import ktable
 from kafka_streams_app_spark.sources.catalog import load_stream, load_table
 from kafka_streams_app_spark.streaming.fk_join import (
     fk_instructions,
-    fk_join_changelog_stream,
+    fk_join_changelog,
 )
 from kafka_streams_app_spark.streaming.harness import stream_shuffle_partitions
-from kafka_streams_app_spark.streaming.ktable import ktable_changelog_stream
+from kafka_streams_app_spark.streaming.ktable import ktable_changelog
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -53,7 +53,7 @@ def main() -> None:
         F.unix_micros("ts").alias("seq"),
     )
 
-    changelog = ktable_changelog_stream(
+    changelog = ktable_changelog(
         left, ["pk"], "seq", ["fk", "value"], n_buckets=n_buckets
     )
     inter = tempfile.mkdtemp(prefix="fkdec_inter_")
@@ -72,7 +72,7 @@ def main() -> None:
     def stage2(out_dir: str | None) -> float:
         inter_src = spark.readStream.schema(changelog.schema).parquet(inter)
         instr = fk_instructions(inter_src, "pk", "fk", ["fk", "value"], "seq")
-        join = fk_join_changelog_stream(
+        join = fk_join_changelog(
             instr, right, right_key="rk", right_payload=["rvalue"],
             right_seq="seq", right_tombstone=None,
             left_value_cols=["value"], how=how, n_buckets=n_buckets,

@@ -42,9 +42,9 @@ sys.path.insert(0, "/root/repo/tools")
 from kafka_streams_app_spark.engine import get_spark
 from kafka_streams_app_spark.streaming.fk_join import (
     fk_instructions,
-    fk_join_changelog_stream,
+    fk_join_changelog,
 )
-from kafka_streams_app_spark.streaming.ktable import ktable_changelog_stream
+from kafka_streams_app_spark.streaming.ktable import ktable_changelog
 from stream_throughput import run_noop
 
 N_FKS = 5
@@ -124,7 +124,7 @@ def run(spark, left_dir: str, right_dir: str,
         .option("maxFilesPerTrigger", trigger_files)
         .parquet(right_dir)
     )
-    changelog = ktable_changelog_stream(
+    changelog = ktable_changelog(
         left, ["pk"], "seq", ["fk", "value"], "is_delete"
     )
     inter = tempfile.mkdtemp(prefix="skew_fk_inter_")
@@ -143,7 +143,7 @@ def run(spark, left_dir: str, right_dir: str,
             .parquet(inter)
         )
         instr = fk_instructions(inter_src, "pk", "fk", ["fk", "value"], "seq")
-        join = fk_join_changelog_stream(
+        join = fk_join_changelog(
             instr, right, right_key="rk", right_payload=["rvalue"],
             right_seq="seq", right_tombstone=None,
             left_value_cols=["value"], how="inner",

@@ -1390,7 +1390,7 @@ def hardneg100_main() -> None:
 
 def streamcur_main() -> None:
     """Cost-driver smoke for the r12d at-ingest curation operators,
-    via their grouped-replay twins (bit-identical emitted sets, no
+    on batch frames, i.e. grouped replay (bit-identical emitted sets, no
     streaming runtime in the loop — the drivers being counted are
     plan-level quantities):
 
@@ -1419,7 +1419,7 @@ def streamcur_main() -> None:
 
         fps = DC.winnow_fingerprints(docs, "text", "doc_id")
         t0 = time.monotonic()
-        pairs = DC.winnow_candidates_batch(docs, "text", "doc_id").count()
+        pairs = DC.winnow_candidates(docs, "text", "doc_id").count()
         wall = time.monotonic() - t0
         state_rows = fps.select("fp").distinct().count()
         print(json.dumps({
@@ -1429,7 +1429,7 @@ def streamcur_main() -> None:
         }), flush=True)
 
         t0 = time.monotonic()
-        ch = SSample.sample_topk_batch(
+        ch = SSample.sample_topk(
             docs, "source", "doc_id", k=20, seed=3
         ).persist()
         changelog_rows = ch.count()

@@ -44,8 +44,8 @@ from kafka_streams_app_spark.engine import get_spark
 from kafka_streams_app_spark.functions.text import scrub_pii
 from kafka_streams_app_spark.sources.catalog import _normalize_ts
 from kafka_streams_app_spark.streaming import windows as SW
-from kafka_streams_app_spark.streaming.ktable import ktable_changelog_stream
-from kafka_streams_app_spark.streaming.pk_join import pk_join_stream
+from kafka_streams_app_spark.streaming.ktable import ktable_changelog
+from kafka_streams_app_spark.streaming.pk_join import pk_join
 from kafka_streams_app_spark.streaming.replay import tws_available
 
 SCRATCH = Path("/root/repo/.scratch/scale_smoke")
@@ -96,7 +96,7 @@ def run_fk_pipeline(
 
     from kafka_streams_app_spark.streaming.fk_join import (
         fk_instructions,
-        fk_join_changelog_stream,
+        fk_join_changelog,
     )
 
     # FK = a ~1000-cardinality derived key (user_id % 997), the realistic
@@ -113,7 +113,7 @@ def run_fk_pipeline(
         fk_expr.alias("rk"), F.col("value").alias("rvalue"),
         F.unix_micros("ts").alias("seq"),
     )
-    changelog = ktable_changelog_stream(
+    changelog = ktable_changelog(
         left, ["pk"], "seq", ["fk", "value"], n_buckets=n_buckets
     )
     inter = tempfile.mkdtemp(prefix="tput_fk_inter_")
@@ -128,7 +128,7 @@ def run_fk_pipeline(
         q1.awaitTermination()
         inter_src = spark.readStream.schema(changelog.schema).parquet(inter)
         instr = fk_instructions(inter_src, "pk", "fk", ["fk", "value"], "seq")
-        join = fk_join_changelog_stream(
+        join = fk_join_changelog(
             instr, right, right_key="rk", right_payload=["rvalue"],
             right_seq="seq", right_tombstone=None,
             left_value_cols=["value"], how="inner", n_buckets=n_buckets,
@@ -209,7 +209,7 @@ def main() -> None:
         )
         shapes.append((
             "ktable_latest_tws",
-            ktable_changelog_stream(
+            ktable_changelog(
                 ev4, ["user_id"], "event_id", ["event_id", "value"],
                 n_buckets=128,
             ),
@@ -231,7 +231,7 @@ def main() -> None:
         )
         shapes.append((
             "pk_join_tws_bucketed",
-            pk_join_stream(
+            pk_join(
                 pk_left, pk_right, key="user_id",
                 left_payload=["v_event_id"], right_payload=["c_event_id"],
                 how="inner", n_buckets=128,
@@ -253,7 +253,7 @@ def main() -> None:
         )
         shapes.append((
             "zscore_running_tws",
-            SZ.zscore_running_stream(
+            SZ.zscore_running(
                 ev7, ["event_type"], "event_id", "value", z=(5, 2)
             ),
             "update",
@@ -266,7 +266,7 @@ def main() -> None:
         )
         shapes.append((
             "rolling_avg_tws",
-            SR.rolling_avg_stream(ev8, ["user_id"], "event_id", "value", n=10),
+            SR.rolling_avg(ev8, ["user_id"], "event_id", "value", n=10),
             "update",
         ))
         ev9 = SZ.with_micro_units(
@@ -280,7 +280,7 @@ def main() -> None:
             # wall-clock frame ring (r12d): state bounded by horizon x
             # per-key rate instead of n
             "rolling_time_avg_tws",
-            SR.rolling_time_avg_stream(
+            SR.rolling_time_avg(
                 ev9, ["user_id"], "event_id", "ts_s", "value", horizon_s=300
             ),
             "update",
@@ -310,7 +310,7 @@ def main() -> None:
             # (128 buckets; per-batch density picks the blob or the
             # MapState store) + pair emission
             "winnow_candidates_tws_auto",
-            DC.winnow_candidates_stream(
+            DC.winnow_candidates(
                 stream_docs(), "text", "doc_id", n_buckets=128
             ),
             "update",
@@ -319,7 +319,7 @@ def main() -> None:
         doc_shapes.append((
             # bottom-k membership: k-row state per stratum, O(k) merge
             "sample_topk_tws",
-            SSample.sample_topk_stream(
+            SSample.sample_topk(
                 stream_docs(), "source", "doc_id", k=20, seed=3
             ),
             "update",
@@ -372,7 +372,7 @@ def main() -> None:
         trickle_best: dict[str, float] = {}
         for _ in range(2):
             name = "winnow_trickle_auto"
-            out_df = DC.winnow_candidates_stream(
+            out_df = DC.winnow_candidates(
                 stream_docs_trickle(), "text", "doc_id", n_buckets=128,
             )
             wall = run_noop(out_df, "update")

@@ -44,7 +44,8 @@ from kafka_streams_app_spark.streaming.fk_join import (
     _fk_join_plan,
     fk_instructions,
 )
-from kafka_streams_app_spark.streaming.ktable import ktable_changelog_stream
+from kafka_streams_app_spark.streaming.ktable import ktable_changelog
+from kafka_streams_app_spark.streaming.replay import run_stateful
 
 SCRATCH = Path("/root/repo/.scratch/scale_smoke")
 
@@ -128,7 +129,7 @@ def main() -> None:
         F.col("user_id").alias("pk"), fk_expr.alias("fk"),
         F.col("value"), F.unix_micros("ts").alias("seq"),
     )
-    changelog = ktable_changelog_stream(left, ["pk"], "seq", ["fk", "value"])
+    changelog = ktable_changelog(left, ["pk"], "seq", ["fk", "value"])
     inter = tempfile.mkdtemp(prefix="twsattr_inter_")
     ckpt = tempfile.mkdtemp(prefix="twsattr_ckpt_")
     q1 = (
@@ -159,12 +160,7 @@ def main() -> None:
                 proc.sub_schema, proc.right_schema, proc.fk_schema,
                 proc.fkpk_schema,
             )
-        return unioned.groupBy("_fkj_bucket").transformWithStateInPandas(
-            statefulProcessor=proc,
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
+        return run_stateful(unioned, ["_fkj_bucket"], proc, out_schema)
 
     def run_once(kind: str) -> float:
         ck = tempfile.mkdtemp(prefix="twsattr_q2_")
