@@ -33,8 +33,10 @@ host when a topology is set.
 Other deliberate deltas, documented in SURVEY §2.6:
 - stdlib ThreadingHTTPServer instead of Jetty: the service is a thin
   facade; concurrency and scale live in the engine, not the web layer.
-  At 100 TB the registered store would be a compacted keyed
-  parquet/Delta table, and a point lookup is a pruned single-partition
+  A live store mirrored by StoreMirror is an in-driver snapshot, so a
+  request runs no Spark job; that holds while the store's keys fit in
+  the driver. At 100 TB the registered store would be a compacted keyed
+  parquet/Delta table, and a point lookup a pruned single-partition
   scan.
 """
 

@@ -11,23 +11,33 @@ S5 debug sink — KStream.print (ForeignJoin.scala:31) -> console format.
 
 M5 IQ mirror — the reference serves RocksDB stores over REST
 (/root/reference/src/main/java/com/ayoubom/kafka/utils/IQueriesService.java:78-176).
-Here `mirror_store` maintains a queryable snapshot of a streaming
-aggregation via foreachBatch: each micro-batch's updated rows append to
-a partitioned parquet changelog, and the registered view resolves
-latest-per-key over it (operators/ktable.latest_per_key), so
-operators/iq.py queries (Q1-Q5) run against LIVE state with full
-Catalyst pushdown. No driver-side state: the changelog is written and
-read distributed, exactly like a compacted Kafka changelog topic.
+Each store is backed by a changelog topic it restores from
+(WordCount.java:56, `Materialized.as`). Here `StoreMirror` keeps the
+same split for a streaming aggregation via foreachBatch: the store is an
+in-driver snapshot, latest row per key, replaced whole after each
+micro-batch; the changelog is a parquet directory the driver appends
+each micro-batch's update rows to, read back (latest-per-key,
+operators/ktable.latest_per_key) only to restore the snapshot. The view
+is a local relation over the snapshot, so operators/iq.py queries
+(Q1-Q5) run against LIVE state through Catalyst without a Spark job.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
+import threading
+import uuid
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from kafka_streams_app_spark.operators.ktable import latest_per_key
 
@@ -81,12 +91,28 @@ class StoreMirror:
     """M5 — foreachBatch mirror turning a streaming aggregation into a
     continuously-updated queryable store view.
 
-    The UPDATE-mode aggregation's per-batch output (its changelog) is
-    appended to a parquet changelog dir with a batch sequence column;
-    `view()` (and the registered temp view `store_name`) materializes
-    latest-per-key over it. Interactive queries (operators/iq.py Q1-Q5)
-    filter that view; Catalyst pushes key/range predicates into the
-    parquet scan.
+    The split is a Kafka Streams store and its changelog topic:
+
+    - the store is an immutable Arrow snapshot in the driver holding the
+      latest row per `key_cols`. Each micro-batch's update rows are merged
+      into a copy, later batch wins, and the copy replaces the snapshot in
+      one assignment, so a concurrent `view()` sees the store after batch
+      n or after batch n+1, never a mix. `view()` wraps the snapshot as a
+      local relation: interactive queries (operators/iq.py Q1-Q5) still go
+      through Catalyst, and their filters fold into a local table scan
+      that runs no Spark job. Driver memory is one row per key ever
+      emitted: like the changelog, the snapshot keeps a window's keys
+      after Spark evicts that window's state;
+    - the changelog is a parquet directory at `path`, on the driver's
+      filesystem. The update rows of every non-empty micro-batch are
+      collected once, as Arrow, and the driver writes them there as one
+      file with a `_batch` sequence column before they reach the
+      snapshot; there is no second Spark job. It is the durable copy.
+      The first `attach()` or `view()` on a path that already holds one
+      restores the snapshot from it, latest-per-key over the whole
+      changelog (operators/ktable `latest_per_key`); after that only the
+      mirrored query updates the snapshot, so rows appended to `path` by
+      anything else are not seen.
 
     At scale the changelog dir would be a compacted table (Delta/Iceberg
     upsert); plain parquet + latest_per_key keeps the same read
@@ -105,15 +131,19 @@ class StoreMirror:
         self.store_name = store_name
         self.key_cols = key_cols
         self.path = path or tempfile.mkdtemp(prefix=f"store_{store_name}_")
+        self._lock = threading.Lock()
+        self._schema: StructType | None = None
+        self._snapshot: pa.Table | None = None
 
     def attach(self, agg_df: DataFrame, checkpoint: str | None = None) -> StreamingQuery:
         """Start mirroring an UPDATE-mode streaming aggregation."""
+        self._restore(agg_df.schema)
 
         def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                batch_df.withColumn("_batch", F.lit(batch_id))
-                .write.mode("append").parquet(self.path)
-            )
+            update = batch_df.toArrow().cast(self._snapshot.schema)
+            if update.num_rows:
+                _write_part(self.path, update, batch_id)
+                self._snapshot = _upsert(self._snapshot, update, self.key_cols)
 
         return (
             agg_df.writeStream.foreachBatch(write_batch)
@@ -126,17 +156,70 @@ class StoreMirror:
         )
 
     def view(self) -> DataFrame:
-        """Current store contents: latest value per key from the changelog."""
-        changelog = self.spark.read.parquet(self.path)
-        snap = latest_per_key(changelog, self.key_cols, order_by=["_batch"])
-        return snap.drop("_batch")
+        """Current store contents: the latest value per key, as of the
+        last mirrored micro-batch."""
+        self._restore(None)
+        return self.spark.createDataFrame(self._snapshot, self._schema)
 
     def register(self) -> None:
         self.view().createOrReplaceTempView(self.store_name)
 
     def compact(self) -> None:
-        """Rewrite the changelog down to the current snapshot."""
-        snap = self.view().withColumn("_batch", F.lit(-1))
-        tmp = self.path + ".compact"
-        snap.write.mode("overwrite").parquet(tmp)
-        self.spark.read.parquet(tmp).write.mode("overwrite").parquet(self.path)
+        """Rewrite the changelog down to the current snapshot. Call it
+        while no micro-batch is being mirrored."""
+        self._restore(None)
+        base = self.path.rstrip(os.sep)
+        tmp, old = base + ".compact", base + ".old"
+        shutil.rmtree(tmp, ignore_errors=True)
+        _write_part(tmp, self._snapshot, -1)
+        os.rename(base, old)
+        os.rename(tmp, base)
+        shutil.rmtree(old)
+
+    def _restore(self, schema: StructType | None) -> None:
+        """Load the snapshot once: latest-per-key over the changelog at
+        `path` if it holds one, else an empty store of `schema`. Without
+        a schema the changelog's own is read from its files."""
+        with self._lock:
+            if self._snapshot is not None:
+                return
+            table = None
+            if schema is None or self._has_changelog():
+                reader = self.spark.read
+                if schema is not None:
+                    reader = reader.schema(
+                        StructType([*schema, StructField("_batch", IntegerType())]))
+                snap = latest_per_key(reader.parquet(self.path), self.key_cols,
+                                      order_by=["_batch"]).drop("_batch")
+                schema, table = snap.schema, snap.toArrow()
+            # nullable, as a parquet read returns it
+            self._schema = StructType([StructField(f.name, f.dataType) for f in schema])
+            arrow = to_arrow_schema(self._schema)
+            self._snapshot = arrow.empty_table() if table is None else table.cast(arrow)
+
+    def _has_changelog(self) -> bool:
+        """Whether `path` holds a parquet file a reader would see."""
+        return os.path.isdir(self.path) and any(
+            f.endswith(".parquet") and not f.startswith((".", "_"))
+            for f in os.listdir(self.path))
+
+
+def _write_part(directory: str, rows: pa.Table, batch_id: int) -> None:
+    """Add `rows` to the changelog in `directory` as one parquet file with
+    a `_batch` column, written under a hidden name (which readers skip)
+    and renamed into place whole."""
+    rows = rows.append_column("_batch", pa.array(np.full(rows.num_rows, batch_id, np.int32)))
+    os.makedirs(directory, exist_ok=True)
+    name = f"part-{batch_id:06d}-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(directory, "." + name)
+    pq.write_table(rows, tmp)
+    os.replace(tmp, os.path.join(directory, name))
+
+
+def _upsert(snapshot: pa.Table, update: pa.Table, keys: list[str]) -> pa.Table:
+    """`snapshot` with `update`'s rows merged in: one row per `keys`,
+    an update row replacing the snapshot's."""
+    both = pa.concat_tables([snapshot, update])
+    pos = both.append_column("_pos", pa.array(np.arange(both.num_rows)))
+    last = pos.group_by(keys, use_threads=False).aggregate([("_pos", "max")])
+    return both.take(last["_pos_max"])

@@ -8,11 +8,15 @@ against it between micro-batches.
 
 from __future__ import annotations
 
+import os
+import sys
 import tempfile
+import threading
 
 from pyspark.sql import functions as F
 
 from kafka_streams_app_spark.operators import iq
+from kafka_streams_app_spark.operators.ktable import latest_per_key
 from kafka_streams_app_spark.streaming import windows as W
 from kafka_streams_app_spark.streaming.harness import MicroBatchReplay
 from kafka_streams_app_spark.streaming.sinks import StoreMirror, to_topic
@@ -55,9 +59,157 @@ def test_store_mirror_live_queries(spark):
     q.stop()
 
 
+def _rows(df) -> set[tuple]:
+    return {tuple(r) for r in df.collect()}
+
+
+def _changelog_latest(spark, mirror) -> set[tuple]:
+    """Latest-per-key over the parquet changelog, columns in view order."""
+    changelog = spark.read.parquet(mirror.path)
+    snap = latest_per_key(changelog, mirror.key_cols, order_by=["_batch"])
+    return _rows(snap.select(*mirror.view().columns))
+
+
+def _part_files(mirror) -> int:
+    return sum(f.endswith(".parquet") for f in os.listdir(mirror.path))
+
+
+def _jobs_started(spark, group: str, run) -> int:
+    """Number of Spark jobs `run()` starts, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _windowed_mirror(spark, name: str):
+    """A per-(word, window) count mirrored from a parquet staging dir;
+    rows with word 'late' are dropped before the count, so a batch of
+    only those emits no update rows."""
+    staging = tempfile.mkdtemp(prefix="iqsrc_")
+    src = (
+        spark.readStream.schema("word string, window_start_s long")
+        .option("maxFilesPerTrigger", 1).parquet(staging)
+    )
+    counts = src.filter(F.col("word") != "late") \
+        .groupBy("word", "window_start_s").agg(F.count(F.lit(1)).alias("cnt"))
+    mirror = StoreMirror(spark, name, ["word", "window_start_s"])
+    ckpt = tempfile.mkdtemp(prefix=f"{name}_ckpt_")
+
+    def feed(query, rows):
+        spark.createDataFrame(rows, "word string, window_start_s long").coalesce(1) \
+            .write.mode("append").parquet(staging)
+        query.processAllAvailable()
+
+    return mirror, counts, ckpt, feed
+
+
+BATCHES = [
+    [("hello", 0), ("world", 0), ("hello", 10)],
+    [("hello", 0), ("alpha", 10)],          # updates (hello, 0)
+    [("late", 0), ("late", 10)],            # emits no update rows
+    [("world", 0), ("hello", 10), ("zeta", 20)],
+    [("alpha", 10)],
+]
+
+
+def test_store_mirror_snapshot_serves_without_jobs(spark):
+    """After every micro-batch: Q1-Q5 over the view start no Spark job,
+    the view equals latest-per-key over the parquet changelog, an empty
+    batch appends no file, and every earlier view still answers with the
+    values it had when it was taken. Readers taking views concurrently
+    (more threads than cores, short switch interval) only ever see the
+    store as it was after some whole micro-batch."""
+    mirror, counts, ckpt, feed = _windowed_mirror(spark, "snapshot_test")
+    q = mirror.attach(counts, checkpoint=ckpt)
+    taken: list[tuple] = []  # (view, its rows when taken)
+    stop = threading.Event()
+    seen: list[frozenset] = []
+    errors: list[BaseException] = []
+
+    def reader():
+        try:
+            while not stop.is_set():
+                seen.append(frozenset(_rows(mirror.view())))
+        except Exception as e:  # reported by the assertion below
+            errors.append(e)
+
+    readers = [threading.Thread(target=reader) for _ in range(os.cpu_count() + 1)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in readers:
+            t.start()
+        for n, batch in enumerate(BATCHES):
+            files_before = _part_files(mirror)
+            feed(q, batch)
+            store = mirror.view()
+
+            def queries(store=store):
+                iq.point_lookup(store, "word", "hello").collect()
+                iq.all_entries(store).collect()
+                iq.range_scan(store, "word", "a", "m").collect()
+                iq.window_fetch(store, "word", "hello", "window_start_s", 0, 10).collect()
+                iq.window_fetch_all(store, "window_start_s", 10, 20).collect()
+
+            assert _jobs_started(spark, f"mirror-iq-{n}", queries) == 0
+            now = _rows(store)
+            assert now == _changelog_latest(spark, mirror)
+            if all(word == "late" for word, _ in batch):
+                assert _part_files(mirror) == files_before
+            for old, rows in taken:
+                assert _rows(old) == rows
+            taken.append((store, now))
+    finally:
+        stop.set()
+        for t in readers:
+            t.join(timeout=60)
+        sys.setswitchinterval(switch)
+        q.stop()
+    assert not any(t.is_alive() for t in readers)
+    assert not errors
+    assert seen and set(seen) <= {frozenset()} | {frozenset(rows) for _, rows in taken}
+    assert {(w, s): c for w, s, c in taken[-1][1]} == {
+        ("hello", 0): 2, ("hello", 10): 2, ("world", 0): 2,
+        ("alpha", 10): 2, ("zeta", 20): 1,
+    }
+    assert {(w, s): c for w, s, c in taken[0][1]} == {
+        ("hello", 0): 1, ("hello", 10): 1, ("world", 0): 1,
+    }
+
+
+def test_store_mirror_restart_restores_snapshot(spark):
+    """A new mirror on the same changelog and checkpoint restores the
+    view from the changelog, then keeps counting from the checkpointed
+    state."""
+    mirror, counts, ckpt, feed = _windowed_mirror(spark, "restart_test")
+    q = mirror.attach(counts, checkpoint=ckpt)
+    try:
+        for batch in BATCHES[:3]:
+            feed(q, batch)
+        before = _rows(mirror.view())
+    finally:
+        q.stop()
+    restarted = StoreMirror(spark, "restart_test", ["word", "window_start_s"],
+                            path=mirror.path)
+    q = restarted.attach(counts, checkpoint=ckpt)
+    try:
+        assert _rows(restarted.view()) == before
+        feed(q, BATCHES[3])
+        after = _rows(restarted.view())
+        assert after == _changelog_latest(spark, restarted)
+        assert ("hello", 10, 2) in after and ("world", 0, 2) in after
+    finally:
+        q.stop()
+
+
 def test_store_mirror_compact(spark):
     """compact() rewrites the changelog to one snapshot with identical
-    view contents (the Delta-upsert analogue)."""
+    view contents (the Delta-upsert analogue) and leaves no temporary
+    directory behind."""
     mirror = StoreMirror(spark, "compact_test", ["k"])
     for batch_id, rows in enumerate([[("a", 1), ("b", 2)], [("a", 3)]]):
         spark.createDataFrame(rows, "k string, v int") \
@@ -67,6 +219,11 @@ def test_store_mirror_compact(spark):
     assert before == {("a", 3), ("b", 2)}
     mirror.compact()
     assert {(r["k"], r["v"]) for r in mirror.view().collect()} == before
+    parent, name = os.path.split(mirror.path.rstrip(os.sep))
+    assert [d for d in os.listdir(parent) if d.startswith(name)] == [name]
+    # the compacted changelog alone restores the same store
+    restored = StoreMirror(spark, "compact_test", ["k"], path=mirror.path)
+    assert {(r["k"], r["v"]) for r in restored.view().collect()} == before
 
 
 def test_to_topic_memory_and_parquet(spark, tmp_path):
