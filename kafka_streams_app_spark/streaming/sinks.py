@@ -28,7 +28,6 @@ import os
 import shutil
 import tempfile
 import threading
-import uuid
 
 import numpy as np
 import pyarrow as pa
@@ -140,7 +139,8 @@ class StoreMirror:
         self._restore(agg_df.schema)
 
         def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            update = batch_df.toArrow().cast(self._snapshot.schema)
+            arrow = self._snapshot.schema
+            update = batch_df.toArrow().select(arrow.names).cast(arrow)
             if update.num_rows:
                 _write_part(self.path, update, batch_id)
                 self._snapshot = _upsert(self._snapshot, update, self.key_cols)
@@ -157,7 +157,8 @@ class StoreMirror:
 
     def view(self) -> DataFrame:
         """Current store contents: the latest value per key, as of the
-        last mirrored micro-batch."""
+        last mirrored micro-batch. Columns are `key_cols` first, then the
+        aggregation's other columns."""
         self._restore(None)
         return self.spark.createDataFrame(self._snapshot, self._schema)
 
@@ -179,7 +180,9 @@ class StoreMirror:
     def _restore(self, schema: StructType | None) -> None:
         """Load the snapshot once: latest-per-key over the changelog at
         `path` if it holds one, else an empty store of `schema`. Without
-        a schema the changelog's own is read from its files."""
+        a schema the changelog's own is read from its files. Either way
+        the columns are `key_cols` first, then the rest in `schema`
+        order, as `latest_per_key` returns them."""
         with self._lock:
             if self._snapshot is not None:
                 return
@@ -193,9 +196,11 @@ class StoreMirror:
                                       order_by=["_batch"]).drop("_batch")
                 schema, table = snap.schema, snap.toArrow()
             # nullable, as a parquet read returns it
-            self._schema = StructType([StructField(f.name, f.dataType) for f in schema])
+            order = [*self.key_cols, *(n for n in schema.names if n not in self.key_cols)]
+            self._schema = StructType([StructField(n, schema[n].dataType) for n in order])
             arrow = to_arrow_schema(self._schema)
-            self._snapshot = arrow.empty_table() if table is None else table.cast(arrow)
+            self._snapshot = (arrow.empty_table() if table is None
+                              else table.select(arrow.names).cast(arrow))
 
     def _has_changelog(self) -> bool:
         """Whether `path` holds a parquet file a reader would see."""
@@ -207,10 +212,11 @@ class StoreMirror:
 def _write_part(directory: str, rows: pa.Table, batch_id: int) -> None:
     """Add `rows` to the changelog in `directory` as one parquet file with
     a `_batch` column, written under a hidden name (which readers skip)
-    and renamed into place whole."""
+    and renamed into place whole. A micro-batch that Spark runs again
+    replaces its own file."""
     rows = rows.append_column("_batch", pa.array(np.full(rows.num_rows, batch_id, np.int32)))
     os.makedirs(directory, exist_ok=True)
-    name = f"part-{batch_id:06d}-{uuid.uuid4().hex}.parquet"
+    name = f"part-{batch_id:06d}.parquet"
     tmp = os.path.join(directory, "." + name)
     pq.write_table(rows, tmp)
     os.replace(tmp, os.path.join(directory, name))

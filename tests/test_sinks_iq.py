@@ -13,13 +13,16 @@ import sys
 import tempfile
 import threading
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from kafka_streams_app_spark.operators import iq
 from kafka_streams_app_spark.operators.ktable import latest_per_key
 from kafka_streams_app_spark.streaming import windows as W
 from kafka_streams_app_spark.streaming.harness import MicroBatchReplay
-from kafka_streams_app_spark.streaming.sinks import StoreMirror, to_topic
+from kafka_streams_app_spark.streaming.sinks import StoreMirror, _write_part, to_topic
 
 
 def test_store_mirror_live_queries(spark):
@@ -88,14 +91,17 @@ def _jobs_started(spark, group: str, run) -> int:
 def _windowed_mirror(spark, name: str):
     """A per-(word, window) count mirrored from a parquet staging dir;
     rows with word 'late' are dropped before the count, so a batch of
-    only those emits no update rows."""
+    only those emits no update rows. Like `W.windowed_count_stream`, the
+    count emits (window_start_s, word, cnt): the key columns do not lead
+    and are not in `key_cols` order."""
     staging = tempfile.mkdtemp(prefix="iqsrc_")
     src = (
         spark.readStream.schema("word string, window_start_s long")
         .option("maxFilesPerTrigger", 1).parquet(staging)
     )
     counts = src.filter(F.col("word") != "late") \
-        .groupBy("word", "window_start_s").agg(F.count(F.lit(1)).alias("cnt"))
+        .groupBy("word", "window_start_s").agg(F.count(F.lit(1)).alias("cnt")) \
+        .select("window_start_s", "word", "cnt")
     mirror = StoreMirror(spark, name, ["word", "window_start_s"])
     ckpt = tempfile.mkdtemp(prefix=f"{name}_ckpt_")
 
@@ -181,22 +187,33 @@ def test_store_mirror_snapshot_serves_without_jobs(spark):
     }
 
 
-def test_store_mirror_restart_restores_snapshot(spark):
+@pytest.mark.parametrize("file_order", ["as_written", "aggregation"])
+def test_store_mirror_restart_restores_snapshot(spark, file_order):
     """A new mirror on the same changelog and checkpoint restores the
     view from the changelog, then keeps counting from the checkpointed
-    state."""
+    state. The view's columns are `key_cols` first before and after the
+    restart. `aggregation` rewrites every changelog file in the
+    aggregation's column order first, as older mirrors wrote them."""
     mirror, counts, ckpt, feed = _windowed_mirror(spark, "restart_test")
     q = mirror.attach(counts, checkpoint=ckpt)
     try:
         for batch in BATCHES[:3]:
             feed(q, batch)
+        assert mirror.view().columns == ["word", "window_start_s", "cnt"]
         before = _rows(mirror.view())
     finally:
         q.stop()
+    if file_order == "aggregation":
+        for f in os.listdir(mirror.path):
+            if f.endswith(".parquet"):
+                part = os.path.join(mirror.path, f)
+                table = pq.read_table(part)
+                pq.write_table(table.select([*counts.columns, "_batch"]), part)
     restarted = StoreMirror(spark, "restart_test", ["word", "window_start_s"],
                             path=mirror.path)
     q = restarted.attach(counts, checkpoint=ckpt)
     try:
+        assert restarted.view().columns == ["word", "window_start_s", "cnt"]
         assert _rows(restarted.view()) == before
         feed(q, BATCHES[3])
         after = _rows(restarted.view())
@@ -224,6 +241,16 @@ def test_store_mirror_compact(spark):
     # the compacted changelog alone restores the same store
     restored = StoreMirror(spark, "compact_test", ["k"], path=mirror.path)
     assert {(r["k"], r["v"]) for r in restored.view().collect()} == before
+
+
+def test_changelog_part_per_batch_id(tmp_path):
+    """A micro-batch that Spark runs again (foreachBatch is at-least-once)
+    replaces its own changelog file instead of adding a second one."""
+    rows = pa.table({"k": ["a"], "v": [1]})
+    _write_part(str(tmp_path), rows, 3)
+    _write_part(str(tmp_path), rows.set_column(1, "v", pa.array([2])), 3)
+    assert os.listdir(tmp_path) == ["part-000003.parquet"]
+    assert pq.read_table(tmp_path).to_pydict() == {"k": ["a"], "v": [2], "_batch": [3]}
 
 
 def test_to_topic_memory_and_parquet(spark, tmp_path):
