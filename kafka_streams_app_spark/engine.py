@@ -30,6 +30,20 @@ RUNTIME_CONF = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow for pandas UDF exchange (minhash/simhash/multimodal operators).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Checkpoint writes (offset/commit logs, file-source log, state-store
+    # delta and checksum files) go through Hadoop FileSystem instead of
+    # FileContext. Without the native Hadoop library, FileContext's local
+    # filesystem starts a readlink child process for its link checks:
+    # 210 child processes per micro-batch at 4 state partitions against
+    # 42 (chmod only) with this manager, trigger p50 ~330 -> ~200 ms on
+    # 4 vCPUs (SCALE.md, "Per-micro-batch floor"). Safe where
+    # exactly-once needs it, the offset log's no-overwrite writes: on
+    # file: both managers check-then-rename for those and POSIX-rename
+    # for overwrites; on HDFS FileSystem.rename atomically refuses to
+    # replace an existing file, so a no-overwrite write still fails.
+    "spark.sql.streaming.checkpointFileManagerClass":
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager",
 }
 
 

@@ -13,6 +13,8 @@ word-split convention (lower + \\W+ —
 from __future__ import annotations
 
 import re
+import threading
+from collections import OrderedDict
 
 import pandas as pd
 from pyspark.sql import Column
@@ -373,8 +375,12 @@ def winnowing_fps_udf(k: int = 5, window: int = 4, p: int = (1 << 31) - 1):
 _winnowing_count_udf_cache: dict[tuple, object] = {}
 # unresolved winnowing fingerprint Columns keyed on (input expr string,
 # k, window, p, hash_fn) — expression-tree reuse, never data (see
-# winnowing_fingerprints)
-_winnowing_col_cache: dict[tuple, object] = {}
+# winnowing_fingerprints). The key is a rendered expression, so the set
+# of keys is open-ended: least recently used entries are evicted past
+# _WINNOWING_COL_CACHE_MAX.
+_WINNOWING_COL_CACHE_MAX = 32
+_winnowing_col_cache: OrderedDict[tuple, Column] = OrderedDict()
+_winnowing_col_lock = threading.Lock()
 
 
 def winnowing_count_udf(k: int = 5, window: int = 4, p: int = (1 << 31) - 1):
@@ -474,14 +480,20 @@ def winnowing_fingerprints(
     # description, resolved per plan, so reuse across queries and
     # data directories is semantics-free.
     key = (str(text_col), k, window, p, hash_fn)
-    col = _winnowing_col_cache.get(key)
-    if col is None:
-        col = F.element_at(
-            F.transform(
-                F.array(token_hashes(tokens(text_col), p=p, hash_fn=hash_fn)),
-                lambda th: winnowing_of_hashes(th, k=k, window=window, p=p),
-            ),
-            1,
-        )
+    with _winnowing_col_lock:
+        col = _winnowing_col_cache.get(key)
+        if col is not None:
+            _winnowing_col_cache.move_to_end(key)
+            return col
+    col = F.element_at(
+        F.transform(
+            F.array(token_hashes(tokens(text_col), p=p, hash_fn=hash_fn)),
+            lambda th: winnowing_of_hashes(th, k=k, window=window, p=p),
+        ),
+        1,
+    )
+    with _winnowing_col_lock:
         _winnowing_col_cache[key] = col
+        if len(_winnowing_col_cache) > _WINNOWING_COL_CACHE_MAX:
+            _winnowing_col_cache.popitem(last=False)
     return col

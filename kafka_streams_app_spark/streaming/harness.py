@@ -178,8 +178,12 @@ def stream_shuffle_partitions(spark: SparkSession, n: int | None = None):
     shuffle partition per micro-batch, and transformWithStateInPandas
     additionally holds a state-server handshake per partition — at
     contract-gate data sizes (sf0.01) that fixed per-partition cost
-    dominates the actual work. Partitioning never changes results, so
-    short evaluation runs use a small count (default 8, overridable via
+    dominates the actual work. Since checkpoints go through the
+    FileSystem-based manager (engine.RUNTIME_CONF), a small store's
+    commit costs a quarter or less of what it did on 4 vCPUs (SCALE.md
+    "Per-micro-batch floor"): smaller, but still paid per partition.
+    Partitioning never changes results, so short evaluation runs use a
+    small count (default 8, overridable via
     SPARK_GRAFT_STREAM_PARTITIONS); production deployments size it to
     the cluster as usual. The conf is read at query START and pinned
     into the checkpoint, so the restore cannot affect a running query.

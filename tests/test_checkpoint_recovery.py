@@ -343,3 +343,59 @@ def test_fk_pipeline_mid_handoff_crash(spark, n_buckets):
         # the replayed subscription is live: puma arriving now joins a1
         p.pipe_right([("puma", 7, False)])
         assert p.drain() == [("a1", "upsert", "Ann", 7)]
+
+
+_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def test_checkpoints_written_through_filesystem_manager(spark):
+    """Every engine session writes checkpoints through Spark's
+    FileSystem-based manager (engine.RUNTIME_CONF), a session built
+    elsewhere gets it from configure_session, a stateful query commits
+    through it, and its offset log still refuses to replace a batch file
+    (the exactly-once guarantee). A Spark upgrade that renames or moves
+    the class fails here, at query start."""
+    from py4j.protocol import Py4JJavaError
+
+    from kafka_streams_app_spark.engine import configure_session
+
+    assert spark.conf.get(_MANAGER_CONF) == _FS_MANAGER
+    external = spark.newSession()
+    external.conf.unset(_MANAGER_CONF)
+    assert external.conf.get(_MANAGER_CONF, None) is None
+    configure_session(external)
+    assert external.conf.get(_MANAGER_CONF) == _FS_MANAGER
+
+    staging = tempfile.mkdtemp(prefix="ckpt_fm_src_")
+    checkpoint = tempfile.mkdtemp(prefix="ckpt_fm_ckpt_")
+    out_dir = tempfile.mkdtemp(prefix="ckpt_fm_out_")
+    try:
+        external.createDataFrame(
+            [("a", _ts(0)), ("b", _ts(1))], SCHEMA
+        ).coalesce(1).write.mode("append").parquet(staging)
+        q = _start(external, staging, checkpoint, out_dir)
+        try:
+            q.processAllAvailable()
+            assert q.lastProgress["stateOperators"][0]["numRowsTotal"] == 2
+            fm = q._jsq.streamingQuery().offsetLog().fileManager()
+            assert fm.getClass().getName() == _FS_MANAGER
+        finally:
+            q.stop()
+        assert glob.glob(f"{checkpoint}/state/0/*/1.delta")
+        batch0 = f"{checkpoint}/offsets/0"
+        with open(batch0, "rb") as f:
+            before = f.read()
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(batch0)
+        out = fm.createAtomic(jpath, False)
+        out.write(bytearray(b"not an offset"))
+        with pytest.raises(Py4JJavaError, match="FileAlreadyExistsException"):
+            out.close()
+        with open(batch0, "rb") as f:
+            assert f.read() == before
+    finally:
+        for d in (staging, checkpoint, out_dir):
+            shutil.rmtree(d, ignore_errors=True)

@@ -67,3 +67,19 @@ def test_winnowing_fingerprints_values_match_raw_chain(spark):
     g = {r["id"]: r["fps"] for r in guarded.collect()}
     r = {r["id"]: r["fps"] for r in raw.collect()}
     assert g == r
+
+
+def test_winnowing_column_cache_evicts_least_recently_used(spark, monkeypatch):
+    from collections import OrderedDict
+
+    from kafka_streams_app_spark.functions import text
+
+    monkeypatch.setattr(text, "_winnowing_col_cache", OrderedDict())
+    monkeypatch.setattr(text, "_WINNOWING_COL_CACHE_MAX", 2)
+    a = winnowing_fingerprints(F.col("a"))
+    b = winnowing_fingerprints(F.col("b"))
+    assert winnowing_fingerprints(F.col("a")) is a  # hit; a is now newest
+    winnowing_fingerprints(F.col("c"))  # over the cap: evicts b, not a
+    assert len(text._winnowing_col_cache) == 2
+    assert winnowing_fingerprints(F.col("a")) is a
+    assert winnowing_fingerprints(F.col("b")) is not b

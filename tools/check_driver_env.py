@@ -81,6 +81,7 @@ def main() -> int:
     )
     # ... and only then imports the entry module.
     import __spark_entry__ as e
+    from kafka_streams_app_spark.engine import RUNTIME_CONF
     from kafka_streams_app_spark.streaming.replay import tws_available
 
     print(f"tws_available={tws_available(spark)} (expect False in clean env)")
@@ -91,7 +92,7 @@ def main() -> int:
     names = sys.argv[1:] or DEFAULT
     qs, oracles = e.queries(), e.oracle_sql()
     n_fail = 0
-    for name in names:
+    for i, name in enumerate(names):
         try:
             sdf = qs[name](spark, SF_DIR)
             scols = sdf.columns
@@ -100,6 +101,12 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {ex}")
             n_fail += 1
             continue
+        if i == 0:
+            # this session sees RUNTIME_CONF only through the entries'
+            # configure_session call: checkpoints must go through the
+            # FileSystem-based manager here too
+            key = "spark.sql.streaming.checkpointFileManagerClass"
+            assert spark.conf.get(key, None) == RUNTIME_CONF[key], spark.conf.get(key, None)
         if name not in oracles:
             print(f"weak {name}: rows={len(srows)} (no oracle)")
             continue
