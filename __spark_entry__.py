@@ -3225,18 +3225,18 @@ def _q_s_pk_join_incremental(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _q_s_fk_join_incremental(spark: SparkSession, sf: str) -> DataFrame:
-    """J7/J8 INCREMENTAL (M4): the full two-stage FK-join pipeline over
-    the events stream — left KTable = latest event per user (FK = its
+    """J7/J8 INCREMENTAL (M4): the full FK-join pipeline over the
+    events stream — left KTable = latest event per user (FK = its
     event_type), right KTable = latest event per type; the stateful
     FK-join changelog is reduced to its end state, which must equal the
     batch join of the two snapshots.
 
-    Stage 1 (left changelog -> intermediate dir) mirrors Kafka's
-    subscription-response topic; stage 2 is the groupBy(fk) join
-    processor. Both run Trigger.AvailableNow to completion. When TWS
-    workers lack protobuf (externally-created session) the same two
-    stages chain directly as batch grouped replays (streaming/replay.py)
-    — identical changelog output, no intermediate directory needed.
+    ktable_changelog -> fk_instructions -> the groupBy(fk) join
+    processor chain in ONE streaming query (both TWS operators in
+    Update mode, one checkpoint), run Trigger.AvailableNow to
+    completion. When TWS workers lack protobuf (externally-created
+    session) the same chain runs as batch grouped replays
+    (streaming/replay.py) — identical changelog output.
     """
     return _fk_incremental_pipeline(spark, sf, how="inner")
 
@@ -3257,9 +3257,6 @@ def _fk_incremental_pipeline(
     spark: SparkSession, sf: str, how: str,
     right_types: tuple[str, ...] | None = None,
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from kafka_streams_app_spark.streaming.fk_join import (
         fk_instructions,
         fk_join_changelog,
@@ -3277,54 +3274,22 @@ def _fk_incremental_pipeline(
         F.unix_micros("ts").alias("seq"),
     )
     changelog = ktable_changelog(left, ["pk"], "seq", ["fk", "value"])
-
-    def join(instr_src: DataFrame) -> DataFrame:
-        instr = fk_instructions(instr_src, "pk", "fk", ["fk", "value"], "seq")
-        # compact_rights=True (r16): only the FINAL right row per fk
-        # per micro-batch fans out — Kafka Streams' KTable cache
-        # compacts R_1..R_n to R_n within a commit interval, and this
-        # query reduces the changelog with latest_per_key(pk,
-        # (_seq,_minor)) below, where every compacted-away fan-out is
-        # superseded by a later kept emission for its pk (proof +
-        # randomized pin: tests/test_fk_fast_batch.py; oracle-identical
-        # at sf0.01/sf0.1). Cuts the fan-out volume ~40x at the sf0.1
-        # gate shape (5 fks x 1500 pks x 4 right rows/fk/batch).
-        return fk_join_changelog(
-            instr, right, right_key="rk", right_payload=["rvalue"],
-            right_seq="seq", right_tombstone=None,
-            left_value_cols=["value"], how=how,
-            compact_rights=True,
-        )
-
-    # This entry keeps its own fork: two Update-mode TWS operators
-    # cannot chain in one streaming query, so the streaming path hands
-    # stage 1's changelog to stage 2 through a parquet directory (Kafka's
-    # subscription-response topic); the batch replays chain directly.
-    if not tws_available(spark):
-        table = join(changelog)
-    else:
-        # both staging dirs are transient: the memory sink returned by
-        # run_available_now is fully materialized, so nothing reads
-        # them after this block — clean up even on exception
-        inter = tempfile.mkdtemp(prefix="fk_inter_")
-        ckpt = tempfile.mkdtemp(prefix="fk_ckpt_")
-        try:
-            from kafka_streams_app_spark.streaming.harness import (
-                stream_shuffle_partitions,
-            )
-
-            with stream_shuffle_partitions(spark):
-                q1 = (
-                    changelog.writeStream.format("parquet")
-                    .option("path", inter).option("checkpointLocation", ckpt)
-                    .outputMode("append").trigger(availableNow=True).start()
-                )
-                q1.awaitTermination()
-            inter_src = spark.readStream.schema(changelog.schema).parquet(inter)
-            table = _drain(spark, join(inter_src))
-        finally:
-            shutil.rmtree(ckpt, ignore_errors=True)
-            shutil.rmtree(inter, ignore_errors=True)
+    instr = fk_instructions(changelog, "pk", "fk", ["fk", "value"], "seq")
+    # compact_rights=True (r16): only the FINAL right row per fk per
+    # micro-batch fans out — Kafka Streams' KTable cache compacts
+    # R_1..R_n to R_n within a commit interval, and this query reduces
+    # the changelog with latest_per_key(pk, (_seq,_minor)) below, where
+    # every compacted-away fan-out is superseded by a later kept
+    # emission for its pk (proof + randomized pin:
+    # tests/test_fk_fast_batch.py; oracle-identical at sf0.01/sf0.1).
+    # Cuts the fan-out volume ~40x at the sf0.1 gate shape (5 fks x
+    # 1500 pks x 4 right rows/fk/batch).
+    join = fk_join_changelog(
+        instr, right, right_key="rk", right_payload=["rvalue"],
+        right_seq="seq", right_tombstone=None,
+        left_value_cols=["value"], how=how, compact_rights=True,
+    )
+    table = _drain(spark, join)
     snap = ktable.latest_per_key(
         table, ["pk"], ["_seq", "_minor"],
         payload=["action", "value", "r_rvalue"],

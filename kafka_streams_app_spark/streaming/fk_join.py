@@ -6,20 +6,22 @@ Reference: leftTable.join(rightTable, fkExtractor, joiner)
 Kafka implements this with internal subscription/response topics: the
 left side publishes (fk -> pk) subscriptions, partitioned BY FK so each
 right-side task can answer lookups locally; an FK change re-routes the
-subscription. This module mirrors that architecture Spark-first:
+subscription. This module mirrors that architecture Spark-first, as one
+topology:
 
   left raw changelog
-    -> ktable_changelog (keyed by pk; emits old_fk/new_fk)   [query 1]
+    -> ktable_changelog (keyed by pk; emits old_fk/new_fk)
     -> fk_instructions (stateless flatMap: sub/unsub per FK change)
     -> union with tagged right changelog
-    -> groupBy(hash bucket of fk) + transformWithStateInPandas       [query 2]
+    -> groupBy(hash bucket of fk) + transformWithStateInPandas
        state per fk: right value + subscription map {pk -> left payload}
     -> join changelog (pk, action, left payload, right value)
 
-The shuffle by fk bucket IS Kafka's subscription topic; the two chained
-stateful queries are connected by an intermediate changelog directory
-(Kafka's response topic) because Spark disallows two update-mode
-stateful operators in one query — see FKJoinReplay.
+The shuffle by fk bucket IS Kafka's subscription topic. On a stream the
+whole chain is ONE query: both TWS operators (timeMode="None") run in
+Update mode, so one checkpoint holds both stages' state and every
+source's offsets (see FKJoinReplay). On batch inputs the same chain
+runs as grouped replays.
 
 Correct (bug-free) semantics pinned by tests/test_fk_join_stream.py,
 fixing the reference's documented upstream bugs
@@ -33,7 +35,6 @@ from __future__ import annotations
 
 import shutil
 import tempfile
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -769,9 +770,11 @@ def fk_join_changelog(
     n_buckets: int = 16,
     compact_rights: bool = False,
 ) -> DataFrame:
-    """Query-2 builder: union(instructions, tagged right changelog)
+    """Join stage: union(instructions, tagged right changelog)
     -> groupBy(fk bucket) -> stateful join processor -> join changelog
-    (pk, action, left value cols, right payload cols).
+    (pk, action, left value cols, right payload cols). It chains
+    directly after fk_instructions(ktable_changelog(...)): one
+    streaming query, or one batch plan.
 
     n_buckets: the stateful operator groups by
     pmod(xxhash64(fk), n_buckets) (see _FKJoinProcessorBucketed for the
@@ -791,17 +794,22 @@ def fk_join_changelog(
     return run_stateful(unioned, ["_fkj_bucket"], proc, out_schema)
 
 
-class FKJoinReplay:
-    """Two-query FK-join pipeline with TopologyTestDriver-style piping.
+class FKJoinReplay(MicroBatchReplay):
+    """The FK-join pipeline as ONE streaming query, with
+    TopologyTestDriver-style piping.
 
-    Query 1 (left KTable): left staging dir -> ktable_changelog
-    -> parquet intermediate (the "subscription response topic").
-    Query 2 (join): intermediate + right staging dir -> fk instructions
-    union right -> stateful FK join -> memory sink.
+    Left staging dir -> ktable_changelog -> fk_instructions, unioned
+    with the right staging dir -> stateful FK join -> sink. Both TWS
+    operators run in Update mode in the same query, so one checkpoint
+    holds the ktable state, the two join stores and both sources'
+    committed offsets.
 
-    pipe_left/pipe_right append one micro-batch and drive both queries to
-    quiescence, so per-pipe drain() shows exactly the join changelog the
-    reference's readOutputTopic() would.
+    pipe_left/pipe_right append one file to their side and drive the
+    query to quiescence, so per-pipe drain() shows exactly the join
+    changelog the reference's readOutputTopic() would. With the query
+    stopped (query.stop(), a crash), a pipe only stages its file;
+    restart() (sink='parquet') resumes from the checkpoint and settle()
+    consumes what was staged.
     """
 
     def __init__(
@@ -821,85 +829,33 @@ class FKJoinReplay:
         n_buckets: int = 16,
         sink: str = "memory",
     ) -> None:
-        self.spark = spark
-        name = f"fkjoin_{uuid.uuid4().hex[:12]}"
-        self._dirs = [tempfile.mkdtemp(prefix=f"{name}_{x}_")
-                      for x in ("inter", "ckpt1")]
-        inter_dir, ckpt1 = self._dirs
-        left_value_cols = [c for c in left_payload if c != fk]
+        self._left_schema = left_schema
+        self._left_staging = tempfile.mkdtemp(prefix="fkjoin_lsrc_")
+        self.seq = 0
 
-        # query 1: left raw -> latest-per-key changelog -> intermediate dir
-        self._left_replay_schema = left_schema
-        self._left_staging = tempfile.mkdtemp(prefix=f"{name}_lsrc_")
-        self._dirs.append(self._left_staging)
-        def _build_left_view() -> DataFrame:
+        def build(right_src: DataFrame) -> DataFrame:
             left_src = (
                 spark.readStream.schema(left_schema)
                 .option("maxFilesPerTrigger", 1)
                 .parquet(self._left_staging)
             )
-            return ktable_changelog(
+            changelog = ktable_changelog(
                 left_src, [pk], "seq", left_payload, left_tombstone,
                 n_buckets=n_buckets,
             )
-
-        def _start_q1():
-            return (
-                _build_left_view().writeStream.format("parquet")
-                .option("path", inter_dir)
-                .option("checkpointLocation", ckpt1)
-                .outputMode("append")
-                .start()
-            )
-
-        self._start_q1 = _start_q1
-        self.q1 = _start_q1()
-        # parquet sink needs at least one committed batch before a reader
-        # can infer anything; we pass the schema explicitly instead.
-        inter_schema = StructType(_build_left_view().schema.fields)
-
-        # query 2: intermediate + right staging -> join changelog
-        def build(right_src: DataFrame) -> DataFrame:
-            inter = (
-                spark.readStream.schema(inter_schema)
-                .option("maxFilesPerTrigger", 1000)
-                .parquet(inter_dir)
-            )
-            instr = fk_instructions(inter, pk, fk, left_payload, "seq")
             return fk_join_changelog(
-                instr,
+                fk_instructions(changelog, pk, fk, left_payload, "seq"),
                 right_src,
                 right_key=right_key,
                 right_payload=right_payload,
                 right_seq="seq",
                 right_tombstone=right_tombstone,
-                left_value_cols=left_value_cols,
+                left_value_cols=[c for c in left_payload if c != fk],
                 how=how,
                 n_buckets=n_buckets,
             )
 
-        self._right = MicroBatchReplay(
-            spark, right_schema, build, "update", sink=sink
-        )
-        self.seq = 0
-
-    def restart(self) -> None:
-        """Crash-recovery for the WHOLE 2-stage pipeline: kill both
-        queries and resume each from its own checkpoint (requires
-        sink='parquet' — the join query's memory sink refuses
-        checkpoint recovery). Query 1's ktable state, query 2's two
-        join stores AND the committed offsets of the left staging,
-        right staging and intermediate ("subscription response")
-        parquet sources all come back from the checkpoints, so
-        committed inputs are never re-read and nothing is re-emitted."""
-        if self._right._sink != "parquet":
-            raise RuntimeError(
-                "restart() needs FKJoinReplay(sink='parquet') — the "
-                "memory sink does not support checkpoint recovery"
-            )
-        self.q1.stop()
-        self._right.restart()
-        self.q1 = self._start_q1()
+        super().__init__(spark, right_schema, build, "update", sink=sink)
 
     def _next_seq(self) -> int:
         self.seq += 1
@@ -908,48 +864,22 @@ class FKJoinReplay:
     def pipe_left(self, rows: list[tuple]) -> None:
         """rows WITHOUT seq; seq is appended here (global pipe order)."""
         full = [r + (self._next_seq(),) for r in rows]
-        df = self.spark.createDataFrame(full, self._left_replay_schema)
+        df = self.spark.createDataFrame(full, self._left_schema)
         df.coalesce(1).write.mode("append").parquet(self._left_staging)
-        self.q1.processAllAvailable()
-        self._right.query.processAllAvailable()
-
-    def settle(self) -> None:
-        """Drive both queries to quiescence without new input — after a
-        restart this consumes any committed-but-unprocessed files."""
-        self.q1.processAllAvailable()
-        self._right.query.processAllAvailable()
-
-    def crash_join_query(self) -> None:
-        """Kill ONLY query 2 (the join) — with query 1 still running,
-        this opens the mid-pipeline crash window where intermediate
-        changelog files are committed with no consumer."""
-        self._right.query.stop()
-
-    def pipe_left_q1_only(self, rows: list[tuple]) -> None:
-        """Deliver a left micro-batch through query 1 ONLY (the
-        intermediate "subscription response" files get committed while
-        query 2 is down) — restart() must then replay the handoff from
-        query 2's checkpointed source offsets exactly once."""
-        full = [r + (self._next_seq(),) for r in rows]
-        df = self.spark.createDataFrame(full, self._left_replay_schema)
-        df.coalesce(1).write.mode("append").parquet(self._left_staging)
-        self.q1.processAllAvailable()
+        self.settle()
 
     def pipe_right(self, rows: list[tuple]) -> None:
-        self._right.pipe([r + (self._next_seq(),) for r in rows])
+        self.pipe([r + (self._next_seq(),) for r in rows])
+
+    def settle(self) -> None:
+        """Drive the query to quiescence without new input — after a
+        restart this consumes any staged-but-unprocessed files."""
+        self.query.processAllAvailable()
 
     def drain(self) -> list[tuple]:
         """Join-changelog rows since last drain, ordering tag stripped."""
-        return [tuple(x)[:-2] for x in self._right.drain()]
+        return [tuple(x)[:-2] for x in super().drain()]
 
     def stop(self) -> None:
-        self.q1.stop()
-        self._right.stop()
-        for d in self._dirs:
-            shutil.rmtree(d, ignore_errors=True)
-
-    def __enter__(self) -> FKJoinReplay:
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.stop()
+        super().stop()
+        shutil.rmtree(self._left_staging, ignore_errors=True)

@@ -239,14 +239,13 @@ def test_restart_does_not_recount_processed_files(spark):
 
 @pytest.mark.parametrize("n_buckets", [4])
 def test_fk_pipeline_survives_restart(spark, n_buckets):
-    """r11 verdict #6: the FULL 2-stage FK-join pipeline (ktable
-    changelog query -> intermediate "subscription response" parquet ->
-    stateful join query) resumed from its checkpoints must (a) not
-    re-read committed inputs, (b) not double-emit anything — the drain
-    right after restart is EMPTY, (c) have both join stores AND the
-    query-1 ktable state back: a post-restart right update joins the
-    pre-restart subscription, and a post-restart FK move retracts via
-    the pre-restart left value exactly once."""
+    """r11 verdict #6: the FULL FK-join pipeline (ktable changelog ->
+    fk instructions -> stateful join, one query) resumed from its
+    checkpoint must (a) not re-read committed inputs, (b) not
+    double-emit anything — the drain right after restart is EMPTY, (c)
+    have both join stores AND the ktable state back: a post-restart
+    right update joins the pre-restart subscription, and a post-restart
+    FK move retracts via the pre-restart left value exactly once."""
     from kafka_streams_app_spark.streaming.fk_join import FKJoinReplay
     from kafka_streams_app_spark.streaming.replay import tws_available
 
@@ -267,7 +266,7 @@ def test_fk_pipeline_survives_restart(spark, n_buckets):
         p.pipe_right([("adidas", 3, False)])
         assert p.drain() == [("3 bands", "upsert", "3 bands", 3)]
 
-        # ---- crash both queries, resume from the same checkpoints ----
+        # ---- crash the query, resume from the same checkpoint ----
         p.restart()
         # (a)+(b): committed inputs not re-read, nothing re-emitted
         assert p.drain() == []
@@ -292,19 +291,13 @@ def test_fk_pipeline_survives_restart(spark, n_buckets):
         assert p.drain() == []
 
 
-@pytest.mark.parametrize("n_buckets", [4])
-def test_fk_pipeline_mid_handoff_crash(spark, n_buckets):
-    """r12 verdict #6: crash BETWEEN the two chained stateful queries —
-    query 1 commits intermediate "subscription response" files that
-    query 2 never consumed, then everything restarts. The recovered
-    pipeline must replay exactly the missed handoff (each pending
-    instruction applied once, none lost, none doubled) and end in the
-    same changelog state as an uninterrupted run."""
+def _fk_pipes_around_crash(spark, n_buckets: int, crash: bool):
+    """One pipe sequence through the FK pipeline. With crash=True the
+    query is stopped after the first two pipes, a left file and a right
+    file are staged while it is down, and the query restarts from its
+    checkpoint. Returns (rows emitted for the staged input, end state
+    reduced per pk by the (_seq, _minor) ordering tag)."""
     from kafka_streams_app_spark.streaming.fk_join import FKJoinReplay
-    from kafka_streams_app_spark.streaming.replay import tws_available
-
-    if not tws_available(spark):
-        pytest.skip("TWS protobuf unavailable in this session")
 
     LEFT = "pk string, fk string, name string, is_delete boolean, seq long"
     RIGHT = "rk string, rank int, is_delete boolean, seq long"
@@ -319,30 +312,48 @@ def test_fk_pipeline_mid_handoff_crash(spark, n_buckets):
         assert p.drain() == [("a1", "upsert", "Ann", None)]
         p.pipe_right([("adidas", 3, False)])
         assert p.drain() == [("a1", "upsert", "Ann", 3)]
-
-        # ---- the mid-handoff crash window ----
-        p.crash_join_query()
-        # two committed-but-unconsumed intermediate files: an FK move
-        # (unsubscribe adidas / subscribe puma against pre-crash state)
-        # and a brand-new subscriber of adidas
-        p.pipe_left_q1_only([("a1", "puma", "Ann", False)])
-        p.pipe_left_q1_only([("b2", "adidas", "Bob", False)])
-        p.restart()
-        p.settle()
-
-        # catch-up: each pending instruction applied exactly once —
-        # a1 re-keys to (unmatched) puma, b2 joins the recovered
-        # right store's rank 3
-        assert sorted(p.drain()) == [
-            ("a1", "upsert", "Ann", None),
-            ("b2", "upsert", "Bob", 3),
-        ]
+        if crash:
+            p.query.stop()
+        # an FK move (unsubscribe adidas / subscribe puma against the
+        # pre-crash state), a new subscriber of adidas, then right
+        # updates for both fks
+        p.pipe_left([("a1", "puma", "Ann", False), ("b2", "adidas", "Bob", False)])
+        p.pipe_right([("adidas", 5, False), ("puma", 7, False)])
+        if crash:
+            p.restart()
+            p.settle()
+        catch_up = sorted(p.drain(), key=repr)
         # nothing pending: an idle drain stays empty
         assert p.drain() == []
+        end = {}
+        for r in sorted(p.table().collect(), key=lambda r: (r._seq, r._minor)):
+            end[r.pk] = (r.action, r.name, r.r_rank)
+        return catch_up, end
 
-        # the replayed subscription is live: puma arriving now joins a1
-        p.pipe_right([("puma", 7, False)])
-        assert p.drain() == [("a1", "upsert", "Ann", 7)]
+
+@pytest.mark.parametrize("n_buckets", [4])
+def test_fk_pipeline_crash_with_pending_input(spark, n_buckets):
+    """Crash with input pending on BOTH sides: the query stops, a left
+    and a right file are staged, and the query restarts from its one
+    checkpoint. Each pending record must be applied exactly once (none
+    lost, none doubled) — the catch-up rows and the end state per pk
+    equal an uninterrupted run of the same pipes."""
+    from kafka_streams_app_spark.streaming.replay import tws_available
+
+    if not tws_available(spark):
+        pytest.skip("TWS protobuf unavailable in this session")
+
+    catch_up, end = _fk_pipes_around_crash(spark, n_buckets, crash=True)
+    assert catch_up == sorted([
+        ("a1", "upsert", "Ann", None),  # moved to (still absent) puma
+        ("b2", "upsert", "Bob", 3),     # joins the recovered right store
+        ("b2", "upsert", "Bob", 5),
+        ("a1", "upsert", "Ann", 7),
+    ], key=repr)
+    assert end == {"a1": ("upsert", "Ann", 7), "b2": ("upsert", "Bob", 5)}
+    assert (catch_up, end) == _fk_pipes_around_crash(
+        spark, n_buckets, crash=False
+    )
 
 
 _MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"

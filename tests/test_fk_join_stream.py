@@ -1,5 +1,5 @@
 """Incremental FK-join edge-case pins (M4) — the 7 reference scenarios
-replayed through the two-query streaming pipeline (FKJoinReplay),
+replayed through the one-query streaming pipeline (FKJoinReplay),
 asserting per-pipe join-changelog emissions.
 
 The reference documents Kafka's own bugs in these scenarios
@@ -13,8 +13,6 @@ merchant-rank shape).
 """
 
 from __future__ import annotations
-
-from pathlib import Path
 
 import pytest
 
@@ -158,7 +156,7 @@ RIGHT_BIG = "rk string, rrank long, is_delete boolean, seq long"
 
 @pytest.mark.parametrize("n_buckets", [4])
 def test_fk_join_int64_payload_precision(spark, n_buckets):
-    """The query-2 union ALWAYS carries nulls in the other side's
+    """The join-stage union ALWAYS carries nulls in the other side's
     columns, so int64 payloads reach pandas nullable; without the
     extension-dtype pin they arrive float64 and values above 2^53
     silently round (same class as the r5 bucketed-ktable ADVICE bug)."""
@@ -231,7 +229,7 @@ def test_fk_bucketed_equals_perfk_random(spark, how, with_mutations, seed):
 
 
 def test_fk_bucketed_multibatch_state_carry_random(spark):
-    """Randomized MULTI-BATCH run through the full two-query pipeline:
+    """Randomized MULTI-BATCH run through the full streaming pipeline:
     each pipe is its own micro-batch, so the bucketed kernel must
     join against STATE carried from earlier batches (snapshot overlay,
     right-value MapState) — not just within-batch context. The same
@@ -261,22 +259,56 @@ def test_fk_bucketed_multibatch_state_carry_random(spark):
     assert run(1) == run(4)
 
 
-def test_intermediate_dir_bounded(spark):
-    """The stage-1/stage-2 parquet hop (Kafka's subscription-response
-    topic analogue) must stay BOUNDED across micro-batches — growth is
-    one changelog file set per batch, the sink's file log exists for a
-    retention sweep to consult (SCALE.md "retention story"), and stop()
-    removes the directory outright."""
-    with make(spark, "left") as p:
-        inter = Path(p._dirs[0])
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        for i in range(3):
-            p.pipe_left([(f"pk{i}", "m", f"n{i}", False)])
-        data_files = list(inter.rglob("*.parquet"))
-        # linear in batches (one task's worth of files per non-empty
-        # batch), never in table size
-        assert 1 <= len(data_files) <= 3 * n_parts
-        # the streaming sink's file log — what a TTL/retention sweep
-        # consults before deleting aged files
-        assert (inter / "_spark_metadata").exists()
-    assert not inter.exists()  # stop() reclaims the hop eagerly
+def test_registry_fk_pipeline_is_one_streaming_query(spark, monkeypatch):
+    """s_fk_join_incremental chains ktable_changelog -> fk_instructions
+    -> fk_join_changelog in ONE streaming query: exactly one query
+    starts, its plan holds both TWS operators, and no intermediate
+    changelog directory is made on the way."""
+    import os
+    import tempfile
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    import __spark_entry__ as registry
+    from kafka_streams_app_spark.streaming.replay import tws_available
+
+    if not tws_available(spark):
+        pytest.skip("TWS protobuf unavailable in this session")
+
+    class Started(StreamingQueryListener):
+        # onQueryStarted runs before start() returns, so the query is
+        # still active and the count is final when the entry returns
+        def __init__(self) -> None:
+            self.queries = []
+
+        def onQueryStarted(self, event) -> None:
+            self.queries.append(spark.streams.get(str(event.id)))
+
+        def onQueryProgress(self, event) -> None:
+            pass
+
+        def onQueryTerminated(self, event) -> None:
+            pass
+
+    made: list[str] = []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def mkdtemp(*args, **kwargs):
+        path = real_mkdtemp(*args, **kwargs)
+        made.append(os.path.basename(path))
+        return path
+
+    monkeypatch.setattr(tempfile, "mkdtemp", mkdtemp)
+    started = Started()
+    spark.streams.addListener(started)
+    try:
+        out = registry.queries()["s_fk_join_incremental"](
+            spark, registry.SF0001
+        )
+        assert out.count() > 0
+    finally:
+        spark.streams.removeListener(started)
+    assert len(started.queries) == 1
+    plan = started.queries[0]._jsq.explainInternal(False)
+    assert plan.count("TransformWithStateInPySpark ") == 2
+    assert made and not [d for d in made if d.startswith("fk_inter_")]

@@ -12,17 +12,17 @@ subscriptions ramp while right updates fan out (defaults emit ~10M
 join rows from 25k inputs; the full 1M-event smoke would emit ~10^11 —
 exactly why SCALE.md files this shape under skew, not throughput).
 
-Both stages run the bucketed processors at their default 16 buckets.
-For each stage-2 trigger size (maxFilesPerTrigger on BOTH stage-2
-sources), prints wall seconds, stage-2 micro-batch count, and the PEAK
-resident set summed over the pyspark python workers (sampled at 50 ms)
-— the fan-out buffers (per-fk latest-sub matrix + emitted pair
-columns) live there. Smaller triggers process the same rows across
-more, smaller batches: bounded per-batch fan-out state, same total
-output volume. (The probe measures resources, not changelog equality —
-the randomized equivalence tests in tests/test_fk_join_stream.py own
-that; with a hash-partitioned intermediate, sub-file triggers replay
-seqs across batches in file order.)
+The pipeline is one streaming query; both stateful stages run the
+bucketed processors at their default 16 buckets. For each trigger size
+(maxFilesPerTrigger on BOTH sources), prints wall seconds, the
+micro-batch count (from the query's progress), and the PEAK resident
+set summed over the pyspark python workers (sampled at 50 ms) — the
+fan-out buffers (per-fk latest-sub matrix + emitted pair columns) live
+there. Smaller triggers process the same rows across more, smaller
+batches: bounded per-batch fan-out state, same total output volume.
+(The probe measures resources, not changelog equality — the randomized
+equivalence tests in tests/test_fk_join_stream.py own that; sub-file
+triggers pair the two sides' files in file order, not by seq.)
 """
 
 from __future__ import annotations
@@ -34,7 +34,6 @@ import sys
 import tempfile
 import threading
 import time
-from pathlib import Path
 
 sys.path.insert(0, "/root/repo")
 sys.path.insert(0, "/root/repo/tools")
@@ -45,7 +44,6 @@ from kafka_streams_app_spark.streaming.fk_join import (
     fk_join_changelog,
 )
 from kafka_streams_app_spark.streaming.ktable import ktable_changelog
-from stream_throughput import run_noop
 
 N_FKS = 5
 N_FILES = 8  # staged files per source -> max micro-batches at trigger=1
@@ -113,49 +111,44 @@ def build(spark, n_pks: int, n_right: int) -> tuple[str, str]:
 
 def run(spark, left_dir: str, right_dir: str,
         trigger_files: int) -> tuple[float, float, int]:
-    """Full 2-stage FK pipeline over the staged dirs; stage-2 sources
-    throttled to trigger_files files per micro-batch. Returns
-    (wall seconds, peak worker RSS MiB, stage-2 micro-batches)."""
-    left = spark.readStream.schema(
-        "pk long, fk string, value double, seq long, is_delete boolean"
-    ).parquet(left_dir)
-    right = (
-        spark.readStream.schema("rk string, rvalue double, seq long")
-        .option("maxFilesPerTrigger", trigger_files)
-        .parquet(right_dir)
+    """Full FK pipeline (one streaming query) over the staged dirs, both
+    sources throttled to trigger_files files per micro-batch. Returns
+    (wall seconds, peak worker RSS MiB, micro-batches with input)."""
+    def source(schema: str, path: str):
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", trigger_files)
+            .parquet(path)
+        )
+
+    left = source(
+        "pk long, fk string, value double, seq long, is_delete boolean",
+        left_dir,
     )
+    right = source("rk string, rvalue double, seq long", right_dir)
     changelog = ktable_changelog(
         left, ["pk"], "seq", ["fk", "value"], "is_delete"
     )
-    inter = tempfile.mkdtemp(prefix="skew_fk_inter_")
+    instr = fk_instructions(changelog, "pk", "fk", ["fk", "value"], "seq")
+    join = fk_join_changelog(
+        instr, right, right_key="rk", right_payload=["rvalue"],
+        right_seq="seq", right_tombstone=None,
+        left_value_cols=["value"], how="inner",
+    )
     ckpt = tempfile.mkdtemp(prefix="skew_fk_ckpt_")
     t0 = time.monotonic()
     try:
-        q1 = (
-            changelog.writeStream.format("parquet")
-            .option("path", inter).option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q1.awaitTermination()
-        inter_src = (
-            spark.readStream.schema(changelog.schema)
-            .option("maxFilesPerTrigger", trigger_files)
-            .parquet(inter)
-        )
-        instr = fk_instructions(inter_src, "pk", "fk", ["fk", "value"], "seq")
-        join = fk_join_changelog(
-            instr, right, right_key="rk", right_payload=["rvalue"],
-            right_seq="seq", right_tombstone=None,
-            left_value_cols=["value"], how="inner",
-        )
         with _PeakRss() as rss:
-            run_noop(join, "update")
-        n_files = len(list(Path(inter).glob("part-*")))
-        batches = -(-n_files // trigger_files)  # ceil
+            q = (
+                join.writeStream.format("noop").outputMode("update")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True).start()
+            )
+            q.awaitTermination()
+        batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
         return time.monotonic() - t0, rss.peak, batches
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(inter, ignore_errors=True)
 
 
 def main() -> None:
@@ -173,7 +166,7 @@ def main() -> None:
             )
             print(json.dumps({
                 "shape": "fk_5hot_fks", "n_pks": n_pks, "n_right": n_right,
-                "trigger_files": trigger_files, "stage2_batches": batches,
+                "trigger_files": trigger_files, "batches": batches,
                 "sec": round(wall, 2),
                 "peak_worker_rss_mib": round(peak_mib, 0),
             }), flush=True)

@@ -80,20 +80,14 @@ def run_noop(out_df: DataFrame, output_mode: str) -> float:
 def run_fk_pipeline(
     spark: SparkSession, events_path: str, n_buckets: int = 128
 ) -> float:
-    """J7/J8 incremental FK join, FULL two-stage pipeline wall time:
-    stage 1 streams the left KTable changelog to an intermediate parquet
-    dir (Kafka's subscription-response hop), stage 2 runs the
-    groupBy(fk) join processor to a noop sink. Mirrors the
+    """J7/J8 incremental FK join, FULL pipeline wall time: the left
+    KTable changelog -> fk instructions -> groupBy(fk) join processor,
+    one streaming query to a noop sink. Mirrors the
     s_fk_join_incremental contract shape (left = latest event per user,
     FK = event_type; right = latest event per type).
 
-    n_buckets: the bucket count of BOTH stages
+    n_buckets: the bucket count of BOTH stateful stages
     (ktable._LatestPerKeyBucketed / fk_join._FKJoinProcessorBucketed)."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F  # noqa: F811 (local clarity)
-
     from kafka_streams_app_spark.streaming.fk_join import (
         fk_instructions,
         fk_join_changelog,
@@ -116,28 +110,13 @@ def run_fk_pipeline(
     changelog = ktable_changelog(
         left, ["pk"], "seq", ["fk", "value"], n_buckets=n_buckets
     )
-    inter = tempfile.mkdtemp(prefix="tput_fk_inter_")
-    ckpt = tempfile.mkdtemp(prefix="tput_fk_ckpt_")
-    t0 = time.monotonic()
-    try:
-        q1 = (
-            changelog.writeStream.format("parquet")
-            .option("path", inter).option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q1.awaitTermination()
-        inter_src = spark.readStream.schema(changelog.schema).parquet(inter)
-        instr = fk_instructions(inter_src, "pk", "fk", ["fk", "value"], "seq")
-        join = fk_join_changelog(
-            instr, right, right_key="rk", right_payload=["rvalue"],
-            right_seq="seq", right_tombstone=None,
-            left_value_cols=["value"], how="inner", n_buckets=n_buckets,
-        )
-        run_noop(join, "update")
-        return time.monotonic() - t0
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(inter, ignore_errors=True)
+    instr = fk_instructions(changelog, "pk", "fk", ["fk", "value"], "seq")
+    join = fk_join_changelog(
+        instr, right, right_key="rk", right_payload=["rvalue"],
+        right_seq="seq", right_tombstone=None,
+        left_value_cols=["value"], how="inner", n_buckets=n_buckets,
+    )
+    return run_noop(join, "update")
 
 
 def main() -> None:
