@@ -1321,14 +1321,12 @@ def _q_dedup_minhash_cross(spark: SparkSession, sf: str) -> DataFrame:
     (same corpus split as dedup_cross_corpus, so the %10==2 overlap
     surfaces as jac=1.0 self-pairs plus whatever genuine near-dups
     exist), exact-Jaccard verified
-    (operators/dedup.py:dedup_minhash_lsh_cross). Oracle = brute-force
-    cross Jaccard (recall ~1 at 0.8 by the 64x2 band construction)."""
+    (operators/dedup.py:dedup_minhash_lsh_cross, which computes the
+    fused shingle+band pass once over new|ref since both corpora are
+    slices of ONE table). Oracle = brute-force cross Jaccard (recall ~1
+    at 0.8 by the 64x2 band construction)."""
     docs = load_table(spark, sf, "documents")
-    # both corpora are slices of ONE table, so the sliced variant
-    # computes the fused shingle+band pass once over new|ref instead of
-    # once per side (output-identical; r15 CSE, see
-    # dedup_minhash_lsh_cross_sliced)
-    return dedup.dedup_minhash_lsh_cross_sliced(
+    return dedup.dedup_minhash_lsh_cross(
         docs, F.col("doc_id") % 10 >= 2, F.col("doc_id") % 10 < 3,
         "text", "doc_id",
     )

@@ -130,7 +130,10 @@ HEAVYSCAN = [
 # attempts 0 — artifacts/opt_r16/bench_r16_final.json.raw) replaces
 # the r12 rows, which had drifted 10-31% from reality on 13 queries.
 # The r12 values remain in BASELINE.md's history tables.
-BASELINE_SEC = {
+# Readings only compare at the same core count, so the frozen sets are
+# keyed by the configured SPARK_GRAFT_CPUS; a run at a count with no
+# frozen set reports `regressions: null` and compares nothing.
+BASELINE_SEC_32 = {
     # headline (r16 re-anchor, was r12)
     "t1_wordcount": 0.304, "a2_windowed_count": 0.419,
     "a3_windowed_sum": 0.524, "a4_session_count": 0.535,
@@ -159,6 +162,38 @@ BASELINE_SEC = {
     "multimodal_jpeg_decode": 0.694, "multimodal_jpeg_color_decode": 1.021,
     "decontam_exact_ac": 0.5,
 }
+
+# 4 vCPUs: one settled `SPARK_GRAFT_CPUS=4 python bench.py` run
+# (BASELINE.md "4-core frozen set").
+BASELINE_SEC_4 = {
+    # headline
+    "t1_wordcount": 0.417, "a2_windowed_count": 0.715,
+    "a3_windowed_sum": 0.865, "a4_session_count": 0.889,
+    "w3_hopping_count": 0.831, "j1_interval_join_inner": 0.672,
+    "j4_asof_enrich": 0.78, "j5_table_join_inner": 0.829,
+    "j8_fk_join_inner_agg": 0.698, "q5_window_fetch_all": 0.571,
+    "dedup_exact": 0.408, "dedup_minhash_lsh": 3.062,
+    "sim_cosine_topk": 0.908, "sim_lsh_ann_topk": 1.399,
+    "text_quality": 0.728, "text_pii_scrub": 1.916, "pack_sequences": 0.58,
+    "tpch_q1_pricing": 1.157, "tpch_q3_top_revenue": 1.623,
+    "tpch_q5_local_revenue": 1.566, "tpch_q6_forecast_revenue": 0.497,
+    "tpch_q13_custdist": 0.726, "tpch_q18_large_orders": 1.593,
+    # curation
+    "sim_semdedup": 1.375, "cluster_kmeans": 1.691, "dsir_select": 1.632,
+    "corpus_scrub_dup_spans": 1.943, "dedup_minhash_lsh_cross": 2.346,
+    "sim_hard_negatives_ann": 1.214,
+    # sketches
+    "events_hll_distinct": 0.53, "events_hll_windowed": 0.642,
+    "events_cms_topk": 0.612, "events_hist_quantiles": 0.399,
+    "events_hll_setops": 0.538, "corpus_softdedup_sample": 0.98,
+    "ktable_history_asof": 0.479,
+    # heavyscan
+    "dedup_winnowing": 2.644, "text_winnowing": 1.206,
+    "multimodal_jpeg_decode": 2.608, "multimodal_jpeg_color_decode": 6.523,
+    "decontam_exact_ac": 0.655,
+}
+
+BASELINE_SEC = {32: BASELINE_SEC_32, 4: BASELINE_SEC_4}
 
 
 # Settle guard (r14 verdict ask #2): the last TWO official driver
@@ -200,10 +235,17 @@ def wait_for_settle() -> dict:
     }
 
 
-def check_regressions(per_query: dict[str, float]) -> list[str]:
+def check_regressions(per_query: dict[str, float], ncpus: int) -> list[str] | None:
+    """Queries over 2x their frozen baseline at `ncpus` cores, or None
+    when no set is frozen at that count (nothing is compared)."""
+    baseline = BASELINE_SEC.get(ncpus)
+    if baseline is None:
+        print(f"bench: no frozen baseline at {ncpus} cores; "
+              "regression check skipped", file=sys.stderr)
+        return None
     bad = []
     for name, sec in per_query.items():
-        base = BASELINE_SEC.get(name)
+        base = baseline.get(name)
         if base is not None and sec > max(2.0 * base, 0.8):
             bad.append(name)
             print(
@@ -302,20 +344,24 @@ def main() -> None:
             n: round(xq10[n] / base_q[n], 2)
             for n in names if base_q.get(n)
         }
-    regressions = check_regressions(
-        {**out.get("queries", {}), **out.get("curation_queries", {}),
-         **out.get("sketch_queries", {}), **out.get("heavyscan_queries", {})}
-    )
-    out["regressions"] = regressions
     out["loadavg_start"] = [round(x, 2) for x in loadavg_start]
     out["loadavg_end"] = [round(x, 2) for x in os.getloadavg()]
     # Report the CONFIGURED parallelism, not os.cpu_count(): the r15
     # driver's scaling heuristic (suspect_cpus_ignored) misfired because
     # this line echoed the host's 32 cores even when SPARK_GRAFT_CPUS=8
     # had correctly sized the master/shuffle partitions (engine.py).
-    out["ncpus"] = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
+    # Read from the session, so an unset SPARK_GRAFT_CPUS reports the
+    # engine's default (local[32]) rather than the host's core count.
+    out["ncpus"] = spark.sparkContext.defaultParallelism
     out["master"] = spark.sparkContext.master
     out["host_cpus"] = os.cpu_count()
+    # null (not []) when no set is frozen at this core count
+    regressions = check_regressions(
+        {**out.get("queries", {}), **out.get("curation_queries", {}),
+         **out.get("sketch_queries", {}), **out.get("heavyscan_queries", {})},
+        out["ncpus"],
+    )
+    out["regressions"] = regressions
     out.update(settle)
     print(json.dumps(out))
     if regressions and os.environ.get("SPARK_GRAFT_BENCH_STRICT") == "1":

@@ -12,6 +12,7 @@ word-split convention (lower + \\W+ —
 
 from __future__ import annotations
 
+import functools
 import re
 import threading
 from collections import OrderedDict
@@ -204,9 +205,7 @@ def shingle_list(s: str, k: int) -> list[str]:
     return res
 
 
-_shingles_udf_cache: dict[int, object] = {}
-
-
+@functools.lru_cache(maxsize=32)
 def shingles_udf(k: int):
     """Arrow-batched text -> distinct k-token shingles UDF.
 
@@ -220,14 +219,12 @@ def shingles_udf(k: int):
     Per 128MB scan split this is one Python worker crossing of (text) in
     and (shingles) out — the sanctioned Arrow escape hatch.
     """
-    if k not in _shingles_udf_cache:
 
-        @pandas_udf("array<string>")
-        def _sh(texts: pd.Series) -> pd.Series:
-            return pd.Series([shingle_list(s, k) for s in texts])
+    @pandas_udf("array<string>")
+    def _sh(texts: pd.Series) -> pd.Series:
+        return pd.Series([shingle_list(s, k) for s in texts])
 
-        _shingles_udf_cache[k] = _sh
-    return _shingles_udf_cache[k]
+    return _sh
 
 
 # BPE-ish token pieces: common English contractions, space-prefixed word
@@ -336,22 +333,9 @@ def winnowing_fps_md5(
     return sorted(set(m.tolist()))
 
 
-def winnowing_count_md5(
-    s: str, k: int = 5, window: int = 4, p: int = (1 << 31) - 1
-) -> int:
-    """Plain-Python twin of
-    size(winnowing_of_hashes(token_hashes(tokens(s), hash_fn='md5'))) —
-    value-identical by construction (pinned in tests/test_text_functions).
-    """
-    return len(winnowing_fps_md5(s, k, window, p))
-
-
-_winnowing_fps_udf_cache: dict[tuple, object] = {}
-
-
+@functools.lru_cache(maxsize=32)
 def winnowing_fps_udf(k: int = 5, window: int = 4, p: int = (1 << 31) - 1):
     """Arrow-batched text -> fingerprint SET (md5 token hashes), the
-    array-returning sibling of winnowing_count_udf and still the
     measured fast path when the set itself is needed (streaming
     candidate generation). r15 re-measurement AFTER the
     winnowing_fingerprints CSE guard landed (the old 47 s-vs-16 s x10
@@ -361,18 +345,14 @@ def winnowing_fps_udf(k: int = 5, window: int = 4, p: int = (1 << 31) - 1):
     md5-hex conv per token). Values are identical to the Column form's
     distinct elements (set semantics; order differs — proved set-equal
     on the sf0.1 corpus)."""
-    key = (k, window, p)
-    if key not in _winnowing_fps_udf_cache:
 
-        @pandas_udf("array<bigint>")
-        def _wf(texts: pd.Series) -> pd.Series:
-            return pd.Series([winnowing_fps_md5(s, k, window, p) for s in texts])
+    @pandas_udf("array<bigint>")
+    def _wf(texts: pd.Series) -> pd.Series:
+        return pd.Series([winnowing_fps_md5(s, k, window, p) for s in texts])
 
-        _winnowing_fps_udf_cache[key] = _wf
-    return _winnowing_fps_udf_cache[key]
+    return _wf
 
 
-_winnowing_count_udf_cache: dict[tuple, object] = {}
 # unresolved winnowing fingerprint Columns keyed on (input expr string,
 # k, window, p, hash_fn) — expression-tree reuse, never data (see
 # winnowing_fingerprints). The key is a rendered expression, so the set
@@ -381,26 +361,6 @@ _winnowing_count_udf_cache: dict[tuple, object] = {}
 _WINNOWING_COL_CACHE_MAX = 32
 _winnowing_col_cache: OrderedDict[tuple, Column] = OrderedDict()
 _winnowing_col_lock = threading.Lock()
-
-
-def winnowing_count_udf(k: int = 5, window: int = 4, p: int = (1 << 31) - 1):
-    """Arrow-batched text -> fingerprint COUNT (md5 token hashes).
-
-    With the r15 winnowing_fingerprints CSE guard the Column form is
-    competitive (the old "~3x slower" measurement was against the
-    unguarded chain that re-tokenized per slice); the contract query
-    keeps the guarded Column form for its zero-Python plan. This UDF
-    remains for callers that want the count without any JVM HOF cost.
-    """
-    key = (k, window, p)
-    if key not in _winnowing_count_udf_cache:
-
-        @pandas_udf("int")
-        def _wc(texts: pd.Series) -> pd.Series:
-            return pd.Series([winnowing_count_md5(s, k, window, p) for s in texts])
-
-        _winnowing_count_udf_cache[key] = _wc
-    return _winnowing_count_udf_cache[key]
 
 
 def winnowing_of_hashes(
@@ -476,7 +436,7 @@ def winnowing_fingerprints(
     # which was the single largest FIXED term of the winnowing entries'
     # wall (dedup_winnowing sf0.001 floor: 1.5 s of a 2.3 s sf0.1
     # bench read). The cache holds unresolved EXPRESSION TREES — code,
-    # not data (the _band_hashes_udf_cache precedent): a Column is a
+    # not data (the _band_hashes_udf memo precedent): a Column is a
     # description, resolved per plan, so reuse across queries and
     # data directories is semantics-free.
     key = (str(text_col), k, window, p, hash_fn)

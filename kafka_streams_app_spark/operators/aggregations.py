@@ -96,12 +96,6 @@ def exact_sum_decimal(col: str | Column, scale: tuple[int, int] = (30, 6)) -> Co
     return F.sum(x.cast(f"decimal({p},{s})")).cast("double")
 
 
-def exact_avg(col: str, scale: tuple[int, int] = (30, 6)) -> Column:
-    p, s = scale
-    dec = F.col(col).cast(f"decimal({p},{s})")
-    return (F.sum(dec) / F.count(dec)).cast("double")
-
-
 def count_per_key(df: DataFrame, keys: list[str], out: str = "cnt") -> DataFrame:
     """A1 — running count per key; batch view = final counts."""
     return df.groupBy(*keys).agg(F.count(F.lit(1)).alias(out))

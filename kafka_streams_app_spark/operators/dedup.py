@@ -14,7 +14,7 @@ Four tiers, each a distributed plan with no driver-side loops:
 
 from __future__ import annotations
 
-import os
+import functools
 
 import numpy as np
 import pandas as pd
@@ -181,9 +181,6 @@ def _band_hashes(sig: np.ndarray) -> np.ndarray:
     return v.view(np.int64)
 
 
-_band_hashes_udf_cache: dict[int, object] = {}
-
-
 def dedup_containment(
     df: DataFrame,
     text: str,
@@ -240,6 +237,7 @@ def dedup_containment(
     return a_in_b.unionByName(b_in_a).filter(F.col("containment") >= threshold)
 
 
+@functools.lru_cache(maxsize=32)
 def _band_hashes_udf(k: int):
     """Arrow-batched text -> 64 LSH band keys (array<long>), or null
     when the doc has no k-shingle.
@@ -256,23 +254,21 @@ def _band_hashes_udf(k: int):
     Tokenizer and signature arithmetic are unchanged (shingle_list /
     _sig_from_shingles / _band_hashes), so band keys are bit-identical.
     """
-    if k not in _band_hashes_udf_cache:
-        a_vec, b_vec = _A, _B
+    a_vec, b_vec = _A, _B
 
-        @pandas_udf("array<long>")
-        def _bh(texts: pd.Series) -> pd.Series:
-            a = np.asarray(a_vec, dtype=np.int64)
-            b = np.asarray(b_vec, dtype=np.int64)
-            # .tolist(): list cells convert to Arrow faster than
-            # ndarray cells
-            return pd.Series([
-                _band_hashes(_sig_from_shingles(res, a, b)).tolist()
-                if (res := shingle_list(s, k)) else None
-                for s in texts
-            ])
+    @pandas_udf("array<long>")
+    def _bh(texts: pd.Series) -> pd.Series:
+        a = np.asarray(a_vec, dtype=np.int64)
+        b = np.asarray(b_vec, dtype=np.int64)
+        # .tolist(): list cells convert to Arrow faster than
+        # ndarray cells
+        return pd.Series([
+            _band_hashes(_sig_from_shingles(res, a, b)).tolist()
+            if (res := shingle_list(s, k)) else None
+            for s in texts
+        ])
 
-        _band_hashes_udf_cache[k] = _bh
-    return _band_hashes_udf_cache[k]
+    return _bh
 
 
 def _sig_table(df: DataFrame, text: str, id_col: str, k: int) -> DataFrame:
@@ -302,43 +298,15 @@ def _sig_table(df: DataFrame, text: str, id_col: str, k: int) -> DataFrame:
     )
 
 
-def minhash_signature(
-    df: DataFrame, text: str, id_col: str, k: int = 3,
-) -> DataFrame:
-    """(_id, sig array<bigint>[MINHASH_PERMS]) — the standalone
-    signature API (_sig_from_shingles over the shared tokenizer);
-    dedup_minhash_lsh uses the fused band-key form instead."""
-    a_vec, b_vec = _A, _B
-
-    @pandas_udf("array<long>")
-    def _sig(texts: pd.Series) -> pd.Series:
-        a = np.asarray(a_vec, dtype=np.int64)
-        b = np.asarray(b_vec, dtype=np.int64)
-        # .tolist(): list cells convert to Arrow faster than
-        # ndarray cells (see _band_hashes_udf)
-        return pd.Series([
-            _sig_from_shingles(res, a, b).tolist()
-            if (res := shingle_list(s, k)) else None
-            for s in texts
-        ])
-
-    return (
-        ensure_parallelism(df)
-        .select(F.col(id_col).alias("_id"), _sig(F.col(text)).alias("sig"))
-        .filter(F.col("sig").isNotNull())
-    )
-
-
-MINHASH_BAND_CAP_AUTO = int(
-    os.environ.get("SPARK_GRAFT_MINHASH_BAND_CAP", "512"))
-MINHASH_BAND_CAP_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_MINHASH_CAP_MIN_BYTES", str(8 * 1024**3)))
+MINHASH_BAND_CAP_AUTO = 512
+MINHASH_BAND_CAP_MIN_BYTES = 8 * 1024**3
 
 
 def _auto_band_cap(df: DataFrame) -> int | None:
     """Production default for the hot-band cap (r15 verdict ask #3):
     cap = MINHASH_BAND_CAP_AUTO (512) for corpus-sized inputs, off
-    below MINHASH_CAP_MIN_BYTES (8 GiB). Sizing uses the optimizer's
+    below MINHASH_BAND_CAP_MIN_BYTES (8 GiB), both module constants
+    (tests patch them). Sizing uses the optimizer's
     COST ESTIMATE (file-size-derived for lake scans) — no counting job
     at any scale. Unknown-stat inputs (opaque UDF parents, RDD scans)
     estimate at Long.MaxValue and get the cap, the safe direction: at
@@ -395,7 +363,7 @@ def dedup_minhash_lsh(
     resolves via _auto_band_cap to 512 for inputs the optimizer
     estimates at >= 8 GiB and to None — the exact/oracle path — below,
     so test-scale results are byte-identical while corpus-scale runs
-    are skew-protected by default; both knobs are env-overridable) is
+    are skew-protected by default) is
     the hot-band cap, the band-bucket analogue of the posting-list
     max_df dial (r14 verdict ask #5): band buckets with more than
     max_band_df members
@@ -449,8 +417,6 @@ def dedup_minhash_lsh(
 
 
 # --- SimHash ---------------------------------------------------------------
-
-SIMHASH_BITS = 64
 
 
 def _token_hash(hash_fn: str):
@@ -980,105 +946,48 @@ def dedup_winnowing(
 
 
 def dedup_minhash_lsh_cross(
-    new: DataFrame,
-    ref: DataFrame,
+    df: DataFrame,
+    new_cond: Column,
+    ref_cond: Column,
     text: str,
     id_col: str,
     k: int = 3,
     threshold: float = 0.8,
 ) -> DataFrame:
-    """Cross-corpus NEAR-duplicate pairs: every (new, ref) document
-    pair with shingle-Jaccard >= threshold — the fuzzy companion to
+    """Cross-corpus NEAR-duplicate pairs between two slices of one
+    table: every (new, ref) document pair with shingle-Jaccard >=
+    threshold, where `new` is df.filter(new_cond) and `ref` is
+    df.filter(ref_cond) (train/eval splits of the same lake, a holdout
+    predicate, an id-range boundary). The fuzzy companion to
     dedup_cross_corpus (exact text equality) and the near-dup form of
     benchmark decontamination: a training doc that paraphrases or
     lightly edits an eval/ref doc shares most of its shingles even
     though no exact span or full-text hash matches.
 
-    Same machinery as dedup_minhash_lsh, two-sided: both corpora get
-    the single-scan shingle+band-key pass (_sig_table), band
-    keys from the SAME permutation family hash both sides into a
-    shared bucket space, candidates are the cross band-join (new x ref
-    only — never new x new), and exact Jaccard over xxhash64 shingle
-    sets verifies each candidate. Recall at the threshold follows the
-    same 64-band/2-row construction as the self variant (miss
-    probability (1 - j^2)^64, ~1e-10 at j = 0.8).
+    Same machinery as dedup_minhash_lsh, two-sided: the single-scan
+    shingle+band-key pass runs ONCE over df.filter(new_cond | ref_cond)
+    (overlapping slices tokenize each document once — the optimizer
+    cannot share that work across two .filter() pipelines of the same
+    scan because the Arrow UDF is opaque; r15 measurement at sf0.1:
+    the two per-side passes were 2.6 s of a 3.0 s wall). new_cond /
+    ref_cond are Columns over df's schema; membership flags ride the
+    persisted signature table (2 booleans/row). Band keys from one
+    permutation family hash both sides into a shared bucket space,
+    candidates are the cross band-join (new x ref only — never new x
+    new), and exact Jaccard over xxhash64 shingle sets verifies each
+    candidate (_verify_jaccard; ids must be unique in df, as in the
+    self variant). Recall at the threshold follows the self variant's
+    64-band/2-row construction (miss probability (1 - j^2)^64, ~1e-10
+    at j = 0.8).
 
     Scale: cost is sum over buckets of |new bucket| x |ref bucket| —
     linear in each corpus at bounded occupancy, and the ref side is
-    typically benchmark/curated-sized. Both sig caches are released
+    typically benchmark/curated-sized. The sig cache is released
     before returning (eager materialization, as in dedup_minhash_lsh).
 
-    Output: doc_a (new id), doc_b (ref id), jac DOUBLE. A document
-    present in both corpora pairs with itself at jac 1.0 — that IS the
+    Output: doc_a (new id), doc_b (ref id), jac DOUBLE. A document in
+    both slices pairs with itself at jac 1.0 — that IS the
     contamination signal, not an artifact to filter.
-    """
-    def prep(df: DataFrame, out_id: str, out_sh: str) -> DataFrame:
-        return (
-            _sig_table(df, text, id_col, k)
-            .select(
-                F.col("_id").alias(out_id),
-                F.col("_sh").alias(out_sh),
-                "_bh",
-            )
-            .persist()
-        )
-
-    a = prep(new, "doc_a", "_sa")
-    b = prep(ref, "doc_b", "_sb")
-    cand = (
-        a.select("doc_a", F.explode("_bh").alias("bh"))
-        .join(b.select("doc_b", F.explode("_bh").alias("bh")), "bh")
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    joined = (
-        cand.join(a.select("doc_a", "_sa"), "doc_a")
-        .join(b.select("doc_b", "_sb"), "doc_b")
-    )
-    inter = F.size(F.array_intersect("_sa", "_sb"))
-    union = F.size("_sa") + F.size("_sb") - inter
-    jac = inter.cast("double") / union
-    try:
-        return (
-            joined.select("doc_a", "doc_b", jac.alias("jac"))
-            .filter((F.col("jac") >= threshold) & (inter > 0))
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        a.unpersist()
-        b.unpersist()
-
-
-def dedup_minhash_lsh_cross_sliced(
-    df: DataFrame,
-    new_cond,
-    ref_cond,
-    text: str,
-    id_col: str,
-    k: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """dedup_minhash_lsh_cross for the common decontam shape where BOTH
-    corpora are SLICES of one table (train/eval splits of the same
-    lake, a holdout predicate, an id-range boundary): output-identical
-    to dedup_minhash_lsh_cross(df.filter(new_cond), df.filter(ref_cond),
-    ...) but the shingle+band signature pass runs ONCE over
-    df.filter(new_cond | ref_cond) instead of once per side.
-
-    Why it exists (r15 measurement, sf0.1): the two signature passes
-    were 2.6 s of the generic form's 3.0 s wall; with overlapping
-    slices (here new|ref = the whole corpus, overlap re-tokenized
-    twice) the shared pass tokenizes each document exactly once —
-    classic common-subexpression elimination the optimizer cannot do
-    across two .filter() pipelines of the same scan because the Arrow
-    UDF is opaque. At 100 TB the saving is a full corpus read +
-    tokenize whenever the slices overlap or the ref slice is large.
-
-    new_cond / ref_cond are Columns over df's schema, evaluated before
-    any renaming; membership flags ride the persisted signature table
-    (2 booleans/row). Band join, candidate distinct, and the exact-
-    Jaccard verify are expression-for-expression the generic form's,
-    so every pair and every jac double is bit-identical.
     """
     sig = (
         ensure_parallelism(df.filter(new_cond | ref_cond))
@@ -1100,30 +1009,14 @@ def dedup_minhash_lsh_cross_sliced(
         .persist()
     )
     a = sig.filter("_in_new").select(
-        F.col("_id").alias("doc_a"), F.col("_sh").alias("_sa"), "_bh"
-    )
+        F.col("_id").alias("doc_a"), F.explode("_bh").alias("bh"))
     b = sig.filter("_in_ref").select(
-        F.col("_id").alias("doc_b"), F.col("_sh").alias("_sb"), "_bh"
-    )
-    cand = (
-        a.select("doc_a", F.explode("_bh").alias("bh"))
-        .join(b.select("doc_b", F.explode("_bh").alias("bh")), "bh")
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    joined = (
-        cand.join(a.select("doc_a", "_sa"), "doc_a")
-        .join(b.select("doc_b", "_sb"), "doc_b")
-    )
-    inter = F.size(F.array_intersect("_sa", "_sb"))
-    union = F.size("_sa") + F.size("_sb") - inter
-    jac = inter.cast("double") / union
+        F.col("_id").alias("doc_b"), F.explode("_bh").alias("bh"))
+    cand = a.join(b, "bh").select("doc_a", "doc_b").distinct()
     try:
-        return (
-            joined.select("doc_a", "doc_b", jac.alias("jac"))
-            .filter((F.col("jac") >= threshold) & (inter > 0))
-            .localCheckpoint(eager=True)
-        )
+        return _verify_jaccard(
+            cand, sig.select("_id", "_sh"), threshold
+        ).localCheckpoint(eager=True)
     finally:
         sig.unpersist()
 

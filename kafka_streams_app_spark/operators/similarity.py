@@ -91,18 +91,8 @@ def cosine_topk(
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
-    """Deterministic pseudo-random unit hyperplanes (pure python, seeded)."""
-    try:
-        import numpy as np
-
-        rng = np.random.default_rng(seed)
-        m = rng.standard_normal((n_planes, dim))
-        return m.tolist()
-    except ImportError:  # pragma: no cover
-        import random
-
-        r = random.Random(seed)
-        return [[r.gauss(0, 1) for _ in range(dim)] for _ in range(n_planes)]
+    """Deterministic pseudo-random Gaussian hyperplanes (seeded)."""
+    return np.random.default_rng(seed).standard_normal((n_planes, dim)).tolist()
 
 
 def rademacher_planes(dim: int, n_planes: int, table: int) -> "np.ndarray":

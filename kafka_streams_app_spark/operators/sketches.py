@@ -33,8 +33,6 @@ At 100 TB:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -43,9 +41,7 @@ from kafka_streams_app_spark.engine import estimated_plan_bytes
 # self-scored cms_topk materializes its per-item count once (single
 # input scan) when the optimizer estimates the input at or above this
 # size; below it the second scan is cheaper than the extra job
-CMS_SINGLE_SCAN_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_CMS_SINGLE_SCAN_MIN_BYTES",
-                   str(1 * 1024**3)))
+CMS_SINGLE_SCAN_MIN_BYTES = 1 * 1024**3
 
 # 60-bit hash budget: b bucket bits (modulus) + W rho bits (the
 # remaining value). W is fixed by b at call time.

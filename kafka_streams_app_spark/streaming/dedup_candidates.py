@@ -12,9 +12,9 @@ verify/cluster stages the batch path uses — i.e. "near-dup dedup at
 ingest" instead of a nightly batch self-join.
 
 Shape: a stateless prefix computes each document's distinct winnowing
-fingerprints (default: the Arrow-batched fingerprint-set UDF — same
-md5 values as the batch operator's pure-Column path, which remains
-selectable; equality pinned), explodes to (fp, doc_id) rows, and a
+fingerprints (the Arrow-batched fingerprint-set UDF — same md5 values
+as the batch operator's pure-Column path; equality pinned), explodes
+to (fp, doc_id) rows, and a
 transformWithState operator grouped by a hash bucket of the fingerprint
 holds each fingerprint's member list (see _BucketPairsAuto). A new
 member emits one (fp, min(a,b), max(a,b)) row per existing member,
@@ -47,7 +47,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -261,37 +261,17 @@ def winnow_fingerprints(
     id_col: str,
     k: int = 5,
     window: int = 4,
-    hash_fn: str = "md5",
-    impl: str = "udf",
 ) -> DataFrame:
     """(fp, doc_id) rows: each document's distinct winnowing
-    fingerprints. Two value-identical implementations (equality
-    pinned in tests/test_dedup_candidates_stream):
-
-    - impl='udf' (default): Arrow-batched fingerprint-set UDF
-      (functions/text.py:winnowing_fps_udf) — r15 re-measurement with
-      the CSE-guarded Column form: 1.14 s vs 1.64 s at sf0.1 (~1.4x;
-      the pre-guard gap was ~3x). md5 hashes only.
-    - impl='column': the CSE-guarded winnowing_fingerprints path (zero
-      Python in the plan; supports hash_fn='xxhash64').
+    fingerprints (md5 token hashes) from the Arrow-batched
+    fingerprint-set UDF (functions/text.py:winnowing_fps_udf; r15
+    re-measurement against the CSE-guarded Column form
+    winnowing_fingerprints: 1.14 s vs 1.64 s at sf0.1). The two forms
+    are value-identical (pinned in tests/test_dedup_candidates_stream).
     """
-    if impl == "udf":
-        if hash_fn != "md5":
-            raise ValueError("impl='udf' computes md5 fingerprints only")
-        from kafka_streams_app_spark.functions.text import winnowing_fps_udf
+    from kafka_streams_app_spark.functions.text import winnowing_fps_udf
 
-        fps: Column = winnowing_fps_udf(k, window)(F.col(text))
-    else:
-        from kafka_streams_app_spark.functions.text import (
-            winnowing_fingerprints,
-        )
-
-        # CSE-guarded form: the raw winnowing_of_hashes(token_hashes(...))
-        # chain re-inlines tokenize+hash into every gram-fold slice
-        # (see functions/text.py:winnowing_fingerprints).
-        fps = winnowing_fingerprints(
-            F.col(text), k=k, window=window, hash_fn=hash_fn
-        )
+    fps = winnowing_fps_udf(k, window)(F.col(text))
     return (
         df.select(F.col(id_col).cast("long").alias("doc_id"), fps.alias("_fps"))
         .filter(F.size("_fps") > 0)

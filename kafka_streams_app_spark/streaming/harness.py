@@ -25,6 +25,18 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 
+# spark.sql.shuffle.partitions inside stream_shuffle_partitions
+STREAM_PARTITIONS = 8
+
+
+def has_parquet(path: str) -> bool:
+    """Whether directory `path` holds a parquet file a reader would see
+    (hidden `.`/`_` names are skipped, as Spark's reader skips them)."""
+    return os.path.isdir(path) and any(
+        f.endswith(".parquet") and not f.startswith((".", "_"))
+        for f in os.listdir(path))
+
+
 def _drop_bid(r: Row) -> Row:
     d = r.asDict()
     d.pop("_bid", None)
@@ -136,10 +148,9 @@ class MicroBatchReplay:
     def drain(self) -> list[Row]:
         """Rows emitted since the last drain (all rows in complete mode)."""
         if self._sink == "parquet":
-            try:
-                rows = self.spark.read.parquet(self._out_dir).collect()
-            except Exception:
-                return []
+            if not has_parquet(self._out_dir):
+                return []  # no batch has emitted a row yet
+            rows = self.spark.read.parquet(self._out_dir).collect()
             if self._complete:
                 mx = max((r["_bid"] for r in rows), default=-1)
                 return [_drop_bid(r) for r in rows if r["_bid"] == mx]
@@ -170,9 +181,10 @@ class MicroBatchReplay:
 
 
 @contextmanager
-def stream_shuffle_partitions(spark: SparkSession, n: int | None = None):
-    """Pin spark.sql.shuffle.partitions for the duration of a (short)
-    streaming-query run, restoring the previous value afterwards.
+def stream_shuffle_partitions(spark: SparkSession):
+    """Pin spark.sql.shuffle.partitions to STREAM_PARTITIONS for the
+    duration of a (short) streaming-query run, then restore the
+    previous value — or unset the conf again if the session had none.
 
     Every stateful streaming operator commits one state store per
     shuffle partition per micro-batch, and transformWithStateInPandas
@@ -183,20 +195,20 @@ def stream_shuffle_partitions(spark: SparkSession, n: int | None = None):
     commit costs a quarter or less of what it did on 4 vCPUs (SCALE.md
     "Per-micro-batch floor"): smaller, but still paid per partition.
     Partitioning never changes results, so short evaluation runs use a
-    small count (default 8, overridable via
-    SPARK_GRAFT_STREAM_PARTITIONS); production deployments size it to
-    the cluster as usual. The conf is read at query START and pinned
-    into the checkpoint, so the restore cannot affect a running query.
+    small count (8); production deployments size it to the cluster as
+    usual. The conf is read at query START and pinned into the
+    checkpoint, so the restore cannot affect a running query.
     """
-    if n is None:
-        n = int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    old = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, str(STREAM_PARTITIONS))
     try:
         yield
     finally:
-        if old is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
 
 
 def run_available_now(
@@ -207,6 +219,9 @@ def run_available_now(
 
     Used to evaluate a streaming plan to completion over a static
     dataset — the batch-equivalence path the correctness oracle checks.
+    The query runs at STREAM_PARTITIONS shuffle partitions
+    (stream_shuffle_partitions); the session's own setting is back in
+    place when this returns.
 
     Sink selection (SPARK_GRAFT_STREAM_SINK env, default "memory"):
 

@@ -39,6 +39,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from kafka_streams_app_spark.operators.ktable import latest_per_key
+from kafka_streams_app_spark.streaming.harness import has_parquet
 
 
 def to_topic(
@@ -187,7 +188,7 @@ class StoreMirror:
             if self._snapshot is not None:
                 return
             table = None
-            if schema is None or self._has_changelog():
+            if schema is None or has_parquet(self.path):
                 reader = self.spark.read
                 if schema is not None:
                     reader = reader.schema(
@@ -201,12 +202,6 @@ class StoreMirror:
             arrow = to_arrow_schema(self._schema)
             self._snapshot = (arrow.empty_table() if table is None
                               else table.select(arrow.names).cast(arrow))
-
-    def _has_changelog(self) -> bool:
-        """Whether `path` holds a parquet file a reader would see."""
-        return os.path.isdir(self.path) and any(
-            f.endswith(".parquet") and not f.startswith((".", "_"))
-            for f in os.listdir(self.path))
 
 
 def _write_part(directory: str, rows: pa.Table, batch_id: int) -> None:

@@ -207,17 +207,16 @@ def test_minhash_cross_pairs_only_across_corpora(spark):
 
     base = "the quick brown fox jumps over the lazy dog again and again"
     near = "the quick brown fox jumps over the lazy dog again and more"
-    new = spark.createDataFrame(
-        [(1, base), (2, base), (3, "completely different words entirely here")],
+    docs = spark.createDataFrame(
+        [(1, base), (2, base), (3, "completely different words entirely here"),
+         (50, base), (51, near), (52, "nothing shared with anything at all")],
         "doc_id long, text string",
     )
-    ref = spark.createDataFrame(
-        [(50, base), (51, near), (52, "nothing shared with anything at all")],
-        "doc_id long, text string",
-    )
+    new, ref = F.col("doc_id") < 50, F.col("doc_id") >= 50
     out = {
         (r["doc_a"], r["doc_b"]): r["jac"]
-        for r in dedup_minhash_lsh_cross(new, ref, "text", "doc_id").collect()
+        for r in dedup_minhash_lsh_cross(
+            docs, new, ref, "text", "doc_id").collect()
     }
     assert set(out) == {(1, 50), (2, 50), (1, 51), (2, 51)}
     assert out[(1, 50)] == 1.0 and out[(2, 50)] == 1.0

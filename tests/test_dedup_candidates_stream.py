@@ -8,6 +8,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from kafka_streams_app_spark.functions.text import (
+    winnowing_fingerprints,
+    winnowing_fps_udf,
+)
 from kafka_streams_app_spark.sources.catalog import load_table
 from kafka_streams_app_spark.streaming import dedup_candidates as DC
 from kafka_streams_app_spark.streaming.harness import MicroBatchReplay
@@ -130,18 +134,17 @@ def test_udf_and_column_fingerprints_identical(spark):
     Column winnowing produce the identical (fp, doc_id) set on real
     documents."""
     docs_df = load_table(spark, "/root/testdata/sf0.001", "documents")
-    udf_set = sorted(
-        tuple(r)
-        for r in DC.winnow_fingerprints(
-            docs_df, "text", "doc_id", impl="udf"
-        ).collect()
-    )
-    col_set = sorted(
-        tuple(r)
-        for r in DC.winnow_fingerprints(
-            docs_df, "text", "doc_id", impl="column"
-        ).collect()
-    )
+
+    def fp_set(fps):
+        return sorted(
+            tuple(r)
+            for r in docs_df.select(
+                "doc_id", F.explode(fps(F.col("text"))).alias("fp")
+            ).collect()
+        )
+
+    udf_set = fp_set(winnowing_fps_udf())
+    col_set = fp_set(lambda c: winnowing_fingerprints(c, hash_fn="md5"))
     assert udf_set == col_set
     assert len(udf_set) > 0
 

@@ -174,7 +174,7 @@ def test_bmp_features_spark(spark):
 
 
 def test_winnowing_count_udf_equals_column_form(spark, sf_dir):
-    """The Arrow-batched count twin must equal
+    """The size of the Arrow-batched fingerprint set must equal
     size(winnowing_of_hashes(token_hashes(tokens, md5))) row-for-row."""
     from kafka_streams_app_spark.sources.catalog import load_table
 
@@ -188,7 +188,7 @@ def test_winnowing_count_udf_equals_column_form(spark, sf_dir):
         )
     )
     udf_form = docs.select(
-        "doc_id", T.winnowing_count_udf()(F.col("text")).alias("n")
+        "doc_id", F.size(T.winnowing_fps_udf()(F.col("text"))).alias("n")
     )
     a = {r["doc_id"]: r["n"] for r in col_form.collect()}
     b = {r["doc_id"]: r["n"] for r in udf_form.collect()}
@@ -201,12 +201,12 @@ def test_null_text_is_skipped_not_crashed():
     single null doc previously failed whole queries (ADVICE r5)."""
     from kafka_streams_app_spark.functions.text import (
         shingle_list,
-        winnowing_count_md5,
+        winnowing_fps_md5,
     )
 
     assert shingle_list(None, 3) == []
     assert shingle_list(float("nan"), 3) == []  # pandas null form
-    assert winnowing_count_md5(None) == 0
+    assert winnowing_fps_md5(None) == []
 
 
 def test_null_text_through_shingles_udf(spark):

@@ -13,7 +13,6 @@ grouped replay on a batch table)
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
@@ -21,11 +20,9 @@ import duckdb
 
 sys.path.insert(0, "/root/repo")
 
+from tools.check_queries import TABLES, normalize  # noqa: E402
+
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
 DEFAULT = [
     "s_winnow_candidates",
     "s_winnow_candidates_blob",
@@ -46,23 +43,6 @@ DEFAULT = [
     "s_fk_join_left_incremental",
     "s_fk_join_bucketed",
 ]
-
-
-def norm_cell(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v)
-    if isinstance(v, bytes):
-        return v.hex()
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(norm_cell(x) for x in v) + "]"
-    return str(v)
-
-
-def normalize(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted("|".join(norm_cell(r[i]) for i in order) for r in rows)
 
 
 def main() -> int:

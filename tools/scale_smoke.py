@@ -1108,8 +1108,9 @@ def curation100_main() -> None:
         }))
 
         # --- cross-minhash candidates ---------------------------------------
-        ref = docs.filter(F.col("doc_id") % 10 < 3)
-        new = docs.filter(F.col("doc_id") % 10 >= 2)
+        new_cond = F.col("doc_id") % 10 >= 2
+        ref_cond = F.col("doc_id") % 10 < 3
+        new, ref = docs.filter(new_cond), docs.filter(ref_cond)
         def bands(df_side, label):
             return (
                 _sig_table(df_side, "text", "doc_id", 3)
@@ -1122,7 +1123,8 @@ def curation100_main() -> None:
             F.sum(F.col("na").cast("long") * F.col("nb")).alias("c")
         ).collect()[0]["c"] or 0
         t0 = time.time()
-        pairs = dedup_minhash_lsh_cross(new, ref, "text", "doc_id").count()
+        pairs = dedup_minhash_lsh_cross(
+            docs, new_cond, ref_cond, "text", "doc_id").count()
         wall = time.time() - t0
         print(json.dumps({
             "op": "dedup_minhash_lsh_cross", "mult": mult,
