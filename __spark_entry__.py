@@ -3040,7 +3040,7 @@ def _q_s_ktable_latest(spark: SparkSession, sf: str) -> DataFrame:
 
     When the session owner's workers lack protobuf (externally-created
     session, see streaming/replay.py) the SAME state machine replays
-    via applyInPandas grouped replay — identical changelog output."""
+    via applyInArrow grouped replay — identical changelog output."""
     ev = _stateful_source(spark, sf, "events").select(
         "user_id", "event_id", "value", "ts"
     )
@@ -3198,7 +3198,7 @@ def _q_s_pk_join_incremental(spark: SparkSession, sf: str) -> DataFrame:
     operator over the raw view/click event changelogs; the end state
     (latest join row per user) must equal the batch snapshot join
     (same oracle as j5_table_join_inner). Falls back to the same state
-    machine via applyInPandas grouped replay when TWS workers lack
+    machine via applyInArrow grouped replay when TWS workers lack
     protobuf (streaming/replay.py)."""
     from kafka_streams_app_spark.streaming.pk_join import pk_join
 

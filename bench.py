@@ -325,7 +325,8 @@ def main() -> None:
         out["heavyscan_queries"] = xq
         if group == "heavyscan":
             out.update(metric="heavyscan_total", value=out["heavyscan_total"])
-    x10_dir = "/root/repo/.scratch/scale_smoke/x10"
+    x10_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                           ".scratch", "scale_smoke", "x10")
     if "--x10" in sys.argv and os.path.isdir(x10_dir):
         base_q = out.get("queries", {})
         # the ANN entries' query sets grow with the corpus — excluded

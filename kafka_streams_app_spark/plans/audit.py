@@ -44,8 +44,13 @@ def plan_report(df: DataFrame) -> dict:
             set(re.findall(r"\*\((\d+)\)", plan))
             | set(re.findall(r"WholeStageCodegen \((\d+)\)", plan))
         ),
-        "python_evals": plan.count("ArrowEvalPython") + plan.count("MapInPandas")
-        + plan.count("FlatMapGroupsInPandas") + plan.count("TransformWithStateInPandas"),
+        # "TransformWithStateIn": pyspark 4.0 names the TWS node
+        # ...InPandas, 4.1 ...InPySpark
+        "python_evals": sum(plan.count(node) for node in (
+            "ArrowEvalPython", "MapInPandas", "MapInArrow",
+            "FlatMapGroupsInPandas", "FlatMapGroupsInArrow",
+            "TransformWithStateIn",
+        )),
         "rowwise_python": plan.count("BatchEvalPython"),
     }
 

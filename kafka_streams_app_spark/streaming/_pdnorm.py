@@ -6,24 +6,28 @@ mixes nulls into integral columns — e.g. the union-tagged PK/FK join
 inputs, where each side's rows carry nulls in the OTHER side's
 columns BY CONSTRUCTION):
 
-(a) a null in an int64 column makes pandas deliver float64, so state
-    keys/values and output cells round-trip through float64 and values
-    above 2^53 are silently corrupted;
+(a) a null in an int64 column makes pyspark's arrow_to_pandas deliver
+    float64, so state keys/values and output cells round-trip through
+    float64 and values above 2^53 are silently corrupted;
 (b) groupby().shift(1) on plain int64 upcasts through float64
     (NaN fill) the same way.
 
-`normalize_nullable` pins integral/bool columns to pandas NULLABLE
-extension dtypes (Int64/boolean) so neither path ever touches float64;
-`pynative` / `pykey` convert cells back to plain-Python scalars (None
-for every null flavor) before they reach the TWS state-server protobuf
-serializer or an output tuple.
+`arrow_table_to_pandas` is the one Arrow->pandas crossing of every
+stateful operator's input (the TWS serializer's load_stream, patched in
+_tws_fastpath, and replay.grouped_replay): an integral or boolean
+column holding a null becomes a pandas NULLABLE extension column
+(Int64/boolean), exact by construction, and every other column goes
+through pyspark's own converter unchanged. `normalize_nullable` pins
+what is left (null-free integral/bool columns) to the same extension
+dtypes so (b) never touches float64; `pynative` / `pykey` convert
+cells back to plain-Python scalars (None for every null flavor) before
+they reach the TWS state-server protobuf serializer or an output tuple.
 """
 
 from __future__ import annotations
 
-import decimal
-
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql.types import (
     BooleanType,
     ByteType,
@@ -39,24 +43,47 @@ INTEGRAL_TYPES = (ByteType, ShortType, IntegerType, LongType)
 _EXACT_F64 = float(1 << 53)  # largest power of 2 where all ints are exact
 
 
+def _nullable_dtype(t: pa.DataType):
+    return pd.BooleanDtype() if pa.types.is_boolean(t) else pd.Int64Dtype()
+
+
+def arrow_table_to_pandas(table: pa.Table, arrow_to_pandas) -> pd.DataFrame:
+    """The Arrow->pandas crossing of a stateful operator's input.
+
+    An integral or boolean column that holds a null converts to pandas
+    Int64 / boolean, which keeps every int64 exact (pyspark's converter
+    would hand it over as float64, or bool-with-None as object). Every
+    other column goes through `arrow_to_pandas(column, index)` —
+    pyspark's own serializer method — so its dtype is what
+    applyInPandas / transformWithStateInPandas deliver.
+    """
+    return pd.concat(
+        [
+            col.to_pandas(types_mapper=_nullable_dtype)
+            if col.null_count
+            and (pa.types.is_integer(col.type) or pa.types.is_boolean(col.type))
+            else arrow_to_pandas(col, i)
+            for i, col in enumerate(table.itercolumns())
+        ],
+        axis=1,
+    )
+
+
 def normalize_nullable(
     pdf: pd.DataFrame, fields: list[tuple[str, DataType]]
 ) -> pd.DataFrame:
     """Pin integral/bool columns to nullable extension dtypes in place.
 
-    A LongType column that arrives as float64 means pyarrow's to_pandas
-    already NaN-upcast it (a null was present in the batch); restoring
-    to Int64 is exact only below 2^53 — above that the value was
-    corrupted BEFORE this code ran, so raise loudly instead of emitting
-    silently-wrong data (callers that can see such values pre-shield
-    the column via shield_long / exact_longs=True).
+    A LongType column that arrives as float64 crossed Arrow outside
+    arrow_table_to_pandas (pyspark's shipped TWS serializer, when
+    _tws_fastpath.install() failed open) with a null in the batch;
+    restoring to Int64 is exact only below 2^53 — above that the value
+    was corrupted BEFORE this code ran, so raise loudly instead of
+    emitting silently-wrong data.
     """
     for name, dtype in fields:
         col = pdf[name]
-        if (
-            pd.api.types.is_extension_array_dtype(col.dtype)
-            or col.dtype == object  # decimal-shielded / already exact
-        ):
+        if pd.api.types.is_extension_array_dtype(col.dtype):
             continue
         if isinstance(dtype, INTEGRAL_TYPES):
             if isinstance(dtype, LongType) and col.dtype.kind == "f":
@@ -65,9 +92,10 @@ def normalize_nullable(
                     raise ValueError(
                         f"int64 column {name!r} crossed Arrow as float64 "
                         "(nulls present) and holds values >= 2^53 — the "
-                        "values are already corrupted. Re-run with "
-                        "exact_longs=True (decimal shield) on this "
-                        "operator; see streaming/_pdnorm.py."
+                        "values are already corrupted. The exact "
+                        "crossing (streaming/_tws_fastpath.py) is not "
+                        "installed in this Python worker; see "
+                        "streaming/_pdnorm.py."
                     )
             pdf[name] = col.astype("Int64")
         elif isinstance(dtype, BooleanType):
@@ -88,10 +116,6 @@ def pynative(v):
         return None
     if isinstance(v, float) and v != v:
         return None
-    if isinstance(v, decimal.Decimal):
-        # the long-shield (see shield_longs): LongType columns cross
-        # Arrow as decimal(20,0) and come back as exact ints here
-        return int(v)
     if hasattr(v, "item"):
         return v.item()
     return v
@@ -113,10 +137,10 @@ def dense_input(col: pd.Series, dtype: DataType):
     timestamps, nested — or a float-degraded long, which the
     normalize_nullable corruption guard owns).
 
-    Why: emitting output columns as object arrays (Decimal for
-    shielded longs, boxed floats) makes the python->JVM Arrow crossing
-    pay per-cell conversion — measured 12.2 s per 17.3M Decimal cells
-    vs ~0 s for native int64. Converting the INPUT columns once
+    Why: emitting output columns as object arrays (Decimal or boxed
+    floats) makes the python->JVM Arrow crossing pay per-cell
+    conversion — measured 12.2 s per 17.3M Decimal cells vs ~0 s for
+    native int64. Converting the INPUT columns once
     (O(inputs)) and fanning out with numpy takes keeps every emitted
     cell native.
     """
@@ -125,13 +149,6 @@ def dense_input(col: pd.Series, dtype: DataType):
 
     n = len(col)
     if isinstance(dtype, INTEGRAL_TYPES):
-        if col.dtype == object:  # decimal-shielded long (Decimal/None)
-            arr = col.to_numpy(dtype=object)
-            mask = np.fromiter((v is None for v in arr), bool, count=n)
-            vals = np.fromiter(
-                (0 if v is None else int(v) for v in arr), np.int64, count=n
-            )
-            return "i", vals, mask
         if pd.api.types.is_extension_array_dtype(col.dtype):
             return ("i", col.to_numpy(dtype=np.int64, na_value=0),
                     col.isna().to_numpy())
@@ -295,31 +312,3 @@ def dcol_finalize(col):
     k, v, m = col
     return v if k == "o" else dense_output(k, v, m)
 
-
-def shield_long(col, dtype: DataType):
-    """Column expression that carries a LongType exactly across the
-    Arrow->pandas crossing when the column can hold nulls.
-
-    pyarrow's to_pandas turns int64-with-nulls into float64 (there is
-    no nullable-dtype option in pyspark's serializer), silently rounding
-    values above 2^53 BEFORE any Python-side normalization can run.
-    decimal(20,0) crosses as exact decimal.Decimal objects (object
-    dtype); `pynative` converts them back to plain ints. Apply to every
-    LongType column that mixes nulls by construction (the union-tagged
-    PK/FK join inputs); state/output schemas keep LongType — output
-    cells are plain ints in dtype=object frames, which Arrow converts
-    exactly.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType
-
-    c = col if not isinstance(col, str) else F.col(col)
-    return c.cast("decimal(20,0)") if isinstance(dtype, LongType) else c
-
-
-def is_shielded(dtype: DataType) -> bool:
-    """True when shield_long rewrites this type (skip Int64 pinning —
-    the column arrives as object-of-Decimal, already exact)."""
-    from pyspark.sql.types import LongType
-
-    return isinstance(dtype, LongType)

@@ -24,10 +24,10 @@ its one-row shift, slice the frame at the change points — measured
   (chunks may split at slightly different row counts — a boundary no
   correct processor can observe);
 - per-batch byte accounting (``average_arrow_row_size``) is verbatim;
-- null grouping keys behave identically (NaN != NaN splits per row in
-  both forms; None == None groups in both forms).
+- null grouping keys of string columns behave identically (None ==
+  None groups in both forms).
 
-Known representation differences, both strictly MORE faithful than the
+Known representation differences, all strictly MORE faithful than the
 shipped path (and pinned by this repo's randomized equality tests +
 the both-scale oracle gates over every streaming entry):
 
@@ -36,9 +36,14 @@ the both-scale oracle gates over every streaming entry):
   grouping columns) to positional ``_N`` through namedtuple; nothing
   reads those columns either way;
 - chunk dtypes are the ``arrow_to_pandas`` dtypes unchanged, rather
-  than re-inferred through namedtuple reconstruction (same outcome
-  for every dtype these operators ship: plain numpy dtypes, object
-  decimals, datetime64, object booleans-with-nulls);
+  than re-inferred through namedtuple reconstruction — except that an
+  integral or boolean column holding a null arrives as pandas
+  Int64 / boolean instead of float64 / object
+  (``_pdnorm.arrow_table_to_pandas``, the same crossing grouped replay
+  uses): int64 values above 2^53 stay exact;
+- a null in an integral grouping key compares as None, so its rows
+  stay one group, as Spark grouped them (the shipped path's float64
+  NaN != NaN split them per row);
 - chunk row indexes are slices of the batch RangeIndex rather than
   fresh 0-based ones (processors sort + reset or use positional
   access only).
@@ -71,6 +76,8 @@ def _fastpath_load_stream(self, stream):
         TransformWithStateInPandasFuncMode,
     )
 
+    from kafka_streams_app_spark.streaming._pdnorm import arrow_table_to_pandas
+
     def generate_data_batches(batches):
         unlimited = self.arrow_max_bytes_per_batch == 2**31 - 1
         for batch in batches:
@@ -87,16 +94,17 @@ def _fastpath_load_stream(self, stream):
                 self.total_bytes += batch_bytes
                 self.total_rows += n
                 self.average_arrow_row_size = self.total_bytes / self.total_rows
-            df = pd.concat(
-                [
-                    self.arrow_to_pandas(c, i)
-                    for i, c in enumerate(
-                        pa.Table.from_batches([batch]).itercolumns()
-                    )
-                ],
-                axis=1,
+            df = arrow_table_to_pandas(
+                pa.Table.from_batches([batch]), self.arrow_to_pandas
             )
-            key_arrays = [df.iloc[:, s].to_numpy() for s in self.key_offsets]
+            # a nullable (extension) key column compares through None:
+            # pd.NA has no truth value
+            key_arrays = [
+                c.to_numpy(dtype=object, na_value=None)
+                if pd.api.types.is_extension_array_dtype(c.dtype)
+                else c.to_numpy()
+                for c in (df.iloc[:, s] for s in self.key_offsets)
+            ]
             change = np.zeros(n, dtype=bool)
             change[0] = True
             for ka in key_arrays:

@@ -44,11 +44,9 @@ from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.types import StringType, StructField, StructType
 
 from kafka_streams_app_spark.streaming._pdnorm import (
-    is_shielded,
     normalize_nullable,
     pykey,
     pynative,
-    shield_long,
 )
 from kafka_streams_app_spark.streaming.harness import MicroBatchReplay
 from kafka_streams_app_spark.streaming.ktable import ktable_changelog
@@ -608,18 +606,14 @@ class _FKJoinProcessorBucketed(StatefulProcessor):
         self.how = how
         self.fk_schema = fk_schema
         self.fkpk_schema = fkpk_schema
-        # LongType columns are decimal-shielded (arrive object-exact);
-        # pin the remaining integral/bool columns to extension dtypes
         # right_cols are the r_-prefixed union column names; the state
         # schema fields are positional twins with the original names
-        self._norm_fields = [
-            (c, dt)
-            for c, dt in [("fk", fk_schema["fk"].dataType),
-                          ("pk", fkpk_schema["pk"].dataType)]
+        self._norm_fields = (
+            [("fk", fk_schema["fk"].dataType),
+             ("pk", fkpk_schema["pk"].dataType)]
             + [(c, sub_schema[c].dataType) for c in left_cols]
             + [(c, f.dataType) for c, f in zip(right_cols, right_schema.fields)]
-            if not is_shielded(dt)
-        ]
+        )
 
     def init(self, handle: StatefulProcessorHandle) -> None:
         self.right = handle.getMapState("right", self.fk_schema, self.right_schema)
@@ -690,33 +684,25 @@ def _fk_join_plan(
     r_schema = right_raw.schema
     # instruction rows are null in the r_* columns and right rows in
     # the pk/left columns BY CONSTRUCTION (and unsub/null-FK rows can
-    # carry a null fk), so every LongType among them rides the Arrow
-    # crossing as decimal(20,0) — see _pdnorm.shield_long
+    # carry a null fk); they cross into pandas exactly through
+    # _pdnorm.arrow_table_to_pandas
     fk_type = instructions.schema["fk"].dataType
-    pk_type_in = instructions.schema["pk"].dataType
+    pk_type = instructions.schema["pk"].dataType
     tagged_right = right_raw.select(
-        shield_long(F.col(right_key), fk_type).alias("fk"),
+        F.col(right_key).alias("fk"),
         F.lit(KIND_RIGHT).alias("kind"),
-        shield_long(F.lit(None).cast(pk_type_in), pk_type_in).alias("pk"),
-        *[shield_long(F.lit(None).cast(instructions.schema[c].dataType),
-                      instructions.schema[c].dataType).alias(c)
+        F.lit(None).cast(pk_type).alias("pk"),
+        *[F.lit(None).cast(instructions.schema[c].dataType).alias(c)
           for c in left_value_cols],
         F.col(right_seq).alias("seq"),
         F.lit(2).alias("minor"),
-        *[shield_long(F.col(c), r_schema[c].dataType).alias(f"r_{c}")
-          for c in right_payload],
+        *[F.col(c).alias(f"r_{c}") for c in right_payload],
         (F.col(right_tombstone) if right_tombstone else F.lit(False))
         .alias("right_is_delete"),
     )
     tagged_left = instructions.select(
-        shield_long(F.col("fk"), fk_type).alias("fk"),
-        "kind",
-        shield_long(F.col("pk"), pk_type_in).alias("pk"),
-        *[shield_long(F.col(c), instructions.schema[c].dataType).alias(c)
-          for c in left_value_cols],
-        "seq", "minor",
-        *[shield_long(F.lit(None).cast(r_schema[c].dataType),
-                      r_schema[c].dataType).alias(f"r_{c}")
+        "fk", "kind", "pk", *left_value_cols, "seq", "minor",
+        *[F.lit(None).cast(r_schema[c].dataType).alias(f"r_{c}")
           for c in right_payload],
         F.lit(False).alias("right_is_delete"),
     )
@@ -729,7 +715,6 @@ def _fk_join_plan(
     right_state_schema = StructType(
         [StructField(c, r_schema[c].dataType, True) for c in right_payload]
     )
-    pk_type = instructions.schema["pk"].dataType
     out_schema = StructType(
         [StructField("pk", pk_type, True),
          StructField("action", StringType(), False)]

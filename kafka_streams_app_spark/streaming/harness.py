@@ -81,6 +81,7 @@ class MicroBatchReplay:
             .parquet(self._staging)
         )
         out = self._build(src)
+        self._out_schema = out.schema
         if self._sink == "parquet":
             # foreachBatch-parquet: the FAULT-TOLERANT sink — unlike the
             # memory sink it supports checkpoint recovery (restart()),
@@ -134,6 +135,10 @@ class MicroBatchReplay:
 
     def table(self) -> DataFrame:
         if self._sink == "parquet":
+            if not has_parquet(self._out_dir):
+                # no batch has emitted a row yet: Spark cannot infer a
+                # schema from an empty directory
+                return self.spark.createDataFrame([], self._out_schema)
             df = self.spark.read.parquet(self._out_dir)
             if self._complete:
                 # Each batch appends its FULL accumulated snapshot

@@ -40,12 +40,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from kafka_streams_app_spark.streaming._pdnorm import (
-    is_shielded,
-    normalize_nullable,
-    pykey,
-    shield_long,
-)
+from kafka_streams_app_spark.streaming._pdnorm import normalize_nullable, pykey
 from kafka_streams_app_spark.streaming.replay import run_stateful
 
 # hash buckets of the stateful operator (the TWS grouping key of the
@@ -187,7 +182,6 @@ def _ktable_plan(
     payload: list[str],
     tombstone_col: str | None,
     n_buckets: int,
-    exact_longs: bool,
 ) -> tuple[DataFrame, _LatestPerKeyBucketed, StructType]:
     """Shared bucketed input + processor + output schema for the stream
     (TWS) and batch (grouped replay) paths; both group by _kt_bucket."""
@@ -225,29 +219,10 @@ def _ktable_plan(
         StructType(key_fields), state_schema,
         [f.name for f in out_schema.fields],
     )
-    if exact_longs:  # AFTER the schemas: state/output keep LongType
-        df = _shield_payload(df, payload)
     bucketed = df.withColumn(
         "_kt_bucket", F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).cast("int")
     )
     return bucketed, proc, out_schema
-
-
-def _shield_payload(df: DataFrame, payload: list[str]) -> DataFrame:
-    """exact_longs: LongType payload columns ride the Arrow crossing as
-    decimal(20,0) so null-mixed batches can't round values above 2^53
-    (see _pdnorm.shield_long). State/output schemas keep LongType —
-    output cells come back as exact ints."""
-    from pyspark.sql import functions as F
-
-    sch = df.schema
-    return df.select(
-        *[
-            shield_long(F.col(c), sch[c].dataType).alias(c)
-            if c in payload and is_shielded(sch[c].dataType) else F.col(c)
-            for c in df.columns
-        ]
-    )
 
 
 def ktable_changelog(
@@ -257,7 +232,6 @@ def ktable_changelog(
     payload: list[str],
     tombstone_col: str | None = None,
     n_buckets: int = _N_BUCKETS,
-    exact_longs: bool = False,
 ) -> DataFrame:
     """Incremental latest-per-key view over a changelog.
 
@@ -277,15 +251,11 @@ def ktable_changelog(
     (see _LatestPerKeyBucketed). The output does not depend on it.
     Pick >= 2-4x total cores.
 
-    exact_longs: when True, LongType payload columns ride the Arrow
-    crossing as decimal(20,0) so a null-mixed micro-batch cannot round
-    values above 2^53 (see _pdnorm.shield_long; the PK/FK joins shield
-    unconditionally because their union mixes nulls by construction).
-    Off by default — the crossing is cheaper and the normalize step
-    RAISES if an unshielded batch would actually have lost precision.
+    Integral payloads stay exact at any magnitude, nulls or not: both
+    paths cross into pandas through _pdnorm.arrow_table_to_pandas.
     """
     bucketed, proc, out_schema = _ktable_plan(
-        df, keys, seq_col, payload, tombstone_col, n_buckets, exact_longs
+        df, keys, seq_col, payload, tombstone_col, n_buckets
     )
     return run_stateful(bucketed, ["_kt_bucket"], proc, out_schema)
 

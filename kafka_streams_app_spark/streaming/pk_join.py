@@ -44,10 +44,8 @@ from kafka_streams_app_spark.streaming._pdnorm import (
     dcol_state,
     dcol_take,
     dcol_where,
-    is_shielded,
     normalize_nullable,
     pykey,
-    shield_long,
 )
 from kafka_streams_app_spark.streaming.replay import run_stateful
 
@@ -84,16 +82,11 @@ class _PKJoinProcessorBucketed(StatefulProcessor):
         # emission path — see _pdnorm.dense_input and fk_join._fk_fast_batch
         self._out_types = {f.name: f.dataType for f in out_schema.fields}
         self.how = how
-        # the key column is na.drop'd (never null-mixed, arrives exact);
-        # LongType payloads are decimal-shielded — pin the rest
-        self._norm_fields = [
-            (key_col, key_schema[key_col].dataType)
-        ] + [
-            (c, dt)
-            for c, dt in [(c, left_schema[c].dataType) for c in left_cols]
+        self._norm_fields = (
+            [(key_col, key_schema[key_col].dataType)]
+            + [(c, left_schema[c].dataType) for c in left_cols]
             + [(c, right_schema[c].dataType) for c in right_cols]
-            if not is_shielded(dt)
-        ]
+        )
 
     def init(self, handle: StatefulProcessorHandle) -> None:
         self.left = handle.getMapState("left", self.key_schema, self.left_schema)
@@ -226,20 +219,16 @@ def _pk_join_plan(
 
     def tag(df: DataFrame, side: str, payload: list[str], other: list[str],
             other_schema, tombstone: str | None) -> DataFrame:
-        # Kafka Streams ignores null-key records in table-table joins;
-        # dropping them here also keeps the TWS group-key batch int64-
-        # exact (see ktable.py null-key note). Payload columns mix nulls
-        # BY CONSTRUCTION (each side's rows are null in the other
-        # side's columns), so LongType payloads ride the Arrow crossing
-        # as decimal(20,0) — see _pdnorm.shield_long.
-        df = df.na.drop(subset=[key])
-        sch = df.schema
-        return df.select(
+        # Kafka Streams ignores null-key records in table-table joins.
+        # Payload columns mix nulls BY CONSTRUCTION (each side's rows are
+        # null in the other side's columns); they cross into pandas
+        # exactly through _pdnorm.arrow_table_to_pandas.
+        return df.na.drop(subset=[key]).select(
             F.col(key),
             F.lit(side).alias("side"),
-            *[shield_long(F.col(c), sch[c].dataType).alias(c) for c in payload],
-            *[shield_long(F.lit(None).cast(other_schema[c].dataType),
-                          other_schema[c].dataType).alias(c) for c in other],
+            *[F.col(c) for c in payload],
+            *[F.lit(None).cast(other_schema[c].dataType).alias(c)
+              for c in other],
             F.col(seq).alias("seq"),
             (F.col(tombstone) if tombstone else F.lit(False)).alias("is_delete"),
         )

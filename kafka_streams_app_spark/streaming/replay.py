@@ -17,9 +17,9 @@ shim injected BEFORE the JVM launches
 external owner before that injection leaves TWS workers unable to
 import protobuf — they crash with "TransformWithStateInPySpark driver
 worker exited unexpectedly". tws_available probes for that; callers
-then load batch frames instead of streams. Regular Arrow-batched
-applyInPandas has no protobuf dependency, so grouped_replay runs the
-processor per grouping key over the batch frame: groupBy(bucket)
+then load batch frames instead of streams. Grouped applyInArrow has
+no protobuf dependency, so grouped_replay runs the processor per
+grouping key over the batch frame: groupBy(bucket)
 shuffles each bucket's full changelog to one task, the processor runs
 once per bucket from empty state, and the emitted changelog is
 identical to what the incremental TWS run yields.
@@ -34,8 +34,11 @@ a replacement for incremental state at unbounded retention.
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
+
+from kafka_streams_app_spark.streaming._pdnorm import arrow_table_to_pandas
 
 
 class _ValueStateShim:
@@ -110,22 +113,37 @@ def grouped_replay(
 ) -> DataFrame:
     """Run a StatefulProcessor state machine over a BATCH changelog.
 
-    groupBy(group_cols).applyInPandas: each group's rows arrive as one
-    pandas frame; processor.init gets fresh in-memory state shims, then
-    handleInputRows replays the group's history in seq order —
-    bit-for-bit the changelog the TWS incremental operator emits for the
-    same input.
+    groupBy(group_cols).applyInArrow: each group's rows arrive as one
+    Arrow table and cross into pandas through the same exact crossing
+    as the TWS input (_pdnorm.arrow_table_to_pandas); processor.init
+    gets fresh in-memory state shims, then handleInputRows replays the
+    group's history in seq order — bit-for-bit the changelog the TWS
+    incremental operator emits for the same input.
     """
-    out_cols = [f.name for f in out_schema.fields]
+    from pyspark.sql.pandas.serializers import ArrowStreamPandasUDFSerializer
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    # the converter applyInPandas uses, at UTC: from_pandas below reads
+    # naive timestamps as UTC, so they round-trip in any session zone
+    to_pandas = ArrowStreamPandasUDFSerializer(
+        "UTC", False, True, arrow_cast=True
+    ).arrow_to_pandas
+    arrow_schema = to_arrow_schema(out_schema)
+
+    def run(key: tuple, table: pa.Table) -> pa.Table:
         processor.init(_HandleShim())  # fresh state per key group
-        outs = list(processor.handleInputRows(tuple(key), iter([pdf]), None))
+        pdf = arrow_table_to_pandas(table, to_pandas)
+        outs = list(processor.handleInputRows(
+            tuple(k.as_py() for k in key), iter([pdf]), None
+        ))
         if not outs:
-            return pd.DataFrame([], columns=out_cols)
-        return pd.concat(outs, ignore_index=True)
+            return arrow_schema.empty_table()
+        return pa.Table.from_pandas(
+            pd.concat(outs, ignore_index=True), schema=arrow_schema,
+            preserve_index=False,
+        )
 
-    return df.groupBy(*group_cols).applyInPandas(run, schema=out_schema)
+    return df.groupBy(*group_cols).applyInArrow(run, schema=out_schema)
 
 
 def _require_rocksdb(spark) -> None:
@@ -166,7 +184,7 @@ def tws_available(spark) -> bool:
     """Can transformWithStateInPandas run under THIS session's workers?
 
     Probes an actual Python worker for google.protobuf (the only import
-    TWS needs beyond what applyInPandas already uses) with a 1-partition
+    TWS needs beyond what applyInArrow already uses) with a 1-partition
     job, cached per application id. Returns False — and callers fall
     back to grouped_replay — when the session owner launched the JVM
     before the _vendor shim reached PYTHONPATH.

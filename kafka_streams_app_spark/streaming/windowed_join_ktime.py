@@ -54,11 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from kafka_streams_app_spark.streaming._pdnorm import (
-    pykey,
-    pynative,
-    shield_long,
-)
+from kafka_streams_app_spark.streaming._pdnorm import pykey, pynative
 from kafka_streams_app_spark.streaming.replay import run_stateful
 
 SIDE_L, SIDE_R = "l", "r"
@@ -207,16 +203,13 @@ def _plan(
     r_cols = [f"r_{c}" for c in right_payload]
 
     def tag(df, side, own, own_names, other_names, other_schema, other_payload):
-        sch = df.schema
         return df.na.drop(subset=[key]).select(
-            shield_long(F.col(key), sch[key].dataType).alias("key"),
+            F.col(key).alias("key"),
             F.lit(side).alias("side"),
             F.col(ts).alias("ts"),
             F.col(seq).alias("seq"),
-            *[shield_long(F.col(c), sch[c].dataType).alias(n)
-              for c, n in zip(own, own_names)],
-            *[shield_long(F.lit(None).cast(other_schema[c].dataType),
-                          other_schema[c].dataType).alias(n)
+            *[F.col(c).alias(n) for c, n in zip(own, own_names)],
+            *[F.lit(None).cast(other_schema[c].dataType).alias(n)
               for c, n in zip(other_payload, other_names)],
         )
 

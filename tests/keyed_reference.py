@@ -15,7 +15,8 @@ key over a processor's own state (the in-memory shims of
 streaming/replay.py's `_HandleShim`), after the same sort + normalize
 step its handleInputRows takes. The randomized tests feed one
 processor to the kernel and a twin to the reference and compare the
-emitted rows and the state after every batch.
+emitted rows and the state after every batch; `arrow_frame` builds
+their input frames the way the operators receive them.
 
 Test helper only: no `test_` prefix, so pytest does not collect it.
 """
@@ -23,8 +24,11 @@ Test helper only: no `test_` prefix, so pytest does not collect it.
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
+from pyspark.sql.pandas.serializers import ArrowStreamPandasUDFSerializer
 
 from kafka_streams_app_spark.streaming._pdnorm import (
+    arrow_table_to_pandas,
     normalize_nullable,
     pykey,
     pynative,
@@ -35,6 +39,18 @@ from kafka_streams_app_spark.streaming.fk_join import (
     KIND_UNSUB_DELETE,
 )
 
+
+
+def arrow_frame(table: pa.Table) -> pd.DataFrame:
+    """A bucket batch as a stateful operator's handleInputRows receives
+    it: through the exact crossing, with pyspark's converter for every
+    other column."""
+    return arrow_table_to_pandas(
+        table,
+        ArrowStreamPandasUDFSerializer(
+            "UTC", False, True, arrow_cast=True
+        ).arrow_to_pandas,
+    )
 
 def _changelog_for_key(
     key: tuple,
@@ -266,7 +282,8 @@ def ktable_reference(proc, pdf: pd.DataFrame) -> list[pd.DataFrame]:
         seqs = grp[proc.seq_col].tolist()
         pay = [grp[c].tolist() for c in proc.payload]
         tombs = (
-            [bool(t) for t in grp[proc.tombstone_col].tolist()]
+            # a null flag (pd.NA in a nullable column) reads as upsert
+            grp[proc.tombstone_col].to_numpy(dtype=bool, na_value=False).tolist()
             if proc.tombstone_col is not None else None
         )
         frame, new_cur = _changelog_for_key(

@@ -25,8 +25,9 @@ from __future__ import annotations
 import random
 
 import pandas as pd
+import pyarrow as pa
 import pytest
-from keyed_reference import fk_reference
+from keyed_reference import arrow_frame, fk_reference
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -62,6 +63,12 @@ OUT_SCHEMA = StructType(
         StructField("_minor", LongType(), True),
     ]
 )
+
+ARROW_SCHEMA = pa.schema([
+    ("fk", pa.string()), ("kind", pa.string()), ("pk", pa.int64()),
+    ("value", pa.int64()), ("seq", pa.int64()), ("minor", pa.int64()),
+    ("r_rvalue", pa.int64()), ("right_is_delete", pa.bool_()),
+])
 
 
 def _mk_bucketed(
@@ -113,19 +120,11 @@ def _random_batch(rng: random.Random, seq0: int, fks, pks, n: int):
 
 
 def _to_pdf(rows) -> pd.DataFrame:
-    # the real crossing delivers shielded longs as object cells (exact
-    # ints / None) — build the null-mixed long columns as TRUE object
-    # series so neither path sees float-upcast cells
-    cols = ["fk", "kind", "pk", "value", "seq", "minor",
-            "r_rvalue", "right_is_delete"]
-    data = {}
-    for i, c in enumerate(cols):
-        vals = [r[i] for r in rows]
-        if c in ("pk", "value", "r_rvalue"):
-            data[c] = pd.Series(vals, dtype=object)
-        else:
-            data[c] = pd.Series(vals)
-    return pd.DataFrame(data, columns=cols)
+    """The union-tagged bucket frame as it crosses Arrow: pk, value and
+    r_rvalue are null-mixed longs by construction."""
+    return arrow_frame(pa.Table.from_pylist(
+        [dict(zip(ARROW_SCHEMA.names, r)) for r in rows], schema=ARROW_SCHEMA
+    ))
 
 
 def _rows_of(frames) -> list[tuple]:

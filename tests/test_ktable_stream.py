@@ -126,48 +126,66 @@ def test_ktable_int64_payload_precision(spark, n_buckets):
         ]
 
 
-@pytest.mark.parametrize("n_buckets", [4])
-def test_ktable_exact_longs_null_mixed_batch(spark, n_buckets):
-    """A NULL-MIXED int64 payload batch crosses Arrow as float64 (no
-    nullable hook in pyspark's serializer), corrupting values >= 2^53
-    before any python-side repair. exact_longs=True shields the column
-    as decimal(20,0) and must round-trip BIG exactly; without it the
-    normalize step raises rather than emit silently-wrong rows."""
+def test_ktable_null_mixed_int64_exact_batch_and_stream(spark):
+    """A NULL-MIXED int64 payload batch would cross Arrow as float64
+    through pyspark's own converter, rounding values >= 2^53. Both paths
+    cross through _pdnorm.arrow_table_to_pandas instead, so the default
+    ktable_changelog must return BIG exactly: grouped replay over a
+    batch frame, and TWS over micro-batches with state carry-in."""
+    schema = "key bigint, big bigint, is_delete boolean, seq bigint"
+    # key 1's own rows mix the null in, whatever the bucket of key 2
+    rows = [(1, BIG, False, 0), (1, None, False, 1), (1, BIG + 1, False, 2),
+            (2, None, False, 3)]
+    want = [
+        (1, "upsert", False, None, BIG, 0),
+        (1, "upsert", True, BIG, None, 1),
+        (1, "upsert", True, None, BIG + 1, 2),
+        (2, "upsert", False, None, None, 3),
+    ]
+    out = ktable_changelog(
+        spark.createDataFrame(rows, schema), ["key"], "seq", ["big"],
+        "is_delete",
+    )
+    by_seq = lambda rows: sorted((tuple(x) for x in rows), key=lambda t: t[-1])
+    assert by_seq(out.collect()) == want
     with MicroBatchReplay(
-        spark, "key bigint, big bigint, is_delete boolean, seq bigint",
+        spark, schema,
         lambda src: ktable_changelog(
-            src, ["key"], "seq", ["big"], "is_delete", n_buckets=n_buckets,
-            exact_longs=True,
+            src, ["key"], "seq", ["big"], "is_delete", n_buckets=4,
         ),
         "update",
     ) as r:
         # one batch: a null payload row + BIG rows => null-mixed column
-        r.pipe([(1, BIG, False, 0), (2, None, False, 1), (1, BIG + 1, False, 2)])
-        assert sorted(tuple(x) for x in r.drain()) == [
-            (1, "upsert", False, None, BIG, 0),
-            (1, "upsert", True, BIG, BIG + 1, 2),
-            (2, "upsert", False, None, None, 1),
-        ]
+        r.pipe(rows)
+        assert by_seq(r.drain()) == want
         # state carry stays exact across batches
-        r.pipe([(1, None, False, 3)])
+        r.pipe([(1, None, False, 4)])
         assert [tuple(x) for x in r.drain()] == [
-            (1, "upsert", True, BIG + 1, None, 3),
+            (1, "upsert", True, BIG + 1, None, 4),
         ]
 
 
-def test_ktable_unshielded_null_mixed_batch_raises(spark):
-    """Without exact_longs, a null-mixed batch whose int64 values sit
-    above 2^53 must FAIL LOUDLY (the values were already rounded by the
-    Arrow crossing) instead of emitting corrupted rows."""
-    from kafka_streams_app_spark.streaming.ktable import ktable_changelog
+def test_ktable_decimal_payload_carried_from_state(spark):
+    """A DecimalType payload read back from TWS state is the old value
+    of the key's next update: the carry-in must keep it a Decimal, not
+    turn it into an int or a null (the batch path never reads state)."""
+    from decimal import Decimal
 
-    df = spark.createDataFrame(
-        [(1, BIG, False, 0), (1, None, False, 1)],
-        "key bigint, big bigint, is_delete boolean, seq bigint",
-    )
-    out = ktable_changelog(df, ["key"], "seq", ["big"], "is_delete")
-    with pytest.raises(Exception, match="2\\^53|corrupted"):
-        out.collect()
+    with MicroBatchReplay(
+        spark, "key bigint, amt decimal(10,2), is_delete boolean, seq bigint",
+        lambda src: ktable_changelog(
+            src, ["key"], "seq", ["amt"], "is_delete", n_buckets=4,
+        ),
+        "update",
+    ) as r:
+        r.pipe([(1, Decimal("1.50"), False, 0)])
+        assert [tuple(x) for x in r.drain()] == [
+            (1, "upsert", False, None, Decimal("1.50"), 0),
+        ]
+        r.pipe([(1, Decimal("2.75"), False, 1)])
+        assert [tuple(x) for x in r.drain()] == [
+            (1, "upsert", True, Decimal("1.50"), Decimal("2.75"), 1),
+        ]
 
 
 @pytest.mark.parametrize("n_buckets", [4])

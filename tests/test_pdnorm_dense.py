@@ -26,6 +26,7 @@ from pyspark.sql.types import (
 )
 
 from kafka_streams_app_spark.streaming._pdnorm import (
+    arrow_table_to_pandas,
     dcol_concat,
     dcol_finalize,
     dcol_from_list,
@@ -35,6 +36,7 @@ from kafka_streams_app_spark.streaming._pdnorm import (
     dcol_take,
     dcol_where,
     dense_input,
+    normalize_nullable,
 )
 
 BIG = (1 << 62) + 3  # double-rounding canary: != its float64 neighbour
@@ -51,16 +53,57 @@ def object_path_cells(values, pa_type):
 
 
 def test_long_roundtrip_exact_above_2_53():
-    import decimal
-
-    # shielded long arrives as object-of-Decimal
-    ser = pd.Series([decimal.Decimal(BIG), None, decimal.Decimal(-7)],
-                    dtype=object)
+    # a null-mixed long arrives as Int64 through the exact crossing;
+    # pyspark's own converter (the fallback) would round it via float64
+    table = pa.table({"v": pa.array([BIG, None, -7], pa.int64())})
+    ser = arrow_table_to_pandas(
+        table, lambda col, i: pytest.fail("fallback converted a long")
+    )["v"]
+    assert ser.dtype == "Int64"
     k, v, m = dense_input(ser, LongType())
     assert k == "i" and v.dtype == np.int64
     out = arrow_cells(dcol_finalize((k, v, m)), pa.int64())
     assert out == [BIG, None, -7]
     assert out == object_path_cells([BIG, None, -7], pa.int64())
+
+
+def test_crossing_delegates_all_but_null_mixed_integral_and_bool():
+    """Only integral/bool columns holding a null leave pyspark's
+    converter: they become Int64 / boolean; the rest (null-free ints,
+    floats, strings) are whatever the fallback returns."""
+    table = pa.table({
+        "i32": pa.array([1, None], pa.int32()),
+        "b": pa.array([True, None]),
+        "full": pa.array([1, 2], pa.int64()),
+        "f": pa.array([0.5, None]),
+        "s": pa.array(["x", None]),
+    })
+    seen = []
+
+    def fallback(col, i):
+        seen.append(table.schema.names[i])
+        return col.to_pandas()
+
+    pdf = arrow_table_to_pandas(table, fallback)
+    assert seen == ["full", "f", "s"]
+    assert list(pdf.columns) == table.schema.names
+    assert [str(pdf[c].dtype) for c in ("i32", "b")] == ["Int64", "boolean"]
+    assert pdf["i32"].tolist() == [1, pd.NA]
+
+
+def test_float_degraded_long_above_2_53_raises():
+    """A long that crossed as float64 (pyspark's shipped converter, a
+    null in the batch) is restored to Int64 below 2^53 and refused
+    above it, where the value was rounded before any code could see
+    it."""
+    ok = normalize_nullable(
+        pd.DataFrame({"v": [1.0, np.nan]}), [("v", LongType())]
+    )
+    assert str(ok["v"].dtype) == "Int64" and ok["v"].tolist() == [1, pd.NA]
+    with pytest.raises(ValueError, match="2\\^53"):
+        normalize_nullable(
+            pd.DataFrame({"v": [float(BIG), np.nan]}), [("v", LongType())]
+        )
 
 
 def test_float_nan_and_none_both_null_like_object_path():
@@ -158,8 +201,6 @@ def test_fk_fast_path_emits_dense_dtypes():
     path must yield native/extension-dtype columns, never object, for
     integral/floating payloads (an object column here silently
     reintroduces the 12s-per-17M-cells Arrow conversion)."""
-    import decimal
-
     from pyspark.sql.types import StructField, StructType
 
     from kafka_streams_app_spark.streaming.fk_join import (
@@ -184,11 +225,11 @@ def test_fk_fast_path_emits_dense_dtypes():
     )
     proc.init(_HandleShim())
     # sub then right upsert for one fk — exercises both emission blocks;
-    # pk is decimal-shielded long (object-of-Decimal, as off the wire)
+    # pk is a null-mixed long (Int64, as off the exact crossing)
     pdf = pd.DataFrame({
         "fk": ["f", "f"],
         "kind": ["sub", "right"],
-        "pk": pd.Series([decimal.Decimal(BIG), None], dtype=object),
+        "pk": pd.array([BIG, None], dtype="Int64"),
         "value": [0.5, None],
         "seq": np.array([1, 2], dtype=np.int64),
         "minor": np.array([1, 2], dtype=np.int64),

@@ -5,11 +5,12 @@ survive the composition."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 SF = "/root/testdata/sf0.001"
 

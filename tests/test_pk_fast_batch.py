@@ -11,12 +11,11 @@ batch may carry left and right deletes, in both join modes. Pure Python
 
 from __future__ import annotations
 
-import decimal
 import random
 
 import pyarrow as pa
 import pytest
-from keyed_reference import pk_reference
+from keyed_reference import arrow_frame, pk_reference
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -47,12 +46,12 @@ OUT_SCHEMA = StructType(
     + LEFT_SCHEMA.fields + RIGHT_SCHEMA.fields
     + [StructField("_seq", LongType(), True)]
 )
-# the union-tagged bucket frame as it crosses Arrow: `big` is
-# decimal-shielded (_pdnorm.shield_long), `rank` null-mixed int32
+# the union-tagged bucket frame as it crosses Arrow: `big` null-mixed
+# int64 above 2^53, `rank` null-mixed int32
 ARROW_SCHEMA = pa.schema([
     ("key", pa.string()), ("side", pa.string()),
     ("merchant", pa.string()), ("name", pa.string()),
-    ("rank", pa.int32()), ("big", pa.decimal128(20, 0)),
+    ("rank", pa.int32()), ("big", pa.int64()),
     ("seq", pa.int64()), ("is_delete", pa.bool_()),
 ])
 
@@ -79,12 +78,12 @@ def _random_batch(rng: random.Random, seq0: int, n: int, p_delete: float):
                          None, None, seq, dele))
         else:
             rank = None if rng.random() < 0.1 else rng.randrange(100)
-            big = decimal.Decimal(BIG + rng.randrange(1000))
+            big = BIG + rng.randrange(1000)
             rows.append((k, "r", None, None, rank, big, seq, dele))
     rng.shuffle(rows)
-    return pa.Table.from_pylist(
+    return arrow_frame(pa.Table.from_pylist(
         [dict(zip(ARROW_SCHEMA.names, r)) for r in rows], schema=ARROW_SCHEMA
-    ).to_pandas()
+    ))
 
 
 def _rows_of(frames) -> list[tuple]:
@@ -137,5 +136,5 @@ def test_fast_path_equals_per_record(how: str, seed: int) -> None:
         assert dict(fast.right.iterator()) == dict(slow.right.iterator())
     # deletes were exercised, including at least one suppressed delete
     assert shapes == {"delete", "suppressed_delete"}
-    # the shielded long survives both paths exactly
+    # the null-mixed long survives both paths exactly
     assert all(v[1] > 2**53 for v in dict(fast.right.iterator()).values())

@@ -18,8 +18,10 @@ from __future__ import annotations
 import glob
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 DRIVER_SAMPLE_WINDOW = 50
 
@@ -28,7 +30,7 @@ def test_never_green_entries_inside_driver_window():
     import __spark_entry__ as e
 
     green: set[str] = set()
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(str(ROOT / "CORRECTNESS_r*.json"))):
         with open(path) as f:
             for name, row in json.load(f).items():
                 if (

@@ -1,4 +1,4 @@
-"""Grouped-replay (applyInPandas, no-TWS) fallback pins.
+"""Grouped-replay (applyInArrow, no-TWS) fallback pins.
 
 The driver gate may own a SparkSession whose workers cannot import
 protobuf (streaming/replay.py); these tests assert the batch replay of
@@ -206,14 +206,14 @@ def _analyzed(df) -> str:
 @pytest.mark.parametrize("name", sorted(_BUILDERS))
 def test_builder_dispatches_on_input_kind(spark, tmp_path, name):
     """replay.run_stateful is the one TWS-or-replay choice: a batch
-    input plans grouped replay (applyInPandas = FlatMapGroupsInPandas),
+    input plans grouped replay (applyInArrow = FlatMapGroupsInArrow),
     a readStream input plans transformWithStateInPandas on the RocksDB
     state store. Plans only — nothing executes. (pyspark 4.1 names the
     TWS logical node TransformWithStateInPySpark, 4.0
     TransformWithStateInPandas; the prefix covers both.)"""
     build = _BUILDERS[name]
     batch_plan = _analyzed(build(lambda sch: spark.createDataFrame([], sch)))
-    assert "FlatMapGroupsInPandas" in batch_plan
+    assert "FlatMapGroupsInArrow" in batch_plan
     assert "TransformWithStateIn" not in batch_plan
 
     def stream_src(sch):
@@ -224,7 +224,7 @@ def test_builder_dispatches_on_input_kind(spark, tmp_path, name):
     try:
         stream_plan = _analyzed(build(stream_src))
         assert "TransformWithStateIn" in stream_plan
-        assert "FlatMapGroupsInPandas" not in stream_plan
+        assert "FlatMapGroupsInArrow" not in stream_plan
         assert spark.conf.get(_PROVIDER, None) == (
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider"

@@ -82,3 +82,22 @@ def test_parquet_sink_empty_input(spark, tmp_path, monkeypatch):
     )
     assert out.count() == 0
     assert out.columns == ["id", "count"]
+
+
+def test_replay_table_before_first_emitted_row(spark):
+    """MicroBatchReplay(sink="parquet").table() before any batch has
+    emitted a row: an empty frame with the query's schema, not a
+    schema-inference failure on the empty output directory."""
+    from kafka_streams_app_spark.streaming.harness import MicroBatchReplay
+
+    with MicroBatchReplay(
+        spark, "id long, v long",
+        lambda src: src.filter(F.col("v") > 0).select("id", "v"),
+        sink="parquet",
+    ) as r:
+        assert r.table().collect() == []
+        r.pipe([(1, 0)])  # filtered out: the batch emits nothing
+        t = r.table()
+        assert t.collect() == [] and t.columns == ["id", "v"]
+        r.pipe([(2, 5)])
+        assert [tuple(x) for x in r.table().collect()] == [(2, 5)]

@@ -176,3 +176,27 @@ def test_byte_cap_accounting_matches():
     batches = [_batch(sorted(np.repeat(np.arange(5), 40).tolist()),
                       [float(i) for i in range(200)])]
     _compare(batches, max_bytes=256)
+
+
+def test_null_mixed_longs_cross_exact():
+    """A null in an int64 column: the shipped path hands the group over
+    as float64 (2^62 + 3 rounds), the fast path as exact Int64 — and a
+    null grouping key is one group keyed None, as Spark grouped it."""
+    big = (1 << 62) + 3
+    b = pa.RecordBatch.from_pydict({
+        "k": pa.array([1, 1, None, None], type=pa.int64()),
+        "v": pa.array([big, None, big + 2, 5], type=pa.int64()),
+    })
+    assert _tws_fastpath.install()
+    from pyspark.sql.pandas.serializers import (
+        TransformWithStateInPandasSerializer as T,
+    )
+
+    shipped = _drain(_serializer(), T._spark_graft_orig_load_stream, [b])
+    assert shipped[0][2]["v"].dtype == np.float64
+    fast = [
+        (k, g["v"].tolist())
+        for _, k, g in _drain(_serializer(), _tws_fastpath._fastpath_load_stream, [b])
+        if g is not None
+    ]
+    assert fast == [((1,), [big, pd.NA]), ((None,), [big + 2, 5])]

@@ -8,8 +8,9 @@ plan — the one unconditional red flag.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entry_mod
 from kafka_streams_app_spark.engine import get_spark

@@ -15,10 +15,11 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from tools.check_queries import TABLES, normalize  # noqa: E402
 

@@ -53,7 +53,8 @@ from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 SF_DIR = os.environ.get("GATE_SF_DIR", "/root/testdata/sf0.01")
 COMPARE_MODE = os.environ.get("GATE_COMPARE", "stream")  # stream | collect
@@ -150,7 +151,7 @@ def main() -> int:
     import __spark_entry__ as e
     from kafka_streams_app_spark.engine import get_spark
 
-    log_dir = Path("/root/repo/.scratch/gate_logs")
+    log_dir = ROOT / ".scratch" / "gate_logs"
     log_dir.mkdir(parents=True, exist_ok=True)
     stamp = datetime.datetime.now(datetime.timezone.utc).strftime("%Y%m%dT%H%M%S")
     sf_tag = Path(SF_DIR).name  # e.g. sf0.01 / sf0.1 — makes the artifact self-describing

@@ -34,9 +34,11 @@ import sys
 import tempfile
 import threading
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "tools"))
 
 from kafka_streams_app_spark.engine import get_spark
 from kafka_streams_app_spark.streaming.fk_join import (

@@ -26,7 +26,8 @@ from kafka_streams_app_spark.operators.dedup import (
 from kafka_streams_app_spark.sources.catalog import load_table
 
 BASE = "/root/testdata/sf0.1"
-X10 = "/root/repo/.scratch/scale_smoke/x10"
+X10 = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                   ".scratch", "scale_smoke", "x10")
 
 
 def decompose(spark, sf_dir: str, runs: int, cap: int | None) -> dict:

@@ -35,7 +35,8 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 import __spark_entry__ as entry_mod
 from kafka_streams_app_spark.engine import get_spark
@@ -44,7 +45,7 @@ from kafka_streams_app_spark.sources.catalog import load_table
 from pyspark.sql import functions as F
 
 BASE = "/root/testdata/sf0.1"
-SCRATCH = Path("/root/repo/.scratch/scale_smoke")
+SCRATCH = ROOT / ".scratch" / "scale_smoke"
 
 QUERIES = [
     "t1_wordcount",          # explode + agg over documents

@@ -34,8 +34,9 @@ import tempfile
 import time
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "tools"))
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,7 +49,7 @@ from kafka_streams_app_spark.streaming.ktable import ktable_changelog
 from kafka_streams_app_spark.streaming.pk_join import pk_join
 from kafka_streams_app_spark.streaming.replay import tws_available
 
-SCRATCH = Path("/root/repo/.scratch/scale_smoke")
+SCRATCH = ROOT / ".scratch" / "scale_smoke"
 
 
 def stream_events(spark: SparkSession, events_path: str) -> DataFrame:

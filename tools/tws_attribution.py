@@ -28,8 +28,9 @@ import tempfile
 import time
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "tools"))
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -47,7 +48,7 @@ from kafka_streams_app_spark.streaming.fk_join import (
 from kafka_streams_app_spark.streaming.ktable import ktable_changelog
 from kafka_streams_app_spark.streaming.replay import run_stateful
 
-SCRATCH = Path("/root/repo/.scratch/scale_smoke")
+SCRATCH = ROOT / ".scratch" / "scale_smoke"
 
 
 class _Noop(StatefulProcessor):

@@ -31,8 +31,9 @@ import tempfile
 import time
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "tools"))
 
 from pyspark.sql import functions as F
 
@@ -40,7 +41,7 @@ from kafka_streams_app_spark.engine import get_spark
 from kafka_streams_app_spark.streaming import windows as SW
 from stream_throughput import stream_events
 
-SCRATCH = Path("/root/repo/.scratch/scale_smoke")
+SCRATCH = ROOT / ".scratch" / "scale_smoke"
 
 ROCKSDB = (
     "org.apache.spark.sql.execution.streaming.state."
