@@ -19,8 +19,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import uuid
-
 from kafka_streams_app_spark.engine import (
     _ensure_vendor_pythonpath,
     configure_session,
@@ -1119,7 +1117,7 @@ def _q_s_interval_join_outer(spark: SparkSession, sf: str) -> DataFrame:
         l, r, [("l_user_id", "r_user_id")], "l_ts", "r_ts", 21600, 21600,
         watermark_s=0, how="fullOuter",
     ).select("l_event_id", "r_event_id")
-    return run_available_now(spark, j, _sink(), "append")
+    return run_available_now(spark, j, "append")
 
 
 def _q_j3_self_join_windowed(spark: SparkSession, sf: str) -> DataFrame:
@@ -2411,7 +2409,7 @@ def _q_s_multimodal_decode(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_stream(spark, sf, "documents")
     media = multimodal.synth_png_media(docs, "doc_id")
     out = multimodal.png_features(media)
-    return run_available_now(spark, out, _sink(), "append")
+    return run_available_now(spark, out, "append")
 
 
 def _q_multimodal_video_frames(spark: SparkSession, sf: str) -> DataFrame:
@@ -2493,7 +2491,7 @@ def _q_s_auto_features(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_stream(spark, sf, "documents")
     media = multimodal.synth_mixed_media(docs, "doc_id")
     out = multimodal.extract_features_auto(media)
-    return run_available_now(spark, out, _sink(), "append")
+    return run_available_now(spark, out, "append")
 
 
 def _q_multimodal_wav_decode(spark: SparkSession, sf: str) -> DataFrame:
@@ -2507,10 +2505,6 @@ def _q_multimodal_wav_decode(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents")
     media = multimodal.synth_wav_media(docs, "doc_id")
     return multimodal.wav_features(media)
-
-
-def _sink() -> str:
-    return f"s_{uuid.uuid4().hex[:10]}"
 
 
 def _stateful_source(spark: SparkSession, sf: str, name: str) -> DataFrame:
@@ -2528,7 +2522,7 @@ def _drain(
     """Run a streaming result to completion (Trigger.AvailableNow); a
     batch result is returned unchanged."""
     if df.isStreaming:
-        return run_available_now(spark, df, _sink(), output_mode)
+        return run_available_now(spark, df, output_mode)
     return df
 
 
@@ -2539,7 +2533,7 @@ def _q_s_windowed_count_closed(spark: SparkSession, sf: str) -> DataFrame:
     oracle is the same closed-window SQL as the batch analogue."""
     ev = load_stream(spark, sf, "events")
     wc = SW.windowed_count_stream(ev, "ts", ["event_type"], 10, grace_s=0)
-    return run_available_now(spark, wc, _sink(), "append")
+    return run_available_now(spark, wc, "append")
 
 
 def _q_s_windowed_distinct_closed(spark: SparkSession, sf: str) -> DataFrame:
@@ -2552,14 +2546,14 @@ def _q_s_windowed_distinct_closed(spark: SparkSession, sf: str) -> DataFrame:
     wd = SW.windowed_distinct_count_stream(
         ev, "ts", ["event_type"], "user_id", 60, grace_s=0
     )
-    return run_available_now(spark, wd, _sink(), "append")
+    return run_available_now(spark, wd, "append")
 
 
 def _q_s_count_complete(spark: SparkSession, sf: str) -> DataFrame:
     """A1 streaming continuous count, complete mode == final table."""
     ev = load_stream(spark, sf, "events")
     counts = SW.count_per_key_stream(ev, ["event_type"])
-    return run_available_now(spark, counts, _sink(), "complete")
+    return run_available_now(spark, counts, "complete")
 
 
 def _q_s_hll_windowed_closed(spark: SparkSession, sf: str) -> DataFrame:
@@ -2572,7 +2566,7 @@ def _q_s_hll_windowed_closed(spark: SparkSession, sf: str) -> DataFrame:
     regs = SW.hll_windowed_register_stream(
         ev, "ts", ["event_type"], "user_id", 3600, b=8, grace_s=0
     )
-    return run_available_now(spark, regs, _sink(), "append")
+    return run_available_now(spark, regs, "append")
 
 
 def _q_s_cms_cells(spark: SparkSession, sf: str) -> DataFrame:
@@ -2582,7 +2576,7 @@ def _q_s_cms_cells(spark: SparkSession, sf: str) -> DataFrame:
     cardinality; final snapshot == the batch sketch cell for cell."""
     ev = load_stream(spark, sf, "events")
     cells = SW.cms_cell_stream(ev, "user_id", d=4, w=256)
-    return run_available_now(spark, cells, _sink(), "complete")
+    return run_available_now(spark, cells, "complete")
 
 
 def _q_s_hist_cells(spark: SparkSession, sf: str) -> DataFrame:
@@ -2598,7 +2592,7 @@ def _q_s_hist_cells(spark: SparkSession, sf: str) -> DataFrame:
     cells = SW.hist_cell_stream(
         ev, ["event_type"], "value", lo=0.0, hi=512.0, n_buckets=256
     )
-    return run_available_now(spark, cells, _sink(), "complete")
+    return run_available_now(spark, cells, "complete")
 
 
 def _q_s_hll_registers(spark: SparkSession, sf: str) -> DataFrame:
@@ -2609,7 +2603,7 @@ def _q_s_hll_registers(spark: SparkSession, sf: str) -> DataFrame:
     batch register table, which is what the oracle pins."""
     ev = load_stream(spark, sf, "events")
     regs = SW.hll_register_stream(ev, ["event_type"], "user_id", b=8)
-    return run_available_now(spark, regs, _sink(), "complete")
+    return run_available_now(spark, regs, "complete")
 
 
 def _q_s_dedup_within_watermark(spark: SparkSession, sf: str) -> DataFrame:
@@ -2618,7 +2612,7 @@ def _q_s_dedup_within_watermark(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_stream(spark, sf, "events")
     dd = SW.dedup_stream(ev, ["user_id", "event_type"], "ts", 3600 * 24 * 40)
     return run_available_now(
-        spark, dd.select("user_id", "event_type"), _sink(), "append"
+        spark, dd.select("user_id", "event_type"), "append"
     )
 
 
@@ -2653,7 +2647,7 @@ def _q_s_pq_assign(spark: SparkSession, sf: str) -> DataFrame:
         stream, emb_static, "vec_id", "embedding", dim=64, m=8,
         centroid_mod=(17, 3),
     )
-    return run_available_now(spark, out, _sink(), "append")
+    return run_available_now(spark, out, "append")
 
 
 def _q_s_ivfpq_assign(spark: SparkSession, sf: str) -> DataFrame:
@@ -2671,7 +2665,7 @@ def _q_s_ivfpq_assign(spark: SparkSession, sf: str) -> DataFrame:
         stream, emb_static, "vec_id", "embedding", dim=64, m=8,
         coarse_mod=(17, 3), pq_mod=(13, 5),
     )
-    return run_available_now(spark, out, _sink(), "append")
+    return run_available_now(spark, out, "append")
 
 
 def _q_s_ivfpq_search(spark: SparkSession, sf: str) -> DataFrame:
@@ -2695,7 +2689,7 @@ def _q_s_ivfpq_search(spark: SparkSession, sf: str) -> DataFrame:
         stream, emb_static, "vec_id", "embedding", dim=64, k=5, m=8,
         coarse_mod=(17, 3), pq_mod=(13, 5), nprobe=4,
     )
-    return run_available_now(spark, out, _sink(), "append")
+    return run_available_now(spark, out, "append")
 
 
 def _q_s_embedding_dedup(spark: SparkSession, sf: str) -> DataFrame:
@@ -2716,7 +2710,7 @@ def _q_s_embedding_dedup(spark: SparkSession, sf: str) -> DataFrame:
     out = dedup.embedding_dedup_candidates_stream(
         stream, emb_static, "vec_id", "embedding", dim=64, threshold=0.4,
     )
-    return run_available_now(spark, out, _sink(), "append")
+    return run_available_now(spark, out, "append")
 
 
 def _q_s_profile_running(spark: SparkSession, sf: str) -> DataFrame:
@@ -2735,7 +2729,7 @@ def _q_s_profile_running(spark: SparkSession, sf: str) -> DataFrame:
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
     docs = load_stream(spark, sf, "documents")
     cells = SW.profile_cell_stream(docs, cols, b=8)
-    snap = run_available_now(spark, cells, _sink(), "complete")
+    snap = run_available_now(spark, cells, "complete")
     nl = snap.groupBy("col_name").agg(
         F.sum("n_nulls").cast("long").alias("n_nulls"),
         F.sum("sum_len").cast("long").alias("sum_len"),
@@ -2775,7 +2769,7 @@ def _q_s_decontam_winnow(spark: SparkSession, sf: str) -> DataFrame:
     out = DC.decontam_winnow_stream(
         stream, ref, "text", "doc_id", min_shared=2
     )
-    return run_available_now(spark, out, _sink(), "update")
+    return run_available_now(spark, out, "update")
 
 
 def _q_s_time_rolling(spark: SparkSession, sf: str) -> DataFrame:
@@ -2917,7 +2911,7 @@ def _q_s_stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
         l, r, [("l_user_id", "r_user_id")], "l_ts", "r_ts", 21600, 21600,
         watermark_s=0,
     ).select("l_event_id", "r_event_id")
-    return run_available_now(spark, j, _sink(), "append")
+    return run_available_now(spark, j, "append")
 
 
 def _q_s_interval_join_left(spark: SparkSession, sf: str) -> DataFrame:
@@ -2942,7 +2936,7 @@ def _q_s_interval_join_left(spark: SparkSession, sf: str) -> DataFrame:
         l, r, [("l_user_id", "r_user_id")], "l_ts", "r_ts", 21600, 21600,
         watermark_s=0, how="leftOuter",
     ).select("l_event_id", "r_event_id")
-    return run_available_now(spark, j, _sink(), "append")
+    return run_available_now(spark, j, "append")
 
 
 def _q_s_windowed_count_grace(spark: SparkSession, sf: str) -> DataFrame:
@@ -2954,7 +2948,7 @@ def _q_s_windowed_count_grace(spark: SparkSession, sf: str) -> DataFrame:
     time — exactly what the oracle's max(ts)-30 cutoff selects."""
     ev = load_stream(spark, sf, "events")
     wc = SW.windowed_count_stream(ev, "ts", ["event_type"], 10, grace_s=30)
-    return run_available_now(spark, wc, _sink(), "append")
+    return run_available_now(spark, wc, "append")
 
 
 def _q_s_stream_table_join(spark: SparkSession, sf: str) -> DataFrame:
@@ -2990,7 +2984,7 @@ def _q_s_windowed_sum_closed(spark: SparkSession, sf: str) -> DataFrame:
     ws = SW.windowed_agg_stream(
         ev, "ts", ["event_type"], 60, grace_s=0, sum_value=agg.exact_sum("value")
     )
-    return run_available_now(spark, ws, _sink(), "append")
+    return run_available_now(spark, ws, "append")
 
 
 def _q_s_hopping_count_closed(spark: SparkSession, sf: str) -> DataFrame:
@@ -2999,7 +2993,7 @@ def _q_s_hopping_count_closed(spark: SparkSession, sf: str) -> DataFrame:
     end passes the final watermark."""
     ev = load_stream(spark, sf, "events")
     wc = SW.windowed_count_stream(ev, "ts", ["event_type"], 20, grace_s=0, slide_s=10)
-    return run_available_now(spark, wc, _sink(), "append")
+    return run_available_now(spark, wc, "append")
 
 
 def _q_s_session_count_grace(spark: SparkSession, sf: str) -> DataFrame:
@@ -3009,7 +3003,7 @@ def _q_s_session_count_grace(spark: SparkSession, sf: str) -> DataFrame:
     clearly discriminating subset of the zero-grace result)."""
     ev = load_stream(spark, sf, "events")
     sc = SW.session_count_stream(ev, "ts", ["user_id"], 3600, grace_s=7200)
-    return run_available_now(spark, sc, _sink(), "append")
+    return run_available_now(spark, sc, "append")
 
 
 def _q_s_session_count(spark: SparkSession, sf: str) -> DataFrame:
@@ -3018,7 +3012,7 @@ def _q_s_session_count(spark: SparkSession, sf: str) -> DataFrame:
     the per-user sessions still open at end-of-stream stay suppressed."""
     ev = load_stream(spark, sf, "events")
     sc = SW.session_count_stream(ev, "ts", ["user_id"], 3600, grace_s=0)
-    return run_available_now(spark, sc, _sink(), "append")
+    return run_available_now(spark, sc, "append")
 
 
 def _q_s_session_assembly(spark: SparkSession, sf: str) -> DataFrame:
@@ -3030,7 +3024,7 @@ def _q_s_session_assembly(spark: SparkSession, sf: str) -> DataFrame:
     sa = SW.assemble_sessions_stream(
         ev, "ts", ["user_id"], 3600, "event_type", grace_s=0
     )
-    return run_available_now(spark, sa, _sink(), "append")
+    return run_available_now(spark, sa, "append")
 
 
 def _q_s_ktable_latest(spark: SparkSession, sf: str) -> DataFrame:

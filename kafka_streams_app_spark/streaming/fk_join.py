@@ -793,8 +793,9 @@ class FKJoinReplay(MicroBatchReplay):
     query to quiescence, so per-pipe drain() shows exactly the join
     changelog the reference's readOutputTopic() would. With the query
     stopped (query.stop(), a crash), a pipe only stages its file;
-    restart() (sink='parquet') resumes from the checkpoint and settle()
-    consumes what was staged.
+    restart() resumes from the checkpoint, where a batch that Spark runs
+    again replaces its own kept output, and settle() consumes what was
+    staged.
     """
 
     def __init__(
@@ -812,7 +813,6 @@ class FKJoinReplay(MicroBatchReplay):
         right_tombstone: str,
         how: str = "inner",
         n_buckets: int = 16,
-        sink: str = "memory",
     ) -> None:
         self._left_schema = left_schema
         self._left_staging = tempfile.mkdtemp(prefix="fkjoin_lsrc_")
@@ -840,7 +840,7 @@ class FKJoinReplay(MicroBatchReplay):
                 n_buckets=n_buckets,
             )
 
-        super().__init__(spark, right_schema, build, "update", sink=sink)
+        super().__init__(spark, right_schema, build, "update")
 
     def _next_seq(self) -> int:
         self.seq += 1

@@ -8,21 +8,25 @@ file-source streaming query, then blocks until Spark has processed it
 watermark advance schedules — that is where append-mode windows are
 emitted, mirroring Kafka's "emit when stream time passes window end").
 
-Outputs land in a memory sink; drain() returns only the rows emitted
-since the previous drain, so a test can assert per-pipe emissions the
-way the reference reads its output topic between pipeInput calls.
+Every query here, replayed or run with Trigger.AvailableNow, ends in
+one result sink, KeptBatches: each micro-batch is kept as an eager
+local checkpoint in Spark's block manager, keyed by batch id. A batch
+that Spark runs again replaces its entry, so a restart never doubles
+rows. drain() returns only the rows of batches newer than the last one
+drained, so a test can assert per-pipe emissions the way the reference
+reads its output topic between pipeInput calls.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import tempfile
-import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 # spark.sql.shuffle.partitions inside stream_shuffle_partitions
@@ -37,17 +41,61 @@ def has_parquet(path: str) -> bool:
         for f in os.listdir(path))
 
 
-def _drop_bid(r: Row) -> Row:
-    d = r.asDict()
-    d.pop("_bid", None)
-    return Row(**d)
+class KeptBatches:
+    """The harness's one result sink: a foreachBatch writer that keeps
+    each micro-batch as an eager local checkpoint, keyed by batch id,
+    and a reader over what it kept.
+
+    A local checkpoint's blocks live in the executors' block managers at
+    MEMORY_AND_DISK, so they spill to disk instead of being dropped and
+    the driver holds none of the rows. No table is registered in the
+    session and no file is committed. A batch that Spark runs again
+    after a restart replaces its own entry, so a recovered query's
+    output holds each row once. In complete mode only the newest batch,
+    the whole result table, is kept.
+    """
+
+    def __init__(self, spark: SparkSession, schema: StructType, complete: bool) -> None:
+        self.spark = spark
+        self.schema = schema
+        self.complete = complete
+        self.batches: dict[int, DataFrame] = {}
+        self._drained = -1
+
+    def write(self, batch_df: DataFrame, batch_id: int) -> None:
+        kept = batch_df.localCheckpoint(eager=True)
+        if self.complete:
+            self.batches = {batch_id: kept}
+        else:
+            self.batches[batch_id] = kept
+
+    def _union(self, after: int) -> DataFrame:
+        dfs = [self.batches[b] for b in sorted(self.batches) if b > after]
+        if not dfs:
+            return self.spark.createDataFrame([], self.schema)
+        return functools.reduce(DataFrame.union, dfs)
+
+    def table(self) -> DataFrame:
+        """Every kept row, in batch-id order, then partition order."""
+        return self._union(-1)
+
+    def drain(self) -> list[Row]:
+        """Rows of the batches newer than the last one drained (all rows
+        in complete mode)."""
+        if self.complete:
+            return self.table().collect()
+        after, self._drained = self._drained, max(self.batches, default=self._drained)
+        return self._union(after).collect()
 
 
 class MicroBatchReplay:
-    """Replay timestamped record sequences through a streaming query.
+    """Replay timestamped record sequences through a streaming query
+    whose output is kept by `KeptBatches`.
 
     build: fn(streaming DataFrame) -> output DataFrame.
     output_mode: append | update | complete.
+
+    restart() resumes from the same checkpoint in every output mode.
     """
 
     def __init__(
@@ -56,22 +104,14 @@ class MicroBatchReplay:
         schema: str,
         build,
         output_mode: str = "append",
-        sink: str = "memory",
     ) -> None:
         self.spark = spark
         self.schema = schema
-        self.name = f"replay_{uuid.uuid4().hex[:12]}"
-        self._staging = tempfile.mkdtemp(prefix=f"{self.name}_src_")
-        self._checkpoint = tempfile.mkdtemp(prefix=f"{self.name}_ckpt_")
-        self._drained = 0
-        self._complete = output_mode == "complete"
+        self._staging = tempfile.mkdtemp(prefix="replay_src_")
+        self._checkpoint = tempfile.mkdtemp(prefix="replay_ckpt_")
         self._build = build
         self._output_mode = output_mode
-        self._sink = sink
-        self._out_dir = None
-        self._seen_bid = -1
-        if sink == "parquet":
-            self._out_dir = tempfile.mkdtemp(prefix=f"{self.name}_out_")
+        self._kept: KeptBatches | None = None
         self.query = self._start()
 
     def _start(self):
@@ -81,29 +121,11 @@ class MicroBatchReplay:
             .parquet(self._staging)
         )
         out = self._build(src)
-        self._out_schema = out.schema
-        if self._sink == "parquet":
-            # foreachBatch-parquet: the FAULT-TOLERANT sink — unlike the
-            # memory sink it supports checkpoint recovery (restart()),
-            # works in every output mode, and is written by executors.
-            # Each batch's rows land tagged with the batch id so drain()
-            # can return only new emissions across restarts.
-            out_dir = self._out_dir
-
-            def _write(bdf, bid):
-                bdf.withColumn("_bid", F.lit(bid)).write.mode(
-                    "append"
-                ).parquet(out_dir)
-
-            return (
-                out.writeStream.foreachBatch(_write)
-                .outputMode(self._output_mode)
-                .option("checkpointLocation", self._checkpoint)
-                .start()
-            )
+        if self._kept is None:
+            self._kept = KeptBatches(
+                self.spark, out.schema, self._output_mode == "complete")
         return (
-            out.writeStream.format("memory")
-            .queryName(self.name)
+            out.writeStream.foreachBatch(self._kept.write)
             .outputMode(self._output_mode)
             .option("checkpointLocation", self._checkpoint)
             .start()
@@ -111,19 +133,11 @@ class MicroBatchReplay:
 
     def restart(self) -> None:
         """Kill the query and resume from the SAME checkpoint + source
-        — the crash-recovery path (requires sink="parquet": the memory
-        sink refuses checkpoint recovery outside complete mode, so a
-        memory-sink replay would die at start() with a confusing
-        AnalysisException rather than resume). Operator state
-        (aggregates, dedup sets, TWS/window stores) must come back from
-        the checkpoint, and the file source's committed offsets come
-        back with it, so already-processed files are never re-read
-        (no double counting, no double emission)."""
-        if self._sink != "parquet":
-            raise RuntimeError(
-                "restart() needs MicroBatchReplay(sink='parquet') — the "
-                "memory sink does not support checkpoint recovery"
-            )
+        — the crash-recovery path. Operator state (aggregates, dedup
+        sets, TWS/window stores) must come back from the checkpoint,
+        and the file source's committed offsets come back with it, so
+        already-processed files are never re-read (no double counting,
+        no double emission)."""
         self.query.stop()
         self.query = self._start()
 
@@ -134,49 +148,17 @@ class MicroBatchReplay:
         self.query.processAllAvailable()
 
     def table(self) -> DataFrame:
-        if self._sink == "parquet":
-            if not has_parquet(self._out_dir):
-                # no batch has emitted a row yet: Spark cannot infer a
-                # schema from an empty directory
-                return self.spark.createDataFrame([], self._out_schema)
-            df = self.spark.read.parquet(self._out_dir)
-            if self._complete:
-                # Each batch appends its FULL accumulated snapshot
-                # (tagged _bid); only the latest one is "the table" —
-                # mirror drain()'s max-_bid filter or complete-mode
-                # snapshots would silently concatenate.
-                mx = df.agg(F.max("_bid")).collect()[0][0]
-                df = df.filter(F.col("_bid") == F.lit(mx))
-            return df.drop("_bid")
-        return self.spark.table(self.name)
+        return self._kept.table()
 
     def drain(self) -> list[Row]:
         """Rows emitted since the last drain (all rows in complete mode)."""
-        if self._sink == "parquet":
-            if not has_parquet(self._out_dir):
-                return []  # no batch has emitted a row yet
-            rows = self.spark.read.parquet(self._out_dir).collect()
-            if self._complete:
-                mx = max((r["_bid"] for r in rows), default=-1)
-                return [_drop_bid(r) for r in rows if r["_bid"] == mx]
-            new = [_drop_bid(r) for r in rows if r["_bid"] > self._seen_bid]
-            self._seen_bid = max(
-                (r["_bid"] for r in rows), default=self._seen_bid
-            )
-            return new
-        rows = self.table().collect()
-        if self._complete:
-            return rows
-        new = rows[self._drained:]
-        self._drained = len(rows)
-        return new
+        return self._kept.drain()
 
     def stop(self) -> None:
         self.query.stop()
+        self._kept.batches.clear()
         shutil.rmtree(self._staging, ignore_errors=True)
         shutil.rmtree(self._checkpoint, ignore_errors=True)
-        if self._out_dir:
-            shutil.rmtree(self._out_dir, ignore_errors=True)
 
     def __enter__(self) -> MicroBatchReplay:
         return self
@@ -217,7 +199,7 @@ def stream_shuffle_partitions(spark: SparkSession):
 
 
 def run_available_now(
-    spark: SparkSession, source_df_build, sink_name: str, output_mode: str = "append"
+    spark: SparkSession, df: DataFrame, output_mode: str = "append"
 ) -> DataFrame:
     """Run a streaming query over already-materialized input with
     Trigger.AvailableNow and return the result once finished.
@@ -226,52 +208,16 @@ def run_available_now(
     dataset — the batch-equivalence path the correctness oracle checks.
     The query runs at STREAM_PARTITIONS shuffle partitions
     (stream_shuffle_partitions); the session's own setting is back in
-    place when this returns.
-
-    Sink selection (SPARK_GRAFT_STREAM_SINK env, default "memory"):
-
-    - "memory": the original path — results accumulate in a driver-heap
-      memory-sink table. Right for tests and sf0.01 gates (tiny results,
-      zero I/O), but every table lives for the session and the big
-      streaming entries' changelogs are driver-resident (the r9/r11
-      sf0.1 gate OOM: one long-lived session accumulating every entry's
-      sink plus a 1.5 GiB FK changelog needed a 56 GiB driver).
-    - "parquet": foreachBatch appends each micro-batch to a temp parquet
-      dir — written BY THE EXECUTORS, read back as a distributed scan,
-      so the driver never holds the result regardless of SF. Batch
-      semantics match the memory sink exactly: append/update modes
-      append each batch's emitted rows; complete mode overwrites with
-      the final state. The big-SF gate runbook sets this (paired with
-      GATE_COMPARE=stream the whole verification path is driver-flat).
+    place when this returns. The result is the union of the micro-
+    batches `KeptBatches` kept (the last one in complete mode): it
+    lives in the executors' block managers, so the driver holds none
+    of it at any scale, and it is released with the returned frame.
     """
-    sink = os.environ.get("SPARK_GRAFT_STREAM_SINK", "memory")
-    checkpoint = tempfile.mkdtemp(prefix=f"{sink_name}_ckpt_")
-    if sink == "parquet":
-        out_dir = tempfile.mkdtemp(prefix=f"{sink_name}_out_")
-        wrote = {"any": False}
-        write_mode = "overwrite" if output_mode == "complete" else "append"
-
-        def _write_batch(bdf: DataFrame, _bid: int) -> None:
-            bdf.write.mode(write_mode).parquet(out_dir)
-            wrote["any"] = True
-
-        with stream_shuffle_partitions(spark):
-            q = (
-                source_df_build.writeStream.foreachBatch(_write_batch)
-                .outputMode(output_mode)
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        shutil.rmtree(checkpoint, ignore_errors=True)
-        if not wrote["any"]:
-            return spark.createDataFrame([], source_df_build.schema)
-        return spark.read.parquet(out_dir)
+    kept = KeptBatches(spark, df.schema, output_mode == "complete")
+    checkpoint = tempfile.mkdtemp(prefix="available_now_ckpt_")
     with stream_shuffle_partitions(spark):
         q = (
-            source_df_build.writeStream.format("memory")
-            .queryName(sink_name)
+            df.writeStream.foreachBatch(kept.write)
             .outputMode(output_mode)
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
@@ -279,4 +225,4 @@ def run_available_now(
         )
         q.awaitTermination()
     shutil.rmtree(checkpoint, ignore_errors=True)
-    return spark.table(sink_name)
+    return kept.table()

@@ -6,8 +6,12 @@ and committed input files are not re-ingested.
 This is the fault-tolerance contract the engine leans on at cluster
 scale (the reference gets the same from RocksDB + changelog topics —
 SURVEY §4.1); a restarted executor/driver must not double-count or
-forget. Uses the fault-tolerant FILE sink (the memory sink used by the
-test harness deliberately refuses checkpoint recovery)."""
+forget. The windowed-count tests write through Spark's parquet file
+sink and the TWS tests through a foreachBatch writer that overwrites
+one directory per batch id. The FK-pipeline tests run the replay
+harness, whose one sink keeps each micro-batch by batch id: a batch
+that Spark runs again after a restart replaces its rows instead of
+adding them."""
 
 from __future__ import annotations
 
@@ -259,7 +263,7 @@ def test_fk_pipeline_survives_restart(spark, n_buckets):
         pk="pk", fk="fk", left_payload=["fk", "name"],
         left_tombstone="is_delete",
         right_key="rk", right_payload=["rank"], right_tombstone="is_delete",
-        how="left", n_buckets=n_buckets, sink="parquet",
+        how="left", n_buckets=n_buckets,
     ) as p:
         p.pipe_left([("3 bands", "adidas", "3 bands", False)])
         assert p.drain() == [("3 bands", "upsert", "3 bands", None)]
@@ -306,7 +310,7 @@ def _fk_pipes_around_crash(spark, n_buckets: int, crash: bool):
         pk="pk", fk="fk", left_payload=["fk", "name"],
         left_tombstone="is_delete",
         right_key="rk", right_payload=["rank"], right_tombstone="is_delete",
-        how="left", n_buckets=n_buckets, sink="parquet",
+        how="left", n_buckets=n_buckets,
     ) as p:
         p.pipe_left([("a1", "adidas", "Ann", False)])
         assert p.drain() == [("a1", "upsert", "Ann", None)]

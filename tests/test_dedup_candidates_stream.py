@@ -207,7 +207,7 @@ def test_winnow_candidates_survive_restart(spark):
         out = DC.winnow_candidates(src, "text", "doc_id", n_buckets=4)
 
         # parquet refuses update mode; foreachBatch-append is the
-        # fault-tolerant sink (same pattern as run_available_now)
+        # fault-tolerant sink
         def write(bdf, _bid):
             bdf.write.mode("append").parquet(out_dir)
 

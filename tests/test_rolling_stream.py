@@ -282,7 +282,7 @@ def test_time_ring_state_survives_restart(spark):
             horizon_s=100, lateness_s=50, on_late="fail",
         )
 
-    with MicroBatchReplay(spark, schema, build, "update", sink="parquet") as r:
+    with MicroBatchReplay(spark, schema, build, "update") as r:
         r.pipe([("k", 1, 0, 10.0), ("k", 3, 60, 30.0)])
         got1 = {x["seq"]: (x["win_n"], x["win_sum"]) for x in r.drain()}
         assert got1[3] == (2, 40.0)

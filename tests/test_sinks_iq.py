@@ -223,6 +223,51 @@ def test_store_mirror_restart_restores_snapshot(spark, file_order):
         q.stop()
 
 
+def test_store_mirror_replayed_batch_replaces_its_part(spark):
+    """The crash window between a mirrored micro-batch and its commit:
+    with the last batch's commit deleted, Spark runs that batch again
+    on restart. The replay replaces the batch's changelog file instead
+    of adding one, and both the live mirror and a mirror restored from
+    `path` equal the view of an uninterrupted run."""
+    keys = ["word", "window_start_s"]
+    ref, counts, ckpt, feed = _windowed_mirror(spark, "crash_ref")
+    q = ref.attach(counts, checkpoint=ckpt)
+    try:
+        for batch in BATCHES:
+            feed(q, batch)
+    finally:
+        q.stop()
+    uninterrupted = _rows(ref.view())
+
+    mirror, counts, ckpt, feed = _windowed_mirror(spark, "crash_test")
+    q = mirror.attach(counts, checkpoint=ckpt)
+    try:
+        for batch in BATCHES[:2]:
+            feed(q, batch)
+    finally:
+        q.stop()
+    for name in ("1", ".1.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
+    parts = sorted(os.listdir(mirror.path))
+    replayed = os.path.join(mirror.path, "part-000001.parquet")
+    written = os.stat(replayed).st_mtime_ns
+    restarted = StoreMirror(spark, "crash_test", keys, path=mirror.path)
+    q = restarted.attach(counts, checkpoint=ckpt)
+    try:
+        q.processAllAvailable()
+        assert q.recentProgress[0]["batchId"] == 1
+        assert sorted(os.listdir(mirror.path)) == parts
+        assert os.stat(replayed).st_mtime_ns != written
+        for batch in BATCHES[2:]:
+            feed(q, batch)
+    finally:
+        q.stop()
+    assert _rows(restarted.view()) == uninterrupted
+    assert _changelog_latest(spark, restarted) == uninterrupted
+    restored = StoreMirror(spark, "crash_test", keys, path=mirror.path)
+    assert _rows(restored.view()) == uninterrupted
+
+
 def test_store_mirror_compact(spark):
     """compact() rewrites the changelog to one snapshot with identical
     view contents (the Delta-upsert analogue) and leaves no temporary

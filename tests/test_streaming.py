@@ -253,7 +253,6 @@ def test_count_state_survives_restart(spark):
         spark, "word string, ts timestamp",
         lambda src: W.count_per_key_stream(src, ["word"]),
         output_mode="update",
-        sink="parquet",
     ) as r:
         r.pipe([("hello", ts(0))])
         assert {tuple(x) for x in r.drain()} == {("hello", 1)}
@@ -273,7 +272,6 @@ def test_windowed_distinct_dedup_state_survives_restart(spark):
             src, "ts", ["key"], "value", 10, grace_s=0
         ),
         output_mode="append",
-        sink="parquet",
     ) as r:
         r.pipe([("a", 1, ts(0)), ("a", 2, ts(1))])
         assert r.drain() == []

@@ -60,15 +60,6 @@ SF_DIR = os.environ.get("GATE_SF_DIR", "/root/testdata/sf0.01")
 COMPARE_MODE = os.environ.get("GATE_COMPARE", "stream")  # stream | collect
 DIFF_CAP = int(os.environ.get("GATE_DIFF_CAP", "200000"))
 
-# Big-SF runs MUST route streaming-entry results through the executor-
-# written parquet sink (driver-heap memory sinks OOM an 8g driver on
-# the FK-changelog entries — the r9 56 GiB runbook this mode retired).
-# Forgetting the env var cost a full sf0.1 run once; default it here so
-# the runbook is self-applying. Equivalence to the memory sink is
-# pinned in tests/test_stream_sink_parquet.py.
-if SF_DIR != "/root/testdata/sf0.01" and "SPARK_GRAFT_STREAM_SINK" not in os.environ:
-    os.environ["SPARK_GRAFT_STREAM_SINK"] = "parquet"
-    print("note: defaulting SPARK_GRAFT_STREAM_SINK=parquet for big-SF gate")
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
