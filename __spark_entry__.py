@@ -19,19 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_streams_app_spark.engine import (
-    _ensure_vendor_pythonpath,
-    configure_session,
-    ensure_parallelism,
-)
-
-# Inject the _vendor protobuf shim into PYTHONPATH at IMPORT time — i.e.
-# before any externally-owned SparkSession launches its JVM — so
-# transformWithStateInPandas workers inherit it no matter who builds the
-# session. (Sessions created before this import are handled by the
-# tws_available() worker probe + grouped-replay fallback below.)
-_ensure_vendor_pythonpath()
-
+from kafka_streams_app_spark.engine import configure_session, ensure_parallelism
 from kafka_streams_app_spark.functions import text as T
 from kafka_streams_app_spark.operators import aggregations as agg
 from kafka_streams_app_spark.operators import analytics
@@ -42,7 +30,6 @@ from kafka_streams_app_spark.streaming import windows as SW
 from kafka_streams_app_spark.streaming.harness import run_available_now
 from kafka_streams_app_spark.streaming import ktable as SK
 from kafka_streams_app_spark.streaming.ktable import ktable_changelog
-from kafka_streams_app_spark.streaming.replay import tws_available
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -2507,25 +2494,6 @@ def _q_multimodal_wav_decode(spark: SparkSession, sf: str) -> DataFrame:
     return multimodal.wav_features(media)
 
 
-def _stateful_source(spark: SparkSession, sf: str, name: str) -> DataFrame:
-    """Input of a stateful-operator entry: a stream when TWS workers can
-    import protobuf (the operator then runs incrementally), else the
-    batch table (the same processor then runs as grouped replay —
-    streaming/replay.py:run_stateful)."""
-    load = load_stream if tws_available(spark) else load_table
-    return load(spark, sf, name)
-
-
-def _drain(
-    spark: SparkSession, df: DataFrame, output_mode: str = "update"
-) -> DataFrame:
-    """Run a streaming result to completion (Trigger.AvailableNow); a
-    batch result is returned unchanged."""
-    if df.isStreaming:
-        return run_available_now(spark, df, output_mode)
-    return df
-
-
 def _q_s_windowed_count_closed(spark: SparkSession, sf: str) -> DataFrame:
     """W1/W5 through the REAL streaming runtime: watermarked tumbling
     count in append mode over the events stream (Trigger.AvailableNow).
@@ -2626,8 +2594,8 @@ def _q_s_winnow_candidates(spark: SparkSession, sf: str) -> DataFrame:
     split, so the oracle is the batch posting-list self-join."""
     from kafka_streams_app_spark.streaming import dedup_candidates as DC
 
-    docs = _stateful_source(spark, sf, "documents")
-    return _drain(spark, DC.winnow_candidates(docs, "text", "doc_id"))
+    docs = load_table(spark, sf, "documents")
+    return DC.winnow_candidates(docs, "text", "doc_id")
 
 
 def _q_s_pq_assign(spark: SparkSession, sf: str) -> DataFrame:
@@ -2785,11 +2753,11 @@ def _q_s_time_rolling(spark: SparkSession, sf: str) -> DataFrame:
     CAST(SUM(DECIMAL) AS DOUBLE) / count operation order."""
     from kafka_streams_app_spark.streaming import rolling as SR
 
-    ev = _time_rolling_prep(_stateful_source(spark, sf, "events"))
+    ev = _time_rolling_prep(load_table(spark, sf, "events"))
     out = SR.rolling_time_avg(
         ev, ["user_id"], "event_id", "ts_s", "value", horizon_s=300
     )
-    return _drain(spark, out).select(
+    return out.select(
         "user_id", "ts_s", "event_id", "value", "win_n", "win_sum", "win_avg"
     )
 
@@ -2818,38 +2786,33 @@ def _q_s_time_rolling_late(spark: SparkSession, sf: str) -> DataFrame:
     last-wins (max win_n per record — frames only grow), which must
     equal the in-event-order result — the SAME correlated oracle as
     s_time_rolling."""
-    import tempfile as _tf
+    import shutil
+    import tempfile
 
     from kafka_streams_app_spark.streaming import rolling as SR
 
     ev = _time_rolling_prep(load_table(spark, sf, "events"))
-    kwargs = dict(horizon_s=3600, lateness_s=1 << 40)
-    # This entry keeps its own fork: the late-arrival staging needs two
-    # micro-batches, which only the streaming path has. Without TWS the
-    # batch replay sees every row at once (no row is late).
-    if not tws_available(spark):
-        res = SR.rolling_time_avg(
-            ev, ["user_id"], "event_id", "ts_s", "value", **kwargs
+    staging = tempfile.mkdtemp(prefix="s_time_rolling_late_")
+    try:
+        on_time = ev.filter(F.col("event_id") % 5 != 0)
+        late = ev.filter(F.col("event_id") % 5 == 0)
+        on_time.coalesce(1).write.mode("append").parquet(staging)
+        late.coalesce(1).write.mode("append").parquet(staging)
+        src = (
+            spark.readStream.schema(on_time.schema)
+            .option("maxFilesPerTrigger", 1)
+            .option("latestFirst", "false")
+            .parquet(staging)
         )
-        return res.select(
-            "user_id", "ts_s", "event_id", "value",
-            "win_n", "win_sum", "win_avg",
+        out = SR.rolling_time_avg(
+            src, ["user_id"], "event_id", "ts_s", "value",
+            horizon_s=3600, lateness_s=1 << 40,
         )
-    staging = _tf.mkdtemp(prefix="s_time_rolling_late_")
-    on_time = ev.filter(F.col("event_id") % 5 != 0)
-    late = ev.filter(F.col("event_id") % 5 == 0)
-    on_time.coalesce(1).write.mode("append").parquet(staging)
-    late.coalesce(1).write.mode("append").parquet(staging)
-    src = (
-        spark.readStream.schema(on_time.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(staging)
-    )
-    out = SR.rolling_time_avg(
-        src, ["user_id"], "event_id", "ts_s", "value", **kwargs
-    )
-    changelog = _drain(spark, out)
+        # the kept micro-batches are local checkpoints: they outlive
+        # the source files
+        changelog = run_available_now(spark, out, "update")
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
     best = F.max(F.struct("win_n", "win_sum", "win_avg")).alias("_b")
     return (
         changelog.groupBy("user_id", "ts_s", "event_id", "value")
@@ -2876,10 +2839,8 @@ def _q_s_sample_topk(spark: SparkSession, sf: str) -> DataFrame:
 
     from kafka_streams_app_spark.streaming import sample as SSample
 
-    docs = _stateful_source(spark, sf, "documents")
-    ch = _drain(
-        spark, SSample.sample_topk(docs, "source", "doc_id", k=20, seed=3)
-    )
+    docs = load_table(spark, sf, "documents")
+    ch = SSample.sample_topk(docs, "source", "doc_id", k=20, seed=3)
     final = (
         ch.groupBy("source", "doc_id")
         .agg(F.sum("op").alias("_net"))
@@ -2958,7 +2919,7 @@ def _q_s_stream_table_join(spark: SparkSession, sf: str) -> DataFrame:
     the as-of semantics, so the oracle is j4's ASOF LEFT JOIN."""
     from kafka_streams_app_spark.streaming.stream_table import stream_table_join
 
-    ev = _stateful_source(spark, sf, "events")
+    ev = load_stream(spark, sf, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "user_id", "event_id", "value", F.unix_micros("ts").alias("seq")
     )
@@ -2972,7 +2933,7 @@ def _q_s_stream_table_join(spark: SparkSession, sf: str) -> DataFrame:
         clicks, purchases, key="user_id", stream_payload=["event_id", "value"],
         table_payload=["purchase_event_id", "purchase_value"], how="left",
     )
-    return _drain(spark, j, "append").select(
+    return run_available_now(spark, j, "append").select(
         "event_id", "value", "purchase_event_id", "purchase_value"
     )
 
@@ -3032,15 +2993,13 @@ def _q_s_ktable_latest(spark: SparkSession, sf: str) -> DataFrame:
     transformWithStateInPandas changelog operator; the final view (last
     changelog row per key) must equal the batch max_by snapshot.
 
-    When the session owner's workers lack protobuf (externally-created
-    session, see streaming/replay.py) the SAME state machine replays
-    via applyInArrow grouped replay — identical changelog output."""
-    ev = _stateful_source(spark, sf, "events").select(
+    The input is the snapshot table, so the SAME state machine runs as
+    applyInArrow grouped replay (streaming/replay.py) — the changelog
+    the incremental run emits, at less cost on a snapshot."""
+    ev = load_table(spark, sf, "events").select(
         "user_id", "event_id", "value", "ts"
     )
-    table = _drain(
-        spark, ktable_changelog(ev, ["user_id"], "ts", ["event_id", "value"])
-    )
+    table = ktable_changelog(ev, ["user_id"], "ts", ["event_id", "value"])
     snap = ktable.latest_per_key(
         table.filter(F.col("action") == "upsert"), ["user_id"], ["ts"],
         payload=["new_event_id", "new_value"],
@@ -3060,16 +3019,14 @@ def _q_s_table_history(spark: SparkSession, sf: str) -> DataFrame:
     by keeping the non-null valid_to. Must equal the batch
     table_history lead-window bit-for-bit; 'error' events are the
     tombstones, value floor-quantized like the batch twin."""
-    ev = _stateful_source(spark, sf, "events").select(
+    ev = load_table(spark, sf, "events").select(
         "user_id", "event_id", "event_type",
         F.floor(F.col("value") * 1e6).cast("long").alias("value_e6"),
         (F.col("event_type") == "error").alias("is_del"),
     )
     payload = ["event_id", "event_type", "value_e6"]
     ch = ktable_changelog(ev, ["user_id"], "event_id", payload, "is_del")
-    events = _drain(
-        spark, SK.changelog_to_intervals(ch, ["user_id"], "event_id", payload)
-    )
+    events = SK.changelog_to_intervals(ch, ["user_id"], "event_id", payload)
     return (
         events.groupBy(
             "user_id", "event_type", "value_e6", "valid_from"
@@ -3087,13 +3044,13 @@ def _q_s_zscore_running(spark: SparkSession, sf: str) -> DataFrame:
     from kafka_streams_app_spark.streaming import zscore as SZ
 
     ev = SZ.with_micro_units(
-        _stateful_source(spark, sf, "events").select(
+        load_table(spark, sf, "events").select(
             "event_type", "event_id", "value"
         ),
         "value",
     )
     out = SZ.zscore_running(ev, ["event_type"], "event_id", "value", z=(5, 2))
-    return _drain(spark, out).select(
+    return out.select(
         "event_type", "event_id", "value", "n", "zsq_e6"
     )
 
@@ -3108,13 +3065,13 @@ def _q_s_rolling_avg(spark: SparkSession, sf: str) -> DataFrame:
     from kafka_streams_app_spark.streaming import zscore as SZ
 
     ev = SZ.with_micro_units(
-        _stateful_source(spark, sf, "events").select(
+        load_table(spark, sf, "events").select(
             "user_id", "event_id", "value"
         ),
         "value",
     )
     out = SR.rolling_avg(ev, ["user_id"], "event_id", "value", n=10)
-    return _drain(spark, out).select(
+    return out.select(
         "user_id", "event_id", "value", "roll_n", "roll_avg"
     )
 
@@ -3142,7 +3099,7 @@ def _run_wjk(spark: SparkSession, sf: str, n_buckets: int,
         windowed_join_per_topic_time,
     )
 
-    ev = _stateful_source(spark, sf, "events")
+    ev = load_table(spark, sf, "events")
     delay = (
         (F.col("event_id") * F.lit(2654435761)) % F.lit(4294967296) % 8 * 900
     )
@@ -3165,7 +3122,7 @@ def _run_wjk(spark: SparkSession, sf: str, n_buckets: int,
         before_s=3600, after_s=3600, n_buckets=n_buckets,
         bucket_fn=bucket_fn,
     )
-    return _drain(spark, join)
+    return join
 
 
 def _q_s_windowed_join_ktime_multibucket(
@@ -3191,12 +3148,11 @@ def _q_s_pk_join_incremental(spark: SparkSession, sf: str) -> DataFrame:
     """J5 INCREMENTAL: KTable⋈KTable PK join as a stateful changelog
     operator over the raw view/click event changelogs; the end state
     (latest join row per user) must equal the batch snapshot join
-    (same oracle as j5_table_join_inner). Falls back to the same state
-    machine via applyInArrow grouped replay when TWS workers lack
-    protobuf (streaming/replay.py)."""
+    (same oracle as j5_table_join_inner). On the snapshot table the
+    same state machine runs as grouped replay (streaming/replay.py)."""
     from kafka_streams_app_spark.streaming.pk_join import pk_join
 
-    ev = _stateful_source(spark, sf, "events")
+    ev = load_table(spark, sf, "events")
     left = ev.filter(F.col("event_type") == "view").select(
         "user_id", F.col("event_id").alias("v_event_id"),
         F.unix_micros("ts").alias("seq"),
@@ -3210,7 +3166,7 @@ def _q_s_pk_join_incremental(spark: SparkSession, sf: str) -> DataFrame:
         left_payload=["v_event_id"], right_payload=["c_event_id"], how="inner",
     )
     snap = ktable.latest_per_key(
-        _drain(spark, join).filter(F.col("action") == "upsert"),
+        join.filter(F.col("action") == "upsert"),
         ["user_id"], ["_seq"], payload=["v_event_id", "c_event_id"],
     )
     return snap.select("user_id", "v_event_id", "c_event_id")
@@ -3224,11 +3180,10 @@ def _q_s_fk_join_incremental(spark: SparkSession, sf: str) -> DataFrame:
     batch join of the two snapshots.
 
     ktable_changelog -> fk_instructions -> the groupBy(fk) join
-    processor chain in ONE streaming query (both TWS operators in
-    Update mode, one checkpoint), run Trigger.AvailableNow to
-    completion. When TWS workers lack protobuf (externally-created
-    session) the same chain runs as batch grouped replays
-    (streaming/replay.py) — identical changelog output.
+    processor chain (_fk_chain) over the snapshot table runs as two
+    grouped replays (streaming/replay.py); over a stream the same chain
+    is ONE streaming query (both TWS operators in Update mode, one
+    checkpoint) — identical changelog output.
     """
     return _fk_incremental_pipeline(spark, sf, how="inner")
 
@@ -3249,16 +3204,34 @@ def _fk_incremental_pipeline(
     spark: SparkSession, sf: str, how: str,
     right_types: tuple[str, ...] | None = None,
 ) -> DataFrame:
+    join = _fk_chain(load_table(spark, sf, "events"), how, right_types)
+    snap = ktable.latest_per_key(
+        join, ["pk"], ["_seq", "_minor"],
+        payload=["action", "value", "r_rvalue"],
+    )
+    return (
+        snap.filter(F.col("action") == "upsert")
+        .select(F.col("pk").alias("user_id"), "value",
+                F.col("r_rvalue").alias("rvalue"))
+    )
+
+
+def _fk_chain(
+    ev: DataFrame, how: str, right_types: tuple[str, ...] | None = None,
+) -> DataFrame:
+    """The FK-join changelog of the s_fk_* entries over an events frame:
+    left KTable = latest event per user keyed by its event_type, right
+    KTable = latest event per type."""
     from kafka_streams_app_spark.streaming.fk_join import (
         fk_instructions,
         fk_join_changelog,
     )
 
-    left = _stateful_source(spark, sf, "events").select(
+    left = ev.select(
         F.col("user_id").alias("pk"), F.col("event_type").alias("fk"),
         F.col("value"), F.unix_micros("ts").alias("seq"),
     )
-    right = _stateful_source(spark, sf, "events")
+    right = ev
     if right_types is not None:
         right = right.filter(F.col("event_type").isin(*right_types))
     right = right.select(
@@ -3269,27 +3242,17 @@ def _fk_incremental_pipeline(
     instr = fk_instructions(changelog, "pk", "fk", ["fk", "value"], "seq")
     # compact_rights=True (r16): only the FINAL right row per fk per
     # micro-batch fans out — Kafka Streams' KTable cache compacts
-    # R_1..R_n to R_n within a commit interval, and this query reduces
-    # the changelog with latest_per_key(pk, (_seq,_minor)) below, where
+    # R_1..R_n to R_n within a commit interval, and the entries reduce
+    # the changelog with latest_per_key(pk, (_seq,_minor)), where
     # every compacted-away fan-out is superseded by a later kept
     # emission for its pk (proof + randomized pin:
     # tests/test_fk_fast_batch.py; oracle-identical at sf0.01/sf0.1).
     # Cuts the fan-out volume ~40x at the sf0.1 gate shape (5 fks x
     # 1500 pks x 4 right rows/fk/batch).
-    join = fk_join_changelog(
+    return fk_join_changelog(
         instr, right, right_key="rk", right_payload=["rvalue"],
         right_seq="seq", right_tombstone=None,
         left_value_cols=["value"], how=how, compact_rights=True,
-    )
-    table = _drain(spark, join)
-    snap = ktable.latest_per_key(
-        table, ["pk"], ["_seq", "_minor"],
-        payload=["action", "value", "r_rvalue"],
-    )
-    return (
-        snap.filter(F.col("action") == "upsert")
-        .select(F.col("pk").alias("user_id"), "value",
-                F.col("r_rvalue").alias("rvalue"))
     )
 
 

@@ -118,21 +118,6 @@ def _ensure_allocator_env() -> None:
         os.environ.setdefault(var, val)
 
 
-def _ensure_vendor_pythonpath() -> None:
-    """Expose _vendor (protobuf shim for transformWithStateInPandas
-    workers — see _vendor/README.md) to every Spark Python worker.
-    Must run before the JVM launches so workers inherit the env."""
-    vendor = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                          "_vendor")
-    if not os.path.isdir(vendor):
-        return
-    current = os.environ.get("PYTHONPATH", "")
-    if vendor not in current.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            f"{current}{os.pathsep}{vendor}" if current else vendor
-        )
-
-
 def get_spark(
     app_name: str = "kafka-streams-app-spark",
     master: str | None = None,
@@ -144,7 +129,6 @@ def get_spark(
     on a real cluster the caller passes the cluster master instead and the
     same conf applies unchanged.
     """
-    _ensure_vendor_pythonpath()
     _ensure_allocator_env()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"

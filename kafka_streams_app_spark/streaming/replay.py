@@ -9,20 +9,18 @@ grouping columns, StatefulProcessor and output schema, then ends in
 run_stateful. The processors are deterministic in seq order, so the
 same state machine serves both inputs unchanged.
 
-Why the batch path exists: TWS spawns an extra protobuf-dependent
-Python worker (the state-server client). In this container
-google.protobuf only reaches workers through the _vendor PYTHONPATH
-shim injected BEFORE the JVM launches
-(engine._ensure_vendor_pythonpath). A SparkSession created by an
-external owner before that injection leaves TWS workers unable to
-import protobuf — they crash with "TransformWithStateInPySpark driver
-worker exited unexpectedly". tws_available probes for that; callers
-then load batch frames instead of streams. Grouped applyInArrow has
-no protobuf dependency, so grouped_replay runs the processor per
-grouping key over the batch frame: groupBy(bucket)
-shuffles each bucket's full changelog to one task, the processor runs
-once per bucket from empty state, and the emitted changelog is
-identical to what the incremental TWS run yields.
+Why the batch path exists: a registry entry whose input is a snapshot
+(every stateful s_* entry but s_stream_table_join and
+s_time_rolling_late) loads the batch table, and on a snapshot a
+deterministic recomputation is cheaper than micro-batches: grouped
+replay beat TWS in every A/B pair of those entries' sf0.1 gate walls
+(CHANGES.md). Grouped applyInArrow runs the processor per grouping
+key over the batch frame: groupBy(bucket) shuffles each bucket's full
+changelog to one task, the processor runs once per bucket from empty
+state, and the emitted changelog is identical to what the incremental
+TWS run yields. The path follows the input alone, so a session
+decides nothing: TWS workers get protobuf from the package's import
+hook (streaming/__init__.py) whoever built the session.
 
 Tests pin the genuinely incremental multi-batch behavior through TWS
 via MicroBatchReplay. Scale note: the replay is fully distributed (one
@@ -175,59 +173,3 @@ def run_stateful(
         outputMode=output_mode,
         timeMode="None",
     )
-
-
-_TWS_PROBE_CACHE: dict[str, bool] = {}
-
-
-def tws_available(spark) -> bool:
-    """Can transformWithStateInPandas run under THIS session's workers?
-
-    Probes an actual Python worker for google.protobuf (the only import
-    TWS needs beyond what applyInArrow already uses) with a 1-partition
-    job, cached per application id. Returns False — and callers fall
-    back to grouped_replay — when the session owner launched the JVM
-    before the _vendor shim reached PYTHONPATH.
-    """
-    app_id = spark.sparkContext.applicationId
-    if app_id not in _TWS_PROBE_CACHE:
-        def _probe(_):
-            # NOTE: a bare `import google.protobuf` is NOT sufficient — the
-            # spark-core jar on the worker path exposes google/protobuf/*.proto
-            # resources, so that import "succeeds" as an empty namespace
-            # package (and proto/__init__ is lazy). Import the generated
-            # state-server message module the TWS worker actually loads: it
-            # pulls in the real protobuf runtime (google.protobuf.descriptor,
-            # version check relaxed by the _vendor shim) or dies trying.
-            try:
-                from pyspark.sql.streaming.proto import StateMessage_pb2  # noqa: F401
-                return True
-            except Exception:
-                return False
-
-        def _run_probe() -> bool:
-            return bool(spark.sparkContext.parallelize([0], 1).map(_probe).first())
-
-        try:
-            ok = _run_probe()
-        except Exception:
-            # The probe returns False on a worker ImportError; reaching
-            # here means the probe JOB itself failed (transient executor
-            # loss, task serialization, ...). Caching that as "TWS
-            # unavailable" would silently demote every streaming entry
-            # to batch replay — retry once, then surface the real error
-            # instead of mislabeling the session.
-            ok = _run_probe()
-        if not ok:
-            import warnings
-
-            warnings.warn(
-                "transformWithStateInPandas workers cannot import protobuf "
-                f"in application {app_id}; streaming operators will execute "
-                "via batch grouped-replay (streaming/replay.py) instead of "
-                "the incremental TWS path.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        _TWS_PROBE_CACHE[app_id] = ok
-    return _TWS_PROBE_CACHE[app_id]

@@ -97,10 +97,6 @@ def test_tws_ktable_state_survives_restart(spark, n_buckets):
     Recovery restores a MapState whose entries span multiple logical
     keys per grouping key (bucket)."""
     from kafka_streams_app_spark.streaming.ktable import ktable_changelog
-    from kafka_streams_app_spark.streaming.replay import tws_available
-
-    if not tws_available(spark):
-        pytest.skip("TWS protobuf unavailable in this session")
 
     staging = tempfile.mkdtemp(prefix="ckpt_tws_src_")
     checkpoint = tempfile.mkdtemp(prefix="ckpt_tws_ckpt_")
@@ -157,11 +153,7 @@ def test_tws_pk_join_state_survives_restart(spark, n_buckets):
     row arriving after the restart joins the LEFT value written before
     it. Covers the bucketed layout's two recovered MapStates."""
     from kafka_streams_app_spark.streaming.pk_join import pk_join
-    from kafka_streams_app_spark.streaming.replay import tws_available
     from pyspark.sql import functions as F
-
-    if not tws_available(spark):
-        pytest.skip("TWS protobuf unavailable in this session")
 
     staging = tempfile.mkdtemp(prefix="ckpt_pkj_src_")
     checkpoint = tempfile.mkdtemp(prefix="ckpt_pkj_ckpt_")
@@ -251,10 +243,6 @@ def test_fk_pipeline_survives_restart(spark, n_buckets):
     right update joins the pre-restart subscription, and a post-restart
     FK move retracts via the pre-restart left value exactly once."""
     from kafka_streams_app_spark.streaming.fk_join import FKJoinReplay
-    from kafka_streams_app_spark.streaming.replay import tws_available
-
-    if not tws_available(spark):
-        pytest.skip("TWS protobuf unavailable in this session")
 
     LEFT = "pk string, fk string, name string, is_delete boolean, seq long"
     RIGHT = "rk string, rank int, is_delete boolean, seq long"
@@ -342,11 +330,6 @@ def test_fk_pipeline_crash_with_pending_input(spark, n_buckets):
     checkpoint. Each pending record must be applied exactly once (none
     lost, none doubled) — the catch-up rows and the end state per pk
     equal an uninterrupted run of the same pipes."""
-    from kafka_streams_app_spark.streaming.replay import tws_available
-
-    if not tws_available(spark):
-        pytest.skip("TWS protobuf unavailable in this session")
-
     catch_up, end = _fk_pipes_around_crash(spark, n_buckets, crash=True)
     assert catch_up == sorted([
         ("a1", "upsert", "Ann", None),  # moved to (still absent) puma

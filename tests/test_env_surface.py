@@ -1,8 +1,7 @@
 """The environment variables the package reads are deployment settings
-only: the driver's cores, memory and result cap, the worker PYTHONPATH,
-and the two allocator defaults `engine._ensure_allocator_env` sets. A
-new read (a behaviour dial, say) fails here until it is added below
-on purpose."""
+only: the driver's cores, memory and result cap, and the two allocator
+defaults `engine._ensure_allocator_env` sets. A new read (a behaviour
+dial, say) fails here until it is added below on purpose."""
 
 from __future__ import annotations
 
@@ -14,7 +13,6 @@ ALLOWED = {
     "SPARK_GRAFT_CPUS",
     "SPARK_DRIVER_MEM",
     "SPARK_MAX_RESULT",
-    "PYTHONPATH",
     "MALLOC_MMAP_THRESHOLD_",
     "MALLOC_TRIM_THRESHOLD_",
 }

@@ -260,24 +260,22 @@ def test_fk_bucketed_multibatch_state_carry_random(spark):
 
 
 def test_registry_fk_pipeline_is_one_streaming_query(spark, monkeypatch):
-    """s_fk_join_incremental chains ktable_changelog -> fk_instructions
-    -> fk_join_changelog in ONE streaming query: exactly one query
-    starts, its plan holds both TWS operators, and no intermediate
-    changelog directory is made on the way."""
+    """The s_fk_* entries' chain (ktable_changelog -> fk_instructions
+    -> fk_join_changelog) over an events STREAM is ONE streaming query:
+    exactly one query starts, its plan holds both TWS operators, and no
+    intermediate changelog directory is made on the way."""
     import os
     import tempfile
 
     from pyspark.sql.streaming import StreamingQueryListener
 
     import __spark_entry__ as registry
-    from kafka_streams_app_spark.streaming.replay import tws_available
-
-    if not tws_available(spark):
-        pytest.skip("TWS protobuf unavailable in this session")
+    from kafka_streams_app_spark.sources.catalog import load_stream
+    from kafka_streams_app_spark.streaming.harness import run_available_now
 
     class Started(StreamingQueryListener):
         # onQueryStarted runs before start() returns, so the query is
-        # still active and the count is final when the entry returns
+        # still active and the count is final when run_available_now returns
         def __init__(self) -> None:
             self.queries = []
 
@@ -302,8 +300,9 @@ def test_registry_fk_pipeline_is_one_streaming_query(spark, monkeypatch):
     started = Started()
     spark.streams.addListener(started)
     try:
-        out = registry.queries()["s_fk_join_incremental"](
-            spark, registry.SF0001
+        ev = load_stream(spark, registry.SF0001, "events")
+        out = run_available_now(
+            spark, registry._fk_chain(ev, how="inner"), "update"
         )
         assert out.count() > 0
     finally:

@@ -1,8 +1,8 @@
-"""Grouped-replay (applyInArrow, no-TWS) fallback pins.
+"""Grouped-replay (applyInArrow, no-TWS) pins.
 
-The driver gate may own a SparkSession whose workers cannot import
-protobuf (streaming/replay.py); these tests assert the batch replay of
-the SAME state machines emits the identical changelog the TWS
+The stateful registry entries over snapshot tables run grouped replay
+in every session (streaming/replay.py); these tests assert the batch
+replay of the SAME state machines emits the identical changelog the TWS
 incremental operators produce for the same input — including the
 tombstone lifecycles from TopologiesTest.scala:219-239 and the FK-join
 re-subscription edge cases from TopologiesTest.scala:100-217 — and pin

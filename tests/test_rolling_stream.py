@@ -335,3 +335,29 @@ def test_time_legacy_state_blob_named_error():
         proc.state = _FakeState(blob)
         with pytest.raises(ValueError, match="incompatible state format"):
             list(proc.handleInputRows(("k",), iter([pdf]), None))
+
+
+def test_time_rolling_late_entry_removes_its_staging(spark, monkeypatch):
+    """s_time_rolling_late stages its two source files in a temp dir:
+    the entry removes it once the micro-batches are kept, and the kept
+    result still reads back."""
+    import os
+    import tempfile
+
+    import __spark_entry__ as registry
+
+    made: list[str] = []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def mkdtemp(*args, **kwargs):
+        path = real_mkdtemp(*args, **kwargs)
+        made.append(path)
+        return path
+
+    monkeypatch.setattr(tempfile, "mkdtemp", mkdtemp)
+    out = registry.queries()["s_time_rolling_late"](spark, registry.SF0001)
+    staging = [p for p in made
+               if os.path.basename(p).startswith("s_time_rolling_late_")]
+    assert len(staging) == 1
+    assert not os.path.exists(staging[0])
+    assert out.count() > 0

@@ -123,13 +123,9 @@ def test_streaming_multibatch_state_carry(spark):
     TWS runtime: stream times and window stores must carry across
     batches (state, not within-batch context)."""
     from kafka_streams_app_spark.streaming.harness import MicroBatchReplay
-    from kafka_streams_app_spark.streaming.replay import tws_available
     from kafka_streams_app_spark.streaming.windowed_join_ktime import (
         windowed_join_per_topic_time,
     )
-
-    if not tws_available(spark):
-        pytest.skip("TWS workers lack protobuf in this session")
 
     schema = "side string, key string, ts_s long, seq long, v long"
 

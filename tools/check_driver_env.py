@@ -1,14 +1,15 @@
-"""Simulate the VERIFICATION DRIVER's environment: a SparkSession
-created by an external owner BEFORE __spark_entry__ is imported (so the
-JVM never saw the _vendor protobuf PYTHONPATH shim, and TWS workers
-cannot import protobuf). Round 2's three streaming contract entries
-crashed exactly here; this script proves the grouped-replay path
-(streaming/replay.py:run_stateful on batch inputs) keeps every
-stateful-operator entry green under ANY session owner.
+"""Run the stateful-operator entries in a session built the way the
+VERIFICATION DRIVER builds it: an external owner creates the
+SparkSession BEFORE __spark_entry__ is imported, with no _vendor on
+PYTHONPATH. Round 2's three streaming contract entries crashed exactly
+here. Each entry must take the same path as in an engine session:
+s_stream_table_join and s_time_rolling_late run transformWithStateInPandas
+on a stream (their workers get protobuf only through the package's
+import hook, streaming/__init__.py, so they pass only if it works), the
+other 16 run grouped replay on the batch table.
 
 Usage: env -u PYTHONPATH python tools/check_driver_env.py [name ...]
-(defaults to the 18 entries whose operators run TWS on a stream and
-grouped replay on a batch table)
+(defaults to the 18 entries whose operators end in replay.run_stateful)
 """
 
 from __future__ import annotations
@@ -63,9 +64,7 @@ def main() -> int:
     # ... and only then imports the entry module.
     import __spark_entry__ as e
     from kafka_streams_app_spark.engine import RUNTIME_CONF
-    from kafka_streams_app_spark.streaming.replay import tws_available
 
-    print(f"tws_available={tws_available(spark)} (expect False in clean env)")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")

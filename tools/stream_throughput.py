@@ -16,7 +16,7 @@ the topology shapes via Trigger.AvailableNow into a noop sink:
                       value cardinality)
 - ktable_latest_tws : transformWithStateInPandas latest-per-key
                       changelog (S2 incremental — the custom state
-                      machine; skipped when TWS workers lack protobuf)
+                      machine)
   + PK-join, FK-join, rolling/zscore TWS shapes
 
 Prints one JSON line per shape: input rows, wall seconds, rows/sec.
@@ -47,7 +47,6 @@ from kafka_streams_app_spark.sources.catalog import _normalize_ts
 from kafka_streams_app_spark.streaming import windows as SW
 from kafka_streams_app_spark.streaming.ktable import ktable_changelog
 from kafka_streams_app_spark.streaming.pk_join import pk_join
-from kafka_streams_app_spark.streaming.replay import tws_available
 
 SCRATCH = ROOT / ".scratch" / "scale_smoke"
 
@@ -181,189 +180,185 @@ def main() -> None:
         SW.cms_cell_stream(ev3d, "user_id", d=4, w=256),
         "update",
     ))
-    if tws_available(spark):
-        # 128 buckets = 4x cores on the 32-core host — see SCALE.md and
-        # streaming/ktable.py:_LatestPerKeyBucketed.
-        ev4 = stream_events(spark, events_path).select(
-            "user_id", "event_id", "value", "ts"
-        )
-        shapes.append((
-            "ktable_latest_tws",
-            ktable_changelog(
-                ev4, ["user_id"], "event_id", ["event_id", "value"],
-                n_buckets=128,
-            ),
-            "append",
-        ))
-        # J5 incremental: two-sided PK-join state machine (the heavier
-        # TWS topology — union-tagged changelogs, per-key (left,right)
-        # state, 128 buckets). Same view/click split as the
-        # s_pk_join_incremental contract entry; rows_in counts the full
-        # event stream scanned.
-        ev6 = stream_events(spark, events_path)
-        pk_left = ev6.filter(F.col("event_type") == "view").select(
-            "user_id", F.col("event_id").alias("v_event_id"),
-            F.unix_micros("ts").alias("seq"),
-        )
-        pk_right = ev6.filter(F.col("event_type") == "click").select(
-            "user_id", F.col("event_id").alias("c_event_id"),
-            F.unix_micros("ts").alias("seq"),
-        )
-        shapes.append((
-            "pk_join_tws_bucketed",
-            pk_join(
-                pk_left, pk_right, key="user_id",
-                left_payload=["v_event_id"], right_payload=["c_event_id"],
-                how="inner", n_buckets=128,
-            ),
-            "update",
-        ))
-        # r11 analytics state machines: per-key running moments
-        # (3 scalars/key) and the trailing-n ring — the lightest TWS
-        # states in the repo; their rates bound what the framework
-        # overhead itself allows at this key cardinality.
-        from kafka_streams_app_spark.streaming import rolling as SR
-        from kafka_streams_app_spark.streaming import zscore as SZ
+    # 128 buckets = 4x cores on the 32-core host — see SCALE.md and
+    # streaming/ktable.py:_LatestPerKeyBucketed.
+    ev4 = stream_events(spark, events_path).select(
+        "user_id", "event_id", "value", "ts"
+    )
+    shapes.append((
+        "ktable_latest_tws",
+        ktable_changelog(
+            ev4, ["user_id"], "event_id", ["event_id", "value"],
+            n_buckets=128,
+        ),
+        "append",
+    ))
+    # J5 incremental: two-sided PK-join state machine (the heavier
+    # TWS topology — union-tagged changelogs, per-key (left,right)
+    # state, 128 buckets). Same view/click split as the
+    # s_pk_join_incremental contract entry; rows_in counts the full
+    # event stream scanned.
+    ev6 = stream_events(spark, events_path)
+    pk_left = ev6.filter(F.col("event_type") == "view").select(
+        "user_id", F.col("event_id").alias("v_event_id"),
+        F.unix_micros("ts").alias("seq"),
+    )
+    pk_right = ev6.filter(F.col("event_type") == "click").select(
+        "user_id", F.col("event_id").alias("c_event_id"),
+        F.unix_micros("ts").alias("seq"),
+    )
+    shapes.append((
+        "pk_join_tws_bucketed",
+        pk_join(
+            pk_left, pk_right, key="user_id",
+            left_payload=["v_event_id"], right_payload=["c_event_id"],
+            how="inner", n_buckets=128,
+        ),
+        "update",
+    ))
+    # r11 analytics state machines: per-key running moments
+    # (3 scalars/key) and the trailing-n ring — the lightest TWS
+    # states in the repo; their rates bound what the framework
+    # overhead itself allows at this key cardinality.
+    from kafka_streams_app_spark.streaming import rolling as SR
+    from kafka_streams_app_spark.streaming import zscore as SZ
 
-        ev7 = SZ.with_micro_units(
-            stream_events(spark, events_path).select(
-                "event_type", "event_id", "value"
-            ),
-            "value",
-        )
-        shapes.append((
-            "zscore_running_tws",
-            SZ.zscore_running(
-                ev7, ["event_type"], "event_id", "value", z=(5, 2)
-            ),
-            "update",
-        ))
-        ev8 = SZ.with_micro_units(
-            stream_events(spark, events_path).select(
-                "user_id", "event_id", "value"
-            ),
-            "value",
-        )
-        shapes.append((
-            "rolling_avg_tws",
-            SR.rolling_avg(ev8, ["user_id"], "event_id", "value", n=10),
-            "update",
-        ))
-        ev9 = SZ.with_micro_units(
-            stream_events(spark, events_path).select(
-                "user_id", "event_id", "value",
-                F.unix_seconds(F.col("ts").cast("timestamp")).alias("ts_s"),
-            ),
-            "value",
-        )
-        shapes.append((
-            # wall-clock frame ring (r12d): state bounded by horizon x
-            # per-key rate instead of n
-            "rolling_time_avg_tws",
-            SR.rolling_time_avg(
-                ev9, ["user_id"], "event_id", "ts_s", "value", horizon_s=300
-            ),
-            "update",
-        ))
-    else:
-        print(json.dumps({"shape": "ktable_latest_tws", "skipped": "no TWS protobuf"}))
+    ev7 = SZ.with_micro_units(
+        stream_events(spark, events_path).select(
+            "event_type", "event_id", "value"
+        ),
+        "value",
+    )
+    shapes.append((
+        "zscore_running_tws",
+        SZ.zscore_running(
+            ev7, ["event_type"], "event_id", "value", z=(5, 2)
+        ),
+        "update",
+    ))
+    ev8 = SZ.with_micro_units(
+        stream_events(spark, events_path).select(
+            "user_id", "event_id", "value"
+        ),
+        "value",
+    )
+    shapes.append((
+        "rolling_avg_tws",
+        SR.rolling_avg(ev8, ["user_id"], "event_id", "value", n=10),
+        "update",
+    ))
+    ev9 = SZ.with_micro_units(
+        stream_events(spark, events_path).select(
+            "user_id", "event_id", "value",
+            F.unix_seconds(F.col("ts").cast("timestamp")).alias("ts_s"),
+        ),
+        "value",
+    )
+    shapes.append((
+        # wall-clock frame ring (r12d): state bounded by horizon x
+        # per-key rate instead of n
+        "rolling_time_avg_tws",
+        SR.rolling_time_avg(
+            ev9, ["user_id"], "event_id", "ts_s", "value", horizon_s=300
+        ),
+        "update",
+    ))
 
     # r12d DOCUMENT-stream shapes (separate corpus: x10 disjoint-content
     # docs replica, ~61k docs — work scales with tokens, not rows, so
     # rows/s here is docs/s over full fingerprinting + TWS):
     doc_shapes: list[tuple[str, DataFrame, str, int]] = []
-    if tws_available(spark):
-        import scale_smoke
-        from kafka_streams_app_spark.streaming import dedup_candidates as DC
-        from kafka_streams_app_spark.streaming import sample as SSample
+    import scale_smoke
+    from kafka_streams_app_spark.streaming import dedup_candidates as DC
+    from kafka_streams_app_spark.streaming import sample as SSample
 
-        docs_dir = scale_smoke.build_docs(spark, 10)
-        docs_path = f"{docs_dir}/documents.parquet"
-        n_docs = spark.read.parquet(docs_path).count()
+    docs_dir = scale_smoke.build_docs(spark, 10)
+    docs_path = f"{docs_dir}/documents.parquet"
+    n_docs = spark.read.parquet(docs_path).count()
 
-        def stream_docs() -> DataFrame:
-            schema = spark.read.parquet(docs_path).schema
-            return spark.readStream.schema(schema).parquet(docs_path)
+    def stream_docs() -> DataFrame:
+        schema = spark.read.parquet(docs_path).schema
+        return spark.readStream.schema(schema).parquet(docs_path)
 
-        doc_shapes.append((
-            # full pipeline: tokenize + winnow + bucketed TWS state
-            # (128 buckets; per-batch density picks the blob or the
-            # MapState store) + pair emission
-            "winnow_candidates_tws_auto",
-            DC.winnow_candidates(
-                stream_docs(), "text", "doc_id", n_buckets=128
-            ),
-            "update",
-            n_docs,
-        ))
-        doc_shapes.append((
-            # bottom-k membership: k-row state per stratum, O(k) merge
-            "sample_topk_tws",
-            SSample.sample_topk(
-                stream_docs(), "source", "doc_id", k=20, seed=3
-            ),
-            "update",
-            n_docs,
-        ))
-        doc_best: dict[str, float] = {}
-        for _ in range(3):
-            for name, out_df, mode, _n in doc_shapes:
-                wall = run_noop(out_df, mode)
-                doc_best[name] = min(doc_best.get(name, float("inf")), wall)
-        for name, _, _, n in doc_shapes:
-            wall = doc_best[name]
-            print(json.dumps({
-                "shape": name, "rows_in": n, "sec": round(wall, 2),
-                "rows_per_sec": int(n / wall),
-            }))
+    doc_shapes.append((
+        # full pipeline: tokenize + winnow + bucketed TWS state
+        # (128 buckets; per-batch density picks the blob or the
+        # MapState store) + pair emission
+        "winnow_candidates_tws_auto",
+        DC.winnow_candidates(
+            stream_docs(), "text", "doc_id", n_buckets=128
+        ),
+        "update",
+        n_docs,
+    ))
+    doc_shapes.append((
+        # bottom-k membership: k-row state per stratum, O(k) merge
+        "sample_topk_tws",
+        SSample.sample_topk(
+            stream_docs(), "source", "doc_id", k=20, seed=3
+        ),
+        "update",
+        n_docs,
+    ))
+    doc_best: dict[str, float] = {}
+    for _ in range(3):
+        for name, out_df, mode, _n in doc_shapes:
+            wall = run_noop(out_df, mode)
+            doc_best[name] = min(doc_best.get(name, float("inf")), wall)
+    for name, _, _, n in doc_shapes:
+        wall = doc_best[name]
+        print(json.dumps({
+            "shape": name, "rows_in": n, "sec": round(wall, 2),
+            "rows_per_sec": int(n / wall),
+        }))
 
-        # TRICKLE fixture (r14): the same winnow operator fed ~10 docs
-        # per micro-batch (60 batches via maxFilesPerTrigger=1 over
-        # 60 small files) — the steady-ingest pattern where per-entry
-        # MapState updates beat whole-bucket blob rewrites. Rates here
-        # are dominated by per-micro-batch framework cost; compare them
-        # WITHIN this fixture only.
-        trickle_dir = SCRATCH / "docs_trickle"
-        if not (trickle_dir / "_built").exists():
-            shutil.rmtree(trickle_dir, ignore_errors=True)
-            trickle_dir.mkdir(parents=True, exist_ok=True)
-            head = (
-                spark.read.parquet(docs_path)
-                .orderBy("doc_id").limit(600).collect()
+    # TRICKLE fixture (r14): the same winnow operator fed ~10 docs
+    # per micro-batch (60 batches via maxFilesPerTrigger=1 over
+    # 60 small files) — the steady-ingest pattern where per-entry
+    # MapState updates beat whole-bucket blob rewrites. Rates here
+    # are dominated by per-micro-batch framework cost; compare them
+    # WITHIN this fixture only.
+    trickle_dir = SCRATCH / "docs_trickle"
+    if not (trickle_dir / "_built").exists():
+        shutil.rmtree(trickle_dir, ignore_errors=True)
+        trickle_dir.mkdir(parents=True, exist_ok=True)
+        head = (
+            spark.read.parquet(docs_path)
+            .orderBy("doc_id").limit(600).collect()
+        )
+        cols = list(head[0].asDict().keys())
+        for j in range(0, 600, 10):
+            spark.createDataFrame(
+                [r.asDict() for r in head[j:j + 10]],
+                spark.read.parquet(docs_path).schema,
+            ).coalesce(1).select(cols).write.mode("append").parquet(
+                str(trickle_dir / f"f{j:04d}.pq")
             )
-            cols = list(head[0].asDict().keys())
-            for j in range(0, 600, 10):
-                spark.createDataFrame(
-                    [r.asDict() for r in head[j:j + 10]],
-                    spark.read.parquet(docs_path).schema,
-                ).coalesce(1).select(cols).write.mode("append").parquet(
-                    str(trickle_dir / f"f{j:04d}.pq")
-                )
-            (trickle_dir / "_built").touch()
+        (trickle_dir / "_built").touch()
 
-        def stream_docs_trickle() -> DataFrame:
-            schema = spark.read.parquet(docs_path).schema
-            return (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{trickle_dir}/*.pq")
-            )
+    def stream_docs_trickle() -> DataFrame:
+        schema = spark.read.parquet(docs_path).schema
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{trickle_dir}/*.pq")
+        )
 
-        trickle_best: dict[str, float] = {}
-        for _ in range(2):
-            name = "winnow_trickle_auto"
-            out_df = DC.winnow_candidates(
-                stream_docs_trickle(), "text", "doc_id", n_buckets=128,
-            )
-            wall = run_noop(out_df, "update")
-            trickle_best[name] = min(
-                trickle_best.get(name, float("inf")), wall
-            )
-        for name, wall in trickle_best.items():
-            print(json.dumps({
-                "shape": name, "rows_in": 600, "sec": round(wall, 2),
-                "rows_per_sec": int(600 / wall),
-            }))
+    trickle_best: dict[str, float] = {}
+    for _ in range(2):
+        name = "winnow_trickle_auto"
+        out_df = DC.winnow_candidates(
+            stream_docs_trickle(), "text", "doc_id", n_buckets=128,
+        )
+        wall = run_noop(out_df, "update")
+        trickle_best[name] = min(
+            trickle_best.get(name, float("inf")), wall
+        )
+    for name, wall in trickle_best.items():
+        print(json.dumps({
+            "shape": name, "rows_in": 600, "sec": round(wall, 2),
+            "rows_per_sec": int(600 / wall),
+        }))
 
     # best-of-3, interleaved — same methodology as bench.py: this host
     # shows intermittent multi-second contention spikes that dominate
@@ -383,7 +378,7 @@ def main() -> None:
             "shape": name, "rows_in": n_rows, "sec": round(wall, 2),
             "rows_per_sec": int(n_rows / wall),
         }))
-    if tws_available(spark) and not docs_only:
+    if not docs_only:
         # r6 revision: single-shot FK numbers proved +/-50% on this
         # host (16-32 s for the SAME config across a day) — contention
         # spikes do NOT amortize over the ~20 s pipeline. Report the
