@@ -4,11 +4,12 @@ pyspark 4.1's ``TransformWithStateInPandasSerializer.load_stream``
 walks EVERY input row through ``DataFrame.itertuples`` to find
 grouping-key boundaries, then re-materializes each group as
 ``pd.DataFrame(list_of_namedtuples)`` — a per-row Python loop that
-measures ~237k rows/s/core on the FK-join stage-2 batch shape
-(tools/tws_input_bench.py). SCALE.md has tracked this as the TWS
-framework floor since r7: the FK 2-stage pipeline plateaued at ~119k
-rows/s/box with stage 2 layout-independent, i.e. dominated by this
-loop, not repo code.
+measured ~237k rows/s/core on the FK-join stage-2 batch shape
+(SCALE.md "r12: the TWS input-path floor" records it and this path's
+74.6x; tests/test_tws_fastpath.py pins the two paths equal). SCALE.md
+has tracked this as the TWS framework floor since r7: the FK 2-stage
+pipeline plateaued at ~119k rows/s/box with stage 2
+layout-independent, i.e. dominated by this loop, not repo code.
 
 The grouping is vectorizable because the keyed shuffle delivers rows
 for one grouping key CONTIGUOUSLY within the Arrow stream (the shipped

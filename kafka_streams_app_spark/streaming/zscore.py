@@ -65,10 +65,10 @@ def with_micro_units(df: DataFrame, value_col: str) -> DataFrame:
     """Attach the exact integer micro-unit columns the processor sums:
     zu = value as DECIMAL(30,6) micro-units, zq = value² likewise (the
     square rounded at 6 decimals FIRST, matching the batch op's and the
-    oracle's CAST(value*value AS DECIMAL) convention). Named WITHOUT a
-    leading underscore: the TWS Arrow crossing renames _-prefixed
-    input columns positionally (_u arrives as _3), so underscore names
-    are unreachable inside the processor."""
+    oracle's CAST(value*value AS DECIMAL) convention). The processor
+    reads both by name; the TWS crossing keeps every column name,
+    _-prefixed ones included (streaming/_tws_fastpath.py), as
+    streaming/sample.py's processor relies on for its _h column."""
     v = F.col(value_col)
     return df.withColumns({
         "zu": (v.cast("decimal(30,6)") * _U).cast("long"),

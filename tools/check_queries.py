@@ -6,6 +6,7 @@ order-insensitive values (exact for ints/strings, exact for our
 determinism-engineered doubles; any mismatch prints the diff head).
 
 Usage: GATE_SF_DIR=/root/testdata/sf0.1 python tools/check_queries.py [name ...]
+       env -u PYTHONPATH python tools/check_queries.py --driver-session [name ...]
 
 The SF dir defaults to sf0.01 (the driver's scale) and is overridable via
 GATE_SF_DIR so the same gate can verify results at sf0.1 — the scale the
@@ -32,6 +33,13 @@ Compare modes (GATE_COMPARE env, default "stream" — the r9 verdict #3 fix):
 - "collect": the original r1-r10 behavior — full driver-side collect +
   sorted normalized rows + diff head. Still the default path for
   printing diffs; use for debugging single entries.
+
+--driver-session builds the session the way the verification driver
+does: a bare local[8] session with 8 shuffle partitions, created before
+__spark_entry__ is imported, with no _vendor on PYTHONPATH. The engine
+conf then reaches it only through the entries' configure_session call,
+and TWS workers get protobuf only from the import hook in
+streaming/__init__.py. The compare is the same as in an engine session.
 
 Every run appends one JSONL record per entry (name, verdict, error,
 wall seconds) to .scratch/gate_logs/gate_<utc-stamp>_<pid>.jsonl — the
@@ -137,10 +145,36 @@ def duck_signature(res, cols, chunk=65536):
     return cnt, s1, s2
 
 
+def driver_session():
+    """A session built the way the verification driver builds it, before
+    the registry is imported."""
+    assert "_vendor" not in os.environ.get("PYTHONPATH", ""), (
+        "run with a clean PYTHONPATH to simulate the driver"
+    )
+    from pyspark.sql import SparkSession
+
+    return (
+        SparkSession.builder.appName("driver-sim")
+        .master("local[8]")
+        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+
+
 def main() -> int:
-    only = set(sys.argv[1:])
+    args = sys.argv[1:]
+    driver = "--driver-session" in args
+    only = set(args) - {"--driver-session"}
+    # the driver builds its session before it imports the registry
+    spark = driver_session() if driver else None
     import __spark_entry__ as e
-    from kafka_streams_app_spark.engine import get_spark
+    from kafka_streams_app_spark.engine import RUNTIME_CONF, get_spark
+
+    def new_session():
+        return driver_session() if driver else get_spark(shuffle_partitions=8)
+
+    spark = spark or new_session()
 
     log_dir = ROOT / ".scratch" / "gate_logs"
     log_dir.mkdir(parents=True, exist_ok=True)
@@ -148,7 +182,7 @@ def main() -> int:
     sf_tag = Path(SF_DIR).name  # e.g. sf0.01 / sf0.1 — makes the artifact self-describing
     log_path = log_dir / f"gate_{sf_tag}_{stamp}_{os.getpid()}.jsonl"
     log_f = open(log_path, "a", buffering=1)  # line-buffered: flushed per entry
-    log_f.write(json.dumps({"sf_dir": SF_DIR}) + "\n")
+    log_f.write(json.dumps({"sf_dir": SF_DIR, "driver_session": driver}) + "\n")
 
     def record(name: str, verdict: str, err: str | None, wall: float) -> None:
         log_f.write(json.dumps({
@@ -157,7 +191,6 @@ def main() -> int:
         }) + "\n")
 
     print(f"gate log: {log_path}")
-    spark = get_spark(shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         # driver testdata tables are single parquet FILES; scale-smoke
@@ -186,6 +219,7 @@ def main() -> int:
                 if diffs else "sorted compare found no diff (hash anomaly)")
 
     n_pass = n_fail = n_weak = 0
+    conf_checked = False
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -215,9 +249,16 @@ def main() -> int:
                     spark.stop()
                 except Exception:  # noqa: BLE001
                     pass
-                spark = get_spark(shuffle_partitions=8)
+                spark = new_session()
             continue
         el = time.time() - t0
+        if not conf_checked:
+            # a driver-built session sees RUNTIME_CONF only through the
+            # entries' configure_session call: checkpoints must go through
+            # the FileSystem-based manager there too
+            key = "spark.sql.streaming.checkpointFileManagerClass"
+            assert spark.conf.get(key, None) == RUNTIME_CONF[key], spark.conf.get(key, None)
+            conf_checked = True
         if name not in oracles:
             print(f"weak {name}: rows={len(srows)} (no oracle) [{el:.1f}s]")
             record(name, "weak", None, el)
