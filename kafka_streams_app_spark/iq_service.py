@@ -15,10 +15,26 @@ Same URL surface:
 A "store" is any registered DataFrame — a batch snapshot or a live
 streaming aggregation mirrored by `streaming.sinks.StoreMirror` — so the
 service queries streaming state exactly like the reference queries its
-RocksDB stores. Filters go through operators/iq.py, i.e. they are
-Catalyst plans: predicate pushdown and partition pruning reach the store
-scan; only the (small, human-facing) result set is collected at the
-HTTP edge, never the store.
+RocksDB stores. Filters go through operators/iq.py, and `register()`
+picks their form once, from what the store is:
+
+- a `StoreMirror.view()` carries the immutable Arrow snapshot it was
+  built from (`iq.snapshot_of`); when its key (and window-start) column
+  is an integer or string column, Q1-Q5 filter that snapshot with
+  `pyarrow.compute` masks in the driver: no py4j call, no Catalyst plan
+  and no Spark job per request, like the reference's direct `get`/`fetch`
+  on a local store;
+- any other frame (a parquet or lake table, a frame derived from a view,
+  a view keyed by another type) is filtered by Catalyst, so predicate
+  pushdown and partition pruning reach the store scan; only the (small,
+  human-facing) result set is collected at the HTTP edge, never the
+  store.
+
+Arrow rows become `Row`s through PySpark's own conversion
+(`ArrowTableToRowsConversion`), which yields the Python values
+`collect()` yields, and both forms share the JSON formatting and the
+`MAX_ROWS` guard, so a snapshot answers with the same bytes as its
+Catalyst twin (pinned by tests/test_iq_service.py).
 
 Multi-instance routing (IQueriesService.java:84-87,104-109,
 MetadataService.java:30-68): a single Spark driver sees every partition,
@@ -34,10 +50,10 @@ Other deliberate deltas, documented in SURVEY §2.6:
 - stdlib ThreadingHTTPServer instead of Jetty: the service is a thin
   facade; concurrency and scale live in the engine, not the web layer.
   A live store mirrored by StoreMirror is an in-driver snapshot, so a
-  request runs no Spark job; that holds while the store's keys fit in
-  the driver. At 100 TB the registered store would be a compacted keyed
-  parquet/Delta table, and a point lookup a pruned single-partition
-  scan.
+  request runs no Spark job and makes no JVM call; that holds while the
+  store's keys fit in the driver. At 100 TB the registered store would
+  be a compacted keyed parquet/Delta table, and a point lookup a pruned
+  single-partition scan.
 """
 
 from __future__ import annotations
@@ -48,7 +64,10 @@ from collections.abc import Callable
 from dataclasses import dataclass
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from kafka_streams_app_spark.operators import iq
 from kafka_streams_app_spark.operators.pipeline import portable_bucket_py
@@ -63,6 +82,11 @@ class _Store:
     key_parser: Callable[[str], object]
     start_col: str | None = None  # set for windowed stores (epoch-second col)
     num_partitions: int = 32
+    snapshot: pa.Table | None = None  # set when answered from an Arrow snapshot
+
+    @property
+    def data(self) -> DataFrame | pa.Table:
+        return self.df if self.snapshot is None else self.snapshot
 
 
 class IQService:
@@ -97,8 +121,13 @@ class IQService:
     ) -> None:
         """Register a store, like Materialized.as(name) names one in the
         reference (WordCount.java:56). key_parser plays the serde's
-        role: the URL path segment is text, the store key is typed."""
-        self._stores[name] = _Store(df, key_col, key_parser, start_col, num_partitions)
+        role: the URL path segment is text, the store key is typed.
+        A `StoreMirror.view()` keyed by an integer or string column is
+        answered from its Arrow snapshot, any other frame through
+        Catalyst (module docstring)."""
+        snapshot = iq.snapshot_of(df, [key_col] + ([start_col] if start_col else []))
+        self._stores[name] = _Store(df, key_col, key_parser, start_col, num_partitions,
+                                    snapshot)
 
     # -- query dispatch (exercised directly by tests, no HTTP needed) -----
 
@@ -156,27 +185,28 @@ class IQService:
         except Exception as e:  # peer down: surface, don't guess
             return 502, {"error": f"owner {base} unreachable: {e}"}
 
-    def _q1(self, name: str, key: str) -> DataFrame:
+    def _q1(self, name: str, key: str) -> DataFrame | pa.Table:
         s = self._store(name)
-        return iq.point_lookup(s.df, s.key_col, s.key_parser(key))
+        return iq.point_lookup(s.data, s.key_col, s.key_parser(key))
 
-    def _q2(self, name: str) -> DataFrame:
-        return iq.all_entries(self._store(name).df)
+    def _q2(self, name: str) -> DataFrame | pa.Table:
+        return iq.all_entries(self._store(name).data)
 
-    def _q3(self, name: str, lo: str, hi: str) -> DataFrame:
+    def _q3(self, name: str, lo: str, hi: str) -> DataFrame | pa.Table:
         s = self._store(name)
-        return iq.range_scan(s.df, s.key_col, s.key_parser(lo), s.key_parser(hi))
+        return iq.range_scan(s.data, s.key_col, s.key_parser(lo), s.key_parser(hi))
 
-    def _q45(self, name: str, key: str, t_from: str, t_to: str | None) -> DataFrame:
+    def _q45(self, name: str, key: str, t_from: str,
+             t_to: str | None) -> DataFrame | pa.Table:
         s = self._store(name)
         if s.start_col is None:
             raise ValueError(f"store {name!r} is not windowed")
         if t_to is None:  # /windowed/{store}/all/{from} missing {to}
             raise ValueError("windowed fetch needs /{from}/{to}")
         if key == "all":
-            return iq.window_fetch_all(s.df, s.start_col, int(t_from), int(t_to))
+            return iq.window_fetch_all(s.data, s.start_col, int(t_from), int(t_to))
         return iq.window_fetch(
-            s.df, s.key_col, s.key_parser(key), s.start_col, int(t_from), int(t_to)
+            s.data, s.key_col, s.key_parser(key), s.start_col, int(t_from), int(t_to)
         )
 
     def _metadata(self, name: str, key: str) -> dict:
@@ -204,8 +234,14 @@ class IQService:
         return out
 
     @staticmethod
-    def _rows(df: DataFrame) -> tuple[int, object]:
-        rows = df.limit(MAX_ROWS + 1).collect()
+    def _rows(result: DataFrame | pa.Table) -> tuple[int, object]:
+        if isinstance(result, pa.Table):
+            head = result.slice(0, MAX_ROWS + 1)
+            # a zoned Arrow timestamp is TIMESTAMP, a zoneless one TIMESTAMP_NTZ
+            rows = ArrowTableToRowsConversion.convert(
+                head, from_arrow_schema(head.schema, prefer_timestamp_ntz=True))
+        else:
+            rows = result.limit(MAX_ROWS + 1).collect()
         if len(rows) > MAX_ROWS:
             return 413, {"error": f"result exceeds {MAX_ROWS} rows; narrow the query"}
         return 200, [

@@ -3,10 +3,18 @@
 The reference exposes RocksDB state stores over REST
 (/root/reference/src/main/scala/com/ayoubom/kafka/utils/IQService.scala:11-16,
  /root/reference/src/main/java/com/ayoubom/kafka/utils/IQueriesService.java:78-176).
-In this engine a "store" is any materialized DataFrame (a batch snapshot,
-or a streaming aggregation mirrored by foreachBatch — see
-streaming/harness.py); interactive queries are plain filters over it, so
-Catalyst prunes partitions/pushes predicates into the store scan.
+In this engine a "store" is any materialized DataFrame: a batch snapshot,
+a parquet or lake table, or a live streaming aggregation mirrored by
+streaming/sinks.StoreMirror. Q1-Q5 are filters with two forms each:
+
+- over a DataFrame they are Catalyst filters, so partition pruning and
+  predicate pushdown reach the store scan;
+- over a `pa.Table` they are `pyarrow.compute` masks with the same
+  predicate: `key == k`, `lo <= key <= hi`, `t_from <= start <= t_to`,
+  and the AND of the first and last. They answer a store that is an
+  in-driver snapshot (a `StoreMirror.view()`, tagged by `with_snapshot`)
+  the way the reference answers from its local store: no py4j call, no
+  plan and no Spark job per query.
 
 The reference's metadata/routing layer (MetadataService.java:30-68) is
 deliberately absent: Spark's driver sees all state (SURVEY.md §2.6 Q6).
@@ -14,38 +22,97 @@ deliberately absent: Spark's driver sees all state (SURVEY.md §2.6 Q6).
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+_SNAPSHOT = "_iq_snapshot"
 
-def point_lookup(store: DataFrame, key_col: str, key) -> DataFrame:
+
+def with_snapshot(view: DataFrame, table: pa.Table) -> DataFrame:
+    """Tag `view`, a local relation built from the immutable `table`, so
+    that `snapshot_of` finds `table` on it. Only this object carries the
+    tag: a frame derived from it (`view.filter(...)`) is a new object
+    without one, so it is never answered from the snapshot."""
+    setattr(view, _SNAPSHOT, table)
+    return view
+
+
+def snapshot_of(store: DataFrame, cols: list[str]) -> pa.Table | None:
+    """The snapshot `store` was built from, if it carries one and every
+    column in `cols` (the key and window-start columns a query compares)
+    is an integer or string column, whose Arrow comparisons order and
+    match as Spark's do; else None."""
+    table = vars(store).get(_SNAPSHOT)
+    if table is None or not all(_comparable(table.schema.field(c).type) for c in cols):
+        return None
+    return table
+
+
+def _comparable(t: pa.DataType) -> bool:
+    return pa.types.is_integer(t) or pa.types.is_string(t) or pa.types.is_large_string(t)
+
+
+def _lit(column: pa.ChunkedArray, value) -> pa.Scalar:
+    """`value` as a scalar to compare with `column`. A value of the other
+    kind (a str against an integer column, or an int against a string
+    one) is cast to the column's type; a str that is not a number raises
+    `pa.ArrowInvalid`, a ValueError."""
+    lit = pa.scalar(value)
+    if pa.types.is_integer(lit.type) == pa.types.is_integer(column.type):
+        return lit
+    return lit.cast(column.type)
+
+
+def _eq(table: pa.Table, col: str, value) -> pa.ChunkedArray:
+    return pc.equal(table[col], _lit(table[col], value))
+
+
+def _between(table: pa.Table, col: str, lo, hi) -> pa.ChunkedArray:
+    c = table[col]
+    return pc.and_(pc.greater_equal(c, _lit(c, lo)), pc.less_equal(c, _lit(c, hi)))
+
+
+def point_lookup(store: DataFrame | pa.Table, key_col: str, key) -> DataFrame | pa.Table:
     """Q1 — GET /state/keyvalue/{store}/{key} (IQueriesService.java:78-102)."""
+    if isinstance(store, pa.Table):
+        return store.filter(_eq(store, key_col, key))
     return store.filter(F.col(key_col) == F.lit(key))
 
 
-def all_entries(store: DataFrame) -> DataFrame:
+def all_entries(store: DataFrame | pa.Table) -> DataFrame | pa.Table:
     """Q2 — GET /state/keyvalues/{store}/all (IQueriesService.java:117-122)."""
     return store
 
 
-def range_scan(store: DataFrame, key_col: str, lo, hi) -> DataFrame:
+def range_scan(store: DataFrame | pa.Table, key_col: str, lo, hi) -> DataFrame | pa.Table:
     """Q3 — key-range scan, bounds inclusive (IQueriesService.java:132-139)."""
+    if isinstance(store, pa.Table):
+        return store.filter(_between(store, key_col, lo, hi))
     return store.filter(F.col(key_col).between(F.lit(lo), F.lit(hi)))
 
 
 def window_fetch(
-    store: DataFrame, key_col: str, key, start_col: str, t_from, t_to
-) -> DataFrame:
+    store: DataFrame | pa.Table, key_col: str, key, start_col: str, t_from, t_to
+) -> DataFrame | pa.Table:
     """Q4 — all windows of a key in a start-time range
     (IQueriesService.java:151-176)."""
+    if isinstance(store, pa.Table):
+        return store.filter(pc.and_(_eq(store, key_col, key),
+                                    _between(store, start_col, t_from, t_to)))
     return store.filter(
         (F.col(key_col) == F.lit(key)) & F.col(start_col).between(F.lit(t_from), F.lit(t_to))
     )
 
 
-def window_fetch_all(store: DataFrame, start_col: str, t_from, t_to) -> DataFrame:
+def window_fetch_all(
+    store: DataFrame | pa.Table, start_col: str, t_from, t_to
+) -> DataFrame | pa.Table:
     """Q5 — fetchAll(t1, t2): every key, windows in range
     (TopologiesTest.scala:60-70)."""
+    if isinstance(store, pa.Table):
+        return store.filter(_between(store, start_col, t_from, t_to))
     return store.filter(F.col(start_col).between(F.lit(t_from), F.lit(t_to)))
 
 

@@ -18,8 +18,10 @@ in-driver snapshot, latest row per key, replaced whole after each
 micro-batch; the changelog is a parquet directory the driver appends
 each micro-batch's update rows to, read back (latest-per-key,
 operators/ktable.latest_per_key) only to restore the snapshot. The view
-is a local relation over the snapshot, so operators/iq.py queries
-(Q1-Q5) run against LIVE state through Catalyst without a Spark job.
+is a local relation over the snapshot that also carries the snapshot,
+so operators/iq.py queries (Q1-Q5) answer LIVE state without a Spark
+job: `iq_service.IQService` filters the snapshot with Arrow masks, and
+Catalyst filters on the frame fold into a local table scan.
 """
 
 from __future__ import annotations
@@ -38,6 +40,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import IntegerType, StructField, StructType
 
+from kafka_streams_app_spark.operators import iq
 from kafka_streams_app_spark.operators.ktable import latest_per_key
 from kafka_streams_app_spark.streaming.harness import has_parquet
 
@@ -98,8 +101,10 @@ class StoreMirror:
       into a copy, later batch wins, and the copy replaces the snapshot in
       one assignment, so a concurrent `view()` sees the store after batch
       n or after batch n+1, never a mix. `view()` wraps the snapshot as a
-      local relation: interactive queries (operators/iq.py Q1-Q5) still go
-      through Catalyst, and their filters fold into a local table scan
+      local relation and tags the frame with the snapshot it wraps
+      (`operators.iq.with_snapshot`). `IQService` answers Q1-Q5 on such a
+      frame with Arrow masks over the snapshot, with no JVM call; Catalyst
+      filters on the frame (operators/iq.py) fold into a local table scan
       that runs no Spark job. Driver memory is one row per key ever
       emitted: like the changelog, the snapshot keeps a window's keys
       after Spark evicts that window's state;
@@ -159,9 +164,11 @@ class StoreMirror:
     def view(self) -> DataFrame:
         """Current store contents: the latest value per key, as of the
         last mirrored micro-batch. Columns are `key_cols` first, then the
-        aggregation's other columns."""
+        aggregation's other columns. The frame carries the snapshot it
+        was built from (`operators.iq.snapshot_of`)."""
         self._restore(None)
-        return self.spark.createDataFrame(self._snapshot, self._schema)
+        snapshot = self._snapshot  # once: a micro-batch may replace it meanwhile
+        return iq.with_snapshot(self.spark.createDataFrame(snapshot, self._schema), snapshot)
 
     def register(self) -> None:
         self.view().createOrReplaceTempView(self.store_name)

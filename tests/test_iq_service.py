@@ -1,19 +1,27 @@
 """The REST IQ facade (iq_service.py) vs the reference's endpoint
 surface (IQueriesService.java:78-176): every route answered over real
 HTTP against registered stores, results cross-checked against direct
-DataFrame evaluation, plus the error paths."""
+DataFrame evaluation, plus the error paths; and every route answered
+the same from a StoreMirror's Arrow snapshot as through Catalyst."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
+import os
+import time
 import urllib.error
 import urllib.request
+from decimal import Decimal
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from kafka_streams_app_spark.iq_service import IQService
+from kafka_streams_app_spark.iq_service import MAX_ROWS, IQService
+from kafka_streams_app_spark.operators import iq
 from kafka_streams_app_spark.sources.catalog import load_table
+from kafka_streams_app_spark.streaming.sinks import StoreMirror, _write_part
 
 
 @pytest.fixture(scope="module")
@@ -39,12 +47,17 @@ def service(spark, sf_dir):
     svc.stop()
 
 
-def _get(port: int, path: str):
+def _get_raw(port: int, path: str) -> tuple[int, bytes]:
     try:
         with urllib.request.urlopen(f"http://127.0.0.1:{port}{path}") as r:
-            return r.status, json.loads(r.read())
+            return r.status, r.read()
     except urllib.error.HTTPError as e:
-        return e.code, json.loads(e.read())
+        return e.code, e.read()
+
+
+def _get(port: int, path: str):
+    status, body = _get_raw(port, path)
+    return status, json.loads(body)
 
 
 def test_q1_point_lookup_http(service):
@@ -225,3 +238,138 @@ def test_unhosted_partition_503(spark, sf_dir):
         assert status == 503 and "no instance hosts" in body["error"]
     finally:
         svc.stop()
+
+
+# --- a mirrored snapshot answered from Arrow vs through Catalyst -----------
+
+
+def _typed_snapshot() -> pa.Table:
+    """30 keys (10, 20, ..., 300) x 3 windows of every value type a store
+    can hold, with nulls, NaN, -0.0 and a timestamp in New York's
+    repeated hour (2024-11-03 01:30, 05:30 and 06:30 UTC)."""
+    n = 90
+    utc = dt.datetime(2024, 11, 3, 5, 30, tzinfo=dt.timezone.utc)
+
+    def nulled(values, every=7):
+        return [None if i % every == 3 else v for i, v in enumerate(values)]
+
+    return pa.table({
+        "k": pa.array([10 * (i // 3 + 1) for i in range(n)], pa.int64()),
+        "window_start_s": pa.array([10 * (i % 3) for i in range(n)], pa.int64()),
+        "i": pa.array(nulled([i - 45 for i in range(n)]), pa.int32()),
+        "d": pa.array(nulled([[float("nan"), -0.0, 1.5, 1e300][i % 4] for i in range(n)]),
+                      pa.float64()),
+        "s": pa.array(nulled([f"name-{i // 3:02d}" for i in range(n)], every=11)),
+        "b": pa.array(nulled([i % 2 == 0 for i in range(n)]), pa.bool_()),
+        "ts": pa.array(nulled([utc + dt.timedelta(minutes=30 * (i % 5)) for i in range(n)]),
+                       pa.timestamp("us", tz="UTC")),
+        "ts_ntz": pa.array(nulled([dt.datetime(2024, 3, 10, 2, 30, 0, i) for i in range(n)]),
+                           pa.timestamp("us")),
+        "day": pa.array(nulled([dt.date(2024, 1, 1) + dt.timedelta(days=i) for i in range(n)]),
+                        pa.date32()),
+        "dec": pa.array(nulled([Decimal(i * 125) / 1000 for i in range(n)]),
+                        pa.decimal128(12, 3)),
+        "arr": pa.array(nulled([[i, None] if i % 2 else [i] for i in range(n)]),
+                        pa.list_(pa.int64())),
+        "nothing": pa.array([None] * n, pa.string()),
+    })
+
+
+@pytest.fixture(scope="module")
+def twin_stores(spark, tmp_path_factory):
+    """The same snapshot registered twice: as a `StoreMirror` view
+    (`m-*`, answered from Arrow) and as `spark.createDataFrame(snapshot,
+    schema)` (`c-*`, answered through Catalyst). `*-big` holds
+    MAX_ROWS + 1 rows."""
+    svc = IQService()
+    for name, table in (("typed", _typed_snapshot()),
+                        ("big", pa.table({"k": pa.array(range(MAX_ROWS + 1), pa.int64())}))):
+        mirror = StoreMirror(spark, name, ["k"] if name == "big" else ["k", "window_start_s"],
+                             path=str(tmp_path_factory.mktemp(name) / "changelog"))
+        _write_part(mirror.path, table, 0)
+        view = mirror.view()
+        if name == "typed":
+            assert view.schema.simpleString() == (
+                "struct<k:bigint,window_start_s:bigint,i:int,d:double,s:string,b:boolean,"
+                "ts:timestamp,ts_ntz:timestamp_ntz,day:date,dec:decimal(12,3),"
+                "arr:array<bigint>,nothing:string>")
+        snapshot = iq.snapshot_of(view, ["k"])
+        assert snapshot is not None
+        plain = spark.createDataFrame(snapshot, view.schema)
+        assert iq.snapshot_of(plain, ["k"]) is None
+        for tag, df in (("m", view), ("c", plain)):
+            svc.register(f"{tag}-{name}", df, "k", key_parser=int)
+            if name == "typed":
+                svc.register(f"{tag}-win", df, "k", key_parser=int,
+                             start_col="window_start_s")
+                svc.register(f"{tag}-names", df, "s")
+    port = svc.start()
+    yield svc, port
+    svc.stop()
+
+
+TWIN_PATHS = [
+    # Q1 hit, miss, a key past every row
+    "/state/keyvalue/{}-typed/20", "/state/keyvalue/{}-typed/25",
+    "/state/keyvalue/{}-typed/99999999999",
+    "/state/keyvalue/{}-names/name-04", "/state/keyvalue/{}-names/nobody",
+    # Q2
+    "/state/keyvalues/{}-typed/all",
+    # Q3 hit, empty range, reversed bounds, string keys
+    "/state/keyvalues/{}-typed/range/20/70", "/state/keyvalues/{}-typed/range/21/29",
+    "/state/keyvalues/{}-typed/range/70/20", "/state/keyvalues/{}-names/range/name-02/name-05",
+    # Q4 hit, missing key, empty time range
+    "/state/windowed/{}-win/30/0/10", "/state/windowed/{}-win/35/0/10",
+    "/state/windowed/{}-win/30/1000/2000",
+    # Q5 hit, empty time range
+    "/state/windowed/{}-win/all/10/20", "/state/windowed/{}-win/all/1000/2000",
+    # 400: a key that is not an int, windowed on a kv store, no {to}
+    "/state/keyvalue/{}-typed/abc", "/state/windowed/{}-typed/20/0/10",
+    "/state/windowed/{}-win/all/0",
+    # MAX_ROWS rows, then MAX_ROWS + 1 rows (413)
+    f"/state/keyvalues/{{}}-big/range/0/{MAX_ROWS - 1}", "/state/keyvalues/{}-big/all",
+]
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_mirror_snapshot_answers_as_catalyst(twin_stores, spark, monkeypatch, tz):
+    """Every route answers a StoreMirror view from its Arrow snapshot
+    with the same status and the same JSON bytes, in order, as Catalyst
+    answers a frame of the same snapshot; doing so calls no DataFrame
+    method and starts no Spark job."""
+    from tests.test_sinks_iq import _jobs_started
+
+    svc, port = twin_stores
+    host_tz = os.environ.get("TZ")
+    os.environ["TZ"] = tz  # both paths render a timestamp in local time
+    time.tzset()
+    try:
+        want = [_get_raw(port, p.format("c")) for p in TWIN_PATHS]
+        frame = type(spark.range(1))
+
+        def no_spark(*args, **kwargs):
+            raise AssertionError("a DataFrame method ran for a mirrored store")
+
+        with monkeypatch.context() as m:
+            for method in ("filter", "limit", "collect", "toArrow"):
+                m.setattr(frame, method, no_spark)
+            got = [_get_raw(port, p.format("m")) for p in TWIN_PATHS]
+            jobs = _jobs_started(spark, f"iq-arrow-{tz}",
+                                 lambda: [svc.query(p.format("m")) for p in TWIN_PATHS])
+    finally:
+        if host_tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = host_tz
+        time.tzset()
+    for path, (status, body), g in zip(TWIN_PATHS, want, got):
+        assert g == (status, body.replace(b"'c-", b"'m-")), path  # errors name the store
+    assert jobs == 0
+    status = dict(zip(TWIN_PATHS, (s for s, _ in got)))
+    assert [p for p in TWIN_PATHS if status[p] == 400] == TWIN_PATHS[-5:-2]
+    assert status["/state/keyvalues/{}-big/all"] == 413
+    rows = json.loads(got[TWIN_PATHS.index(f"/state/keyvalues/{{}}-big/range/0/{MAX_ROWS - 1}")][1])
+    assert len(rows) == MAX_ROWS
+    everything = got[TWIN_PATHS.index("/state/keyvalues/{}-typed/all")][1]
+    first = "2024-11-03 05:30:00" if tz == "UTC" else "2024-11-03 01:30:00"
+    assert b"NaN" in everything and b"-0.0" in everything and first.encode() in everything

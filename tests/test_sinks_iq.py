@@ -8,18 +8,23 @@ against it between micro-batches.
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 import tempfile
 import threading
+import urllib.request
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
+from kafka_streams_app_spark.iq_service import IQService
 from kafka_streams_app_spark.operators import iq
 from kafka_streams_app_spark.operators.ktable import latest_per_key
+from kafka_streams_app_spark.streaming import sinks
 from kafka_streams_app_spark.streaming import windows as W
 from kafka_streams_app_spark.streaming.harness import MicroBatchReplay
 from kafka_streams_app_spark.streaming.sinks import StoreMirror, _write_part, to_topic
@@ -122,15 +127,24 @@ BATCHES = [
 ]
 
 
-def test_store_mirror_snapshot_serves_without_jobs(spark):
+def _http_rows(port: int, path: str) -> set[tuple]:
+    with urllib.request.urlopen(f"http://127.0.0.1:{port}{path}") as r:
+        return {tuple(row.values()) for row in json.loads(r.read())}
+
+
+def test_store_mirror_snapshot_serves_without_jobs(spark, monkeypatch):
     """After every micro-batch: Q1-Q5 over the view start no Spark job,
     the view equals latest-per-key over the parquet changelog, an empty
     batch appends no file, and every earlier view still answers with the
-    values it had when it was taken. Readers taking views concurrently
+    values it had when it was taken, as a frame and, registered in an
+    IQService, over HTTP (Q1, Q4). Readers taking views concurrently
     (more threads than cores, short switch interval) only ever see the
-    store as it was after some whole micro-batch."""
+    store as it was after some whole micro-batch. A frame derived from a
+    view carries no snapshot and is answered through Catalyst."""
     mirror, counts, ckpt, feed = _windowed_mirror(spark, "snapshot_test")
     q = mirror.attach(counts, checkpoint=ckpt)
+    svc = IQService()
+    port = svc.start()
     taken: list[tuple] = []  # (view, its rows when taken)
     stop = threading.Event()
     seen: list[frozenset] = []
@@ -166,15 +180,21 @@ def test_store_mirror_snapshot_serves_without_jobs(spark):
             assert now == _changelog_latest(spark, mirror)
             if all(word == "late" for word, _ in batch):
                 assert _part_files(mirror) == files_before
-            for old, rows in taken:
-                assert _rows(old) == rows
+            svc.register(f"v{n}", store, "word", start_col="window_start_s")
             taken.append((store, now))
+            for m, (old, rows) in enumerate(taken):
+                assert _rows(old) == rows
+                hello = {r for r in rows if r[0] == "hello"}
+                assert _http_rows(port, f"/state/keyvalue/v{m}/hello") == hello
+                assert _http_rows(port, f"/state/windowed/v{m}/hello/0/5") == {
+                    r for r in hello if r[1] <= 5}
     finally:
         stop.set()
         for t in readers:
             t.join(timeout=60)
         sys.setswitchinterval(switch)
         q.stop()
+        svc.stop()
     assert not any(t.is_alive() for t in readers)
     assert not errors
     assert seen and set(seen) <= {frozenset()} | {frozenset(rows) for _, rows in taken}
@@ -185,6 +205,21 @@ def test_store_mirror_snapshot_serves_without_jobs(spark):
     assert {(w, s): c for w, s, c in taken[0][1]} == {
         ("hello", 0): 1, ("hello", 10): 1, ("world", 0): 1,
     }
+    derived = taken[-1][0].filter(F.col("cnt") > 1)
+    assert iq.snapshot_of(derived, ["word", "window_start_s"]) is None
+    collected = []
+    collect = type(derived).collect
+    monkeypatch.setattr(type(derived), "collect",
+                        lambda df: collected.append(df) or collect(df))
+    svc = IQService()
+    svc.register("derived", derived, "word", start_col="window_start_s")
+    port = svc.start()
+    try:
+        assert _http_rows(port, "/state/keyvalue/derived/hello") == {("hello", 0, 2),
+                                                                      ("hello", 10, 2)}
+    finally:
+        svc.stop()
+    assert len(collected) == 1
 
 
 @pytest.mark.parametrize("file_order", ["as_written", "aggregation"])
@@ -223,13 +258,9 @@ def test_store_mirror_restart_restores_snapshot(spark, file_order):
         q.stop()
 
 
-def test_store_mirror_replayed_batch_replaces_its_part(spark):
-    """The crash window between a mirrored micro-batch and its commit:
-    with the last batch's commit deleted, Spark runs that batch again
-    on restart. The replay replaces the batch's changelog file instead
-    of adding one, and both the live mirror and a mirror restored from
-    `path` equal the view of an uninterrupted run."""
-    keys = ["word", "window_start_s"]
+@pytest.fixture(scope="module")
+def uninterrupted(spark) -> set[tuple]:
+    """The view after every batch of BATCHES, mirrored with no crash."""
     ref, counts, ckpt, feed = _windowed_mirror(spark, "crash_ref")
     q = ref.attach(counts, checkpoint=ckpt)
     try:
@@ -237,8 +268,16 @@ def test_store_mirror_replayed_batch_replaces_its_part(spark):
             feed(q, batch)
     finally:
         q.stop()
-    uninterrupted = _rows(ref.view())
+    return _rows(ref.view())
 
+
+def test_store_mirror_replayed_batch_replaces_its_part(spark, uninterrupted):
+    """The crash window between a mirrored micro-batch and its commit:
+    with the last batch's commit deleted, Spark runs that batch again
+    on restart. The replay replaces the batch's changelog file instead
+    of adding one, and both the live mirror and a mirror restored from
+    `path` equal the view of an uninterrupted run."""
+    keys = ["word", "window_start_s"]
     mirror, counts, ckpt, feed = _windowed_mirror(spark, "crash_test")
     q = mirror.attach(counts, checkpoint=ckpt)
     try:
@@ -265,6 +304,50 @@ def test_store_mirror_replayed_batch_replaces_its_part(spark):
     assert _rows(restarted.view()) == uninterrupted
     assert _changelog_latest(spark, restarted) == uninterrupted
     restored = StoreMirror(spark, "crash_test", keys, path=mirror.path)
+    assert _rows(restored.view()) == uninterrupted
+
+
+def test_store_mirror_crash_before_rename(spark, monkeypatch, uninterrupted):
+    """A crash inside the mirror's write, after a micro-batch's hidden
+    changelog file is written and before its rename: the micro-batch
+    fails, and a restart from the same checkpoint runs it again. The
+    restore does not read the hidden file, the replay leaves one visible
+    part per non-empty batch, and the view and the restored changelog
+    equal those of an uninterrupted run."""
+    keys = ["word", "window_start_s"]
+    mirror, counts, ckpt, feed = _windowed_mirror(spark, "rename_crash")
+    hidden = os.path.join(mirror.path, ".part-000001.parquet")
+    replace = os.replace
+
+    def crash_once(src, dst):
+        if src == hidden:
+            raise OSError("crashed before the rename")
+        replace(src, dst)
+
+    q = mirror.attach(counts, checkpoint=ckpt)
+    try:
+        feed(q, BATCHES[0])
+        with monkeypatch.context() as m:
+            m.setattr(sinks.os, "replace", crash_once)
+            with pytest.raises(StreamingQueryException):
+                feed(q, BATCHES[1])
+    finally:
+        q.stop()
+    assert sorted(os.listdir(mirror.path)) == [".part-000001.parquet", "part-000000.parquet"]
+    restarted = StoreMirror(spark, "rename_crash", keys, path=mirror.path)
+    assert _rows(restarted.view()) == {("hello", 0, 1), ("world", 0, 1), ("hello", 10, 1)}
+    q = restarted.attach(counts, checkpoint=ckpt)
+    try:
+        q.processAllAvailable()
+        assert q.recentProgress[0]["batchId"] == 1
+        for batch in BATCHES[2:]:
+            feed(q, batch)
+    finally:
+        q.stop()
+    assert sorted(os.listdir(mirror.path)) == [f"part-{b:06d}.parquet" for b in (0, 1, 3, 4)]
+    assert _rows(restarted.view()) == uninterrupted
+    assert _changelog_latest(spark, restarted) == uninterrupted
+    restored = StoreMirror(spark, "rename_crash", keys, path=mirror.path)
     assert _rows(restored.view()) == uninterrupted
 
 
