@@ -1036,8 +1036,9 @@ def _q_w5_emit_on_close(spark: SparkSession, sf: str) -> DataFrame:
     return agg.closed_windows_only(wc, ev, "ts", 10)
 
 
-def _ev_sub(spark: SparkSession, sf: str, etype: str, prefix: str) -> DataFrame:
-    ev = load_table(spark, sf, "events")
+def _ev_sub(ev: DataFrame, etype: str, prefix: str) -> DataFrame:
+    """The `etype` events of `ev`, columns prefixed for one side of an
+    interval join."""
     return ev.filter(F.col("event_type") == etype).select(
         F.col("event_id").alias(f"{prefix}_event_id"),
         F.col("user_id").alias(f"{prefix}_user_id"),
@@ -1046,8 +1047,8 @@ def _ev_sub(spark: SparkSession, sf: str, etype: str, prefix: str) -> DataFrame:
 
 
 def _q_j1_interval_join_inner(spark: SparkSession, sf: str) -> DataFrame:
-    l = _ev_sub(spark, sf, "purchase", "l")
-    r = _ev_sub(spark, sf, "click", "r")
+    l = _ev_sub(load_table(spark, sf, "events"), "purchase", "l")
+    r = _ev_sub(load_table(spark, sf, "events"), "click", "r")
     j = joins.interval_join(
         l, r, [("l_user_id", "r_user_id")], "l_ts", "r_ts", 21600, 21600
     )
@@ -1055,8 +1056,8 @@ def _q_j1_interval_join_inner(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _q_j2_interval_join_left(spark: SparkSession, sf: str) -> DataFrame:
-    l = _ev_sub(spark, sf, "purchase", "l")
-    r = _ev_sub(spark, sf, "click", "r")
+    l = _ev_sub(load_table(spark, sf, "events"), "purchase", "l")
+    r = _ev_sub(load_table(spark, sf, "events"), "click", "r")
     j = joins.interval_join(
         l, r, [("l_user_id", "r_user_id")], "l_ts", "r_ts", 21600, 21600, how="left"
     )
@@ -1072,8 +1073,8 @@ def _q_j_outer_windowed(spark: SparkSession, sf: str) -> DataFrame:
     tests stop at leftJoin, TopologiesTest.scala:500-506), so this is a
     parity extra of the DSL surface, same plan as j1/j2 with
     how='full'."""
-    l = _ev_sub(spark, sf, "purchase", "l")
-    r = _ev_sub(spark, sf, "click", "r")
+    l = _ev_sub(load_table(spark, sf, "events"), "purchase", "l")
+    r = _ev_sub(load_table(spark, sf, "events"), "click", "r")
     j = joins.interval_join(
         l, r, [("l_user_id", "r_user_id")], "l_ts", "r_ts", 21600, 21600,
         how="full",
@@ -1090,19 +1091,10 @@ def _q_s_interval_join_outer(spark: SparkSession, sf: str) -> DataFrame:
     to both unmatched sides (the s_interval_join_left cutoff,
     symmetrized)."""
     ev = load_stream(spark, sf, "events")
-    l = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("l_event_id"),
-        F.col("user_id").alias("l_user_id"),
-        F.col("ts").alias("l_ts"),
-    )
-    r = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("r_event_id"),
-        F.col("user_id").alias("r_user_id"),
-        F.col("ts").alias("r_ts"),
-    )
-    j = SW.interval_join_stream(
+    l, r = _ev_sub(ev, "purchase", "l"), _ev_sub(ev, "click", "r")
+    j = joins.interval_join(
         l, r, [("l_user_id", "r_user_id")], "l_ts", "r_ts", 21600, 21600,
-        watermark_s=0, how="fullOuter",
+        how="fullOuter",
     ).select("l_event_id", "r_event_id")
     return run_available_now(spark, j, "append")
 
@@ -2500,7 +2492,7 @@ def _q_s_windowed_count_closed(spark: SparkSession, sf: str) -> DataFrame:
     Append emission == closed windows per the final watermark, so the
     oracle is the same closed-window SQL as the batch analogue."""
     ev = load_stream(spark, sf, "events")
-    wc = SW.windowed_count_stream(ev, "ts", ["event_type"], 10, grace_s=0)
+    wc = agg.windowed_count(ev, "ts", ["event_type"], 10)
     return run_available_now(spark, wc, "append")
 
 
@@ -2520,7 +2512,7 @@ def _q_s_windowed_distinct_closed(spark: SparkSession, sf: str) -> DataFrame:
 def _q_s_count_complete(spark: SparkSession, sf: str) -> DataFrame:
     """A1 streaming continuous count, complete mode == final table."""
     ev = load_stream(spark, sf, "events")
-    counts = SW.count_per_key_stream(ev, ["event_type"])
+    counts = agg.count_per_key(ev, ["event_type"])
     return run_available_now(spark, counts, "complete")
 
 
@@ -2539,25 +2531,24 @@ def _q_s_hll_windowed_closed(spark: SparkSession, sf: str) -> DataFrame:
 
 def _q_s_cms_cells(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming Count-Min sketch maintenance through the real runtime
-    (streaming/windows.py:cms_cell_stream): running per-cell counts in
+    (operators/sketches.cms_sketch on a stream): running per-cell counts in
     complete mode — state is exactly d*w = 1024 rows at any item
     cardinality; final snapshot == the batch sketch cell for cell."""
     ev = load_stream(spark, sf, "events")
-    cells = SW.cms_cell_stream(ev, "user_id", d=4, w=256)
+    cells = sketches.cms_sketch(ev, "user_id", d=4, w=256)
     return run_available_now(spark, cells, "complete")
 
 
 def _q_s_hist_cells(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming histogram-sketch maintenance through the real runtime
-    (streaming/windows.py:hist_cell_stream): running per-(event_type,
+    (operators/sketches.hist_sketch on a stream): running per-(event_type,
     bucket) counts in complete mode — state is bounded at keys x 256
     rows at any value cardinality; final snapshot == the batch sketch
-    (operators/sketches.hist_sketch) row for row, which is what the
-    oracle pins. The quantile readout (hist_quantiles) runs over the
+    row for row, which is what the oracle pins. The quantile readout (hist_quantiles) runs over the
     snapshot — sketch table as interchange format, same as the HLL
     register block and CMS cell table."""
     ev = load_stream(spark, sf, "events")
-    cells = SW.hist_cell_stream(
+    cells = sketches.hist_sketch(
         ev, ["event_type"], "value", lo=0.0, hi=512.0, n_buckets=256
     )
     return run_available_now(spark, cells, "complete")
@@ -2565,12 +2556,12 @@ def _q_s_hist_cells(spark: SparkSession, sf: str) -> DataFrame:
 
 def _q_s_hll_registers(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming HLL register maintenance through the real runtime
-    (streaming/windows.py:hll_register_stream): a running MAX on
+    (operators/sketches.hll_registers on a stream): a running MAX on
     (event_type, bucket) in complete mode — sketch state is bounded at
     keys x 256 rows however many events flow. Final snapshot == the
     batch register table, which is what the oracle pins."""
     ev = load_stream(spark, sf, "events")
-    regs = SW.hll_register_stream(ev, ["event_type"], "user_id", b=8)
+    regs = sketches.hll_registers(ev, ["event_type"], "user_id", b=8)
     return run_available_now(spark, regs, "complete")
 
 
@@ -2858,19 +2849,9 @@ def _q_s_stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
     """J1 through the streaming runtime: purchase⋈click within ±6h on
     user_id — same predicate as j1_interval_join_inner, so same oracle."""
     ev = load_stream(spark, sf, "events")
-    l = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("l_event_id"),
-        F.col("user_id").alias("l_user_id"),
-        F.col("ts").alias("l_ts"),
-    )
-    r = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("r_event_id"),
-        F.col("user_id").alias("r_user_id"),
-        F.col("ts").alias("r_ts"),
-    )
-    j = SW.interval_join_stream(
+    l, r = _ev_sub(ev, "purchase", "l"), _ev_sub(ev, "click", "r")
+    j = joins.interval_join(
         l, r, [("l_user_id", "r_user_id")], "l_ts", "r_ts", 21600, 21600,
-        watermark_s=0,
     ).select("l_event_id", "r_event_id")
     return run_available_now(spark, j, "append")
 
@@ -2883,19 +2864,10 @@ def _q_s_interval_join_left(spark: SparkSession, sf: str) -> DataFrame:
     every unmatched purchase whose window closed by end-of-stream; the
     oracle keeps exactly those null rows."""
     ev = load_stream(spark, sf, "events")
-    l = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("l_event_id"),
-        F.col("user_id").alias("l_user_id"),
-        F.col("ts").alias("l_ts"),
-    )
-    r = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("r_event_id"),
-        F.col("user_id").alias("r_user_id"),
-        F.col("ts").alias("r_ts"),
-    )
-    j = SW.interval_join_stream(
+    l, r = _ev_sub(ev, "purchase", "l"), _ev_sub(ev, "click", "r")
+    j = joins.interval_join(
         l, r, [("l_user_id", "r_user_id")], "l_ts", "r_ts", 21600, 21600,
-        watermark_s=0, how="leftOuter",
+        how="leftOuter",
     ).select("l_event_id", "r_event_id")
     return run_available_now(spark, j, "append")
 
@@ -2908,7 +2880,7 @@ def _q_s_windowed_count_grace(spark: SparkSession, sf: str) -> DataFrame:
     emitted set excludes windows ending within the last 30s of stream
     time — exactly what the oracle's max(ts)-30 cutoff selects."""
     ev = load_stream(spark, sf, "events")
-    wc = SW.windowed_count_stream(ev, "ts", ["event_type"], 10, grace_s=30)
+    wc = agg.windowed_count(ev, "ts", ["event_type"], 10, grace_s=30)
     return run_available_now(spark, wc, "append")
 
 
@@ -2942,8 +2914,8 @@ def _q_s_windowed_sum_closed(spark: SparkSession, sf: str) -> DataFrame:
     """A3/W5 through the streaming runtime: watermarked tumbling SUM in
     append mode (decimal-exact accumulation, same as the batch twin)."""
     ev = load_stream(spark, sf, "events")
-    ws = SW.windowed_agg_stream(
-        ev, "ts", ["event_type"], 60, grace_s=0, sum_value=agg.exact_sum("value")
+    ws = agg.windowed_agg(
+        ev, "ts", ["event_type"], 60, sum_value=agg.exact_sum("value")
     )
     return run_available_now(spark, ws, "append")
 
@@ -2953,7 +2925,7 @@ def _q_s_hopping_count_closed(spark: SparkSession, sf: str) -> DataFrame:
     10s slide) in append mode — every overlapping window emits once its
     end passes the final watermark."""
     ev = load_stream(spark, sf, "events")
-    wc = SW.windowed_count_stream(ev, "ts", ["event_type"], 20, grace_s=0, slide_s=10)
+    wc = agg.windowed_count(ev, "ts", ["event_type"], 20, slide_s=10)
     return run_available_now(spark, wc, "append")
 
 
@@ -2963,7 +2935,7 @@ def _q_s_session_count_grace(spark: SparkSession, sf: str) -> DataFrame:
     reaching into the final 2h of stream time stays suppressed (a
     clearly discriminating subset of the zero-grace result)."""
     ev = load_stream(spark, sf, "events")
-    sc = SW.session_count_stream(ev, "ts", ["user_id"], 3600, grace_s=7200)
+    sc = agg.session_count(ev, "ts", ["user_id"], 3600, grace_s=7200)
     return run_available_now(spark, sc, "append")
 
 
@@ -2972,7 +2944,7 @@ def _q_s_session_count(spark: SparkSession, sf: str) -> DataFrame:
     watermark (max event time, zero grace) passes its end (last+gap);
     the per-user sessions still open at end-of-stream stay suppressed."""
     ev = load_stream(spark, sf, "events")
-    sc = SW.session_count_stream(ev, "ts", ["user_id"], 3600, grace_s=0)
+    sc = agg.session_count(ev, "ts", ["user_id"], 3600)
     return run_available_now(spark, sc, "append")
 
 
@@ -2980,11 +2952,9 @@ def _q_s_session_assembly(spark: SparkSession, sf: str) -> DataFrame:
     """Sessionized sequence assembly through the streaming runtime
     (append mode): sessions emit their ordered event string once the
     watermark passes last+gap; the batch oracle keeps the same closed
-    set (streaming/windows.py:assemble_sessions_stream)."""
+    set (operators/aggregations.py:assemble_sessions on a stream)."""
     ev = load_stream(spark, sf, "events")
-    sa = SW.assemble_sessions_stream(
-        ev, "ts", ["user_id"], 3600, "event_type", grace_s=0
-    )
+    sa = agg.assemble_sessions(ev, "ts", ["user_id"], 3600, "event_type")
     return run_available_now(spark, sa, "append")
 
 

@@ -65,6 +65,7 @@ from dataclasses import dataclass
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pyarrow as pa
+from pyspark.errors import IllegalArgumentException
 from pyspark.sql import DataFrame
 from pyspark.sql.conversion import ArrowTableToRowsConversion
 from pyspark.sql.pandas.types import from_arrow_schema
@@ -73,6 +74,12 @@ from kafka_streams_app_spark.operators import iq
 from kafka_streams_app_spark.operators.pipeline import portable_bucket_py
 
 MAX_ROWS = 10_000  # edge-collect guard: an IQ response is human-facing
+
+
+def _message(e: Exception) -> str:
+    """The first line of an error: a Spark error's condition and text,
+    without the call site and stack that follow it."""
+    return str(e).partition("\n")[0]
 
 
 @dataclass
@@ -132,7 +139,9 @@ class IQService:
     # -- query dispatch (exercised directly by tests, no HTTP needed) -----
 
     def query(self, path: str) -> tuple[int, object]:
-        """Resolve a GET path to (http_status, json_payload)."""
+        """Resolve a GET path to (http_status, json_payload): a malformed
+        request (ValueError, or Spark's IllegalArgumentException such as a
+        non-numeric key for a long column) is 400, any other failure 500."""
         parts = [p for p in path.split("/") if p]
         try:
             if len(parts) == 4 and parts[:2] == ["state", "keyvalue"]:
@@ -152,8 +161,10 @@ class IQService:
                 return 200, self._metadata(parts[1], parts[2])
         except KeyError as e:
             return 404, {"error": f"unknown store {e.args[0]!r}"}
-        except ValueError as e:
-            return 400, {"error": str(e)}
+        except (ValueError, IllegalArgumentException) as e:
+            return 400, {"error": _message(e)}
+        except Exception as e:  # noqa: BLE001 - the HTTP client gets a status
+            return 500, {"error": _message(e)}
         return 404, {"error": f"no route for {path!r}"}
 
     def _store(self, name: str) -> _Store:

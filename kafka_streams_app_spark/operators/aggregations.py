@@ -16,6 +16,12 @@ partial aggregation (Spark does partial+final automatically; the
 reference shuffles raw records to a single stateful agg). Window starts
 are projected as epoch seconds (BIGINT) so results are engine-portable.
 
+Batch or stream: the event-time builders always watermark their input
+(windowed_count / session_count by grace_s, which on a stream IS the
+grace period, W2, WindowedGrouping.scala:44; the others with no delay);
+on batch input withWatermark adds no plan node
+(tests/test_event_time_plans.py).
+
 Floating-point determinism: double sums are computed by casting to
 DECIMAL first and back to DOUBLE after — exact and order-independent, so
 a 32-partition Spark sum bit-matches a single-threaded oracle.
@@ -103,16 +109,18 @@ def count_per_key(df: DataFrame, keys: list[str], out: str = "cnt") -> DataFrame
 
 def windowed_count(
     df: DataFrame, ts: str, keys: list[str], duration_s: int,
-    slide_s: int | None = None, out: str = "cnt",
+    slide_s: int | None = None, out: str = "cnt", *, grace_s: int = 0,
 ) -> DataFrame:
-    """A2/W1/W3 — tumbling (or hopping) windowed count per key.
+    """A2/W1/W2/W3 — tumbling (or hopping) windowed count per key;
+    grace_s is the watermark delay on a stream (module docstring).
 
     Output: window_start_s BIGINT, *keys, cnt.
     """
     slide = f"{slide_s} seconds" if slide_s else f"{duration_s} seconds"
     w = F.window(ts, f"{duration_s} seconds", slide)
     return (
-        df.groupBy(w.alias("w"), *keys)
+        df.withWatermark(ts, f"{grace_s} seconds")
+        .groupBy(w.alias("w"), *keys)
         .agg(F.count(F.lit(1)).alias(out))
         .select(
             F.unix_seconds(F.col("w.start")).alias("window_start_s"),
@@ -127,7 +135,8 @@ def windowed_agg(
     """A3 — windowed reduce/aggregate (any commutative Column agg)."""
     w = F.window(ts, f"{duration_s} seconds")
     return (
-        df.groupBy(w.alias("w"), *keys)
+        df.withWatermark(ts, "0 seconds")
+        .groupBy(w.alias("w"), *keys)
         .agg(*[c.alias(n) for n, c in aggs.items()])
         .select(F.unix_seconds(F.col("w.start")).alias("window_start_s"), *keys,
                 *aggs.keys())
@@ -135,7 +144,8 @@ def windowed_agg(
 
 
 def session_count(
-    df: DataFrame, ts: str, keys: list[str], gap_s: int, out: str = "cnt"
+    df: DataFrame, ts: str, keys: list[str], gap_s: int, out: str = "cnt", *,
+    grace_s: int = 0,
 ) -> DataFrame:
     """A4/W4 — session windows with inactivity gap; start = first event ts.
 
@@ -152,7 +162,8 @@ def session_count(
     """
     w = F.session_window(ts, f"{gap_s} seconds")
     return (
-        df.groupBy(w.alias("w"), *keys)
+        df.withWatermark(ts, f"{grace_s} seconds")
+        .groupBy(w.alias("w"), *keys)
         .agg(F.count(F.lit(1)).alias(out))
         .select(*keys, F.unix_seconds(F.col("w.start")).alias("session_start_s"), out)
     )
@@ -278,9 +289,13 @@ def assemble_sessions(
     pairs = F.struct(
         F.unix_seconds(F.col(ts)).alias("t"), F.col(event_col).alias("e")
     )
-    grouped = df.groupBy(w.alias("w"), *keys).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.array_sort(F.collect_list(pairs)).alias("_seq"),
+    grouped = (
+        df.withWatermark(ts, "0 seconds")
+        .groupBy(w.alias("w"), *keys)
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.array_sort(F.collect_list(pairs)).alias("_seq"),
+        )
     )
     seq = F.transform(F.col("_seq"), lambda s: s["e"])
     if max_events is not None:

@@ -41,10 +41,15 @@ def interval_join(
     SQL equality semantics give that for free.
 
     Scale: Spark executes this as a shuffled join on the equi-keys with
-    the range predicate as a post-filter; in streaming mode the same plan
-    becomes a watermark-bounded stream-stream join with state eviction.
+    the range predicate as a post-filter. Both sides are watermarked with
+    no delay (no plan node on batch input): on streams the plan is a
+    stream-stream join evicting state at watermark - range, and an outer
+    join emits an unmatched row once the watermark passes its window end
+    (Kafka: when the window expires); final sets match.
     Columns must be pre-aliased distinctly by the caller (l./r. prefixes).
     """
+    left = left.withWatermark(left_ts, "0 seconds")
+    right = right.withWatermark(right_ts, "0 seconds")
     cond = None
     for lc, rc in on:
         c = left[lc] == right[rc]

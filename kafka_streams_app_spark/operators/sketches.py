@@ -10,8 +10,9 @@ whose shuffle is m registers per group key instead of one row per
 distinct value, and a frequency table whose state is d*w cells
 regardless of item cardinality. Both are MERGEABLE (register max /
 cell sum are commutative monoids), so they map-side combine, they
-union across sources, and a streaming twin is just the same aggregate
-in update/complete mode.
+union across sources, and on a stream the same builders
+(hll_registers, cms_sketch, hist_sketch) are the running sketch in
+update/complete mode, with state bounded at the sketch's size.
 
 Determinism contract: every hash is the 60-bit md5 hex-prefix value —
 Spark `conv(substring(md5(x),1,15),16,10)`, DuckDB
@@ -284,8 +285,8 @@ def cms_topk(
 # equi-width histogram — per group key at most n_buckets bigint
 # counts whatever the input size, built by ONE map-side-combined
 # aggregate, mergeable by bucket-wise sum (so it unions across
-# corpora and a streaming twin is the same aggregate in complete
-# mode). The quantile readout is rank-exact AT BUCKET GRANULARITY:
+# corpora, and on a stream hist_sketch itself is the running sketch
+# in complete mode). The quantile readout is rank-exact AT BUCKET GRANULARITY:
 # the reported bucket is the true bucket of the order statistic, so
 # the estimate's error is bounded by the bucket width — the classic
 # trade the exact per-key order-statistic path in

@@ -9,9 +9,11 @@ the state store plays RocksDB.
 Modules:
 - harness: deterministic micro-batch replay (the TopologyTestDriver
   analogue — pipe timestamped batches, drain per-batch outputs).
-- windows: watermarked windowed aggregations (W1/W2 grace, W5-W7 emit
-  strategies), session windows, streaming dedup, interval joins,
-  running sketch and profile cells.
+- windows: the streaming-only windowed plans (windowed distinct,
+  watermark-evicted windowed HLL registers, watermark-horizon dedup,
+  the profile monitor). Windowed counts and aggregates (W1-W4 with
+  grace), interval joins and sketches are the operators/ builders,
+  which take streaming input as they are; output modes play W5-W7.
 - replay: run_stateful, the one dispatch of every stateful operator
   below — transformWithStateInPandas (TWS) on a streaming input,
   grouped replay of the same processor on a batch input. The input

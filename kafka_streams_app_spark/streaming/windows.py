@@ -21,78 +21,25 @@ Mapping from the reference's window/emit surface to Structured Streaming:
   Spark's watermark is global per query and advances at micro-batch
   boundaries. Final emitted sets match; emission interleaving differs.
 
-These builders take a STREAMING DataFrame (spark.readStream...) and
-return the windowed aggregation; callers choose the output mode at the
-writeStream (append = on-close, update = on-update).
+W1-W4, A1/A3, the J1/J2 interval join and the sketches are one
+operators/ builder each for batch and stream (grace_s, where the
+builder takes one, is the watermark delay); callers pick the output
+mode at the writeStream (append = on-close, update = on-update). This module keeps only plans a
+stream needs and a batch does not: windowed distinct (streaming
+aggregates reject count_distinct), window-grouped HLL registers the
+watermark can evict, watermark-horizon dedup and the profile monitor.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kafka_streams_app_spark.operators.aggregations import windowed_count
 
-def windowed_count_stream(
-    df: DataFrame,
-    ts: str,
-    keys: list[str],
-    duration_s: int,
-    grace_s: int = 0,
-    slide_s: int | None = None,
-    out: str = "cnt",
-) -> DataFrame:
-    """W1/W2/W3 streaming windowed count; grace_s is the watermark delay.
-
-    Same output shape as the batch twin
-    (operators/aggregations.py:windowed_count): window_start_s, *keys, cnt.
-    """
-    slide = f"{slide_s} seconds" if slide_s else f"{duration_s} seconds"
-    w = F.window(ts, f"{duration_s} seconds", slide)
-    return (
-        df.withWatermark(ts, f"{grace_s} seconds")
-        .groupBy(w.alias("w"), *keys)
-        .agg(F.count(F.lit(1)).alias(out))
-        .select(
-            F.unix_seconds(F.col("w.start")).alias("window_start_s"), *keys, out
-        )
-    )
-
-
-def windowed_agg_stream(
-    df: DataFrame, ts: str, keys: list[str], duration_s: int,
-    grace_s: int = 0, **aggs: Column,
-) -> DataFrame:
-    """A3 streaming windowed reduce (sum/min/max/...)."""
-    w = F.window(ts, f"{duration_s} seconds")
-    return (
-        df.withWatermark(ts, f"{grace_s} seconds")
-        .groupBy(w.alias("w"), *keys)
-        .agg(*[c.alias(n) for n, c in aggs.items()])
-        .select(F.unix_seconds(F.col("w.start")).alias("window_start_s"), *keys,
-                *aggs.keys())
-    )
-
-
-def session_count_stream(
-    df: DataFrame, ts: str, keys: list[str], gap_s: int,
-    grace_s: int = 0, out: str = "cnt",
-) -> DataFrame:
-    """W4 streaming session windows (merge on inactivity <= gap, same
-    bound as Kafka — see operators/aggregations.py:session_count)."""
-    w = F.session_window(ts, f"{gap_s} seconds")
-    return (
-        df.withWatermark(ts, f"{grace_s} seconds")
-        .groupBy(w.alias("w"), *keys)
-        .agg(F.count(F.lit(1)).alias(out))
-        .select(*keys, F.unix_seconds(F.col("w.start")).alias("session_start_s"), out)
-    )
-
-
-def count_per_key_stream(df: DataFrame, keys: list[str], out: str = "cnt") -> DataFrame:
-    """A1 streaming continuous count per key (WordCount.java:56). Run in
-    UPDATE mode for the changelog (KTable.toStream) or COMPLETE for the
-    full table snapshot."""
-    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias(out))
+# perfbench/workloads.py (live_ingest_iq) still calls the windowed count by
+# its old streaming name; the alias stays until that benchmark changes.
+windowed_count_stream = windowed_count
 
 
 def hll_windowed_register_stream(
@@ -136,82 +83,6 @@ def hll_windowed_register_stream(
     )
 
 
-def cms_cell_stream(
-    df: DataFrame, value: str, d: int = 4, w: int = 1 << 8
-) -> DataFrame:
-    """Streaming Count-Min sketch maintenance — the incremental twin of
-    operators/sketches.cms_sketch: per-cell running counts are an
-    ordinary streaming COUNT aggregate over the exploded cell ids, so
-    state is exactly d*w rows at any item cardinality and the COMPLETE
-    snapshot equals the batch sketch cell for cell (the oracle's pin).
-    Candidate scoring stays a batch/IQ-side concern — the sketch table
-    is the interchange format, same as the HLL register block."""
-    from kafka_streams_app_spark.operators.sketches import cms_cells
-
-    return (
-        df.select(F.explode(cms_cells(F.col(value), d, w)).alias("cell"))
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def hist_cell_stream(
-    df: DataFrame,
-    keys: list[str],
-    value: str,
-    lo: float = 0.0,
-    hi: float = 512.0,
-    n_buckets: int = 256,
-) -> DataFrame:
-    """Streaming histogram-sketch maintenance — the incremental twin of
-    operators/sketches.hist_sketch (the quantile member of the sketch
-    trio): per-(keys, bucket) running counts are an ordinary streaming
-    COUNT aggregate, so state is bounded at keys x n_buckets rows at
-    ANY value cardinality and the COMPLETE snapshot equals the batch
-    sketch row for row (the oracle's pin). Quantile readout
-    (sketches.hist_quantiles) stays a batch/IQ-side concern over the
-    snapshot — the sketch table is the interchange format, same as the
-    HLL register block and the CMS cell table."""
-    from kafka_streams_app_spark.operators.sketches import hist_bucket
-
-    b = hist_bucket(F.col(value), lo, hi, n_buckets)
-    return (
-        df.filter(F.col(value).isNotNull())
-        .select(*keys, b.alias("bucket"))
-        .groupBy(*keys, "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def hll_register_stream(
-    df: DataFrame, keys: list[str], value: str, b: int = 8
-) -> DataFrame:
-    """Streaming HyperLogLog register maintenance — the incremental twin
-    of operators/sketches.hll_registers, and the proof that the sketch
-    is mergeable across micro-batches: the register table is just a
-    running MAX aggregate on (keys, bucket), so Spark's ordinary
-    streaming state machine maintains it with at most keys x 2^b state
-    rows no matter how many events flow through. Run in COMPLETE (full
-    register snapshot) or UPDATE (register changelog — the same
-    max-monotone changelog a KTable would carry) mode; the final
-    COMPLETE table equals the batch register table row for row, which
-    is exactly what the oracle pins.
-
-    An exact streaming distinct would need one state row PER DISTINCT
-    VALUE (the dropDuplicates chain in windowed_distinct_count_stream);
-    this dial bounds state at 2^b registers per key — the 100 TB
-    unbounded-cardinality answer.
-    """
-    from kafka_streams_app_spark.operators.sketches import hll_bucket_rho
-
-    bucket, rho = hll_bucket_rho(F.col(value), b)
-    return (
-        df.select(*keys, bucket.alias("bucket"), rho.alias("rho"))
-        .groupBy(*keys, "bucket")
-        .agg(F.max("rho").alias("max_rho"))
-    )
-
-
 def windowed_distinct_count_stream(
     df: DataFrame,
     ts: str,
@@ -252,41 +123,6 @@ def windowed_distinct_count_stream(
     )
 
 
-def assemble_sessions_stream(
-    df: DataFrame, ts: str, keys: list[str], gap_s: int,
-    event_col: str, grace_s: int = 0, max_events: int | None = None,
-) -> DataFrame:
-    """Streaming twin of operators/aggregations.py:assemble_sessions:
-    per-key inactivity-gap sessions emitted as (second, event)-ordered
-    sequences once the watermark passes the session end (append mode —
-    a session's sequence is immutable only after it can no longer
-    merge, exactly the point Spark emits it). State per open session =
-    its collected (t, e) pairs, watermark-bounded like every session
-    aggregate; the same adversarial-key caveat as the batch twin
-    applies (max_events caps the emitted sequence, not the state)."""
-    w = F.session_window(ts, f"{gap_s} seconds")
-    pairs = F.struct(
-        F.unix_seconds(F.col(ts)).alias("t"), F.col(event_col).alias("e")
-    )
-    grouped = (
-        df.withWatermark(ts, f"{grace_s} seconds")
-        .groupBy(w.alias("w"), *keys)
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.array_sort(F.collect_list(pairs)).alias("_seq"),
-        )
-    )
-    seq = F.transform(F.col("_seq"), lambda s: s["e"])
-    if max_events is not None:
-        seq = F.slice(seq, 1, max_events)
-    return grouped.select(
-        *keys,
-        F.unix_seconds(F.col("w.start")).alias("session_start_s"),
-        "n_events",
-        F.array_join(seq, ">").alias("sequence"),
-    )
-
-
 def dedup_stream(df: DataFrame, keys: list[str], ts: str, horizon_s: int) -> DataFrame:
     """Streaming exact dedup within a watermark horizon: the first record
     per key wins; duplicates arriving within horizon_s are dropped and
@@ -294,39 +130,6 @@ def dedup_stream(df: DataFrame, keys: list[str], ts: str, horizon_s: int) -> Dat
     return df.withWatermark(ts, f"{horizon_s} seconds").dropDuplicatesWithinWatermark(
         keys
     )
-
-
-def interval_join_stream(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[tuple[str, str]],
-    left_ts: str,
-    right_ts: str,
-    before_s: int,
-    after_s: int,
-    watermark_s: int,
-    how: str = "inner",
-) -> DataFrame:
-    """J1/J2 streaming stream-stream windowed join.
-
-    Both sides are watermarked; the time-range predicate bounds the join
-    state Spark must keep (state eviction = watermark - range). Same
-    join condition as the batch twin (operators/joins.py:interval_join).
-    Left-outer emits unmatched left rows once the watermark passes the
-    end of their join window — Kafka emits them when the window expires
-    (WindowedJoin.scala semantics); final sets match.
-    """
-    l = left.withWatermark(left_ts, f"{watermark_s} seconds")
-    r = right.withWatermark(right_ts, f"{watermark_s} seconds")
-    cond = None
-    for lc, rc in on:
-        c = l[lc] == r[rc]
-        cond = c if cond is None else (cond & c)
-    rng = r[right_ts].between(
-        l[left_ts] - F.expr(f"INTERVAL {before_s} SECONDS"),
-        l[left_ts] + F.expr(f"INTERVAL {after_s} SECONDS"),
-    )
-    return l.join(r, cond & rng, how)
 
 
 def profile_cell_stream(df: DataFrame, cols: list[str], b: int = 8) -> DataFrame:

@@ -60,10 +60,12 @@ def windowed_grouping(
     """WindowedGrouping.scala:41-48 — groupByKey -> tumbling window
     (grace = `lateness`) -> count -> selectKey("{key}-{windowStart}").
 
-    Batch analogue; the streaming twin is
-    streaming/windows.windowed_count_stream + the same selectKey.
+    On a stream, grace_s is the watermark delay: a record later than its
+    window's end still counts while stream time - grace_s has not passed
+    that end (WindowedGrouping.scala:25-37,44); update mode emits on
+    update, append mode on close.
     """
-    wc = agg.windowed_count(stream, ts, [key], window_s)
+    wc = agg.windowed_count(stream, ts, [key], window_s, grace_s=grace_s)
     keyed = stateless.select_key(
         wc, F.concat_ws("-", F.col(key), F.col("window_start_s")), "key"
     )
@@ -75,7 +77,8 @@ def windowed_group_at_close(
 ) -> DataFrame:
     """WindowedGroupAtClose.scala:29-37 — as windowed_grouping but only
     windows already closed per stream time are emitted
-    (EmitStrategy.onWindowClose; streaming twin = append output mode)."""
+    (EmitStrategy.onWindowClose). Batch only: on a stream,
+    windowed_grouping in append output mode emits the same closed set."""
     wc = agg.windowed_count(stream, ts, [key], window_s)
     closed = agg.closed_windows_only(wc, stream, ts, window_s)
     keyed = stateless.select_key(

@@ -20,7 +20,7 @@ import shutil
 import tempfile
 from datetime import datetime, timezone
 
-from kafka_streams_app_spark.streaming import windows as SW
+from kafka_streams_app_spark.operators.aggregations import windowed_count
 
 
 def _ts(s: int):
@@ -34,7 +34,7 @@ SCHEMA = "key string, ts timestamp"
 
 def _start(spark, staging, checkpoint, out_dir):
     src = spark.readStream.schema(SCHEMA).parquet(staging)
-    out = SW.windowed_count_stream(src, "ts", ["key"], 10, grace_s=0)
+    out = windowed_count(src, "ts", ["key"], 10)
     return (
         out.writeStream.format("parquet")
         .outputMode("append")

@@ -10,7 +10,7 @@ from datetime import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from kafka_streams_app_spark.streaming import windows as W
+from kafka_streams_app_spark.operators.aggregations import count_per_key
 from kafka_streams_app_spark.streaming.harness import (
     STREAM_PARTITIONS,
     MicroBatchReplay,
@@ -46,7 +46,7 @@ def test_replayed_batch_replaces_its_rows(spark):
     """A micro-batch that Spark runs again after a restart replaces the
     rows it emitted the first time; the output holds each row once."""
     with MicroBatchReplay(spark, "word string, ts timestamp",
-                          lambda src: W.count_per_key_stream(src, ["word"]),
+                          lambda src: count_per_key(src, ["word"]),
                           "update") as r:
         r.pipe([("hello", _T)])
         r.pipe([("world", _T)])

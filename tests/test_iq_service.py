@@ -132,6 +132,28 @@ def test_windowed_on_kv_store_400(service):
     assert status == 400 and "not windowed" in body["error"]
 
 
+def test_spark_errors_answer_a_status(spark, sf_dir):
+    """A Spark error on the Catalyst path answers JSON with a status over
+    HTTP, not a dropped connection: a key that is not a number against a
+    parquet store's long key column (CAST_INVALID_INPUT, a
+    NumberFormatException under ANSI casts) is the client's fault, 400;
+    a failure of the store itself is 500."""
+    ev = load_table(spark, sf_dir, "events")
+    svc = IQService()
+    svc.register("s", ev, "user_id")
+    svc.register("broken", ev.select("user_id", F.raise_error(F.lit("boom")).alias("x")),
+                 "user_id")
+    port = svc.start()
+    try:
+        status, body = svc.query("/state/keyvalue/s/abc")
+        assert status == 400 and "abc" in body["error"]
+        assert _get(port, "/state/keyvalue/s/abc") == (status, body)
+        status, body = _get(port, "/state/keyvalues/broken/all")
+        assert status == 500 and "boom" in body["error"]
+    finally:
+        svc.stop()
+
+
 def test_bad_route_404(service):
     svc, port, _, _ = service
     status, _ = _get(port, "/state/garbage")

@@ -23,9 +23,9 @@ from pyspark.sql import functions as F
 
 from kafka_streams_app_spark.iq_service import IQService
 from kafka_streams_app_spark.operators import iq
+from kafka_streams_app_spark.operators.aggregations import count_per_key
 from kafka_streams_app_spark.operators.ktable import latest_per_key
 from kafka_streams_app_spark.streaming import sinks
-from kafka_streams_app_spark.streaming import windows as W
 from kafka_streams_app_spark.streaming.harness import MicroBatchReplay
 from kafka_streams_app_spark.streaming.sinks import StoreMirror, _write_part, to_topic
 
@@ -39,7 +39,7 @@ def test_store_mirror_live_queries(spark):
         spark.readStream.schema("word string, ts timestamp")
         .option("maxFilesPerTrigger", 1).parquet(staging)
     )
-    counts = W.count_per_key_stream(src, ["word"])
+    counts = count_per_key(src, ["word"])
     q = mirror.attach(counts)
 
     def pipe(rows):
@@ -96,7 +96,7 @@ def _jobs_started(spark, group: str, run) -> int:
 def _windowed_mirror(spark, name: str):
     """A per-(word, window) count mirrored from a parquet staging dir;
     rows with word 'late' are dropped before the count, so a batch of
-    only those emits no update rows. Like `W.windowed_count_stream`, the
+    only those emits no update rows. Like `aggregations.windowed_count`, the
     count emits (window_start_s, word, cnt): the key columns do not lead
     and are not in `key_cols` order."""
     staging = tempfile.mkdtemp(prefix="iqsrc_")

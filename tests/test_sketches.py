@@ -156,7 +156,7 @@ def test_streaming_hll_registers_equal_batch(spark):
     with MicroBatchReplay(
         spark,
         "v string, n int, ts timestamp",
-        lambda src: W.hll_register_stream(src, [], "v", b=8),
+        lambda src: SK.hll_registers(src, [], "v", b=8),
         output_mode="complete",
     ) as r:
         r.pipe(rows[:100])
@@ -308,7 +308,7 @@ def test_streaming_cms_cells_equal_batch(spark):
     with MicroBatchReplay(
         spark,
         "v string, n int, ts timestamp",
-        lambda src: W.cms_cell_stream(src, "v", d=4, w=64),
+        lambda src: SK.cms_sketch(src, "v", d=4, w=64),
         output_mode="complete",
     ) as r:
         r.pipe(rows[:150])
@@ -430,7 +430,7 @@ def test_streaming_hist_cells_equal_batch(spark):
     with MicroBatchReplay(
         spark,
         "k string, v double, ts timestamp",
-        lambda src: W.hist_cell_stream(src, ["k"], "v"),
+        lambda src: SK.hist_sketch(src, ["k"], "v"),
         output_mode="complete",
     ) as r:
         r.pipe(rows[:100])

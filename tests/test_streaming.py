@@ -13,6 +13,8 @@ from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import functions as F
 
+from kafka_streams_app_spark.operators import aggregations as A
+from kafka_streams_app_spark.operators import joins
 from kafka_streams_app_spark.streaming import windows as W
 from kafka_streams_app_spark.streaming.harness import MicroBatchReplay
 
@@ -35,7 +37,7 @@ def test_emit_on_close_append_mode(spark):
     count of 3 is emitted; +100 closes [t0+10,t0+20)."""
     with MicroBatchReplay(
         spark, EV,
-        lambda src: W.windowed_count_stream(src, "ts", ["key"], 10),
+        lambda src: A.windowed_count(src, "ts", ["key"], 10),
         output_mode="append",
     ) as r:
         r.pipe([("key1", 1, ts(0)), ("key1", 2, ts(2)), ("key1", 3, ts(4))])
@@ -55,7 +57,7 @@ def test_emit_on_update_update_mode(spark):
     the reference's default emit-on-update with commit interval 0."""
     with MicroBatchReplay(
         spark, EV,
-        lambda src: W.windowed_count_stream(src, "ts", ["key"], 10),
+        lambda src: A.windowed_count(src, "ts", ["key"], 10),
         output_mode="update",
     ) as r:
         r.pipe([("key1", 1, ts(0))])
@@ -73,7 +75,7 @@ def test_late_data_dropped_zero_grace(spark):
     record for it is dropped (WindowedGrouping.scala:20-23)."""
     with MicroBatchReplay(
         spark, EV,
-        lambda src: W.windowed_count_stream(src, "ts", ["key"], 10),
+        lambda src: A.windowed_count(src, "ts", ["key"], 10),
         output_mode="append",
     ) as r:
         r.pipe([("key1", 1, ts(0))])
@@ -92,7 +94,7 @@ def test_late_data_admitted_within_grace(spark):
     (WindowedGrouping.scala:25-37)."""
     with MicroBatchReplay(
         spark, EV,
-        lambda src: W.windowed_count_stream(src, "ts", ["key"], 10, grace_s=60),
+        lambda src: A.windowed_count(src, "ts", ["key"], 10, grace_s=60),
         output_mode="append",
     ) as r:
         r.pipe([("key1", 1, ts(0))])
@@ -111,7 +113,7 @@ def test_session_windows_streaming(spark):
     data2 = [("foo", 3, ts(4)), ("bar", 1, ts(4)), ("bar", 1, ts(5))]
     with MicroBatchReplay(
         spark, EV,
-        lambda src: W.session_count_stream(src, "ts", ["key"], 2),
+        lambda src: A.session_count(src, "ts", ["key"], 2),
         output_mode="append",
     ) as r:
         r.pipe(data1)
@@ -129,7 +131,7 @@ def test_session_windows_streaming(spark):
 def test_count_changelog_update_mode(spark):
     with MicroBatchReplay(
         spark, "word string, ts timestamp",
-        lambda src: W.count_per_key_stream(src, ["word"]),
+        lambda src: A.count_per_key(src, ["word"]),
         output_mode="update",
     ) as r:
         r.pipe([("hello", ts(0)), ("world", ts(0))])
@@ -164,8 +166,8 @@ def test_stream_stream_inner_join(spark):
                        F.col("ts").alias("l_ts"))
         r_ = src.select(F.col("key").alias("r_key"), F.col("value").alias("r_v"),
                         F.col("ts").alias("r_ts"))
-        return W.interval_join_stream(
-            l, r_, [("l_key", "r_key")], "l_ts", "r_ts", 2, 2, watermark_s=0
+        return joins.interval_join(
+            l, r_, [("l_key", "r_key")], "l_ts", "r_ts", 2, 2
         ).select("l_key", "l_v", "r_v")
 
     with MicroBatchReplay(
@@ -188,9 +190,8 @@ def test_stream_stream_left_join_null_key(spark):
         r_ = src.filter(F.col("value") == "m").select(
             F.col("key").alias("r_key"), F.col("value").alias("r_v"),
             F.col("ts").alias("r_ts"))
-        return W.interval_join_stream(
-            l, r_, [("l_key", "r_key")], "l_ts", "r_ts", 10, 10,
-            watermark_s=0, how="left",
+        return joins.interval_join(
+            l, r_, [("l_key", "r_key")], "l_ts", "r_ts", 10, 10, how="left",
         ).select("l_key", "r_v")
 
     with MicroBatchReplay(
@@ -251,7 +252,7 @@ def test_count_state_survives_restart(spark):
     from batch 1's data alone, or worse, double-count to 3)."""
     with MicroBatchReplay(
         spark, "word string, ts timestamp",
-        lambda src: W.count_per_key_stream(src, ["word"]),
+        lambda src: A.count_per_key(src, ["word"]),
         output_mode="update",
     ) as r:
         r.pipe([("hello", ts(0))])
@@ -290,9 +291,7 @@ def test_assemble_sessions_stream_merge_and_close(spark):
     later same-key session starts fresh."""
     with MicroBatchReplay(
         spark, EV,
-        lambda src: W.assemble_sessions_stream(
-            src, "ts", ["key"], 2, "value", grace_s=0
-        ),
+        lambda src: A.assemble_sessions(src, "ts", ["key"], 2, "value"),
         output_mode="append",
     ) as r:
         r.pipe([("a", 2, ts(0))])

@@ -6,7 +6,10 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta, timezone
 
+import pytest
+
 from kafka_streams_app_spark import topologies as T
+from kafka_streams_app_spark.streaming.harness import MicroBatchReplay
 
 T0 = datetime(2024, 5, 3, 9, 30, 0, tzinfo=timezone.utc)
 
@@ -46,6 +49,26 @@ def test_windowed_grouping_select_key(spark):
     t0s = int(T0.timestamp())
     out = rows(T.windowed_grouping(df, "k", "ts", 10), "key", "cnt")
     assert out == {(f"hmida-{t0s}", 2), (f"lambda-{t0s + 10}", 1)}
+
+
+@pytest.mark.parametrize("grace_s", [0, 60])
+def test_windowed_grouping_grace_admits_late_record(spark, grace_s):
+    """WindowedGrouping.scala:25-37,44: a record later than its window's
+    end still counts while stream time minus the grace (`lateness`) has
+    not passed that end. Stream time reaches t0+12, so a record at t0+9
+    is late for [t0, t0+10): with a 60s grace the window's count is
+    updated to 2, with zero grace the record is dropped."""
+    t0s = int(T0.timestamp())
+    with MicroBatchReplay(
+        spark, "k string, ts timestamp",
+        lambda src: T.windowed_grouping(src, "k", "ts", 10, grace_s=grace_s),
+        output_mode="update",
+    ) as r:
+        r.pipe([("a", ts(0)), ("a", ts(12))])
+        r.drain()
+        r.pipe([("a", ts(9))])
+        late = {tuple(x) for x in r.drain()}
+    assert late == ({(f"a-{t0s}", 2)} if grace_s else set())
 
 
 def test_windowed_group_at_close(spark):

@@ -11,7 +11,7 @@ the topology shapes via Trigger.AvailableNow into a noop sink:
 - stateless_scrub   : 3-stage regex PII scrub (the heavy stateless op)
 - windowed_count    : watermarked tumbling count, append mode (W1/W5)
 - windowed_distinct : chained dedup -> windowed count (two stores)
-- hll_windowed_registers / cms_cells : bounded-state sketch twins
+- hll_windowed_registers / cms_cells : bounded-state sketches
                       (registers / d*w cells — state independent of
                       value cardinality)
 - ktable_latest_tws : transformWithStateInPandas latest-per-key
@@ -43,6 +43,8 @@ from pyspark.sql import functions as F
 
 from kafka_streams_app_spark.engine import get_spark
 from kafka_streams_app_spark.functions.text import scrub_pii
+from kafka_streams_app_spark.operators import aggregations as agg
+from kafka_streams_app_spark.operators import sketches
 from kafka_streams_app_spark.sources.catalog import _normalize_ts
 from kafka_streams_app_spark.streaming import windows as SW
 from kafka_streams_app_spark.streaming.ktable import ktable_changelog
@@ -148,7 +150,7 @@ def main() -> None:
     ev3 = stream_events(spark, events_path)
     shapes.append((
         "windowed_count",
-        SW.windowed_count_stream(ev3, "ts", ["event_type"], 10, grace_s=0),
+        agg.windowed_count(ev3, "ts", ["event_type"], 10),
         "append",
     ))
     ev3b = stream_events(spark, events_path)
@@ -177,7 +179,7 @@ def main() -> None:
     shapes.append((
         # running Count-Min cells: state exactly d*w = 1024 rows
         "cms_cells",
-        SW.cms_cell_stream(ev3d, "user_id", d=4, w=256),
+        sketches.cms_sketch(ev3d, "user_id", d=4, w=256),
         "update",
     ))
     # 128 buckets = 4x cores on the 32-core host — see SCALE.md and
