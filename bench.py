@@ -22,17 +22,17 @@ Two groups:
 only (the single-group run reports that group's total as `value`).
 
 `python bench.py --x10` (r16 verdict ask #6) ADDITIONALLY times the
-HEADLINE set against the x10 disjoint-replica corpus
-(.scratch/scale_smoke/x10, built by `tools/scale_smoke.py headline10`)
-and emits `scale10_queries` (seconds at x10) and `scale10_ratios`
-(x10 / sf0.1 wall per query) keys. Core-count ratios at sf0.1 cannot
-show compute scaling — every query there is fixed-overhead-bound — so
-this is the data-scaling signal; the two ANN entries are EXCLUDED
-(their contract query sets grow with the corpus, so an x10 run would
-measure the quadratic query-set construction, not the engine — see
-tools/scale_smoke.py headline10's fixed-query swap for their ratios).
-Off by default: the replica build is a ~1 GB scratch artifact the
-driver environment may not carry.
+HEADLINE set against 10 disjoint-content replicas of $SPARK_GRAFT_SF_DIR
+(`tools/scale_smoke.py:replica`, which builds them on first use into
+.scratch/scale_smoke/<sf>_x10) and emits `scale10_queries` (seconds at
+x10) and `scale10_ratios` (x10 / sf wall per query) keys. Core-count
+ratios at sf0.1 cannot show compute scaling — every query there is
+fixed-overhead-bound — so this is the data-scaling signal; the two ANN
+entries are EXCLUDED (their contract query sets grow with the corpus, so
+an x10 run would measure the quadratic query-set construction, not the
+engine). Off by default: the sf0.1 replica is a 133 MB scratch artifact
+that takes 16-22 s to build at 4 cores, and the x10 sweep roughly
+doubles the headline run.
 """
 
 from __future__ import annotations
@@ -46,6 +46,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod
 from kafka_streams_app_spark.engine import get_spark
+from tools.scale_smoke import replica
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -325,9 +326,8 @@ def main() -> None:
         out["heavyscan_queries"] = xq
         if group == "heavyscan":
             out.update(metric="heavyscan_total", value=out["heavyscan_total"])
-    x10_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           ".scratch", "scale_smoke", "x10")
-    if "--x10" in sys.argv and os.path.isdir(x10_dir):
+    if "--x10" in sys.argv:
+        x10_dir = replica(spark, SF_DIR, 10)
         base_q = out.get("queries", {})
         # the ANN entries' query sets grow with the corpus — excluded
         # (see module docstring); everything else times the identical

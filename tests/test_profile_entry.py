@@ -2,7 +2,8 @@
 grouped-replay entry to its layers, counts the streaming entry's
 micro-batch jobs (they run under the query's runId, not the caller's
 job group) and counts Python/Arrow plan nodes with the plan audit's
-list, which includes grouped replay's FlatMapGroupsInArrow."""
+list, which includes grouped replay's FlatMapGroupsInArrow. `--scale`
+replicates the tables that an entry's plans scanned."""
 
 from __future__ import annotations
 
@@ -12,8 +13,8 @@ import pytest
 
 import __spark_entry__ as registry
 from kafka_streams_app_spark.plans.audit import plan_report
-from perfbench.measure import Tracer
-from tools.profile_entry import ProgressLog, profile_entry
+from perfbench.measure import Tracer, execution_count
+from tools.profile_entry import ProgressLog, profile_entry, scanned_tables
 
 
 @pytest.fixture(scope="module")
@@ -55,3 +56,10 @@ def test_grouped_replay_nodes_counted_like_the_plan_audit(reports, spark, sf):
     expected = plan_report(registry.queries()["s_ktable_latest"](spark, sf))["python_evals"]
     assert expected >= 1
     assert reports["s_ktable_latest"]["python_nodes"] == expected
+
+
+def test_scanned_tables_name_what_the_plans_read(spark, sf):
+    ex0 = execution_count(spark)
+    registry.queries()["tpch_q3_top_revenue"](spark, sf).write.format("noop").mode(
+        "overwrite").save()
+    assert scanned_tables(spark, ex0, sf) == ["customer", "lineitem", "orders"]

@@ -2,7 +2,7 @@
 
 Usage:
   python tools/profile_entry.py NAME [NAME ...] [--sf DIR] [--runs N]
-      [--plan-dir DIR]
+      [--plan-dir DIR] [--scale MULT]
 
 Each named ``__spark_entry__.queries()`` entry runs once untimed to warm
 up, then ``--runs`` times. A run is three spans:
@@ -28,6 +28,13 @@ the five jobs with the most executor time. ``cold`` is the same report
 for the warm-up run, so a fresh process shows its first-run cost.
 ``--sf`` defaults to the correctness gate's scale. With ``--plan-dir``,
 each entry's ``explain("formatted")`` is written to ``DIR/NAME.txt``.
+
+With ``--scale MULT``, each entry is then profiled again on MULT
+replicas of the ``--sf`` tables it read (``tools/scale_smoke.py``
+builds them on first use), and that second line adds ``mult`` and
+``wall_ratio``, its best wall over the first line's. A ratio near 1
+means fixed costs dominate; a ratio above MULT flags a superlinear
+term.
 """
 
 from __future__ import annotations
@@ -50,6 +57,7 @@ from perfbench.measure import (  # noqa: E402
     Tracer, execution_count, job_totals, jobs_since, max_job_id, progress_totals,
 )
 from tools.check_queries import SF_DIR  # noqa: E402
+from tools.scale_smoke import replica  # noqa: E402
 
 # plans/audit.py:plan_report's python_evals list; tests/test_profile_entry.py
 # pins the two counts together
@@ -98,15 +106,27 @@ def plan_tree(description: str) -> str:
     return re.sub(r" \(\d+\)|, Statistics\([^)]*\)", "", "\n".join(tree))
 
 
+def plan_descriptions(spark, first: int) -> list[str]:
+    """The physical plan descriptions of the SQL executions after the
+    first `first`."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList(first, max(store.executionsCount() - first, 0))
+    return [str(execs.apply(i).physicalPlanDescription()) for i in range(execs.size())]
+
+
 def plan_python_nodes(spark, first: int) -> int:
     """Python/Arrow nodes in the distinct plans of the SQL executions
     after the first `first`: a plan that ran once per micro-batch counts
     once."""
-    store = spark._jsparkSession.sharedState().statusStore()
-    execs = store.executionsList(first, max(store.executionsCount() - first, 0))
-    trees = {plan_tree(str(execs.apply(i).physicalPlanDescription()))
-             for i in range(execs.size())}
+    trees = {plan_tree(d) for d in plan_descriptions(spark, first)}
     return sum(tree.count(node) for tree in trees for node in PYTHON_NODES)
+
+
+def scanned_tables(spark, first: int, sf: str) -> list[str]:
+    """The tables under `sf` that the SQL executions after the first
+    `first` scanned."""
+    pattern = re.compile(re.escape(str(Path(sf).resolve())) + r"/(\w+)\.parquet")
+    return sorted({t for d in plan_descriptions(spark, first) for t in pattern.findall(d)})
 
 
 def profile_run(spark, tracer: Tracer, progress_log: ProgressLog, fn, sf: str):
@@ -183,9 +203,13 @@ def main() -> int:
     ap.add_argument("--sf", default=SF_DIR, help="input tables (default: %(default)s)")
     ap.add_argument("--runs", type=int, default=3, help="timed runs per entry")
     ap.add_argument("--plan-dir", type=Path, help="write each entry's formatted plan here")
+    ap.add_argument("--scale", type=int, metavar="MULT",
+                    help="also profile on MULT replicas of the --sf tables")
     args = ap.parse_args()
     if args.runs < 1:
         ap.error("--runs must be at least 1")
+    if args.scale is not None and args.scale < 2:
+        ap.error("--scale must be at least 2")
 
     queries = registry.queries()
     unknown = [n for n in args.names if n not in queries]
@@ -199,9 +223,16 @@ def main() -> int:
     spark.streams.addListener(progress_log)
     tracer = Tracer(spark.sparkContext, enabled=True)
     for name in args.names:
+        ex0 = execution_count(spark)
         report = profile_entry(spark, tracer, progress_log, name, queries[name], args.sf,
                                args.runs, args.plan_dir)
         print(json.dumps(rounded(report)), flush=True)
+        if args.scale:
+            big = replica(spark, args.sf, args.scale, scanned_tables(spark, ex0, args.sf))
+            scaled = profile_entry(spark, tracer, progress_log, name, queries[name], big,
+                                   args.runs)
+            scaled.update(mult=args.scale, wall_ratio=scaled["wall_s"] / report["wall_s"])
+            print(json.dumps(rounded(scaled)), flush=True)
     return 0
 
 

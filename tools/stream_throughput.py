@@ -4,8 +4,9 @@ the rates its topology shapes sustain on this engine, single node).
 
 Usage: python tools/stream_throughput.py [multiplier]
 
-Replays the scale_smoke events dataset (sf0.1 x multiplier) through
-the topology shapes via Trigger.AvailableNow into a noop sink:
+Replays sf0.1 events x multiplier (the tools/scale_smoke.py replica,
+built on first use) through the topology shapes via
+Trigger.AvailableNow into a noop sink:
 
 - stateless_project : mapValues-style projection (T2)
 - stateless_scrub   : 3-stage regex PII scrub (the heavy stateless op)
@@ -36,7 +37,6 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
-sys.path.insert(0, str(ROOT / "tools"))
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,8 +49,7 @@ from kafka_streams_app_spark.sources.catalog import _normalize_ts
 from kafka_streams_app_spark.streaming import windows as SW
 from kafka_streams_app_spark.streaming.ktable import ktable_changelog
 from kafka_streams_app_spark.streaming.pk_join import pk_join
-
-SCRATCH = ROOT / ".scratch" / "scale_smoke"
+from tools.scale_smoke import BASE, SCRATCH, build
 
 
 def stream_events(spark: SparkSession, events_path: str) -> DataFrame:
@@ -128,10 +127,7 @@ def main() -> None:
     spark = get_spark(app_name="stream-throughput")
     spark.sparkContext.setLogLevel("ERROR")
 
-    events_path = str(SCRATCH / f"x{mult}" / "events.parquet")
-    if not Path(events_path).exists():
-        import scale_smoke
-        scale_smoke.build(spark, mult)
+    events_path = build(spark, BASE, "events", mult) + "/events.parquet"
     n_rows = spark.read.parquet(events_path).count()
 
     shapes: list[tuple[str, DataFrame, str]] = []
@@ -270,12 +266,10 @@ def main() -> None:
     # docs replica, ~61k docs — work scales with tokens, not rows, so
     # rows/s here is docs/s over full fingerprinting + TWS):
     doc_shapes: list[tuple[str, DataFrame, str, int]] = []
-    import scale_smoke
     from kafka_streams_app_spark.streaming import dedup_candidates as DC
     from kafka_streams_app_spark.streaming import sample as SSample
 
-    docs_dir = scale_smoke.build_docs(spark, 10)
-    docs_path = f"{docs_dir}/documents.parquet"
+    docs_path = build(spark, BASE, "documents", 10) + "/documents.parquet"
     n_docs = spark.read.parquet(docs_path).count()
 
     def stream_docs() -> DataFrame:
